@@ -97,4 +97,5 @@ for name in names:
 print(f"\n== {len(results['match'])} match, {len(results['mismatch'])} mismatch, "
       f"{len(results['error'])} sql-error, {len(results['no_oracle'])} no-oracle, "
       f"{len(results['missing'])} missing")
-sys.exit(0 if not results["mismatch"] and not results["error"] and not results["missing"] else 1)
+# every registry row carries an oracle, so a NO-ORACLE row fails like a mismatch
+sys.exit(0 if not any(results[k] for k in ("mismatch", "error", "no_oracle", "missing")) else 1)

@@ -327,75 +327,27 @@ object Dedup {
       .select("doc_id_a", "doc_id_b", "jaccard")
   }
 
-  /** The min-hash family over a shingle column: hash the string ONCE, then
-    * derive each of the `numHashes` members by hashing the 8-byte value with
-    * the seed — numHashes× cheaper than re-hashing the string bytes per seed,
-    * which is the per-row hot loop of the signature scan. Pure builtins,
-    * partial-aggregated. */
-  private def minhashAggs(numHashes: Int): (Column, Seq[Column]) = {
-    val base = xxhash64(col("shingle"))
-    (base, (0 until numHashes).map(s => min(xxhash64(col("_h"), lit(s))).as(s"h$s")))
-  }
+  // ---- MinHash / SimHash / span hash family ---------------------------------
 
-  /** MinHash signatures: numHashes independent min-hashes of the shingle set. */
-  def minhashSignatures(docs: DataFrame, shingleN: Int, numHashes: Int,
-                        idCol: String = "doc_id"): DataFrame = {
-    val sh = shingles(docs, shingleN, idCol)
-    val (base, mins) = minhashAggs(numHashes)
-    sh.withColumn("_h", base).groupBy(idCol).agg(mins.head, mins.tail: _*)
-  }
-
-  /** MinHash + LSH banding: split the signature into `bands`, hash each band,
-    * equi-join on (band, bandHash) for candidates, then verify with exact
-    * Jaccard (ref technique: Broder'97 / MMDS ch.3). */
-  def minhashLshPairs(docs: DataFrame, shingleN: Int, numHashes: Int, bands: Int,
-                      threshold: Double, idCol: String = "doc_id"): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rows = numHashes / bands
-    // one shingle index shared by the signature build and the verify joins
-    // (see ngramJaccardPairs for the 100TB rationale)
-    val sh = shingles(docs, shingleN, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (base, mins) = minhashAggs(numHashes)
-    val sig = sh.withColumn("_h", base).groupBy(idCol).agg(mins.head, mins.tail: _*)
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64((b * rows until (b + 1) * rows).map(i => col(s"h$i")): _*).as("bh"))
-    }
-    val buckets = sig.select(col(idCol), explode(array(bandCols: _*)).as("bk"))
-      .select(col(idCol), col("bk.band"), col("bk.bh"))
-    val cand = buckets.as("x").join(buckets.as("y"), Seq("band", "bh"))
-      .where(col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("doc_id_a"), col(s"y.$idCol").as("doc_id_b"))
-      .distinct()
-    // verify candidates with exact shingle Jaccard (same persisted index)
-    val sizes = sh.groupBy(idCol).agg(count(lit(1)).as("sz"))
-    // equi-join on (doc, shingle) both sides — intersection size per pair
-    // without the |a|x|b| cross-shingle blowup
-    val inter = cand
-      .join(sh.select(col(idCol).as("doc_id_a"), col("shingle")), Seq("doc_id_a"))
-      .join(sh.select(col(idCol).as("doc_id_b"), col("shingle")), Seq("doc_id_b", "shingle"))
-      .groupBy("doc_id_a", "doc_id_b").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col(idCol).as("doc_id_a"), col("sz").as("sz_a")), Seq("doc_id_a"))
-      .join(sizes.select(col(idCol).as("doc_id_b"), col("sz").as("sz_b")), Seq("doc_id_b"))
-      .withColumn("jaccard",
-        col("inter").cast(DoubleType) / (col("sz_a") + col("sz_b") - col("inter")))
-      .where(col("jaccard") >= threshold)
-      .select("doc_id_a", "doc_id_b", "jaccard")
-  }
-
-  // ---- portable (cross-engine verifiable) hash family ----------------------
-
-  /** Modulus of the portable hash family — the same p = 1e9+7 as
+  /** Modulus of the one hash family every MinHash, SimHash, span, winnowing
+    * and hashed-embedding operator derives from — the same p = 1e9+7 as
     * [[TextAnalysis.fingerprint]]'s rolling hash. All arithmetic stays below
     * p² < 2⁶³, so every step is overflow-free under ANSI mode and exactly
-    * replayable in any engine with 64-bit integer SQL. */
+    * replayable in any engine with 64-bit integer SQL (the DuckDB oracles
+    * replay each operator bit for bit).
+    *
+    * The trade-off: hash values live in [0, p), a ~30-bit range. Distinct
+    * shingles, tokens or k-token windows collide with probability ~1/p per
+    * pair, so n distinct windows expect ~n²/2p aliased pairs — about 5 at
+    * n = 10⁵, but ~5·10⁸ at n = 10⁹, where false duplicated spans become
+    * common. A collision only ever adds a span or a candidate pair, never
+    * loses one, and MinHash-LSH candidates are re-verified with exact
+    * Jaccard. The price buys exact, oracle-checkable results. */
   val PortableP = 1000000007L
 
   /** Base-31 polynomial rolling hash mod [[PortableP]] over a string column
-    * (per-character codepoints) — the SQL-replicable base hash the portable
-    * minhash/simhash variants derive their families from. Codegen'd kernel
+    * (per-character codepoints) — the SQL-replicable base hash the
+    * minhash/simhash families derive from. Codegen'd kernel
     * ([[graft.functions.PolyHash]]); value-identical to the builtin fold
     * `aggregate(transform(split(s,""), ch => ascii(ch)), 0L,
     * (acc,c) => pmod(acc*31+c, p))` (TextExprsSpec) — one compiled loop
@@ -425,24 +377,24 @@ object Dedup {
   private def portableHash(x: Column, ab: (Long, Long)): Column =
     pmod(x * lit(ab._1) + lit(ab._2), lit(PortableP))
 
-  /** [[minhashSignatures]] over the PORTABLE hash family — bit-identical
-    * results in any engine that can run the same integer SQL, so the whole
-    * signature (not just the downstream exact-Jaccard verify) is
-    * oracle-checkable. The xxhash64 default stays the hot path: one
-    * codegen'd 64-bit hash per shingle beats a per-character polynomial
-    * fold; this variant is for cross-engine reproducibility (migrating a
-    * corpus between engines without re-fingerprinting it) and for
-    * correctness gating of the minhash structure itself. */
-  def minhashSignaturesPortable(docs: DataFrame, shingleN: Int, numHashes: Int,
-                                idCol: String = "doc_id"): DataFrame = {
-    val params = portableHashParams(numHashes)
-    val mins = params.zipWithIndex.map { case (ab, s) =>
+  /** `numHashes` min-hashes h_s(polyHash(shingle)) per document over a
+    * `(idCol, shingle)` frame. Pure builtins, partial-aggregated. */
+  private def signatures(sh: DataFrame, numHashes: Int, idCol: String): DataFrame = {
+    val mins = portableHashParams(numHashes).zipWithIndex.map { case (ab, s) =>
       min(portableHash(col("_x"), ab)).as(s"h$s")
     }
-    shingles(docs, shingleN, idCol)
-      .withColumn("_x", polyHash(col("shingle")))
+    sh.withColumn("_x", polyHash(col("shingle")))
       .groupBy(idCol).agg(mins.head, mins.tail: _*)
   }
+
+  /** MinHash signatures: `numHashes` independent min-hashes of the shingle
+    * set, bit-identical in any engine that can run the same integer SQL, so
+    * the whole signature (not just a downstream exact-Jaccard verify) is
+    * oracle-checkable — and a corpus migrates between engines without
+    * re-fingerprinting. */
+  def minhashSignatures(docs: DataFrame, shingleN: Int, numHashes: Int,
+                        idCol: String = "doc_id"): DataFrame =
+    signatures(shingles(docs, shingleN, idCol), numHashes, idCol)
 
   /** Per-band fold of signature columns into a band hash, mod p (base
     * 10007): acc = (acc·10007 + h_i) mod p — shared by the Spark side and
@@ -456,25 +408,23 @@ object Dedup {
   private def portableBandHash(cols: Seq[Column]): Column =
     cols.foldLeft(lit(0L): Column)((acc, h) => pmod(acc * lit(BandR) + h, lit(PortableP)))
 
-  /** [[minhashLshPairs]] over the portable family: same band/equi-join/
-    * exact-verify shape, but every stage — signatures, band hashes,
-    * candidate set, Jaccard — is deterministic integer math an oracle can
-    * replay, so the END-TO-END pair set is exactly checkable (the xxhash64
-    * variant's candidates are engine-internal). Same scale posture: the
-    * shuffle is proportional to candidate pairs, never all pairs. */
-  def minhashLshPairsPortable(docs: DataFrame, shingleN: Int, numHashes: Int,
-                              bands: Int, threshold: Double,
-                              idCol: String = "doc_id"): DataFrame = {
+  /** MinHash + LSH banding: split the signature into `bands`, fold each band
+    * into a band hash, equi-join on (band, bandHash) for candidates, then
+    * verify with exact Jaccard (ref technique: Broder'97 / MMDS ch.3). Every
+    * stage — signatures, band hashes, candidate set, Jaccard — is
+    * deterministic integer math an oracle can replay, so the END-TO-END pair
+    * set is exactly checkable. The shuffle is proportional to candidate
+    * pairs, never all pairs. */
+  def minhashLshPairs(docs: DataFrame, shingleN: Int, numHashes: Int,
+                      bands: Int, threshold: Double,
+                      idCol: String = "doc_id"): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val rows = numHashes / bands
+    // one shingle index shared by the signature build and the verify joins
+    // (see ngramJaccardPairs for the 100TB rationale)
     val sh = shingles(docs, shingleN, idCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val params = portableHashParams(numHashes)
-    val mins = params.zipWithIndex.map { case (ab, s) =>
-      min(portableHash(col("_x"), ab)).as(s"h$s")
-    }
-    val sig = sh.withColumn("_x", polyHash(col("shingle")))
-      .groupBy(idCol).agg(mins.head, mins.tail: _*)
+    val sig = signatures(sh, numHashes, idCol)
     val bandCols = (0 until bands).map { b =>
       struct(lit(b).as("band"),
         portableBandHash((b * rows until (b + 1) * rows).map(i => col(s"h$i"))).as("bh"))
@@ -486,6 +436,8 @@ object Dedup {
       .select(col(s"x.$idCol").as("doc_id_a"), col(s"y.$idCol").as("doc_id_b"))
       .distinct()
     val sizes = sh.groupBy(idCol).agg(count(lit(1)).as("sz"))
+    // equi-join on (doc, shingle) both sides — intersection size per pair
+    // without the |a|x|b| cross-shingle blowup
     val inter = cand
       .join(sh.select(col(idCol).as("doc_id_a"), col("shingle")), Seq("doc_id_a"))
       .join(sh.select(col(idCol).as("doc_id_b"), col("shingle")), Seq("doc_id_b", "shingle"))
@@ -499,15 +451,13 @@ object Dedup {
       .select("doc_id_a", "doc_id_b", "jaccard")
   }
 
-  /** [[simhashBuckets]] over the portable family: a `numBits`-bit simhash
-    * where bit s is set iff the ±1 token votes of h_s(token) mod 2 sum
-    * positive — simhash with an EXPLICIT universal hash family instead of
-    * engine-internal xxhash64 bits, so the signature is oracle-replayable.
-    * Tokens vote as a multiset (duplicates count), matching
-    * [[simhashBuckets]]. `band8` is the top 8 bits — the bucketing key of
-    * the scale path. */
-  def simhashBucketsPortable(docs: DataFrame, numBits: Int = 32,
-                             idCol: String = "doc_id"): DataFrame = {
+  /** SimHash: a `numBits`-bit signature where bit s is set iff the ±1 token
+    * votes of h_s(token) mod 2 sum positive — simhash over an EXPLICIT
+    * universal hash family, so the signature is oracle-replayable. Tokens
+    * vote as a multiset (duplicates count). Near-dups share most bits;
+    * `band8` is the top 8 bits — the bucketing key of the scale path. */
+  def simhashBuckets(docs: DataFrame, numBits: Int = 32,
+                     idCol: String = "doc_id"): DataFrame = {
     require(numBits >= 9 && numBits <= 62, "numBits must be in [9, 62]")
     val params = portableHashParams(numBits)
     val toks = docs.select(col(idCol),
@@ -524,27 +474,6 @@ object Dedup {
     agg.withColumn("simhash", sim).select(col(idCol), col("simhash"))
       .withColumn("band8", shiftrightunsigned(col("simhash"), numBits - 8))
   }
-
-  /** SimHash: 64-bit signature — bit b is set iff the sum over tokens of
-    * (+1 if bit b of xxhash64(token) else -1) is positive. Near-dups share
-    * most bits; bucketing on bit-ranges gives the scale path. */
-  def simhashBuckets(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val toks = docs.select(col(idCol),
-        explode(split(lower(trim(col("text"))), "\\s+")).as("tok"))
-      .where(length(col("tok")) > 0)
-      .withColumn("h", xxhash64(col("tok")))
-    val bitSums = (0 until 64).map { b =>
-      sum(when(shiftright(col("h"), b).bitwiseAND(1L) === 1L, 1).otherwise(-1)).as(s"b$b")
-    }
-    val agg = toks.groupBy(idCol).agg(bitSums.head, bitSums.tail: _*)
-    val sim = (0 until 64).map { b =>
-      when(col(s"b$b") > 0, lit(1L) * pow2(b)).otherwise(0L)
-    }.reduce((a, b) => a + b)
-    agg.withColumn("simhash", sim).select(col(idCol), col("simhash"))
-      .withColumn("band16", shiftrightunsigned(col("simhash"), 48))
-  }
-
-  private def pow2(b: Int): Column = lit(if (b == 63) Long.MinValue else 1L << b)
 
   /** Persist the shingle inverted index as a BUCKETED table — the offline
     * form of the in-session `persist` the pair generators use. Bucketing by
@@ -1527,56 +1456,46 @@ object Dedup {
     * hashes (shuffle proportional to TOTAL TOKENS, the same O(corpus) cost
     * as any shingle pass), one semi-join back, then a per-document window
     * for interval merging (partitioned by doc_id — fully parallel, bounded
-    * by one document's token count). Default hashing is codegen'd xxhash64
-    * (64-bit space); `portable=true` switches to the base-31 mod-(1e9+7)
-    * rolling hash the DuckDB oracle replays bit-exactly — at 100 TB that
-    * ~2^30 space would alias distinct windows into false spans, so portable
-    * is for correctness gating and cross-engine reproducibility, not the
-    * hot path. */
+    * by one document's token count). Windows hash with the base-31
+    * mod-[[PortableP]] rolling hash the DuckDB oracle replays bit-exactly
+    * (see [[PortableP]] for the collision trade-off). */
   /** (idCol, pos, _x) window-hash stream — window hashes are built INSIDE
     * arrays (transform → posexplode) so the token array is never replicated
-    * per window position. The portable window hash is a k-element fold over
+    * per window position. The window hash is a k-element fold over
     * PER-TOKEN rolling hashes — each token's characters are walked once per
     * document, not once per covering window (the joined-gram-string
     * formulation cost k·|token| interpreted lambda steps per window and
     * dominated the whole pass). */
   private def spanGrams(docs: DataFrame, k: Int, idCol: String,
-                        textCol: String, portable: Boolean): DataFrame = {
+                        textCol: String): DataFrame = {
     val toks = split(trim(col(textCol)), "\\s+")
-    val gramArr =
-      if (portable)
-        // codegen'd window fold (TextExprsSpec pins identity with the
-        // interpreted aggregate-over-slice formulation this replaced)
-        graft.functions.TextExprs.rollingWindowHashesCol(
-          col("_th"), k, GramR, PortableP)
-      else
-        transform(sequence(lit(0), size(col("_t")) - k),
-          i => xxhash64(lower(concat_ws(" ", slice(col("_t"), i + 1, lit(k))))))
+    // codegen'd window fold (TextExprsSpec pins identity with the
+    // interpreted aggregate-over-slice formulation this replaced)
+    val gramArr = graft.functions.TextExprs.rollingWindowHashesCol(
+      col("_th"), k, GramR, PortableP)
     docs.select(col(idCol), toks.as("_t"))
       .where(size(col("_t")) >= k)
-      .withColumn("_th",
-        if (portable) transform(col("_t"), t => polyHash(lower(t)))
-        else col("_t"))
+      .withColumn("_th", transform(col("_t"), t => polyHash(lower(t))))
       .select(col(idCol), posexplode(gramArr))
       .select(col(idCol), col("pos").cast(LongType).as("pos"), col("col").as("_x"))
   }
 
-  /** [[spanGrams]] memoized + persisted per (corpus plan, k, portable, id,
-    * text) — r14, guide §2.4: the (doc, pos, windowHash) stream is the
-    * shared derived input of the whole span/winnowing family
-    * (duplicatedSpans consumes it TWICE in one plan — dup-hash aggregate +
-    * semi-join back; selfRepeatedSpans twice; winnowing once; the span
-    * index writers once), and before the memo every consumer re-tokenized
-    * and re-hashed the corpus per subtree per action. Streams bypass the
-    * memo (a stream cannot persist); eviction rides the session ledger. */
+  /** [[spanGrams]] memoized + persisted per (corpus plan, k, id, text): the
+    * (doc, pos, windowHash) stream is the shared derived input of the whole
+    * span/winnowing family (duplicatedSpans consumes it TWICE in one plan —
+    * dup-hash aggregate + semi-join back; selfRepeatedSpans twice;
+    * winnowing once; the span index writers once), and without the memo
+    * every consumer would re-tokenize and re-hash the corpus per subtree per
+    * action. Streams bypass the memo (a stream cannot persist); eviction
+    * rides the session ledger. */
   private val spanGramsMemo =
-    new graft.core.PlanMemo[(Int, Boolean, String, String), DataFrame](
+    new graft.core.PlanMemo[(Int, String, String), DataFrame](
       _.unpersist(blocking = false))
   private def spanGramsCached(docs: DataFrame, k: Int, idCol: String,
-                              textCol: String, portable: Boolean): DataFrame =
-    if (docs.isStreaming) spanGrams(docs, k, idCol, textCol, portable)
-    else spanGramsMemo(docs, (k, portable, idCol, textCol)) {
-      spanGrams(docs, k, idCol, textCol, portable)
+                              textCol: String): DataFrame =
+    if (docs.isStreaming) spanGrams(docs, k, idCol, textCol)
+    else spanGramsMemo(docs, (k, idCol, textCol)) {
+      spanGrams(docs, k, idCol, textCol)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
@@ -1600,10 +1519,9 @@ object Dedup {
   }
 
   def duplicatedSpans(docs: DataFrame, k: Int, minDocs: Int = 2,
-                      idCol: String = "doc_id", textCol: String = "text",
-                      portable: Boolean = false): DataFrame = {
+                      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    val grams = spanGramsCached(docs, k, idCol, textCol, portable)
+    val grams = spanGramsCached(docs, k, idCol, textCol)
     // df >= 2 ⟺ min(doc) != max(doc): one combinable aggregation with O(1)
     // state per gram. The countDistinct rewrite shuffles one row per
     // distinct (gram, doc) into the gram's reducer — a web-scale
@@ -1631,8 +1549,8 @@ object Dedup {
     * the hash key, and old crawls are never re-scanned. */
   def writeSpanIndex(docs: DataFrame, k: Int, table: String,
                      idCol: String = "doc_id", textCol: String = "text",
-                     portable: Boolean = false, buckets: Int = 64): Unit =
-    spanGramsCached(docs, k, idCol, textCol, portable)
+                     buckets: Int = 64): Unit =
+    spanGramsCached(docs, k, idCol, textCol)
       .select(col("_x").as("x")).distinct()
       .repartition(buckets, col("x")) // one file per bucket, see writeShingleIndex
       .write.mode("overwrite")
@@ -1646,8 +1564,8 @@ object Dedup {
     * when it matters. */
   def appendSpanIndex(docs: DataFrame, k: Int, table: String,
                       idCol: String = "doc_id", textCol: String = "text",
-                      portable: Boolean = false, buckets: Int = 64): Unit =
-    spanGramsCached(docs, k, idCol, textCol, portable)
+                      buckets: Int = 64): Unit =
+    spanGramsCached(docs, k, idCol, textCol)
       .select(col("_x").as("x")).distinct()
       .repartition(buckets, col("x")) // one file per bucket, see writeShingleIndex
       .write.mode("append")
@@ -1665,9 +1583,8 @@ object Dedup {
   def duplicatedSpansIncremental(spark: org.apache.spark.sql.SparkSession,
                                  table: String, incoming: DataFrame, k: Int,
                                  idCol: String = "doc_id",
-                                 textCol: String = "text",
-                                 portable: Boolean = false): DataFrame = {
-    val grams = spanGramsCached(incoming, k, idCol, textCol, portable)
+                                 textCol: String = "text"): DataFrame = {
+    val grams = spanGramsCached(incoming, k, idCol, textCol)
     val inIndex = grams
       .join(spark.table(table).select(col("x").as("_x")), Seq("_x"), "left_semi")
       .select(idCol, "pos")
@@ -1708,10 +1625,8 @@ object Dedup {
   }
 
   def removeDuplicatedSpans(docs: DataFrame, k: Int, minDocs: Int = 2,
-                            idCol: String = "doc_id", textCol: String = "text",
-                            portable: Boolean = false): DataFrame =
-    removeSpans(docs,
-      duplicatedSpans(docs, k, minDocs, idCol, textCol, portable), idCol, textCol)
+                            idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    removeSpans(docs, duplicatedSpans(docs, k, minDocs, idCol, textCol), idCol, textCol)
 
   /** WITHIN-document repeated k-token spans — the intra-doc counterpart of
     * [[duplicatedSpans]] (boilerplate menus, chorus lines, copy-pasted
@@ -1721,10 +1636,9 @@ object Dedup {
     * (doc, hash) aggregate — grouped by document, so there is no cross-doc
     * hot key at all — plus the per-document island merge. */
   def selfRepeatedSpans(docs: DataFrame, k: Int,
-                        idCol: String = "doc_id", textCol: String = "text",
-                        portable: Boolean = false): DataFrame = {
+                        idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    val grams = spanGramsCached(docs, k, idCol, textCol, portable)
+    val grams = spanGramsCached(docs, k, idCol, textCol)
     val firsts = grams.groupBy(col(idCol), col("_x")).agg(min("pos").as("_p0"))
     val rep = grams.join(firsts, Seq(idCol, "_x"))
       .where(col("pos") > col("_p0"))
@@ -1735,14 +1649,12 @@ object Dedup {
   /** Rebuild documents without their self-repeated spans — first
     * occurrences survive, later copies are cut. */
   def removeSelfRepetition(docs: DataFrame, k: Int,
-                           idCol: String = "doc_id", textCol: String = "text",
-                           portable: Boolean = false): DataFrame =
-    removeSpans(docs,
-      selfRepeatedSpans(docs, k, idCol, textCol, portable), idCol, textCol)
+                           idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    removeSpans(docs, selfRepeatedSpans(docs, k, idCol, textCol), idCol, textCol)
 
   /** Winnowing fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD'03 — the
     * MOSS selection rule): over the per-position k-token window hashes of
-    * [[spanGrams]] (portable chain), every run of `w` consecutive hashes
+    * [[spanGrams]], every run of `w` consecutive hashes
     * contributes its MINIMUM, so any match of at least `w + k - 1` tokens
     * between two documents is guaranteed to share a fingerprint while only
     * ~2/(w+1) of all hashes are kept. Tie-break is leftmost-position via
@@ -1763,7 +1675,7 @@ object Dedup {
                             textCol: String = "text"): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(w >= 1, "w must be >= 1")
-    val grams = spanGramsCached(docs, k, idCol, textCol, portable = true)
+    val grams = spanGramsCached(docs, k, idCol, textCol)
     val win = Window.partitionBy(idCol).orderBy("pos")
     val trail = win.rowsBetween(-(w - 1), 0)
     val keyed = grams
@@ -1780,7 +1692,7 @@ object Dedup {
   }
 
   /** ROW-LOCAL winnowing fingerprint set — the [[winnowingFingerprints]]
-    * selection (portable rolling hash, leftmost-min trailing window,
+    * selection (rolling window hash, leftmost-min trailing window,
     * short-document rule) computed as one array expression over a single
     * text value: no explode, no per-document window, so it runs on a
     * STREAMING DataFrame (append mode, stateless) and as a narrow batch

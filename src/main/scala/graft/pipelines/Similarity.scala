@@ -97,29 +97,23 @@ object Similarity {
     * on corpora that have no learned embeddings yet. Entirely per-document
     * arithmetic after one (doc, bucket) aggregation; vectors are
     * reproducible from the text alone (no fitted state, so snapshots
-    * embed identically across runs and engines). `portable=true` uses the
-    * base-31/mod-p rolling hash family the DuckDB oracle replays; weights
-    * are integer counts over a correctly-rounded sqrt, so even the
-    * normalized values are bit-exact cross-engine. Empty or
-    * fully-cancelled documents (zero norm) are omitted. */
-  def hashedEmbedding(docs: DataFrame, dim: Int, portable: Boolean = false,
-                      idCol: String = "doc_id",
+    * embed identically across runs and engines). Buckets and signs come
+    * from the base-31/mod-p rolling hash family the DuckDB oracle replays
+    * ([[Dedup.PortableP]]); weights are integer counts over a
+    * correctly-rounded sqrt, so even the normalized values are bit-exact
+    * cross-engine. Empty or fully-cancelled documents (zero norm) are
+    * omitted. */
+  def hashedEmbedding(docs: DataFrame, dim: Int, idCol: String = "doc_id",
                       textCol: String = "text"): DataFrame = {
     require(dim >= 1, "dim must be >= 1")
     val toks = docs.select(col(idCol),
         explode(split(lower(trim(col(textCol))), "\\s+")).as("token"))
       .where(length(col("token")) > 0)
-    val (bucket, sign) =
-      if (portable) {
-        val x = Dedup.polyHash(col("token"))
-        val (a, b) = Dedup.portableHashParams(1).head
-        (pmod(x, lit(dim.toLong)),
-          when(pmod(pmod(x * lit(a) + lit(b), lit(Dedup.PortableP)), lit(2L)) === 1L,
-            lit(1L)).otherwise(lit(-1L)))
-      } else
-        (pmod(xxhash64(col("token")), lit(dim.toLong)),
-          when(pmod(xxhash64(lit("sign"), col("token")), lit(2L)) === 1L, lit(1L))
-            .otherwise(lit(-1L)))
+    val x = Dedup.polyHash(col("token"))
+    val (a, b) = Dedup.portableHashParams(1).head
+    val bucket = pmod(x, lit(dim.toLong))
+    val sign = when(pmod(pmod(x * lit(a) + lit(b), lit(Dedup.PortableP)), lit(2L)) === 1L,
+      lit(1L)).otherwise(lit(-1L))
     val comps = toks
       .groupBy(col(idCol), bucket.as("_b"))
       .agg(sum(sign).as("_w"))
@@ -143,7 +137,7 @@ object Similarity {
     * and WindowExec then logs `No Partition Defined` (r15, VERDICT r14
     * item 7): pmod(id, 1) is 0 on every row yet non-foldable, so the spec
     * survives and the k-row single-task execution is unchanged. */
-  private def rankTail(scored: DataFrame, queryId: Long, k: Int, idCol: String): DataFrame =
+  private def rankTail(scored: DataFrame, k: Int, idCol: String): DataFrame =
     scored
       .orderBy(col("cosine").desc, col(idCol))
       .limit(k)
@@ -162,7 +156,7 @@ object Similarity {
     val scored = emb.where(col(idCol) =!= queryId)
       .crossJoin(broadcast(q))
       .withColumn("cosine", graft.functions.VectorExprs.fastCosine("embedding", "q_emb"))
-    rankTail(scored, queryId, k, idCol)
+    rankTail(scored, k, idCol)
   }
 
   /** Banded-signature LSH index for one corpus — (id, embedding, bkeys),
@@ -214,7 +208,7 @@ object Similarity {
     val scored = idx.join(candIds, idCol)
       .crossJoin(broadcast(q.select("q_emb")))
       .withColumn("cosine", graft.functions.VectorExprs.fastCosine("embedding", "q_emb"))
-    rankTail(scored, queryId, k, idCol)
+    rankTail(scored, k, idCol)
   }
 
   /** Top-k by cosine in the Johnson–Lindenstrauss PROJECTED space
@@ -240,7 +234,7 @@ object Similarity {
       .withColumn("cosine",
         when(col("_na") === 0.0 || col("_nb") === 0.0, lit(0.0))
           .otherwise(dot(col("yv"), col("qv")) / (col("_na") * col("_nb"))))
-    rankTail(scored, queryId, k, idCol)
+    rankTail(scored, k, idCol)
   }
 
   /** Batched multiprobe LSH: N probes resolve in ONE pass over the banded
@@ -353,7 +347,7 @@ object Similarity {
       .crossJoin(broadcast(q))
       .withColumn("cosine",
         graft.functions.VectorExprs.fastCosine("embedding", "q_emb"))
-    rankTail(scored, queryId, k, idCol)
+    rankTail(scored, k, idCol)
   }
 
   /** The IVF cell structures for composition by other ANN paths (IVF-PQ):
@@ -450,7 +444,7 @@ object Similarity {
     val scored = emb.join(candIds, idCol)
       .crossJoin(broadcast(q))
       .withColumn("cosine", graft.functions.VectorExprs.fastCosine("embedding", "q_emb"))
-    rankTail(scored, queryId, k, idCol)
+    rankTail(scored, k, idCol)
   }
 
   /** Batched SQ8: N probes share ONE pass over the code table — the probe
@@ -507,7 +501,7 @@ object Similarity {
     val scored = idx.assigned.where(col(idCol) =!= queryId)
       .join(broadcast(qCells), Seq("cent_id"))
       .withColumn("cosine", graft.functions.VectorExprs.fastCosine("embedding", "q_emb"))
-    rankTail(scored, queryId, k, idCol)
+    rankTail(scored, k, idCol)
   }
 
   /** Persist the IVF index as TABLES — the offline form of the in-session
@@ -576,7 +570,7 @@ object Similarity {
     val scored = scanned.where(col(idCol) =!= queryId)
       .crossJoin(broadcast(q))
       .withColumn("cosine", graft.functions.VectorExprs.fastCosine("embedding", "q_emb"))
-    rankTail(scored, queryId, k, idCol)
+    rankTail(scored, k, idCol)
   }
 
   /** Batched IVF probes: all probes' nProbe-cell selections resolve in one

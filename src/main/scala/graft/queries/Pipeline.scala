@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.DecimalType
 
 /** Training-data pipeline operators over `documents` / `embeddings` — the
   * beyond-reference surface (dedup, similarity search, text analysis). Each
-  * query exercises the real pipeline implementation; oracles are plain SQL
-  * where the semantics are SQL-expressible, else rows-only.
+  * query exercises the real pipeline implementation and carries a plain-SQL
+  * DuckDB oracle.
   */
 object Pipeline extends QueryPack {
 
@@ -203,11 +203,6 @@ object Pipeline extends QueryPack {
       |WHERE CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter) >= 0.5
       |ORDER BY doc_id_a, doc_id_b""".stripMargin
 
-  private def qDedupMinhash(s: SparkSession, sf: String): DataFrame =
-    Dedup.minhashLshPairs(Tables.documents(s, sf), shingleN = 3, numHashes = 32, bands = 8,
-      threshold = 0.5)
-      .orderBy("doc_id_a", "doc_id_b")
-
   /** Shared language-id CTE for the clustering oracles (same math as
     * text_langid, which is oracle-verified). */
   private val langCte = {
@@ -271,16 +266,6 @@ object Pipeline extends QueryPack {
     s"""WITH $langCte
        |SELECT doc_id FROM grp WHERE n = 1 OR doc_id = cluster_id ORDER BY doc_id""".stripMargin
 
-  /** Realistic end-to-end near-dup removal: LSH candidate pairs → connected
-    * components → canonical survivor per cluster (rows-only; the LSH pair set
-    * is approximate by design). */
-  private def qClusterLsh(s: SparkSession, sf: String): DataFrame =
-    Dedup.keepCanonical(Tables.documents(s, sf),
-        Dedup.minhashLshPairs(Tables.documents(s, sf), shingleN = 3, numHashes = 32,
-          bands = 8, threshold = 0.5))
-      .select("doc_id")
-      .orderBy("doc_id")
-
   /** Sequence packing into ~4096-token shards: the distributed two-phase
     * prefix sum must reproduce the serial oracle exactly. */
   private def qPackShards(s: SparkSession, sf: String): DataFrame =
@@ -304,7 +289,7 @@ object Pipeline extends QueryPack {
     * correctly-rounded sqrt, so even normalized float values replay
     * bit-exactly in the oracle. */
   private def qHashedEmbedding(s: SparkSession, sf: String): DataFrame =
-    Similarity.hashedEmbedding(Tables.documents(s, sf), dim = 64, portable = true)
+    Similarity.hashedEmbedding(Tables.documents(s, sf), dim = 64)
       .select(col("doc_id"), posexplode(col("embedding")))
       .where(col("col") =!= 0.0f)
       .select(col("doc_id"), col("pos").cast("long").as("bucket"),
@@ -341,8 +326,7 @@ object Pipeline extends QueryPack {
     * accumulator bit-exactly, but the ordered fold does. */
   private def qAnnHashed(s: SparkSession, sf: String): DataFrame =
     Similarity.bruteForceTopK(
-        Similarity.hashedEmbedding(Tables.documents(s, sf), dim = 64,
-          portable = true),
+        Similarity.hashedEmbedding(Tables.documents(s, sf), dim = 64),
         queryId = 0L, k = 10, idCol = "doc_id")
       .orderBy("rnk")
   private val qAnnHashedSql = {
@@ -397,7 +381,7 @@ object Pipeline extends QueryPack {
         sizeTokens = 64, overlapTokens = 16)
       .select((col("doc_id") * 100000L + col("chunk_id")).as("chunk_key"),
         col("chunk_text"))
-    val emb = Similarity.hashedEmbedding(chunks, dim = 64, portable = true,
+    val emb = Similarity.hashedEmbedding(chunks, dim = 64,
       idCol = "chunk_key", textCol = "chunk_text")
     Similarity.bruteForceTopK(emb, queryId = 0L, k = 10, idCol = "chunk_key")
       .orderBy("rnk")
@@ -614,11 +598,6 @@ object Pipeline extends QueryPack {
       |                 'on','with','as','by','at','it','this','that','be','from'], token)
       |    AS is_stopword
       |FROM v ORDER BY tf DESC, token LIMIT 50""".stripMargin
-
-  private def qDedupSimhash(s: SparkSession, sf: String): DataFrame =
-    Dedup.simhashBuckets(Tables.documents(s, sf))
-      .select("doc_id", "simhash")
-      .orderBy("doc_id")
 
   /** Banded sign-LSH candidates at the loose 0.2 threshold — the only regime
     * the near-random synthetic embeddings populate (no pair reaches 0.5+).
@@ -874,7 +853,7 @@ object Pipeline extends QueryPack {
   /** Product-quantization serving path, end to end: per-subspace Lloyd
     * codebooks, dense-code ADC scan, exact re-rank. The oracle replays the
     * WHOLE chain including the 8 trainings (the kmeans-replay discipline),
-    * so this is oracle-exact — not a rows-only entry like LSH/IVF. */
+    * so this is oracle-exact. */
   private def qAnnPq(s: SparkSession, sf: String): DataFrame =
     graft.pipelines.Pq.pqTopK(Tables.embeddings(s, sf), queryId = 0L, k = 10)
       .select("vec_id", "rnk")
@@ -1080,21 +1059,15 @@ object Pipeline extends QueryPack {
        |ORDER BY media_id""".stripMargin
   }
 
-  private def qMinhashSig(s: SparkSession, sf: String): DataFrame =
-    Dedup.minhashSignatures(Tables.documents(s, sf), shingleN = 3, numHashes = 8)
-      .select("doc_id", "h0", "h1", "h2", "h3")
-      .orderBy("doc_id")
-
-  // ---- portable-hash minhash / simhash (fully oracle-checked) --------------
-  // The xxhash64 variants above stay rows-only (engine-internal hashing);
-  // these run the SAME structure over the explicit Carter–Wegman family
+  // ---- minhash / simhash (fully oracle-checked) ----------------------------
+  // One hash family for every row: the explicit Carter–Wegman family
   // h_s(x) = (a_s·x + b_s) mod 1e9+7 on the base-31 rolling hash, so every
   // stage — signature, band hash, candidate set, Jaccard — is deterministic
   // integer math the DuckDB oracle replays bit-exactly. The (a_s, b_s)
   // literals in the SQL are generated from Dedup.portableHashParams, one
   // source of truth for both engines.
 
-  /** Shingle (n=3) base-hash CTE chain shared by the portable oracles:
+  /** Shingle (n=3) base-hash CTE chain shared by the minhash oracles:
     * identical tokenization/shingling to ngramPairCtes, then the rolling
     * hash per shingle. */
   private val portableShingleCtes =
@@ -1110,12 +1083,11 @@ object Pipeline extends QueryPack {
       |    (acc, c) -> (acc * 31 + c) % 1000000007) AS x
       |  FROM sh)""".stripMargin
 
-  private def qMinhashPortable(s: SparkSession, sf: String): DataFrame =
-    Dedup.minhashSignaturesPortable(Tables.documents(s, sf), shingleN = 3, numHashes = 8)
-      .orderBy("doc_id")
-  private val qMinhashPortableSql = {
-    val mins = Dedup.portableHashParams(8).zipWithIndex.map { case ((a, b), i) =>
-      s"  min((x * $a + $b) % 1000000007) AS h$i"
+  /** The first `project` min-hashes of [[Dedup.minhashSignatures]](n=3,
+    * `numHashes`), one row per document. */
+  private def minhashSigSql(numHashes: Int, project: Int): String = {
+    val mins = Dedup.portableHashParams(numHashes).take(project).zipWithIndex.map {
+      case ((a, b), i) => s"  min((x * $a + $b) % 1000000007) AS h$i"
     }.mkString(",\n")
     s"""WITH $portableShingleCtes
        |SELECT doc_id,
@@ -1123,27 +1095,33 @@ object Pipeline extends QueryPack {
        |FROM hx GROUP BY doc_id ORDER BY doc_id""".stripMargin
   }
 
-  private def qMinhashLshPortable(s: SparkSession, sf: String): DataFrame =
-    Dedup.minhashLshPairsPortable(Tables.documents(s, sf), shingleN = 3,
-        numHashes = 16, bands = 4, threshold = 0.5)
-      .orderBy("doc_id_a", "doc_id_b")
+  private def qMinhashSig(s: SparkSession, sf: String): DataFrame =
+    Dedup.minhashSignatures(Tables.documents(s, sf), shingleN = 3, numHashes = 8)
+      .select("doc_id", "h0", "h1", "h2", "h3")
+      .orderBy("doc_id")
+  private val qMinhashSigSql = minhashSigSql(numHashes = 8, project = 4)
 
-  /** Full portable-LSH candidate-pair CTE chain, ending in
+  private def qMinhashPortable(s: SparkSession, sf: String): DataFrame =
+    Dedup.minhashSignatures(Tables.documents(s, sf), shingleN = 3, numHashes = 8)
+      .orderBy("doc_id")
+  private val qMinhashPortableSql = minhashSigSql(numHashes = 8, project = 8)
+
+  /** Full LSH candidate-pair CTE chain, ending in
     * `ppairs(doc_id_a, doc_id_b, jaccard)` — the threshold-filtered pair set
-    * of [[Dedup.minhashLshPairsPortable]](n=3, 16 hashes, 4 bands, 0.5).
-    * Shared by the pair oracle and the clustering/survivor oracles built on
-    * top of it. */
-  private val portablePairCtes = {
-    val params = Dedup.portableHashParams(16)
-    val mins = params.zipWithIndex.map { case ((a, b), i) =>
+    * of [[Dedup.minhashLshPairs]](n=3, `numHashes`, `bands`, 0.5). Shared
+    * by the pair oracles and the clustering/survivor oracles built on top
+    * of them. */
+  private def pairCtes(numHashes: Int, bands: Int): String = {
+    val rows = numHashes / bands
+    val mins = Dedup.portableHashParams(numHashes).zipWithIndex.map { case ((a, b), i) =>
       s"    min((x * $a + $b) % 1000000007) AS h$i"
     }.mkString(",\n")
     // per-band fold acc = (acc*10007 + h_i) % p, matching portableBandHash
     def bandExpr(band: Int): String =
-      (band * 4 until (band + 1) * 4).foldLeft("CAST(0 AS BIGINT)") { (acc, i) =>
+      (band * rows until (band + 1) * rows).foldLeft("CAST(0 AS BIGINT)") { (acc, i) =>
         s"(($acc * 10007 + h$i) % 1000000007)"
       }
-    val bandSelects = (0 until 4).map { b =>
+    val bandSelects = (0 until bands).map { b =>
       s"  SELECT doc_id, $b AS band, ${bandExpr(b)} AS bh FROM sig"
     }.mkString("\n  UNION ALL\n")
     s"""$portableShingleCtes,
@@ -1172,10 +1150,69 @@ object Pipeline extends QueryPack {
        |  JOIN sizes sb ON sb.doc_id = doc_id_b
        |  WHERE CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter) >= 0.5)""".stripMargin
   }
-  private val qMinhashLshPortableSql =
-    s"""WITH $portablePairCtes
+  /** The pair set of the `dedup_minhash_lsh_portable` row (16 hashes, 4
+    * bands) — the input of every clustering/survivor oracle below. */
+  private val portablePairCtes = pairCtes(numHashes = 16, bands = 4)
+
+  private def lshPairsSql(numHashes: Int, bands: Int): String =
+    s"""WITH ${pairCtes(numHashes, bands)}
        |SELECT doc_id_a, doc_id_b, jaccard FROM ppairs
        |ORDER BY doc_id_a, doc_id_b""".stripMargin
+
+  private def qDedupMinhash(s: SparkSession, sf: String): DataFrame =
+    Dedup.minhashLshPairs(Tables.documents(s, sf), shingleN = 3, numHashes = 32,
+        bands = 8, threshold = 0.5)
+      .orderBy("doc_id_a", "doc_id_b")
+  private val qDedupMinhashSql = lshPairsSql(numHashes = 32, bands = 8)
+
+  private def qMinhashLshPortable(s: SparkSession, sf: String): DataFrame =
+    Dedup.minhashLshPairs(Tables.documents(s, sf), shingleN = 3,
+        numHashes = 16, bands = 4, threshold = 0.5)
+      .orderBy("doc_id_a", "doc_id_b")
+  private val qMinhashLshPortableSql = lshPairsSql(numHashes = 16, bands = 4)
+
+  /** SimHash CTE chain ending in `sel(doc_id, simhash)` — the signature of
+    * [[Dedup.simhashBuckets]] at `numBits`. */
+  private def simhashCtes(numBits: Int): String = {
+    val bits = Dedup.portableHashParams(numBits).zipWithIndex.map { case ((a, b), s) =>
+      s"  list_sum(list_transform(xs, x -> CASE WHEN ((x * $a + $b) % 1000000007) % 2 = 1" +
+        s" THEN 1 ELSE -1 END)) AS b$s"
+    }.mkString(",\n")
+    val sim = (0 until numBits).map(s => s"CASE WHEN b$s > 0 THEN ${1L << s} ELSE 0 END")
+      .mkString(" + ")
+    s"""toks AS (
+       |  SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
+       |                             w -> len(w) > 0) AS t
+       |  FROM documents),
+       |hxs AS (
+       |  SELECT doc_id, list_transform(t, tok ->
+       |    list_reduce(list_prepend(CAST(0 AS BIGINT),
+       |      list_transform(string_split(tok, ''), c -> CAST(unicode(c) AS BIGINT))),
+       |      (acc, c) -> (acc * 31 + c) % 1000000007)) AS xs
+       |  FROM toks WHERE len(t) > 0),
+       |bits AS (
+       |  SELECT doc_id,
+       |$bits
+       |  FROM hxs),
+       |sel AS (SELECT doc_id, CAST($sim AS BIGINT) AS simhash FROM bits)""".stripMargin
+  }
+
+  /** The widest signature the family allows (62 bits). */
+  private def qDedupSimhash(s: SparkSession, sf: String): DataFrame =
+    Dedup.simhashBuckets(Tables.documents(s, sf), numBits = 62)
+      .select("doc_id", "simhash")
+      .orderBy("doc_id")
+  private val qDedupSimhashSql =
+    s"""WITH ${simhashCtes(62)}
+       |SELECT doc_id, simhash FROM sel ORDER BY doc_id""".stripMargin
+
+  private def qSimhashPortable(s: SparkSession, sf: String): DataFrame =
+    Dedup.simhashBuckets(Tables.documents(s, sf), numBits = 32)
+      .orderBy("doc_id")
+  private val qSimhashPortableSql =
+    s"""WITH ${simhashCtes(32)}
+       |SELECT doc_id, simhash, simhash // ${1L << 24} AS band8
+       |FROM sel ORDER BY doc_id""".stripMargin
 
   /** Connected-component CTE chain over `ppairs` (requires WITH RECURSIVE):
     * transitive closure by reachability, then cluster = min reachable id —
@@ -1200,15 +1237,13 @@ object Pipeline extends QueryPack {
   private val portablePairsMemo = new graft.core.Memo[String]
   private def portablePairs(s: SparkSession, sf: String): DataFrame =
     portablePairsMemo(s, sf)(
-      Dedup.minhashLshPairsPortable(Tables.documents(s, sf),
+      Dedup.minhashLshPairs(Tables.documents(s, sf),
         shingleN = 3, numHashes = 16, bands = 4, threshold = 0.5))
 
   /** End-to-end near-dup CLUSTERING with every stage oracle-checked: the
     * portable-hash LSH pair set (bit-exact in DuckDB) fed through the
     * distributed connected-component loop, verified against a recursive-CTE
-    * transitive closure. `dedup_cluster_lsh` times the same chain over the
-    * engine-internal xxhash64 family (rows-only); this pins its RESULT
-    * structure exactly. */
+    * transitive closure. */
   private def qClusterPortable(s: SparkSession, sf: String): DataFrame =
     Dedup.clusterPairs(portablePairs(s, sf))
       .select(col("node").as("doc_id"), col("cluster").as("cluster_id"))
@@ -1218,18 +1253,33 @@ object Pipeline extends QueryPack {
        |$portableCcCtes
        |SELECT node AS doc_id, cluster_id FROM cc ORDER BY doc_id""".stripMargin
 
+  /** Canonical survivors (every unclustered document plus each cluster's
+    * minimum id) over the LSH pair set of `pairs`. */
+  private def survivorsSql(pairs: String): String =
+    s"""WITH RECURSIVE $pairs,
+       |$portableCcCtes
+       |SELECT doc_id FROM documents
+       |WHERE doc_id NOT IN (SELECT node FROM cc WHERE node <> cluster_id)
+       |ORDER BY doc_id""".stripMargin
+
   /** Canonical-survivor selection over the portable clustering — the full
     * LSH → components → survivors pipeline, oracle-checked end to end. */
   private def qSurvivorsPortable(s: SparkSession, sf: String): DataFrame =
     Dedup.keepCanonical(Tables.documents(s, sf), portablePairs(s, sf))
       .select("doc_id")
       .orderBy("doc_id")
-  private val qSurvivorsPortableSql =
-    s"""WITH RECURSIVE $portablePairCtes,
-       |$portableCcCtes
-       |SELECT doc_id FROM documents
-       |WHERE doc_id NOT IN (SELECT node FROM cc WHERE node <> cluster_id)
-       |ORDER BY doc_id""".stripMargin
+  private val qSurvivorsPortableSql = survivorsSql(portablePairCtes)
+
+  /** Realistic end-to-end near-dup removal at the 32-hash / 8-band setting:
+    * LSH candidate pairs → connected components → canonical survivor per
+    * cluster, all in one plan. */
+  private def qClusterLsh(s: SparkSession, sf: String): DataFrame =
+    Dedup.keepCanonical(Tables.documents(s, sf),
+        Dedup.minhashLshPairs(Tables.documents(s, sf), shingleN = 3, numHashes = 32,
+          bands = 8, threshold = 0.5))
+      .select("doc_id")
+      .orderBy("doc_id")
+  private val qClusterLshSql = survivorsSql(pairCtes(numHashes = 32, bands = 8))
 
   /** Per-cluster graph diagnostics (nodes, edges, triangles, density) over
     * the portable pair graph. */
@@ -1619,8 +1669,7 @@ object Pipeline extends QueryPack {
   /** Cross-document duplicated 8-token spans over the portable hash — the
     * exact-substring dedup discovery pass, fully oracle-checked. */
   private def qDupSpans(s: SparkSession, sf: String): DataFrame =
-    Dedup.duplicatedSpans(Tables.documents(s, sf), k = 8, minDocs = 2,
-        portable = true)
+    Dedup.duplicatedSpans(Tables.documents(s, sf), k = 8, minDocs = 2)
       .orderBy("doc_id", "span_start")
   private val qDupSpansSql =
     s"""WITH $dupSpanCtes
@@ -1630,8 +1679,7 @@ object Pipeline extends QueryPack {
   /** Span REMOVAL: each document rebuilt without its duplicated spans —
     * surviving-token text and removed-token counts both oracle-checked. */
   private def qDupSpanRemoval(s: SparkSession, sf: String): DataFrame =
-    Dedup.removeDuplicatedSpans(Tables.documents(s, sf), k = 8, minDocs = 2,
-        portable = true)
+    Dedup.removeDuplicatedSpans(Tables.documents(s, sf), k = 8, minDocs = 2)
       .orderBy("doc_id")
   /** Removal tail over any `spans` CTE + `toks`, ending in
     * `cleaned(doc_id, clean_text, n_removed)`. */
@@ -1671,8 +1719,7 @@ object Pipeline extends QueryPack {
     // (1.9-2.6s both ways): the r14 `scored` checkpoint below already cut
     // the only multi-reference, so the discovery chain evaluates once per
     // run either way and the extra checkpoint job is pure overhead.
-    val cleaned = Dedup.removeDuplicatedSpans(Tables.documents(s, sf), k = 8,
-        minDocs = 2, portable = true)
+    val cleaned = Dedup.removeDuplicatedSpans(Tables.documents(s, sf), k = 8, minDocs = 2)
       .withColumnRenamed("clean_text", "text")
     // r14 (guide §5 caching note): the exact-rank floor consumes its input
     // three times (count + the prefix scan's two phases), and here that
@@ -1712,9 +1759,9 @@ object Pipeline extends QueryPack {
   }
 
   /** Within-document repeated 8-token spans (first occurrence survives);
-    * same portable machinery as the cross-doc pass. */
+    * same window-hash machinery as the cross-doc pass. */
   private def qSelfRepSpans(s: SparkSession, sf: String): DataFrame =
-    Dedup.selfRepeatedSpans(Tables.documents(s, sf), k = 3, portable = true)
+    Dedup.selfRepeatedSpans(Tables.documents(s, sf), k = 3)
       .orderBy("doc_id", "span_start")
   private val qSelfRepSpansSql =
     s"""WITH $selfRepSpanCtes
@@ -1724,42 +1771,12 @@ object Pipeline extends QueryPack {
   /** Self-repetition removal — documents keep the first copy of each
     * repeated run, later copies are cut. */
   private def qSelfRepRemoval(s: SparkSession, sf: String): DataFrame =
-    Dedup.removeSelfRepetition(Tables.documents(s, sf), k = 3, portable = true)
+    Dedup.removeSelfRepetition(Tables.documents(s, sf), k = 3)
       .orderBy("doc_id")
   private val qSelfRepRemovalSql =
     s"""WITH $selfRepSpanCtes,
        |$spanRemovalTail
        |SELECT doc_id, clean_text, n_removed FROM cleaned ORDER BY doc_id""".stripMargin
-
-  private def qSimhashPortable(s: SparkSession, sf: String): DataFrame =
-    Dedup.simhashBucketsPortable(Tables.documents(s, sf), numBits = 32)
-      .orderBy("doc_id")
-  private val qSimhashPortableSql = {
-    val params = Dedup.portableHashParams(32)
-    val bits = params.zipWithIndex.map { case ((a, b), s) =>
-      s"  list_sum(list_transform(xs, x -> CASE WHEN ((x * $a + $b) % 1000000007) % 2 = 1" +
-        s" THEN 1 ELSE -1 END)) AS b$s"
-    }.mkString(",\n")
-    val sim = (0 until 32).map(s => s"CASE WHEN b$s > 0 THEN ${1L << s} ELSE 0 END")
-      .mkString(" + ")
-    s"""WITH toks AS (
-       |  SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-       |                             w -> len(w) > 0) AS t
-       |  FROM documents),
-       |hxs AS (
-       |  SELECT doc_id, list_transform(t, tok ->
-       |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |      list_transform(string_split(tok, ''), c -> CAST(unicode(c) AS BIGINT))),
-       |      (acc, c) -> (acc * 31 + c) % 1000000007)) AS xs
-       |  FROM toks WHERE len(t) > 0),
-       |bits AS (
-       |  SELECT doc_id,
-       |$bits
-       |  FROM hxs),
-       |sel AS (SELECT doc_id, CAST($sim AS BIGINT) AS simhash FROM bits)
-       |SELECT doc_id, simhash, simhash // 16777216 AS band8
-       |FROM sel ORDER BY doc_id""".stripMargin
-  }
 
   private def qRepetition(s: SparkSession, sf: String): DataFrame =
     TextAnalysis.repetitionStats(Tables.documents(s, sf))
@@ -3592,11 +3609,10 @@ object Pipeline extends QueryPack {
     val table = "graft_span_idx_" + sf.replaceAll("[^A-Za-z0-9]", "_")
     Registry.ensureTable(s, table) {
       Dedup.writeSpanIndex(docs.where(col("source").isin(existingSrcs: _*)),
-        k = 8, table = table, portable = true)
+        k = 8, table = table)
     }
     Dedup.duplicatedSpansIncremental(s, table,
-        docs.where(!col("source").isin(existingSrcs: _*)), k = 8,
-        portable = true)
+        docs.where(!col("source").isin(existingSrcs: _*)), k = 8)
       .orderBy("doc_id", "span_start")
   }
   private val qDupSpansIncrementalSql = {
@@ -3713,8 +3729,8 @@ object Pipeline extends QueryPack {
       Some(qDedupWinnowIncrementalSql)),
     QueryDef("dedup_ngram_index", qDedupNgramIndex, Some(qDedupNgramSql)),
     QueryDef("dedup_ngram_index_build", qDedupNgramIndexBuild, Some(qDedupNgramIndexBuildSql)),
-    QueryDef("dedup_minhash_lsh", qDedupMinhash, None),
-    QueryDef("dedup_simhash", qDedupSimhash, None),
+    QueryDef("dedup_minhash_lsh", qDedupMinhash, Some(qDedupMinhashSql)),
+    QueryDef("dedup_simhash", qDedupSimhash, Some(qDedupSimhashSql)),
     QueryDef("dedup_embedding", qDedupEmbed, Some(qDedupEmbedSql)),
     QueryDef("dedup_embedding_exact", qDedupEmbedExact, Some(qDedupEmbedExactSql)),
     QueryDef("ann_brute_force", qAnnBrute, Some(qAnnBruteSql)),
@@ -3738,7 +3754,7 @@ object Pipeline extends QueryPack {
       Some(qNgramRepetitionSql)),
     QueryDef("multimodal_features", qMultimodal, Some(qMultimodalSql)),
     QueryDef("multimodal_resize", qMultimodalResize, Some(qMultimodalResizeSql)),
-    QueryDef("dedup_minhash_sig", qMinhashSig, None),
+    QueryDef("dedup_minhash_sig", qMinhashSig, Some(qMinhashSigSql)),
     QueryDef("dedup_minhash_portable", qMinhashPortable, Some(qMinhashPortableSql)),
     QueryDef("dedup_minhash_lsh_portable", qMinhashLshPortable, Some(qMinhashLshPortableSql)),
     QueryDef("dedup_cluster_portable", qClusterPortable, Some(qClusterPortableSql)),
@@ -3760,7 +3776,7 @@ object Pipeline extends QueryPack {
     QueryDef("dedup_simhash_portable", qSimhashPortable, Some(qSimhashPortableSql)),
     QueryDef("dedup_cluster_chain", qClusterChain, Some(qClusterChainSql)),
     QueryDef("dedup_keep_canonical", qKeepCanonical, Some(qKeepCanonicalSql)),
-    QueryDef("dedup_cluster_lsh", qClusterLsh, None),
+    QueryDef("dedup_cluster_lsh", qClusterLsh, Some(qClusterLshSql)),
     QueryDef("text_pack_shards", qPackShards, Some(qPackShardsSql)),
     QueryDef("text_chunk_sequences", qChunkSequences, Some(qChunkSequencesSql)),
     QueryDef("corpus_quality_floor", qQualityFloor, Some(qQualityFloorSql)),

@@ -78,8 +78,10 @@ object StreamingQ extends QueryPack {
   // directories — before this only the map entries were dropped, so a
   // long-lived multi-session JVM accumulated full-corpus JSON copies on
   // disk for as long as the process lived.
+  // A symlink is unlinked, never entered: its target lies outside the
+  // staged directory and is not ours to delete.
   private def deleteRec(p: java.nio.file.Path): Unit = {
-    if (java.nio.file.Files.isDirectory(p)) {
+    if (java.nio.file.Files.isDirectory(p, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
       val st = java.nio.file.Files.list(p)
       try st.forEach(deleteRec(_)) finally st.close()
     }
@@ -89,13 +91,17 @@ object StreamingQ extends QueryPack {
   graft.core.Memo.onClearSession { s =>
     stagedDirs.keys.filter(_._1 eq s).foreach { k =>
       stagedDirs.remove(k).foreach { dir =>
+        // Files.list's stream rethrows I/O errors as UncheckedIOException
         try deleteRec(java.nio.file.Paths.get(dir).getParent)
-        catch { case _: Throwable => () }
+        catch {
+          case _: java.io.IOException | _: java.io.UncheckedIOException |
+               _: SecurityException => ()
+        }
       }
     }
   }
-  private def stagedSrc(s: SparkSession, sf: String, tag: String)
-                       (write: String => Unit): String =
+  private[graft] def stagedSrc(s: SparkSession, sf: String, tag: String)
+                              (write: String => Unit): String =
     stagedDirs.getOrElseUpdate((s, sf, tag), {
       val dir = java.nio.file.Files
         .createTempDirectory(s"graft_$tag").toString + "/src"

@@ -116,4 +116,24 @@ class MemoSpec extends SparkTestBase {
     assert(df.storageLevel == StorageLevel.NONE)
     assert(Memo.liveEntries(s) == 0)
   }
+
+  test("clearSession unlinks a symlink in a staged dir and keeps its target") {
+    import java.nio.file.{Files, LinkOption}
+    val s = spark.newSession()
+    val outside = Files.createTempDirectory("graft_memo_outside")
+    val kept = Files.writeString(outside.resolve("keep.txt"), "x")
+    val staged = java.nio.file.Paths.get(
+      graft.queries.StreamingQ.stagedSrc(s, "sf", "symlink") { dir =>
+        val d = Files.createDirectories(java.nio.file.Paths.get(dir))
+        Files.writeString(d.resolve("part.json"), "{}")
+        Files.createSymbolicLink(d.resolve("link"), outside)
+      })
+    assert(Files.isSymbolicLink(staged.resolve("link")))
+    Memo.clearSession(s)
+    assert(!Files.exists(staged.resolve("link"), LinkOption.NOFOLLOW_LINKS),
+      "the link is unlinked")
+    assert(!Files.exists(staged.getParent), "the staged dir is deleted")
+    assert(Files.exists(kept), "the link target's files remain")
+    Files.delete(kept); Files.delete(outside)
+  }
 }

@@ -63,25 +63,25 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("portable minhash/simhash are layout-invariant and structurally sound") {
-    // the portable family's whole point is bit-determinism: the signature
+    // the hash family's whole point is bit-determinism: the signature
     // must not depend on partitioning, and the end-to-end LSH pair set must
     // only ever emit verified pairs (jaccard >= threshold)
-    val sig1 = Dedup.minhashSignaturesPortable(docs, shingleN = 2, numHashes = 8)
+    val sig1 = Dedup.minhashSignatures(docs, shingleN = 2, numHashes = 8)
       .orderBy("doc_id").collect().map(_.toSeq)
-    val sig2 = Dedup.minhashSignaturesPortable(docs.repartition(7), shingleN = 2, numHashes = 8)
+    val sig2 = Dedup.minhashSignatures(docs.repartition(7), shingleN = 2, numHashes = 8)
       .orderBy("doc_id").collect().map(_.toSeq)
     assert(sig1.toSeq == sig2.toSeq)
     // identical docs share the full signature; near-dups share some mins
     val byId = sig1.map(r => r.head -> r.tail).toMap
     assert(byId(0L) == byId(2L))
-    val pairs = Dedup.minhashLshPairsPortable(docs, shingleN = 2, numHashes = 16,
+    val pairs = Dedup.minhashLshPairs(docs, shingleN = 2, numHashes = 16,
         bands = 8, threshold = 0.5)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))
     assert(pairs.map(_._1).contains((0L, 2L)))
     assert(pairs.forall(_._2 >= 0.5))
-    val sim = Dedup.simhashBucketsPortable(docs).orderBy("doc_id")
+    val sim = Dedup.simhashBuckets(docs).orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val sim2 = Dedup.simhashBucketsPortable(docs.repartition(5)).orderBy("doc_id")
+    val sim2 = Dedup.simhashBuckets(docs.repartition(5)).orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(sim.toSeq == sim2.toSeq)
     assert(sim.forall { case (_, h, b) => h >= 0L && h < (1L << 32) && b == (h >>> 24) })
@@ -634,7 +634,7 @@ class PipelineSpec extends SparkTestBase {
     .toDF("doc_id", "text")
 
   test("duplicatedSpans merges flagged windows into maximal per-doc spans") {
-    val spans = Dedup.duplicatedSpans(spanDocs, k = 4, minDocs = 2, portable = true)
+    val spans = Dedup.duplicatedSpans(spanDocs, k = 4, minDocs = 2)
       .select("doc_id", "span_start", "span_end", "span_tokens")
       .as[(Long, Long, Long, Long)].collect().toSet
     // windows of the shared run: starts 0..6 in A (span [0,9]) and 2..8 in B
@@ -643,7 +643,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("removeDuplicatedSpans drops exactly the spanned tokens, keeps the rest") {
-    val out = Dedup.removeDuplicatedSpans(spanDocs, k = 4, minDocs = 2, portable = true)
+    val out = Dedup.removeDuplicatedSpans(spanDocs, k = 4, minDocs = 2)
       .select("doc_id", "clean_text", "n_removed")
       .as[(Long, String, Long)].collect().sortBy(_._1).toSeq
     assert(out == Seq(
@@ -661,32 +661,29 @@ class PipelineSpec extends SparkTestBase {
       (0L, "r1a r1b r1c r1d r1e GAP r2a r2b r2c r2d r2e"),
       (1L, "r1a r1b r1c r1d r1e OTHER r2a r2b r2c r2d r2e"))
       .toDF("doc_id", "text")
-    val spans = Dedup.duplicatedSpans(docs, k = 3, minDocs = 2, portable = true)
+    val spans = Dedup.duplicatedSpans(docs, k = 3, minDocs = 2)
       .where(col("doc_id") === 0L)
       .select("span_start", "span_end").as[(Long, Long)].collect().toSet
     assert(spans == Set((0L, 4L), (6L, 10L)))
-    val clean = Dedup.removeDuplicatedSpans(docs, k = 3, minDocs = 2, portable = true)
+    val clean = Dedup.removeDuplicatedSpans(docs, k = 3, minDocs = 2)
       .where(col("doc_id") === 0L).select("clean_text").as[String].head()
     assert(clean == "GAP")
   }
 
   test("hashed embeddings are unit vectors that separate near-dups from strangers") {
-    for (portable <- Seq(false, true)) {
-      val emb = Similarity.hashedEmbedding(docs, dim = 32, portable = portable)
-      val vecs = emb.select("doc_id", "embedding")
-        .as[(Long, Seq[Float])].collect().toMap
-      // identical texts (docs 0 and 2) embed identically; all unit norm
-      assert(vecs(0L) == vecs(2L), s"portable=$portable")
-      vecs.values.foreach { v =>
-        val n2 = v.map(x => x.toDouble * x).sum
-        assert(math.abs(n2 - 1.0) < 1e-6, s"norm2=$n2 portable=$portable")
-      }
-      def cos(a: Seq[Float], b: Seq[Float]): Double =
-        a.zip(b).map { case (x, y) => x.toDouble * y }.sum
-      // near-dup (0 vs 1, one word differs) beats unrelated (0 vs 3)
-      assert(cos(vecs(0L), vecs(1L)) > cos(vecs(0L), vecs(3L)),
-        s"portable=$portable")
+    val emb = Similarity.hashedEmbedding(docs, dim = 32)
+    val vecs = emb.select("doc_id", "embedding")
+      .as[(Long, Seq[Float])].collect().toMap
+    // identical texts (docs 0 and 2) embed identically; all unit norm
+    assert(vecs(0L) == vecs(2L))
+    vecs.values.foreach { v =>
+      val n2 = v.map(x => x.toDouble * x).sum
+      assert(math.abs(n2 - 1.0) < 1e-6, s"norm2=$n2")
     }
+    def cos(a: Seq[Float], b: Seq[Float]): Double =
+      a.zip(b).map { case (x, y) => x.toDouble * y }.sum
+    // near-dup (0 vs 1, one word differs) beats unrelated (0 vs 3)
+    assert(cos(vecs(0L), vecs(1L)) > cos(vecs(0L), vecs(3L)))
   }
 
   test("bloom decontamination never under-drops and matches exact when generous") {
@@ -796,18 +793,16 @@ class PipelineSpec extends SparkTestBase {
       (0L, "a b c X a b c Y"),
       (1L, "a b c Z W V Q R"))
       .toDF("doc_id", "text")
-    for (portable <- Seq(false, true)) {
-      val spans = Dedup.selfRepeatedSpans(docs, k = 3, portable = portable)
-        .select("doc_id", "span_start", "span_end")
-        .as[(Long, Long, Long)].collect().toSet
-      assert(spans == Set((0L, 4L, 6L)), s"portable=$portable")
-      val out = Dedup.removeSelfRepetition(docs, k = 3, portable = portable)
-        .select("doc_id", "clean_text", "n_removed")
-        .as[(Long, String, Long)].collect().sortBy(_._1).toSeq
-      assert(out == Seq(
-        (0L, "a b c X Y", 3L),
-        (1L, "a b c Z W V Q R", 0L)), s"portable=$portable")
-    }
+    val spans = Dedup.selfRepeatedSpans(docs, k = 3)
+      .select("doc_id", "span_start", "span_end")
+      .as[(Long, Long, Long)].collect().toSet
+    assert(spans == Set((0L, 4L, 6L)))
+    val out = Dedup.removeSelfRepetition(docs, k = 3)
+      .select("doc_id", "clean_text", "n_removed")
+      .as[(Long, String, Long)].collect().sortBy(_._1).toSeq
+    assert(out == Seq(
+      (0L, "a b c X Y", 3L),
+      (1L, "a b c Z W V Q R", 0L)))
   }
 
   test("incremental span dedup equals the full run restricted to the snapshot") {
@@ -824,22 +819,22 @@ class PipelineSpec extends SparkTestBase {
       .toDF("doc_id", "text")
     val t = "graft_span_idx_spec"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    Dedup.writeSpanIndex(prior, k = 3, table = t, portable = true, buckets = 4)
+    Dedup.writeSpanIndex(prior, k = 3, table = t, buckets = 4)
     def spans(df: org.apache.spark.sql.DataFrame) = df
       .select("doc_id", "span_start", "span_end")
       .as[(Long, Long, Long)].collect().toSet
     def fullRestricted(all: org.apache.spark.sql.DataFrame, minId: Long) = spans(
-      Dedup.duplicatedSpans(all, k = 3, minDocs = 2, portable = true)
+      Dedup.duplicatedSpans(all, k = 3, minDocs = 2)
         .where(col("doc_id") >= minId))
     val inc1 = spans(Dedup.duplicatedSpansIncremental(spark, t, incoming,
-      k = 3, portable = true))
+      k = 3))
     assert(inc1 == fullRestricted(prior.unionByName(incoming), 10L))
     assert(inc1.map(_._1) == Set(10L, 11L, 12L))
     // append maintenance: after folding the snapshot in, the NEXT crawl's
     // incremental pass must equal the three-corpus full run
-    Dedup.appendSpanIndex(incoming, k = 3, table = t, portable = true, buckets = 4)
+    Dedup.appendSpanIndex(incoming, k = 3, table = t, buckets = 4)
     val inc2 = spans(Dedup.duplicatedSpansIncremental(spark, t, later,
-      k = 3, portable = true))
+      k = 3))
     assert(inc2 == fullRestricted(
       prior.unionByName(incoming).unionByName(later), 20L))
     assert(inc2.map(_._1) == Set(20L))
@@ -875,20 +870,10 @@ class PipelineSpec extends SparkTestBase {
       }
     } yield (id, span._1.toLong, span._2.toLong)).toSet
     val df = rdocs.toDF("doc_id", "text")
-    for (portable <- Seq(false, true)) {
-      val got = Dedup.duplicatedSpans(df, k = k, minDocs = 2, portable = portable)
-        .select("doc_id", "span_start", "span_end")
-        .as[(Long, Long, Long)].collect().toSet
-      assert(got == expect, s"portable=$portable")
-    }
-  }
-
-  test("duplicated spans: xxhash64 and portable families agree off collisions") {
-    val fast = Dedup.duplicatedSpans(spanDocs, k = 4, minDocs = 2)
-      .select("doc_id", "span_start", "span_end").as[(Long, Long, Long)].collect().toSet
-    val port = Dedup.duplicatedSpans(spanDocs, k = 4, minDocs = 2, portable = true)
-      .select("doc_id", "span_start", "span_end").as[(Long, Long, Long)].collect().toSet
-    assert(fast == port)
+    val got = Dedup.duplicatedSpans(df, k = k, minDocs = 2)
+      .select("doc_id", "span_start", "span_end")
+      .as[(Long, Long, Long)].collect().toSet
+    assert(got == expect)
   }
 
   test("charEntropy: ln(k) for uniform alphabets, 0 for a single repeated char") {
