@@ -22,8 +22,9 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 
+FAMILIES="tpch series vector corpus dedup events retrieval text streaming"
 TMP=$(mktemp /tmp/bench_isolated.XXXX.jsonl)
-for fam in tpch series vector corpus dedup events retrieval text streaming; do
+for fam in $FAMILIES; do
   echo "[bench_isolated] family=$fam" >&2
   # shellcheck disable=SC2086
   java -Xmx"${SPARK_DRIVER_MEM:-8g}" $ADD_OPENS \
@@ -31,14 +32,20 @@ for fam in tpch series vector corpus dedup events retrieval text streaming; do
     -cp "$CP" graft.tools.BenchFamily "$fam" "$SF" 2>/dev/null | tail -1 >> "$TMP"
 done
 
-python3 - "$TMP" "$OUT" <<'EOF'
+python3 - "$TMP" "$OUT" $FAMILIES <<'EOF'
 import json, sys
 fams = [json.loads(l) for l in open(sys.argv[1]) if l.strip()]
+# a family whose JVM died prints nothing: a merge without it would read as
+# a faster total, so every family must have reported
+missing = sorted(set(sys.argv[3:]) - {f["family"] for f in fams})
+if missing:
+    sys.exit("bench_isolated: no result for families: " + ", ".join(missing))
 out = {
     "metric": "isolated_warm", "unit": "sec", "sf": fams[0]["sf"],
     "value": round(sum(f["total"] for f in fams), 2),
     "families": {f["family"]: f["total"] for f in fams},
     "queries": {k: v for f in fams for k, v in f["queries"].items()},
+    "failed": [q for f in fams for q in f["failed"]],
 }
 json.dump(out, open(sys.argv[2], "w"))
 print("wrote", sys.argv[2], "total", out["value"])

@@ -68,25 +68,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // r14 (guide §2/§6): let AQE re-plan CACHED frames too — the default
-      // pins every memoized frame to the raw shuffle layout (32 one-task
-      // partitions here), so each consumer stage pays full task fan-out to
-      // read a few MB; with AQE the cached layout coalesces to the advisory
-      // partition size (size-adaptive — big frames keep their partitions).
-      // Output VALUES never depend on partitioning (DifferentialSpec /
-      // PartitionInvarianceSpec pin this); measured: retrieval_bm25 warm
-      // 1.6-1.8s -> 0.8-0.9s.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session()
     // per-round clusterPairs breakdown on stderr, so a slow dedup_cluster_*
     // line in this bench attributes its cost round by round
     spark.conf.set("graft.clusterPairs.log", "true")
@@ -105,12 +87,13 @@ object Bench {
     // (MetricsTap), so cross-round drift is attributable: wall time up with
     // flat bytes and flat GC = host noise; GC or dropped blocks up = memory
     // pressure; spill bytes up = a real plan regression. The settling poll
-    // runs AFTER the clock stops, so it never inflates the timing.
+    // runs AFTER the clock stops, so it never inflates the timing. A run
+    // that throws propagates: the caller records the query as failed.
     def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, graft.core.MetricsTap.Snap) = {
       val m0 = graft.core.MetricsTap.snapshot(spark)
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      fn(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e9
       (wall, graft.core.MetricsTap.settled(spark) - m0)
     }
@@ -183,6 +166,7 @@ object Bench {
     var storagePeakMem = 0L
     var storagePeakDisk = 0L
     var memoPeak = 0
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val byFamily = SparkEntry.queries.toSeq.sortBy(q => (family(q._1), q._1))
       .groupBy(q => family(q._1)).toSeq.sortBy(_._1)
     val runs = byFamily.flatMap { case (_, qs) =>
@@ -195,21 +179,30 @@ object Bench {
       qs.headOption.foreach { case (_, fn) =>
         try fn(spark, sfDir).count() catch { case _: Throwable => () }
       }
-      qs.sortBy(_._1).map { case (name, fn) =>
+      qs.sortBy(_._1).flatMap { case (name, fn) =>
         val la = loadavg1
-        val a = once(fn)
-        val b = once(fn)
-        val timed =
-          if (math.max(a._1, b._1) / math.max(math.min(a._1, b._1), 1e-9) > 1.5)
+        // a query that throws did no work: timing it would LOWER the total,
+        // so it goes to `failed` and stays out of every timed channel
+        val timed = try {
+          val a = once(fn)
+          val b = once(fn)
+          Some(if (math.max(a._1, b._1) / math.max(math.min(a._1, b._1), 1e-9) > 1.5)
             Seq(a, b, once(fn))
-          else Seq(a, b)
-        val best = timed.minBy(_._1)
+          else Seq(a, b))
+        } catch { case e: Throwable =>
+          Console.err.println(s"[bench] $name failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
+          failed += name
+          None
+        }
         val (sm, sd, _) = graft.core.MetricsTap.storageGauge(spark)
         storagePeakMem = math.max(storagePeakMem, sm)
         storagePeakDisk = math.max(storagePeakDisk, sd)
         memoPeak = math.max(memoPeak, graft.core.Memo.liveEntries(spark))
         queryIdx += 1; sinceProbe += 1; maybeProbe()
-        (name, best._1, a._1, timed.map(_._1), best._2, sm, la)
+        timed.map { ts =>
+          val best = ts.minBy(_._1)
+          (name, best._1, ts.head._1, ts.map(_._1), best._2, sm, la)
+        }
       }
     }
     maybeProbe(force = true)
@@ -353,13 +346,14 @@ object Bench {
     // the environment block that makes heap-pressure discrepancies
     // attributable from the artifact alone (r9's were not)
     val env =
-      s"""{"max_heap_bytes":${Runtime.getRuntime.maxMemory},"cpus":$cpus,""" +
+      s"""{"max_heap_bytes":${Runtime.getRuntime.maxMemory},"cpus":${spark.sparkContext.defaultParallelism},""" +
       s""""storage_mem_peak":$storagePeakMem,"storage_disk_peak":$storagePeakDisk,""" +
       s""""memo_entries_peak":$memoPeak,"gc_ms_total":$gcTotal,""" +
       s""""blocks_dropped_min_runs":$droppedTotal,""" +
       s""""calibration_drift":${f2(calDrift)},""" +
       s""""memo_max_entries":"${spark.conf.get("graft.memo.maxEntries", "128")}"}"""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","value_single_pass":$singlePass,"adjudication":$adjJson,"queries":$qs,"runs":$runsJson,"io":$ioJson,"calibration":$calJson,"shuffle_bytes_total":$shuffleTotal,"spill_bytes_total":$spillTotal,"env":$env,"sf":"$sfDir"}"""
+    val failedJson = failed.map(n => s"\"$n\"").mkString("[", ",", "]")
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","value_single_pass":$singlePass,"adjudication":$adjJson,"queries":$qs,"runs":$runsJson,"io":$ioJson,"calibration":$calJson,"shuffle_bytes_total":$shuffleTotal,"spill_bytes_total":$spillTotal,"failed":$failedJson,"env":$env,"sf":"$sfDir"}"""
     // the artifact must not depend on a stdout tail: persist the FULL line
     // (every runs/io channel + the calibration series) to a file
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_full.json")
@@ -381,7 +375,7 @@ object Bench {
     val CompactCap = 1900 // bytes, < the driver's ~2KB stdout tail
     val adjCompact =
       s"""{"verdict":"$benchVerdict","calibration_drift":${f2(calDrift)},""" +
-        s""""suspects_count":${suspects.size}}"""
+        s""""suspects_count":${suspects.size},"failed_count":${failed.size}}"""
     val byTime = results.sortBy(-_._2)
     def compactLine(nQueries: Int): String = {
       val keep = (results.filter(_._1.startsWith("tpch_")) ++ byTime)

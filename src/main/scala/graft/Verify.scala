@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,27 +8,7 @@ object Verify {
     // optional trailing names restrict the dump (local check.py iteration);
     // the driver always calls with exactly (sfDir, outDir) = full dump
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_CODEGEN=false forces the interpreted expression path —
-    // the codegen-vs-eval differential audit for the custom expressions
-    val codegen = sys.env.getOrElse("SPARK_GRAFT_CODEGEN", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // r14 (guide §2/§6): let AQE re-plan CACHED frames too — the default
-      // pins every memoized frame to the raw shuffle layout (32 one-task
-      // partitions here), so each consumer stage pays full task fan-out to
-      // read a few MB; with AQE the cached layout coalesces to the advisory
-      // partition size (size-adaptive — big frames keep their partitions).
-      // Output VALUES never depend on partitioning (DifferentialSpec /
-      // PartitionInvarianceSpec pin this); measured: retrieval_bm25 warm
-      // 1.6-1.8s -> 0.8-0.9s.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.wholeStage", codegen)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session(logLevel = "WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (only.isEmpty || only(name))

@@ -120,6 +120,16 @@ object OracleSafe {
 object Dist {
   import org.apache.spark.sql.expressions.Window
 
+  /** Window partition key that puts every row in ONE partition, for windows
+    * over an already-bounded frame (a k-row top-k tail, per-partition
+    * offsets). It is 0 on every row, whatever the type or nullness of `c`
+    * (xxhash64 of null is its seed), yet not foldable, so
+    * EliminateWindowPartitions keeps the spec and WindowExec doesn't log
+    * "No Partition Defined". A bare `pmod(c, 1)` is neither: a null `c`
+    * opens a second partition, and a string `c` casts to a null key (or
+    * fails under ANSI). */
+  def singleWindowKey(c: Column): Column = pmod(xxhash64(c), lit(1))
+
   /** TWO-PHASE distributed prefix sum: the inclusive running total of
     * `value` over the global order `rangeOrd ++ localOrd` (within each
     * `keyNames` group), without ever funnelling the data through a
@@ -158,10 +168,9 @@ object Dist {
     // executes identically (all offset rows to one task, as before) and
     // keeps the log channel clean for warnings that mean something. The
     // constant must not be FOLDABLE (EliminateWindowPartitions strips
-    // literals and the warning returns): pmod(_pid, 1) is 0 on every row
-    // but survives the optimizer.
+    // literals and the warning returns): see singleWindowKey.
     val offKeys: Seq[Column] =
-      if (keyCols.isEmpty) Seq(pmod(col("_pid"), lit(1))) else keyCols
+      if (keyCols.isEmpty) Seq(singleWindowKey(col("_pid"))) else keyCols
     val wOff = Window.partitionBy(offKeys: _*).orderBy("_pid")
       .rowsBetween(Window.unboundedPreceding, -1)
     // partition totals aggregate the VALUE directly — max of the running

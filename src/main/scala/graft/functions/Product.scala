@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.dsl.expressions._
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, If, IsNull, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.{expr, udaf}
 import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType}
 
 /** Exact product aggregate — the one cross-series aggregation the reference has
@@ -49,38 +47,10 @@ case class ProductDecl(child: Expression) extends DeclarativeAggregate {
     copy(child = newChildren.head)
 }
 
-/** Typed-Aggregator variant kept for API reference/tests; the codegen'd
-  * ProductDecl above is what the query path uses. */
-object ProductAgg extends Aggregator[java.lang.Double, (Double, Boolean), java.lang.Double] {
-  override def zero: (Double, Boolean) = (1.0, false)
-  override def reduce(b: (Double, Boolean), v: java.lang.Double): (Double, Boolean) =
-    if (v == null) b else (b._1 * v, true)
-  override def merge(a: (Double, Boolean), b: (Double, Boolean)): (Double, Boolean) =
-    (a._1 * b._1, a._2 || b._2)
-  override def finish(b: (Double, Boolean)): java.lang.Double =
-    if (b._2) b._1 else null
-  override def bufferEncoder: Encoder[(Double, Boolean)] =
-    Encoders.tuple(Encoders.scalaDouble, Encoders.scalaBoolean)
-  override def outputEncoder: Encoder[java.lang.Double] = Encoders.DOUBLE
-}
-
 object Product {
-  /** Register `product_exact` in the session function registry (same pattern
-    * as VectorExprs.float_dot). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "product_exact", exprs => ProductDecl(exprs(0)), "scala_udf")
+  import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
 
-  private lazy val legacy = udaf(ProductAgg)
-
-  /** product(col) as a codegen-capable Column aggregate. The column must be a
-    * resolvable name/expression (registry-routed, like float_dot). */
-  def product(c: Column): Column = {
-    // the registry route needs an active session; fall back to the typed
-    // Aggregator when none is running (plan-construction-only contexts)
-    SparkSession.getActiveSession match {
-      case Some(s) => register(s); expr(s"product_exact(${c.toString})")
-      case None    => legacy(c)
-    }
-  }
+  /** product(col) as a codegen-capable Column aggregate (HashAggregate). */
+  def product(c: Column): Column =
+    column(ProductDecl(expression(c)).toAggregateExpression())
 }

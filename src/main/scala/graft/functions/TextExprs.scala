@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -203,33 +202,17 @@ object TextExprs {
     new GenericArrayData(out)
   }
 
-  /** Register the text kernels (literal int/long params). Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_ngrams",
-      exprs => WordNgrams(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "poly_hash", exprs => PolyHash(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_window_hashes",
-      exprs => RollingWindowHashes(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].longValue(),
-        exprs(3).eval().asInstanceOf[Number].longValue()),
-      "scala_udf")
-  }
-
   import org.apache.spark.sql.Column
-  import org.apache.spark.sql.graft.ColumnBridge
+  import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
 
-  /** [[PolyHash]] over an arbitrary Column (no registration needed). */
-  def polyHashCol(s: Column): Column =
-    ColumnBridge.column(PolyHash(ColumnBridge.expression(s)))
+  /** [[WordNgrams]] over an arbitrary Column. */
+  def wordNgramsCol(text: Column, n: Int): Column =
+    column(WordNgrams(expression(text), n))
+
+  /** [[PolyHash]] over an arbitrary Column. */
+  def polyHashCol(s: Column): Column = column(PolyHash(expression(s)))
 
   /** [[RollingWindowHashes]] over an arbitrary Column. */
   def rollingWindowHashesCol(hs: Column, k: Int, r: Long, p: Long): Column =
-    ColumnBridge.column(
-      RollingWindowHashes(ColumnBridge.expression(hs), k, r, p))
+    column(RollingWindowHashes(expression(hs), k, r, p))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -21,7 +21,7 @@ case class FloatDotProduct(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "float_dot"
 
-  // fail wrong-typed raw-SQL arguments at ANALYSIS time, not with a runtime
+  // fail wrong-typed arguments at ANALYSIS time, not with a runtime
   // ClassCastException / codegen compile error inside the scan loop
   override def checkInputDataTypes(): TypeCheckResult =
     Seq(left, right).zipWithIndex.collectFirst {
@@ -81,9 +81,9 @@ case class Sq8Cosine(first: Expression, second: Expression, third: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "sq8_cosine"
 
-  // analysis-time typing for raw-SQL callers (matches FloatDotProduct): the
-  // stats struct needs exactly two DOUBLE fields; field NAMES are free so a
-  // struct(mn, step) built under any aliases is accepted
+  // analysis-time typing (matches FloatDotProduct): the stats struct needs
+  // exactly two DOUBLE fields; field NAMES are free so a struct(mn, step)
+  // built under any aliases is accepted
   override def checkInputDataTypes(): TypeCheckResult = {
     def arrayOf(e: Expression, el: DataType => Boolean): Boolean = e.dataType match {
       case ArrayType(t, _) => el(t)
@@ -151,30 +151,25 @@ case class Sq8Cosine(first: Expression, second: Expression, third: Expression)
     copy(first = newFirst, second = newSecond, third = newThird)
 }
 
+/** Column builders for the vector kernels: each wraps its Catalyst node
+  * directly (no session function registry), so any session can run them. */
 object VectorExprs {
-  /** Register `float_dot` in the session function registry (the Spark-4 way to
-    * expose a custom Expression as a Column-usable function). Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "float_dot", exprs => FloatDotProduct(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sq8_cosine", exprs => Sq8Cosine(exprs(0), exprs(1), exprs(2)), "scala_udf")
-  }
+  import org.apache.spark.sql.functions.{sqrt, when}
+  import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
 
-  import org.apache.spark.sql.functions.{expr, sqrt, when}
+  def floatDot(a: Column, b: Column): Column =
+    column(FloatDotProduct(expression(a), expression(b)))
 
-  def floatDot(a: String, b: String): Column = expr(s"float_dot($a, $b)")
-
-  /** Cosine similarity via the codegen'd dot product (register() first).
-    * A zero-norm operand yields 0.0 (no similarity) rather than an ANSI
-    * divide-by-zero — real corpora do contain all-zero embeddings. */
-  def fastCosine(a: String, b: String): Column = {
+  /** Cosine similarity via the codegen'd dot product. A zero-norm operand
+    * yields 0.0 (no similarity) rather than an ANSI divide-by-zero — real
+    * corpora do contain all-zero embeddings. */
+  def fastCosine(a: Column, b: Column): Column = {
     val denom = sqrt(floatDot(a, a)) * sqrt(floatDot(b, b))
     when(denom === 0d, 0d).otherwise(floatDot(a, b) / denom)
   }
 
-  /** Codegen'd SQ8 ADC cosine (register() first): codes ARRAY<INT>, query
-    * ARRAY<FLOAT>, stats ARRAY<STRUCT<mn, step>>. */
-  def sq8Cosine(codes: String, q: String, stats: String): Column =
-    expr(s"sq8_cosine($codes, $q, $stats)")
+  /** Codegen'd SQ8 ADC cosine: codes ARRAY<INT>, query ARRAY<FLOAT>, stats
+    * ARRAY<STRUCT<mn, step>>. */
+  def sq8Cosine(codes: Column, q: Column, stats: Column): Column =
+    column(Sq8Cosine(expression(codes), expression(q), expression(stats)))
 }

@@ -1,5 +1,7 @@
 package graft.pipelines
 
+import graft.functions.TextExprs.wordNgramsCol
+import graft.functions.VectorExprs.fastCosine
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -73,9 +75,8 @@ object Dedup {
     // transform/slice/concat_ws chain (TextExprsSpec) but one compiled
     // pass per document instead of interpreted per-gram lambdas; shingling
     // is the floor under every dedup/decontamination/novelty query
-    graft.functions.TextExprs.register(docs.sparkSession)
     docs.select(col(idCol),
-        explode(expr(s"word_ngrams(text, $n)")).as("shingle"))
+        explode(wordNgramsCol(col("text"), n)).as("shingle"))
       .where(length(col("shingle")) > 0)
   }
 
@@ -219,8 +220,7 @@ object Dedup {
       shingles(reference, n, idCol).select("shingle").distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    graft.functions.TextExprs.register(incoming.sparkSession)
-    val sh = array_distinct(filter(expr(s"word_ngrams(text, $n)"),
+    val sh = array_distinct(filter(wordNgramsCol(col("text"), n),
       s => length(s) > 0))
     incoming.select(col(idCol).cast(LongType).as(idCol), explode(sh).as("shingle"))
       .join(refSh.withColumn("_seen", lit(1)), Seq("shingle"), "left")
@@ -1284,34 +1284,24 @@ object Dedup {
     * set by numBits/items) can only OVER-drop — the conservative
     * direction for decontamination. Spec-gated against the exact operator
     * (drops are always a superset; equal at generous numBits). */
-  private val bloomViewId = new java.util.concurrent.atomic.AtomicLong()
-
   def decontaminateBloom(docs: DataFrame, benchmark: DataFrame, n: Int,
                          expectedItems: Long, numBits: Long,
                          minHits: Int = 1, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    graft.functions.Sketches.register(spark)
+    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+    val h = xxhash64(col("shingle"))
     // might_contain requires its filter as a constant or SCALAR SUBQUERY —
     // the subquery form keeps the whole thing one lazy plan (no job at
-    // plan-build, filter materialized once at execution and reused). Temp
-    // views only exist to phrase the subquery; they are dropped as soon as
-    // the plan is resolved.
-    val id = bloomViewId.incrementAndGet()
-    val vGrams = s"graft_bloom_bench_$id"
-    val vProbe = s"graft_bloom_probe_$id"
-    shingles(benchmark, n, idCol).createOrReplaceTempView(vGrams)
-    rawShingles(docs, n, idCol).createOrReplaceTempView(vProbe)
-    val contaminated = spark.sql(
-      s"""SELECT $idCol FROM $vProbe
-         |WHERE bloom_might_contain(
-         |  (SELECT bloom_agg(xxhash64(shingle), ${expectedItems}L, ${numBits}L)
-         |   FROM $vGrams),
-         |  xxhash64(shingle))
-         |GROUP BY $idCol
-         |HAVING count(DISTINCT shingle) >= $minHits""".stripMargin)
-    spark.catalog.dropTempView(vGrams)
-    spark.catalog.dropTempView(vProbe)
-    docs.join(contaminated, Seq(idCol), "left_anti")
+    // plan-build, filter materialized once at execution and reused)
+    val bloom = shingles(benchmark, n, idCol).agg(column(
+      new BloomFilterAggregate(expression(h), Literal(expectedItems), Literal(numBits))
+        .toAggregateExpression())).scalar()
+    val contaminated = rawShingles(docs, n, idCol)
+      .where(column(BloomFilterMightContain(expression(bloom), expression(h))))
+      .groupBy(idCol).agg(countDistinct(col("shingle")).as("_hits"))
+      .where(col("_hits") >= minHits)
+    docs.join(contaminated.select(idCol), Seq(idCol), "left_anti")
   }
 
   /** EXACT all-pairs embedding near-dup — the correctness baseline the banded
@@ -1335,7 +1325,6 @@ object Dedup {
   def semanticDedup(emb: DataFrame, k: Int, iters: Int,
                     cosineThreshold: Double,
                     idCol: String = "vec_id"): DataFrame = {
-    graft.functions.VectorExprs.register(emb.sparkSession)
     // both pair-join sides read the same clustered frame — materialize the
     // Lloyd rounds once instead of twice (the ngramJaccardPairs caching
     // rationale; the session evicts it like every other derived index)
@@ -1349,7 +1338,7 @@ object Dedup {
       col("embedding").as("eb"))
     val dropped = a.join(b, Seq("cluster"))
       .where(col("vec_id_a") < col("vec_id_b"))
-      .withColumn("cosine", graft.functions.VectorExprs.fastCosine("ea", "eb"))
+      .withColumn("cosine", fastCosine(col("ea"), col("eb")))
       .where(col("cosine") >= cosineThreshold)
       .select(col("vec_id_b").as(idCol)).distinct()
     emb.join(dropped, Seq(idCol), "left_anti").select(idCol)
@@ -1357,11 +1346,10 @@ object Dedup {
 
   def embeddingExactPairs(emb: DataFrame, cosineThreshold: Double,
                           idCol: String = "vec_id"): DataFrame = {
-    graft.functions.VectorExprs.register(emb.sparkSession)
     val a = emb.select(col(idCol).as("vec_id_a"), col("embedding").as("ea"))
     val b = emb.select(col(idCol).as("vec_id_b"), col("embedding").as("eb"))
     a.join(broadcast(b), col("vec_id_a") < col("vec_id_b"))
-      .withColumn("cosine", graft.functions.VectorExprs.fastCosine("ea", "eb"))
+      .withColumn("cosine", fastCosine(col("ea"), col("eb")))
       .where(col("cosine") >= cosineThreshold)
       .select("vec_id_a", "vec_id_b")
   }
@@ -1401,12 +1389,11 @@ object Dedup {
       col(idCol).as("vec_id_a"), col("embedding").as("ea"))
     val b = kept.select(col("band"), col("sig"),
       col(idCol).as("vec_id_b"), col("embedding").as("eb"))
-    graft.functions.VectorExprs.register(emb.sparkSession)
     a.join(b, Seq("band", "sig"))
       .where(col("vec_id_a") < col("vec_id_b"))
       .select("vec_id_a", "vec_id_b", "ea", "eb")
       .dropDuplicates("vec_id_a", "vec_id_b")
-      .withColumn("cosine", graft.functions.VectorExprs.fastCosine("ea", "eb"))
+      .withColumn("cosine", fastCosine(col("ea"), col("eb")))
       .where(col("cosine") >= cosineThreshold)
       .select("vec_id_a", "vec_id_b", "cosine")
   }

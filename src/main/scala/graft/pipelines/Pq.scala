@@ -1,5 +1,6 @@
 package graft.pipelines
 
+import graft.functions.VectorExprs.fastCosine
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -107,7 +108,6 @@ object Pq {
              iters: Int = 2, rerank: Int = 16, dim: Int = 64,
              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val dsub = dim / m
-    graft.functions.VectorExprs.register(emb.sparkSession)
     val unit = unitize(emb, idCol, vecCol)
     val books = trainCodebooks(emb, m, ks, iters, dim, idCol, vecCol)
 
@@ -158,7 +158,6 @@ object Pq {
                 spill: Int = 2,
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val dsub = dim / m
-    graft.functions.VectorExprs.register(emb.sparkSession)
     val (cents, assigned, _) =
       Similarity.ivfCells(emb, idCol, nCentroids, lloydIters = 2, spill = spill)
     val books = trainCodebooks(emb, m, ks, iters, dim, idCol, vecCol)
@@ -168,7 +167,7 @@ object Pq {
       .select(col("embedding").as("q_emb")).limit(1)
       .crossJoin(broadcast(cents))
       .withColumn("sim",
-        graft.functions.VectorExprs.fastCosine("q_emb", "cent_emb"))
+        fastCosine(col("q_emb"), col("cent_emb")))
       .orderBy(col("sim").desc, col("cent_id")).limit(nProbe)
       .select(col("cent_id"))
     // spilled members reachable through two probed cells dedup by id
@@ -203,7 +202,6 @@ object Pq {
                   dim: Int = 64, idCol: String = "vec_id",
                   vecCol: String = "embedding"): DataFrame = {
     val dsub = dim / m
-    graft.functions.VectorExprs.register(emb.sparkSession)
     val unit = unitize(emb, idCol, vecCol)
     val books = trainCodebooks(emb, m, ks, iters, dim, idCol, vecCol)
     val probes = unit.where(col(idCol).isin(queryIds.map(x => x: Any): _*))
@@ -223,7 +221,7 @@ object Pq {
     emb.join(candIds, idCol)
       .join(broadcast(probesRaw), Seq("probe_id"))
       .withColumn("cosine",
-        graft.functions.VectorExprs.fastCosine(vecCol, "q_emb"))
+        fastCosine(col(vecCol), col("q_emb")))
       .withColumn("rnk", row_number().over(
         Window.partitionBy("probe_id").orderBy(col("cosine").desc, col(idCol))))
       .where(col("rnk") <= k)
@@ -302,12 +300,11 @@ object Pq {
     emb.join(candIds, idCol)
       .crossJoin(broadcast(qRaw))
       .withColumn("cosine",
-        graft.functions.VectorExprs.fastCosine(vecCol, "q_emb"))
+        fastCosine(col(vecCol), col("q_emb")))
       .orderBy(col("cosine").desc, col(idCol)).limit(k)
-      // k-row frame; non-foldable constant key (see Similarity.rankTail)
-      // keeps the window partitioned in the optimized plan
+      // k-row frame in one window partition (see Dist.singleWindowKey)
       .withColumn("rnk", row_number().over(
-        Window.partitionBy(pmod(col(idCol), lit(1)))
+        Window.partitionBy(graft.core.Dist.singleWindowKey(col(idCol)))
           .orderBy(col("cosine").desc, col(idCol))))
       .select(col(idCol), col("cosine"), col("rnk"))
   }
@@ -363,7 +360,6 @@ object Pq {
                       rerank: Int = 16, dim: Int = 64,
                       idCol: String = "vec_id",
                       vecCol: String = "embedding"): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     val bookRows = spark.table(s"${table}_books").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     val m = bookRows.map(_._1).max + 1

@@ -1,5 +1,6 @@
 package graft.pipelines
 
+import graft.functions.VectorExprs.{fastCosine, floatDot, sq8Cosine}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -40,9 +41,7 @@ object Vectors {
     * broadcast 1-row cross join of ARRAY<FLOAT> literal columns. */
   def withLshSignature(emb: DataFrame, vecCol: String, numPlanes: Int, seed: Int,
                        dim: Int = 64): DataFrame = {
-    import org.apache.spark.sql.functions.expr
     val spark = emb.sparkSession
-    graft.functions.VectorExprs.register(spark)
     val ps = planes(numPlanes, dim, seed)
     val planeCols = ps.zipWithIndex.map { case (p, i) =>
       typedlit(p.map(_.toFloat)).as(s"_lshpl$i")
@@ -50,7 +49,7 @@ object Vectors {
     val withPlanes = emb.crossJoin(
       broadcast(spark.range(1).select(planeCols: _*)))
     val sig = (0 until numPlanes).map { i =>
-      when(expr(s"float_dot($vecCol, _lshpl$i)") >= 0, lit(1L << i)).otherwise(0L)
+      when(floatDot(col(vecCol), col(s"_lshpl$i")) >= 0, lit(1L << i)).otherwise(0L)
     }.reduce(_ + _)
     withPlanes.withColumn("lsh_sig", sig)
       .drop((0 until numPlanes).map(i => s"_lshpl$i"): _*)
@@ -64,9 +63,7 @@ object Vectors {
     * form's huge hamming radius. Same codegen'd float_dot hot loop. */
   def withBandedKeys(emb: DataFrame, vecCol: String, bands: Int, planesPerBand: Int,
                      seed: Int, dim: Int = 64): DataFrame = {
-    import org.apache.spark.sql.functions.expr
     val spark = emb.sparkSession
-    graft.functions.VectorExprs.register(spark)
     val ps = planes(bands * planesPerBand, dim, seed)
     val planeCols = ps.zipWithIndex.map { case (p, i) =>
       typedlit(p.map(_.toFloat)).as(s"_lshpl$i")
@@ -76,7 +73,7 @@ object Vectors {
     val keys = (0 until bands).map { bi =>
       (0 until planesPerBand).map { pi =>
         val idx = bi * planesPerBand + pi
-        when(expr(s"float_dot($vecCol, _lshpl$idx)") >= 0, lit(1 << pi)).otherwise(0)
+        when(floatDot(col(vecCol), col(s"_lshpl$idx")) >= 0, lit(1 << pi)).otherwise(0)
       }.reduce(_ + _)
     }
     withPlanes.withColumn("bkeys", array(keys: _*))
@@ -135,14 +132,15 @@ object Similarity {
     * ALREADY-LIMITED k rows, never the corpus — but a LITERAL probe-id
     * partition key is folded out of the spec by EliminateWindowPartitions
     * and WindowExec then logs `No Partition Defined` (r15, VERDICT r14
-    * item 7): pmod(id, 1) is 0 on every row yet non-foldable, so the spec
-    * survives and the k-row single-task execution is unchanged. */
-  private def rankTail(scored: DataFrame, k: Int, idCol: String): DataFrame =
+    * item 7): [[graft.core.Dist.singleWindowKey]] is 0 on every row yet
+    * non-foldable, so the spec survives and the k-row single-task execution
+    * is unchanged. */
+  private[graft] def rankTail(scored: DataFrame, k: Int, idCol: String): DataFrame =
     scored
       .orderBy(col("cosine").desc, col(idCol))
       .limit(k)
       .withColumn("rnk",
-        row_number().over(Window.partitionBy(pmod(col(idCol), lit(1)))
+        row_number().over(Window.partitionBy(graft.core.Dist.singleWindowKey(col(idCol)))
           .orderBy(col("cosine").desc, col(idCol))))
       .select(col(idCol), col("cosine"), col("rnk"))
 
@@ -150,12 +148,11 @@ object Similarity {
     * ranking is a distributed TakeOrdered — no global sort materialized). */
   def bruteForceTopK(emb: DataFrame, queryId: Long, k: Int,
                      idCol: String = "vec_id"): DataFrame = {
-    graft.functions.VectorExprs.register(emb.sparkSession)
     val q = emb.where(col(idCol) === queryId)
       .select(col("embedding").as("q_emb"))
     val scored = emb.where(col(idCol) =!= queryId)
       .crossJoin(broadcast(q))
-      .withColumn("cosine", graft.functions.VectorExprs.fastCosine("embedding", "q_emb"))
+      .withColumn("cosine", fastCosine(col("embedding"), col("q_emb")))
     rankTail(scored, k, idCol)
   }
 
@@ -191,7 +188,6 @@ object Similarity {
   def lshTopK(emb: DataFrame, queryId: Long, k: Int, bands: Int = 16,
               planesPerBand: Int = 8, probeHamming: Int = 1,
               idCol: String = "vec_id"): DataFrame = {
-    graft.functions.VectorExprs.register(emb.sparkSession)
     val idx = lshIndex(emb, idCol, bands, planesPerBand)
     val masks = (0 until (1 << planesPerBand))
       .filter(m => Integer.bitCount(m) <= probeHamming)
@@ -207,7 +203,7 @@ object Similarity {
       .select(idCol).distinct()
     val scored = idx.join(candIds, idCol)
       .crossJoin(broadcast(q.select("q_emb")))
-      .withColumn("cosine", graft.functions.VectorExprs.fastCosine("embedding", "q_emb"))
+      .withColumn("cosine", fastCosine(col("embedding"), col("q_emb")))
     rankTail(scored, k, idCol)
   }
 
@@ -245,7 +241,6 @@ object Similarity {
   def lshTopKBatch(emb: DataFrame, queryIds: Seq[Long], k: Int, bands: Int = 16,
                    planesPerBand: Int = 8, probeHamming: Int = 1,
                    idCol: String = "vec_id"): DataFrame = {
-    graft.functions.VectorExprs.register(emb.sparkSession)
     val idx = lshIndex(emb, idCol, bands, planesPerBand)
     val masks = (0 until (1 << planesPerBand))
       .filter(m => Integer.bitCount(m) <= probeHamming)
@@ -264,7 +259,7 @@ object Similarity {
       .select(col("probe_id"), col(idCol)).distinct()
     idx.join(candIds, idCol)
       .join(broadcast(probes.select("probe_id", "q_emb")), Seq("probe_id"))
-      .withColumn("cosine", graft.functions.VectorExprs.fastCosine("embedding", "q_emb"))
+      .withColumn("cosine", fastCosine(col("embedding"), col("q_emb")))
       .withColumn("rnk", row_number().over(
         Window.partitionBy("probe_id").orderBy(col("cosine").desc, col(idCol))))
       .where(col("rnk") <= k)
@@ -301,7 +296,7 @@ object Similarity {
         if (nCentroidsOverride > 0) nCentroidsOverride
         else math.max(16, math.sqrt(emb.count().toDouble).round.toInt)
       def assign(c: DataFrame, keep: Int) = emb.crossJoin(broadcast(c))
-        .withColumn("sim", graft.functions.VectorExprs.fastCosine("embedding", "cent_emb"))
+        .withColumn("sim", fastCosine(col("embedding"), col("cent_emb")))
         .withColumn("rn", row_number().over(
           Window.partitionBy(col(idCol)).orderBy(col("sim").desc, col("cent_id"))))
         .where(col("rn") <= keep)
@@ -338,7 +333,6 @@ object Similarity {
     * and the ranking is the same distributed TakeOrdered. */
   def filteredTopK(emb: DataFrame, allowed: DataFrame, queryId: Long, k: Int,
                    idCol: String = "vec_id"): DataFrame = {
-    graft.functions.VectorExprs.register(emb.sparkSession)
     val q = emb.where(col(idCol) === queryId)
       .select(col("embedding").as("q_emb"))
     val scored = emb.join(allowed.select(col(idCol)).distinct(), Seq(idCol),
@@ -346,7 +340,7 @@ object Similarity {
       .where(col(idCol) =!= queryId)
       .crossJoin(broadcast(q))
       .withColumn("cosine",
-        graft.functions.VectorExprs.fastCosine("embedding", "q_emb"))
+        fastCosine(col("embedding"), col("q_emb")))
     rankTail(scored, k, idCol)
   }
 
@@ -368,12 +362,11 @@ object Similarity {
     * per-probe groups keep the ranking distributed at any batch size). */
   def bruteForceTopKBatch(emb: DataFrame, queryIds: Seq[Long], k: Int,
                           idCol: String = "vec_id"): DataFrame = {
-    graft.functions.VectorExprs.register(emb.sparkSession)
     val probes = emb.where(col(idCol).isin(queryIds.map(x => x: Any): _*))
       .select(col(idCol).as("probe_id"), col("embedding").as("q_emb"))
     emb.crossJoin(broadcast(probes))
       .where(col(idCol) =!= col("probe_id"))
-      .withColumn("cosine", graft.functions.VectorExprs.fastCosine("embedding", "q_emb"))
+      .withColumn("cosine", fastCosine(col("embedding"), col("q_emb")))
       .withColumn("rnk", row_number().over(
         Window.partitionBy("probe_id").orderBy(col("cosine").desc, col(idCol))))
       .where(col("rnk") <= k)
@@ -429,7 +422,6 @@ object Similarity {
     * measured recall@10 in IvfRecallSpec alongside the LSH/IVF variants. */
   def sq8TopK(emb: DataFrame, queryId: Long, k: Int, rerank: Int = 4,
               idCol: String = "vec_id"): DataFrame = {
-    graft.functions.VectorExprs.register(emb.sparkSession)
     val idx = sq8Index(emb, idCol)
     val q = emb.where(col(idCol) === queryId).select(col("embedding").as("q_emb"))
     // the approximate pass scans every code row — it rides the codegen'd
@@ -438,12 +430,12 @@ object Similarity {
     val candIds = idx.codes.where(col(idCol) =!= queryId)
       .crossJoin(broadcast(q)).crossJoin(broadcast(idx.stats))
       .withColumn("approx",
-        graft.functions.VectorExprs.sq8Cosine("codes", "q_emb", "dim_stats"))
+        sq8Cosine(col("codes"), col("q_emb"), col("dim_stats")))
       .orderBy(col("approx").desc, col(idCol)).limit(k * rerank)
       .select(idCol)
     val scored = emb.join(candIds, idCol)
       .crossJoin(broadcast(q))
-      .withColumn("cosine", graft.functions.VectorExprs.fastCosine("embedding", "q_emb"))
+      .withColumn("cosine", fastCosine(col("embedding"), col("q_emb")))
     rankTail(scored, k, idCol)
   }
 
@@ -455,7 +447,6 @@ object Similarity {
     * k·rerank by (approx desc, id) — and same re-rank ordering). */
   def sq8TopKBatch(emb: DataFrame, queryIds: Seq[Long], k: Int, rerank: Int = 4,
                    idCol: String = "vec_id"): DataFrame = {
-    graft.functions.VectorExprs.register(emb.sparkSession)
     val idx = sq8Index(emb, idCol)
     val probes = emb.where(col(idCol).isin(queryIds.map(x => x: Any): _*))
       .select(col(idCol).as("probe_id"), col("embedding").as("q_emb"))
@@ -463,14 +454,14 @@ object Similarity {
       .crossJoin(broadcast(probes)).crossJoin(broadcast(idx.stats))
       .where(col(idCol) =!= col("probe_id"))
       .withColumn("approx",
-        graft.functions.VectorExprs.sq8Cosine("codes", "q_emb", "dim_stats"))
+        sq8Cosine(col("codes"), col("q_emb"), col("dim_stats")))
       .withColumn("arnk", row_number().over(
         Window.partitionBy("probe_id").orderBy(col("approx").desc, col(idCol))))
       .where(col("arnk") <= k * rerank)
       .select(col("probe_id"), col(idCol))
     emb.join(candIds, idCol)
       .join(broadcast(probes), Seq("probe_id"))
-      .withColumn("cosine", graft.functions.VectorExprs.fastCosine("embedding", "q_emb"))
+      .withColumn("cosine", fastCosine(col("embedding"), col("q_emb")))
       .withColumn("rnk", row_number().over(
         Window.partitionBy("probe_id").orderBy(col("cosine").desc, col(idCol))))
       .where(col("rnk") <= k)
@@ -491,16 +482,15 @@ object Similarity {
   def ivfTopK(emb: DataFrame, queryId: Long, k: Int, nCentroids: Int = 0,
               nProbe: Int = 32, idCol: String = "vec_id",
               lloydIters: Int = 2): DataFrame = {
-    graft.functions.VectorExprs.register(emb.sparkSession)
     val idx = ivfIndex(emb, idCol, nCentroids, lloydIters)
     val qCells = idx.assigned.where(col(idCol) === queryId).select(col("embedding").as("q_emb"))
       .crossJoin(broadcast(idx.cents))
-      .withColumn("sim", graft.functions.VectorExprs.fastCosine("q_emb", "cent_emb"))
+      .withColumn("sim", fastCosine(col("q_emb"), col("cent_emb")))
       .orderBy(col("sim").desc, col("cent_id")).limit(nProbe)
       .select(col("cent_id"), col("q_emb"))
     val scored = idx.assigned.where(col(idCol) =!= queryId)
       .join(broadcast(qCells), Seq("cent_id"))
-      .withColumn("cosine", graft.functions.VectorExprs.fastCosine("embedding", "q_emb"))
+      .withColumn("cosine", fastCosine(col("embedding"), col("q_emb")))
     rankTail(scored, k, idCol)
   }
 
@@ -514,7 +504,6 @@ object Similarity {
     * ever probes it, with no session cache to warm. */
   def writeIvfIndex(emb: DataFrame, table: String, nCentroids: Int = 0,
                     lloydIters: Int = 2, idCol: String = "vec_id"): Unit = {
-    graft.functions.VectorExprs.register(emb.sparkSession)
     val idx = ivfIndex(emb, idCol, nCentroids, lloydIters)
     idx.cents.write.mode("overwrite").saveAsTable(s"${table}_cents")
     idx.assigned.select(col(idCol), col("embedding"), col("cent_id"))
@@ -532,11 +521,10 @@ object Similarity {
     * cell partitions. */
   def appendIvfIndex(spark: org.apache.spark.sql.SparkSession, table: String,
                      newEmb: DataFrame, idCol: String = "vec_id"): Unit = {
-    graft.functions.VectorExprs.register(spark)
     val cents = spark.table(s"${table}_cents")
     newEmb.crossJoin(broadcast(cents))
       .withColumn("sim",
-        graft.functions.VectorExprs.fastCosine("embedding", "cent_emb"))
+        fastCosine(col("embedding"), col("cent_emb")))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col(idCol)).orderBy(col("sim").desc, col("cent_id"))))
       .where(col("rn") === 1)
@@ -558,18 +546,17 @@ object Similarity {
   def ivfTopKFromIndex(spark: org.apache.spark.sql.SparkSession, table: String,
                        sourceEmb: DataFrame, queryId: Long, k: Int,
                        nProbe: Int = 32, idCol: String = "vec_id"): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     val q = sourceEmb.where(col(idCol) === queryId)
       .select(col("embedding").as("q_emb"))
     val cells = spark.table(s"${table}_cents").crossJoin(broadcast(q))
-      .withColumn("sim", graft.functions.VectorExprs.fastCosine("cent_emb", "q_emb"))
+      .withColumn("sim", fastCosine(col("cent_emb"), col("q_emb")))
       .orderBy(col("sim").desc, col("cent_id")).limit(nProbe)
       .select("cent_id").collect().map(_.getLong(0))
     val scanned = spark.table(table)
       .where(col("cent_id").isin(cells.map(x => x: Any): _*))
     val scored = scanned.where(col(idCol) =!= queryId)
       .crossJoin(broadcast(q))
-      .withColumn("cosine", graft.functions.VectorExprs.fastCosine("embedding", "q_emb"))
+      .withColumn("cosine", fastCosine(col("embedding"), col("q_emb")))
     rankTail(scored, k, idCol)
   }
 
@@ -582,12 +569,11 @@ object Similarity {
   def ivfTopKBatch(emb: DataFrame, queryIds: Seq[Long], k: Int,
                    nCentroids: Int = 0, nProbe: Int = 32,
                    idCol: String = "vec_id", lloydIters: Int = 2): DataFrame = {
-    graft.functions.VectorExprs.register(emb.sparkSession)
     val idx = ivfIndex(emb, idCol, nCentroids, lloydIters)
     val probes = idx.assigned.where(col(idCol).isin(queryIds.map(x => x: Any): _*))
       .select(col(idCol).as("probe_id"), col("embedding").as("q_emb"))
     val qCells = probes.crossJoin(broadcast(idx.cents))
-      .withColumn("sim", graft.functions.VectorExprs.fastCosine("q_emb", "cent_emb"))
+      .withColumn("sim", fastCosine(col("q_emb"), col("cent_emb")))
       .withColumn("rn", row_number().over(
         Window.partitionBy("probe_id").orderBy(col("sim").desc, col("cent_id"))))
       .where(col("rn") <= nProbe)
@@ -595,7 +581,7 @@ object Similarity {
     idx.assigned
       .join(broadcast(qCells), Seq("cent_id"))
       .where(col(idCol) =!= col("probe_id"))
-      .withColumn("cosine", graft.functions.VectorExprs.fastCosine("embedding", "q_emb"))
+      .withColumn("cosine", fastCosine(col("embedding"), col("q_emb")))
       .withColumn("rnk", row_number().over(
         Window.partitionBy("probe_id").orderBy(col("cosine").desc, col(idCol))))
       .where(col("rnk") <= k)
@@ -777,10 +763,9 @@ object Similarity {
                         probeIdCol: String = "probe_id",
                         probeVecCol: String = "q_emb"): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    graft.functions.VectorExprs.register(emb.sparkSession)
     probes.join(emb, col(idCol) =!= col(probeIdCol))
       .withColumn("cosine",
-        graft.functions.VectorExprs.fastCosine(vecCol, probeVecCol))
+        fastCosine(col(vecCol), col(probeVecCol)))
       .groupBy(probeIdCol)
       .agg(slice(array_sort(collect_list(struct(
         ((lit(0.0) - col("cosine")) + lit(0.0)).as("nc"),
@@ -887,11 +872,10 @@ object Similarity {
   def mmrTopK(emb: DataFrame, queryId: Long, k: Int, lambda: Double = 0.7,
               poolSize: Int = 50, idCol: String = "vec_id"): DataFrame = {
     val spark = emb.sparkSession
-    graft.functions.VectorExprs.register(spark)
     val q = emb.where(col(idCol) === queryId).select(col("embedding").as("q_emb"))
     val pool = emb.where(col(idCol) =!= queryId)
       .crossJoin(broadcast(q))
-      .withColumn("rel", graft.functions.VectorExprs.fastCosine("embedding", "q_emb"))
+      .withColumn("rel", fastCosine(col("embedding"), col("q_emb")))
       .orderBy(col("rel").desc, col(idCol))
       .limit(poolSize)
       .select(col(idCol).as("id"), col("rel"), col("embedding"))
@@ -899,7 +883,7 @@ object Similarity {
     val a = pool.select(col("id").as("ia"), col("embedding").as("va"))
     val b = pool.select(col("id").as("ib"), col("embedding").as("vb"))
     val simRows = a.join(b, col("ia") =!= col("ib"))
-      .withColumn("s", graft.functions.VectorExprs.fastCosine("va", "vb"))
+      .withColumn("s", fastCosine(col("va"), col("vb")))
       .select("ia", "ib", "s")
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val rels = pool.select("id", "rel").collect()

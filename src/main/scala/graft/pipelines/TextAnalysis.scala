@@ -274,7 +274,6 @@ object TextAnalysis {
     * zero shuffle at any corpus size. */
   def repetitionStats(docs: DataFrame, n: Int = 3,
                       idCol: String = "doc_id"): DataFrame = {
-    graft.functions.TextExprs.register(docs.sparkSession)
     // NULL text behaves like "" (the kernel returns NULL for NULL input
     // where the builtin transform-over-sequence chain produced [""]; here
     // the gram array is consumed UNEXPLODED by dupFrac, so without the
@@ -283,7 +282,7 @@ object TextAnalysis {
     val toks = wsTokens(lower(trim(t)))
     // codegen'd gram kernel; trim∘lower∘trim ≡ lower∘trim (lowercasing
     // never creates edge whitespace), so values match wsTokens' grams
-    val grams = expr(s"word_ngrams(coalesce(text, ''), $n)")
+    val grams = graft.functions.TextExprs.wordNgramsCol(t, n)
     def dupFrac(arr: Column): Column =
       (lit(1.0) - size(array_distinct(arr)).cast(DoubleType)
         / size(arr).cast(DoubleType))

@@ -2480,11 +2480,10 @@ object Pipeline extends QueryPack {
     // >= 3 tokens its output is exactly the sequence(0, L-3) trigram list
     // the builtin chain produced. Docs under 3 tokens have no trigram and
     // drop here, matching the oracle's empty generate_series.
-    graft.functions.TextExprs.register(s)
     val toks = Tables.documents(s, sf)
       .where(size(split(lower(trim(col("text"))), "\\s+")) >= 3)
       .select(col("doc_id"),
-        explode(expr("word_ngrams(text, 3)")).as("gram"))
+        explode(graft.functions.TextExprs.wordNgramsCol(col("text"), 3)).as("gram"))
     toks.groupBy("doc_id")
       .agg(count(lit(1)).as("n_ngrams"),
         countDistinct(col("gram")).as("n_distinct"))

@@ -134,15 +134,8 @@ object Grouping {
       .select(TsSchema.SeriesId, TsSchema.LabelsCol, TsSchema.Ts, TsSchema.Value)
   }
 
-  /** `multiply` — per-ts product (ref: MultiplyStage.java:20-41). No Spark
-    * builtin product; exact over integer-valued doubles while partial products
-    * stay < 2^53 (each FP multiply of exact integers is exact). */
-  def multiply(df: DataFrame, groupKeys: Seq[String] = Nil): DataFrame =
-    run(df, groupKeys)(c => exp(functions.sum(log(functions.abs(c)))) *
-      when(functions.sum(when(c === 0, 1).otherwise(0)) > 0, lit(0.0))
-        .otherwise(pow(lit(-1.0), functions.sum(when(c < 0, 1).otherwise(0)))))
-
-  /** Exact product via Aggregator (preferred; see functions.ProductAgg). */
+  /** `multiply` — exact per-ts product (ref: MultiplyStage.java:20-41) via
+    * the codegen'd [[graft.functions.ProductDecl]] aggregate. */
   def multiplyExact(df: DataFrame, groupKeys: Seq[String] = Nil): DataFrame =
     run(df, groupKeys)(graft.functions.Product.product)
 

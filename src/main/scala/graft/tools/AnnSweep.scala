@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.core.Tables
 import graft.pipelines.Similarity
-import org.apache.spark.sql.SparkSession
 
 /** Measure the ANN recall-vs-cost curve on the synthetic embeddings corpus —
   * the tuning evidence behind the lshTopK/ivfTopK defaults (results recorded
@@ -26,22 +25,7 @@ object AnnSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mult = args.lift(1).map(_.toInt).getOrElse(1)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // r14 (guide §2/§6): let AQE re-plan CACHED frames too — the default
-      // pins every memoized frame to the raw shuffle layout (32 one-task
-      // partitions here), so each consumer stage pays full task fan-out to
-      // read a few MB; with AQE the cached layout coalesces to the advisory
-      // partition size (size-adaptive — big frames keep their partitions).
-      // Output VALUES never depend on partitioning (DifferentialSpec /
-      // PartitionInvarianceSpec pin this); measured: retrieval_bm25 warm
-      // 1.6-1.8s -> 0.8-0.9s.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session()
     import org.apache.spark.sql.functions._
 
     val emb0 = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Isolated-warm bench: time ONE query family in a fresh JVM — the
   * suite-interaction-free counterpart of [[graft.Bench]], so a per-query
   * diff between `BENCH_r{N}.json` and `BENCH_r{N}_isolated.json` separates
@@ -12,41 +10,27 @@ import org.apache.spark.sql.SparkSession
   * is a name from [[graft.Bench.familyNames]] (tpch, series, vector,
   * corpus, dedup, events, retrieval, text, streaming) or `all`.
   * Emits ONE JSON line per family on stdout:
-  * `{"family":"...","queries":{name:secs,...},"total":N}` — each query's
-  * WARM time (untimed first pass, then min of 2 timed passes), the same
-  * measurement rule as the suite bench. `scripts/bench_isolated.sh` runs
+  * `{"family":"...","queries":{name:secs,...},"total":N,"failed":[...]}` —
+  * each query's WARM time (untimed first pass, then min of 2 timed
+  * passes), the same measurement rule as the suite bench. A query that
+  * throws is listed in `failed` and left out of `queries` and `total`.
+  * An unknown family name is an error. `scripts/bench_isolated.sh` runs
   * one JVM per family and merges the lines.
   */
 object BenchFamily {
   def main(args: Array[String]): Unit = {
     val famName = args.headOption.getOrElse("all")
-    val sfDir = if (args.length > 1) args(1) else
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // r14 (guide §2/§6): let AQE re-plan CACHED frames too — the default
-      // pins every memoized frame to the raw shuffle layout (32 one-task
-      // partitions here), so each consumer stage pays full task fan-out to
-      // read a few MB; with AQE the cached layout coalesces to the advisory
-      // partition size (size-adaptive — big frames keep their partitions).
-      // Output VALUES never depend on partitioning (DifferentialSpec /
-      // PartitionInvarianceSpec pin this); measured: retrieval_bm25 warm
-      // 1.6-1.8s -> 0.8-0.9s.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // diagnostics cost stays off the isolated clock too (see Bench)
-    spark.conf.set("graft.ingestlag.diag", "false")
-    def f2(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     val wanted = graft.Bench.familyNames.collect {
       case (id, n) if famName == "all" || famName == n => id
     }.toSet
+    require(wanted.nonEmpty, s"unknown bench family '$famName'; expected one of " +
+      graft.Bench.familyNames.values.toSeq.sorted.mkString(", ") + " or all")
+    val sfDir = if (args.length > 1) args(1) else
+      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = graft.core.Session()
+    // diagnostics cost stays off the isolated clock too (see Bench)
+    spark.conf.set("graft.ingestlag.diag", "false")
+    def f2(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     val byFam = graft.SparkEntry.queries.toSeq
       .map { case (n, fn) => (graft.Bench.family(n), n, fn) }
       .filter(q => wanted(q._1))
@@ -58,20 +42,24 @@ object BenchFamily {
       sorted.headOption.foreach { case (_, _, fn) =>
         try fn(spark, sfDir).count() catch { case _: Throwable => () }
       }
-      val timed = sorted.map { case (_, name, fn) =>
+      val runs = sorted.map { case (_, name, fn) =>
         def once(): Double = {
           val t0 = System.nanoTime()
-          try fn(spark, sfDir).count() catch { case _: Throwable => () }
+          fn(spark, sfDir).count()
           (System.nanoTime() - t0) / 1e9
         }
-        once() // warm pass per query (family warmup only covers shared inputs)
-        name -> math.min(once(), once())
+        // warm pass per query (family warmup only covers shared inputs)
+        name -> (try { once(); Some(math.min(once(), once())) }
+                 catch { case _: Throwable => None })
       }
+      val timed = runs.collect { case (n, Some(t)) => n -> t }
       val qsJson = timed.map { case (n, t) => s""""$n":${f2(t)}""" }
         .mkString("{", ",", "}")
+      val failedJson = runs.collect { case (n, None) => s""""$n"""" }
+        .mkString("[", ",", "]")
       Console.out.println(
         s"""{"family":"${graft.Bench.familyNames(famId)}","sf":"$sfDir",""" +
-          s""""queries":$qsJson,"total":${f2(timed.map(_._2).sum)}}""")
+          s""""queries":$qsJson,"total":${f2(timed.map(_._2).sum)},"failed":$failedJson}""")
       Console.out.flush()
     }
     graft.core.Memo.clearSession(spark)

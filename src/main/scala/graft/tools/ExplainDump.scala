@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round measurement utility: dump `.explain("formatted")` for a
   * list of registry queries into one file each, from a single JVM (a per-query
   * `RunOne explain` pays the sbt+Spark launch ~40s per plan).
@@ -18,25 +16,7 @@ object ExplainDump {
     val suffix = args(1)
     val names = args.drop(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // r14 (guide §2/§6): let AQE re-plan CACHED frames too — the default
-      // pins every memoized frame to the raw shuffle layout (32 one-task
-      // partitions here), so each consumer stage pays full task fan-out to
-      // read a few MB; with AQE the cached layout coalesces to the advisory
-      // partition size (size-adaptive — big frames keep their partitions).
-      // Output VALUES never depend on partitioning (DifferentialSpec /
-      // PartitionInvarianceSpec pin this); measured: retrieval_bm25 warm
-      // 1.6-1.8s -> 0.8-0.9s.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       val text =

@@ -1,50 +1,41 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: run one named query and show result/plan.
-  * usage: runMain graft.tools.RunOne <queryName> [sfDir] [explain|show|count]
+  * usage: runMain graft.tools.RunOne <queryName> [sfDir] [explain|show|count|time[:N]|save:dir]
+  *
+  * `time[:N]` (default N = 3) times N `count()` evaluations in one session —
+  * the bench's warm-run shape without the full suite — printing one line
+  * per run and then the min. Session confs come from [[graft.core.Session]]
+  * (`SPARK_GRAFT_CPUS`, `SPARK_GRAFT_EXTRA_CONF` for conf A/B).
   */
 object RunOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val mode = if (args.length > 2) args(2) else "show"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      // r14 (guide §2/§6): let AQE re-plan CACHED frames too — the default
-      // pins every memoized frame to the raw shuffle layout (32 one-task
-      // partitions here), so each consumer stage pays full task fan-out to
-      // read a few MB; with AQE the cached layout coalesces to the advisory
-      // partition size (size-adaptive — big frames keep their partitions).
-      // Output VALUES never depend on partitioning (DifferentialSpec /
-      // PartitionInvarianceSpec pin this); measured: retrieval_bm25 warm
-      // 1.6-1.8s -> 0.8-0.9s.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val df = graft.SparkEntry.queries(name)(spark, sfDir)
+    val spark = graft.core.Session()
+    val fn = graft.SparkEntry.queries(name)
+    val df = fn(spark, sfDir)
     mode match {
       case "explain" => df.explain("formatted")
       case "count"   => println(s"rows=${df.count()}")
-      case "time"    =>
-        // two timed evaluations after a warmup, mirroring Bench's min-of-N
-        def once(): Double = {
+      case s if s == "time" || s.startsWith("time:") =>
+        val n = if (s == "time") 3 else s.stripPrefix("time:").toInt
+        val secs = (1 to n).map { i =>
           val t0 = System.nanoTime()
-          graft.SparkEntry.queries(name)(spark, sfDir).count()
-          (System.nanoTime() - t0) / 1e9
+          val rows = fn(spark, sfDir).count()
+          val t = (System.nanoTime() - t0) / 1e9
+          println(f"[runone] $name run $i: $t%.2f s (rows=$rows)")
+          t
         }
-        val times = Seq(once(), once())
-        println(f"secs_min=${times.min}%.2f secs=${times.mkString(",")}")
+        println(f"secs_min=${secs.min}%.2f")
       case s if s.startsWith("save:") =>
         // dump result parquet for ad-hoc DuckDB oracle comparison
         df.coalesce(1).write.mode("overwrite").parquet(s.stripPrefix("save:"))
         println(s"saved rows=${spark.read.parquet(s.stripPrefix("save:")).count()}")
       case _         => df.show(30, truncate = false); println(s"rows=${df.count()}")
     }
+    graft.core.Memo.clearSession(spark)
     spark.stop()
   }
 }

@@ -22,24 +22,7 @@ object Soak {
   def main(args: Array[String]): Unit = {
     val mult = args.headOption.map(_.toInt).getOrElse(10)
     val work = if (args.length > 1) args(1) else "/tmp/graft_soak"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // r14 (guide §2/§6): let AQE re-plan CACHED frames too — the default
-      // pins every memoized frame to the raw shuffle layout (32 one-task
-      // partitions here), so each consumer stage pays full task fan-out to
-      // read a few MB; with AQE the cached layout coalesces to the advisory
-      // partition size (size-adaptive — big frames keep their partitions).
-      // Output VALUES never depend on partitioning (DifferentialSpec /
-      // PartitionInvarianceSpec pin this); measured: retrieval_bm25 warm
-      // 1.6-1.8s -> 0.8-0.9s.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session()
 
     val nDocs = 5000L * mult
     val nVecs = 2000L * mult
@@ -146,7 +129,7 @@ object Soak {
       val base = spark.range(nDocs).toDF("doc_id_a")
         .withColumn("doc_id_b", col("doc_id_a") + 1L)
       graft.pipelines.Dedup.clusterPairs(
-        graft.core.Dist.scatterByMod(base, cpus.toInt))
+        graft.core.Dist.scatterByMod(base, spark.sparkContext.defaultParallelism))
     }
     println(s"|   └ loop rounds | ${graft.pipelines.Dedup.lastLoopRounds} | | |")
     // the restated memory claim (24–49 B/node at capacity) as a MEASURED

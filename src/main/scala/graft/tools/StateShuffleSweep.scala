@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Measured commit-fan-out curve for stateful streaming (r11 verdict item
   * 6): every stateful micro-batch commits one state-store delta PER
   * SHUFFLE PARTITION, so at small per-trigger row counts the partition
@@ -22,24 +20,7 @@ object StateShuffleSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // r14 (guide §2/§6): let AQE re-plan CACHED frames too — the default
-      // pins every memoized frame to the raw shuffle layout (32 one-task
-      // partitions here), so each consumer stage pays full task fan-out to
-      // read a few MB; with AQE the cached layout coalesces to the advisory
-      // partition size (size-adaptive — big frames keep their partitions).
-      // Output VALUES never depend on partitioning (DifferentialSpec /
-      // PartitionInvarianceSpec pin this); measured: retrieval_bm25 warm
-      // 1.6-1.8s -> 0.8-0.9s.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session()
     def f2(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
 
     // r14: swept below 4 for the first time (the floor probe's stateful_1

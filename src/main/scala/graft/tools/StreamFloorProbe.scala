@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the streaming family's FIXED FLOOR (r12 verdict item 5): how
@@ -26,23 +25,7 @@ import org.apache.spark.sql.functions._
 object StreamFloorProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // r14 (guide §2/§6): let AQE re-plan CACHED frames too — the default
-      // pins every memoized frame to the raw shuffle layout (32 one-task
-      // partitions here), so each consumer stage pays full task fan-out to
-      // read a few MB; with AQE the cached layout coalesces to the advisory
-      // partition size (size-adaptive — big frames keep their partitions).
-      // Output VALUES never depend on partitioning (DifferentialSpec /
-      // PartitionInvarianceSpec pin this); measured: retrieval_bm25 warm
-      // 1.6-1.8s -> 0.8-0.9s.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session()
 
     // GRAFT_FLOOR_DIR relocates the staging/checkpoint dirs (e.g. to
     // /dev/shm) to isolate how much of the floor is checkpoint-log fsync

@@ -5,12 +5,11 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Spark 4 removed the public `Column(expr)` / `col.expr` surface (Columns
   * are connect-agnostic nodes now); the classic-backend converters live in
-  * `classic.ExpressionUtils`, which is `private[sql]`. Custom expressions
-  * that carry DRIVER DATA in constructor fields (e.g. the PQ codebook
-  * kernels) can't go through the function-registry path — a SQL string
-  * can't express the payload — so this one-file bridge under the sql
-  * package re-exports the two converters. No Spark internals are modified
-  * or shadowed. */
+  * `classic.ExpressionUtils`, which is `private[sql]`. Every graft kernel is
+  * built as a Column through this one-file bridge under the sql package, so
+  * no session needs a function registered and kernels that carry DRIVER
+  * DATA in constructor fields (e.g. the PQ codebooks) need no SQL string.
+  * No Spark internals are modified or shadowed. */
 object ColumnBridge {
   def column(e: Expression): Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)

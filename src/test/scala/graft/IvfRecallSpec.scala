@@ -83,7 +83,6 @@ class IvfRecallSpec extends SparkTestBase {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.DoubleType
-    graft.functions.VectorExprs.register(spark)
     val df = Seq(
       (Seq(10, 20, 30), Seq(0.5f, 1f, -2f),
         Seq((-1.0, 0.02), (-2.0, 0.05), (0.0, 0.01))),
@@ -95,7 +94,8 @@ class IvfRecallSpec extends SparkTestBase {
     val decoded = zip_with(col("codes"), col("dim_stats"),
       (c, s) => s.getField("mn") + c.cast(DoubleType) * s.getField("step"))
     val rows = df.select(
-        graft.functions.VectorExprs.sq8Cosine("codes", "q_emb", "dim_stats").as("fast"),
+        graft.functions.VectorExprs.sq8Cosine(col("codes"), col("q_emb"), col("dim_stats"))
+          .as("fast"),
         graft.pipelines.Vectors.cosine(decoded, col("q_emb")).as("ref"))
       .as[(Double, Double)].collect()
     rows.foreach { case (f, r) => assert(math.abs(f - r) < 1e-12, s"$f vs $r") }

@@ -439,15 +439,20 @@ class PipelineSpec extends SparkTestBase {
 
   test("codegen float_dot matches builtin dot") {
     import graft.functions.VectorExprs
-    VectorExprs.register(spark)
     val df = Seq(
       (0L, Array(1.5f, -2f, 3f), Array(2f, 0.5f, 1f)),
       (1L, Array(0f, 0f, 0f), Array(1f, 1f, 1f))).toDF("id", "a", "b")
-    val rows = df.select(
-        VectorExprs.floatDot("a", "b").as("fast"),
-        graft.pipelines.Vectors.dot(col("a"), col("b")).as("ref"))
-      .as[(Double, Double)].collect()
-    rows.foreach { case (f, r) => assert(f == r) }
+    // names that need back-quoting in SQL ("emb a"): the kernel takes
+    // Columns, so no column name is ever spliced into a SQL string
+    for ((a, b) <- Seq(("a", "b"), ("emb a", "emb b"))) {
+      val named = df.withColumnRenamed("a", a).withColumnRenamed("b", b)
+      val rows = named.select(
+          VectorExprs.floatDot(named.col(s"`$a`"), named.col(s"`$b`")).as("fast"),
+          graft.pipelines.Vectors.dot(named.col(s"`$a`"), named.col(s"`$b`")).as("ref"))
+        .as[(Double, Double)].collect()
+      assert(rows.length == 2)
+      rows.foreach { case (f, r) => assert(f == r, s"($a, $b): $f vs $r") }
+    }
   }
 
   test("gopher rules flag short, symbol-heavy, and stopword-free docs") {

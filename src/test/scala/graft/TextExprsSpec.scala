@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * generated and interpreted expression paths (the oracle gate runs the
   * codegen-off differential over the same kernel). */
 class TextExprsSpec extends SparkTestBase {
-  graft.functions.TextExprs.register(spark)
+  import graft.functions.TextExprs.{polyHashCol, rollingWindowHashesCol, wordNgramsCol}
 
   private def builtin(n: Int) = {
     val toks = split(lower(trim(col("text"))), "\\s+")
@@ -34,7 +34,7 @@ class TextExprsSpec extends SparkTestBase {
     val df = edges.toDF("text")
     for (n <- 1 to 6) {
       val diffs = df.select(builtin(n).as("a"),
-          expr(s"word_ngrams(text, $n)").as("b"))
+          wordNgramsCol(col("text"), n).as("b"))
         .where(not(col("a") <=> col("b")))
         .collect()
       assert(diffs.isEmpty, s"n=$n diverged: ${diffs.mkString("; ")}")
@@ -49,12 +49,12 @@ class TextExprsSpec extends SparkTestBase {
     import spark.implicits._
     val df = Seq[Option[String]](None, Some("a b c")).toDF("text")
     val nullRow = df.where(col("text").isNull)
-      .select(expr("word_ngrams(text, 2)").as("b")).head()
+      .select(wordNgramsCol(col("text"), 2).as("b")).head()
     assert(nullRow.isNullAt(0), "NULL text must yield a NULL gram array")
     def stream(c: org.apache.spark.sql.Column) =
       df.select(explode(c).as("s")).where(length(col("s")) > 0)
         .collect().map(_.getString(0)).sorted.toSeq
-    assert(stream(builtin(2)) == stream(expr("word_ngrams(text, 2)")))
+    assert(stream(builtin(2)) == stream(wordNgramsCol(col("text"), 2)))
     assert(stream(builtin(2)) == Seq("a b", "b c"))
   }
 
@@ -65,7 +65,7 @@ class TextExprsSpec extends SparkTestBase {
     for (codegen <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
       withSQLConf("spark.sql.codegen.factoryMode" -> codegen) {
         val diffs = docs.select(builtin(5).as("a"),
-            expr("word_ngrams(text, 5)").as("b"))
+            wordNgramsCol(col("text"), 5).as("b"))
           .where(not(col("a") <=> col("b"))).count()
         assert(diffs == 0L, s"$codegen: $diffs docs diverged")
       }
@@ -88,11 +88,11 @@ class TextExprsSpec extends SparkTestBase {
     val df = (edges ++ Seq("w42", "The Quick BROWN fox", "ümlaut tökens",
       "€uro sign", "abc" * 300,
       emoji, s"a${emoji}b", s"$emoji $math_u mixed", math_u * 5)).toDF("text")
-    val diffs = df.select(builtinPoly.as("a"), expr("poly_hash(text)").as("b"))
+    val diffs = df.select(builtinPoly.as("a"), polyHashCol(col("text")).as("b"))
       .where(not(col("a") <=> col("b"))).collect()
     assert(diffs.isEmpty, s"poly_hash diverged: ${diffs.mkString("; ")}")
     // the split("","")=[""], ascii("")=0 edge: empty string hashes to 0
-    assert(Seq("").toDF("text").select(expr("poly_hash(text)"))
+    assert(Seq("").toDF("text").select(polyHashCol(col("text")))
       .head().getLong(0) == 0L)
     // pin the decoded-code-point fact itself, so a future Spark reverting
     // ascii to charAt(0) semantics fails HERE and not deep in an index probe
@@ -115,7 +115,7 @@ class TextExprsSpec extends SparkTestBase {
         .filter(_.length >= k) // builtin sequence() misbehaves below k; callers pre-filter
         .toDF("hs")
       val diffs = df.select(builtinFold.as("a"),
-          expr(s"rolling_window_hashes(hs, $k, ${r}L, ${p}L)").as("b"))
+          rollingWindowHashesCol(col("hs"), k, r, p).as("b"))
         .where(not(col("a") <=> col("b"))).collect()
       assert(diffs.isEmpty, s"k=$k diverged: ${diffs.mkString("; ")}")
     }
@@ -133,7 +133,7 @@ class TextExprsSpec extends SparkTestBase {
       i => aggregate(slice(col("hs"), i + 1, lit(k)), lit(0L),
         (acc, h) => pmod(acc * lit(r) + h, lit(p))))
     val row = df.select(builtinFold.as("a"),
-      expr(s"rolling_window_hashes(hs, $k, ${r}L, ${p}L)").as("b")).head()
+      rollingWindowHashesCol(col("hs"), k, r, p).as("b")).head()
     assert(row.getSeq[Any](0) == row.getSeq[Any](1),
       s"null-poisoning diverged: ${row.getSeq[Any](0)} vs ${row.getSeq[Any](1)}")
     assert(row.getSeq[Any](1)(0) == null && row.getSeq[Any](1)(1) == null
@@ -155,11 +155,11 @@ class TextExprsSpec extends SparkTestBase {
       transform(split(col("text"), ""), ch => ascii(ch).cast("long")),
       lit(0L), (acc, ch) => pmod(acc * lit(31L) + ch, lit(P)))
     for (n <- 1 to 5) {
-      val d1 = df.select(builtin(n).as("a"), expr(s"word_ngrams(text, $n)").as("b"))
+      val d1 = df.select(builtin(n).as("a"), wordNgramsCol(col("text"), n).as("b"))
         .where(not(col("a") <=> col("b"))).count()
       assert(d1 == 0L, s"word_ngrams n=$n diverged on fuzz")
     }
-    val d2 = df.select(builtinPoly.as("a"), expr("poly_hash(text)").as("b"))
+    val d2 = df.select(builtinPoly.as("a"), polyHashCol(col("text")).as("b"))
       .where(not(col("a") <=> col("b"))).count()
     assert(d2 == 0L, "poly_hash diverged on fuzz")
   }
