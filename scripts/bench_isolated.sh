@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# Isolated-warm bench: one fresh JVM per query family (graft.tools.BenchFamily),
+# Isolated-warm bench: one fresh JVM per query family (graft.tools.Tool family),
 # merged into a single BENCH_r{N}_isolated.json. The per-query diff against the
 # suite bench (graft.Bench) separates plan regressions from suite-interaction
 # effects (standing-cache pressure) without live re-measurement.
@@ -28,8 +28,7 @@ for fam in $FAMILIES; do
   echo "[bench_isolated] family=$fam" >&2
   # shellcheck disable=SC2086
   java -Xmx"${SPARK_DRIVER_MEM:-8g}" $ADD_OPENS \
-    -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-    -cp "$CP" graft.tools.BenchFamily "$fam" "$SF" 2>/dev/null | tail -1 >> "$TMP"
+    -cp "$CP" graft.tools.Tool family "$fam" "$SF" 2>/dev/null | tail -1 >> "$TMP"
 done
 
 python3 - "$TMP" "$OUT" $FAMILIES <<'EOF'

@@ -1,7 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.{Memo, MetricsTap}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Benchmark main: times every registry query at SPARK_GRAFT_SF_DIR and emits
+/** Benchmark main: times every registry query at [[Bench.sfDir]] and emits
   * ONE JSON line on stdout — nothing else is printed there, so the driver's
   * parse never has to fish the line out of log noise.
   *
@@ -66,9 +67,13 @@ object Bench {
     0 -> "tpch", 1 -> "series", 2 -> "vector", 3 -> "corpus", 4 -> "dedup",
     5 -> "events", 6 -> "retrieval", 7 -> "text", 8 -> "streaming")
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = graft.core.Session()
+  /** The one scale-factor resolution for every registry runner: the
+    * argument if given, else the environment variable below, else sf0.1. */
+  def sfDir(arg: Option[String]): String =
+    arg.getOrElse(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+
+  /** The one setup for a session whose registry queries are timed. */
+  def timingSession(spark: SparkSession): Unit = {
     // per-round clusterPairs breakdown on stderr, so a slow dedup_cluster_*
     // line in this bench attributes its cost round by round
     spark.conf.set("graft.clusterPairs.log", "true")
@@ -76,27 +81,66 @@ object Bench {
     // counts) belong at the correctness gate, not on the bench clock — the
     // result path is identical either way (r13; ~2s at sf0.1)
     spark.conf.set("graft.ingestlag.diag", "false")
+  }
 
-    // time each query as the MIN of repeated runs so a transient host-load
-    // burst (other tenants of this machine) doesn't masquerade as a
-    // regression: two adjacent runs always, a third only when the first two
-    // disagree by >1.5x (i.e. one of them likely hit contention). The min is
-    // the engine's number; the first-pass sum is also emitted for
-    // transparency (value_single_pass).
-    // each run also captures its shuffle/spill/GC/dropped-block deltas
-    // (MetricsTap), so cross-round drift is attributable: wall time up with
-    // flat bytes and flat GC = host noise; GC or dropped blocks up = memory
-    // pressure; spill bytes up = a real plan regression. The settling poll
-    // runs AFTER the clock stops, so it never inflates the timing. A run
-    // that throws propagates: the caller records the query as failed.
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, graft.core.MetricsTap.Snap) = {
-      val m0 = graft.core.MetricsTap.snapshot(spark)
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      (wall, graft.core.MetricsTap.settled(spark) - m0)
+  type Query = (SparkSession, String) => DataFrame
+  type Pass = (Double, MetricsTap.Snap)
+
+  /** One timed pass: wall seconds plus its shuffle/spill/GC/dropped-block
+    * deltas (MetricsTap), so cross-round drift is attributable: wall time
+    * up with flat bytes and flat GC = host noise; GC or dropped blocks up =
+    * memory pressure; spill bytes up = a real plan regression. The settling
+    * poll runs AFTER the clock stops, so it never inflates the timing. A
+    * pass that throws propagates. */
+  def pass(spark: SparkSession, sfDir: String, fn: Query): Pass = {
+    val m0 = MetricsTap.snapshot(spark)
+    val t0 = System.nanoTime()
+    fn(spark, sfDir).count() // the one sink: warm-ups run through here too
+    val wall = (System.nanoTime() - t0) / 1e9
+    (wall, MetricsTap.settled(spark) - m0)
+  }
+
+  /** The timing rule: a query's time is the MIN of repeated passes, so a
+    * transient host-load burst (other tenants of this machine) doesn't
+    * masquerade as a regression — two adjacent passes always, a third only
+    * when the first two disagree by >1.5x (i.e. one of them likely hit
+    * contention). The min is the engine's number; the first pass is also
+    * emitted for transparency (value_single_pass). */
+  def timeQuery(spark: SparkSession, sfDir: String, fn: Query): Seq[Pass] = {
+    val two = Seq(pass(spark, sfDir, fn), pass(spark, sfDir, fn))
+    val ts = two.map(_._1)
+    if (ts.max / math.max(ts.min, 1e-9) > 1.5) two :+ pass(spark, sfDir, fn) else two
+  }
+
+  /** The family loop (CACHE LIFECYCLE above): evict, warm up on the first
+    * query untimed, then `record(name, time)` per query in name order.
+    * `time()` applies [[timeQuery]], or logs and yields None for a query
+    * that throws: it did no work, so timing it would LOWER a total. */
+  def timeFamily[R](spark: SparkSession, sfDir: String, qs: Seq[(String, Query)])(
+      record: (String, () => Option[Seq[Pass]]) => R): Seq[R] = {
+    Memo.clearSession(spark)
+    spark.catalog.clearCache()
+    System.gc()
+    val sorted = qs.sortBy(_._1)
+    sorted.headOption.foreach { case (_, fn) =>
+      try pass(spark, sfDir, fn) catch { case _: Throwable => () }
     }
+    sorted.map { case (name, fn) =>
+      record(name, () =>
+        try Some(timeQuery(spark, sfDir, fn))
+        catch { case e: Throwable =>
+          Console.err.println(s"[bench] $name failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
+          None
+        })
+    }
+  }
+
+  def f2(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = Bench.sfDir(None)
+    val spark = graft.core.Session()
+    timingSession(spark)
 
     def loadavg1: Double =
       try scala.io.Source.fromFile("/proc/loadavg").mkString
@@ -167,49 +211,27 @@ object Bench {
     var storagePeakDisk = 0L
     var memoPeak = 0
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    val byFamily = SparkEntry.queries.toSeq.sortBy(q => (family(q._1), q._1))
-      .groupBy(q => family(q._1)).toSeq.sortBy(_._1)
+    val byFamily = SparkEntry.queries.toSeq.groupBy(q => family(q._1)).toSeq.sortBy(_._1)
     val runs = byFamily.flatMap { case (_, qs) =>
-      // fresh standing set per family: evict every memoized frame and any
-      // stray non-memo persist, then let the family's first query rebuild
-      // its shared inputs untimed (warmup also absorbs the family's JIT)
-      graft.core.Memo.clearSession(spark)
-      spark.catalog.clearCache()
-      System.gc()
-      qs.headOption.foreach { case (_, fn) =>
-        try fn(spark, sfDir).count() catch { case _: Throwable => () }
-      }
-      qs.sortBy(_._1).flatMap { case (name, fn) =>
+      timeFamily(spark, sfDir, qs) { (name, time) =>
         val la = loadavg1
-        // a query that throws did no work: timing it would LOWER the total,
-        // so it goes to `failed` and stays out of every timed channel
-        val timed = try {
-          val a = once(fn)
-          val b = once(fn)
-          Some(if (math.max(a._1, b._1) / math.max(math.min(a._1, b._1), 1e-9) > 1.5)
-            Seq(a, b, once(fn))
-          else Seq(a, b))
-        } catch { case e: Throwable =>
-          Console.err.println(s"[bench] $name failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
-          failed += name
-          None
-        }
-        val (sm, sd, _) = graft.core.MetricsTap.storageGauge(spark)
+        val timed = time()
+        if (timed.isEmpty) failed += name
+        val (sm, sd, _) = MetricsTap.storageGauge(spark)
         storagePeakMem = math.max(storagePeakMem, sm)
         storagePeakDisk = math.max(storagePeakDisk, sd)
-        memoPeak = math.max(memoPeak, graft.core.Memo.liveEntries(spark))
+        memoPeak = math.max(memoPeak, Memo.liveEntries(spark))
         queryIdx += 1; sinceProbe += 1; maybeProbe()
         timed.map { ts =>
           val best = ts.minBy(_._1)
           (name, best._1, ts.head._1, ts.map(_._1), best._2, sm, la)
         }
-      }
+      }.flatten
     }
     maybeProbe(force = true)
     val results = runs.map { case (n, m, _, _, _, _, _) => (n, m) }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    def f2(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     // every individual timed pass, so a reader can tell "min of agreeing
     // runs" from "min of runs that all hit the same sustained contention"
     val runsJson = runs.map { case (n, _, _, ts, _, _, _) =>
@@ -226,7 +248,7 @@ object Bench {
     val singlePass = if (runs.nonEmpty) runs.map(_._3).sum else 0.0
     val shuffleTotal = runs.map(_._5.shuffleBytes).sum
     val spillTotal = runs.map(_._5.spillBytes).sum
-    val gcTotal = graft.core.MetricsTap.jvmGcMs
+    val gcTotal = MetricsTap.jvmGcMs
     val droppedTotal = runs.map(_._5.blocksDropped).sum
     // the probe series: identical work at every sample, so max/min > ~2
     // reads as sustained host contention over the run window
@@ -351,7 +373,7 @@ object Bench {
       s""""memo_entries_peak":$memoPeak,"gc_ms_total":$gcTotal,""" +
       s""""blocks_dropped_min_runs":$droppedTotal,""" +
       s""""calibration_drift":${f2(calDrift)},""" +
-      s""""memo_max_entries":"${spark.conf.get("graft.memo.maxEntries", "128")}"}"""
+      s""""memo_max_entries":"${Memo.maxEntries(spark)}"}"""
     val failedJson = failed.map(n => s"\"$n\"").mkString("[", ",", "]")
     val line = s"""{"metric":"total","value":$total,"unit":"sec","value_single_pass":$singlePass,"adjudication":$adjJson,"queries":$qs,"runs":$runsJson,"io":$ioJson,"calibration":$calJson,"shuffle_bytes_total":$shuffleTotal,"spill_bytes_total":$spillTotal,"failed":$failedJson,"env":$env,"sf":"$sfDir"}"""
     // the artifact must not depend on a stdout tail: persist the FULL line
@@ -403,7 +425,7 @@ object Bench {
       <= CompactCap, s"compact bench line ${compact.length}B > $CompactCap")
     Console.out.println(compact)
     Console.out.flush()
-    graft.core.Memo.clearSession(spark)
+    Memo.clearSession(spark)
     spark.stop()
   }
 }

@@ -284,6 +284,7 @@ final class Memo[K] {
     m.get(mk) match {
       case Some(df) => Memo.Ledger.touch(token(spark, key)); df
       case None =>
+        Memo.maxEntries(spark)
         val df = m.getOrElseUpdate(mk,
           build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         Memo.Ledger.add(token(spark, key), spark, () =>
@@ -329,6 +330,7 @@ final class PlanMemo[K, V](free: V => Unit) {
     lookup() match {
       case Some(e) => Memo.Ledger.touch(e.token); e.value
       case None =>
+        Memo.maxEntries(src.sparkSession)
         val v = build
         val outcome: Either[V, Entry] = synchronized {
           // re-check under the lock: another thread may have won the build race
@@ -383,17 +385,14 @@ object Memo {
     private final case class Slot(session: SparkSession, evict: () => Unit)
     // access-order LinkedHashMap: iteration order is least-recently-used first
     private val order = new java.util.LinkedHashMap[AnyRef, Slot](64, 0.75f, true)
-    private def cap(s: SparkSession): Int =
-      try s.conf.get("graft.memo.maxEntries", "128").toInt
-      catch { case _: Throwable => 128 }
     def touch(token: AnyRef): Unit =
       order.synchronized { order.get(token); () }
     def forget(token: AnyRef): Unit =
       order.synchronized { order.remove(token); () }
     def add(token: AnyRef, session: SparkSession, evict: () => Unit): Unit = {
+      val max = maxEntries(session)
       val victims: List[() => Unit] = order.synchronized {
         order.put(token, Slot(session, evict))
-        val max = math.max(1, cap(session))
         import scala.jdk.CollectionConverters._
         // iterator (NOT a Set view) — LinkedHashMap's access order is the
         // whole point, and a scala Set filter would hash-scramble it
@@ -413,6 +412,14 @@ object Memo {
       import scala.jdk.CollectionConverters._
       order.values.asScala.count(_.session eq session)
     }
+  }
+  /** The session's ledger cap, `graft.memo.maxEntries` (default 128).
+    * Memo and PlanMemo read it before building on a miss, so a malformed
+    * or non-positive value fails by name and leaves nothing persisted. */
+  def maxEntries(spark: SparkSession): Int = {
+    val raw = spark.conf.get("graft.memo.maxEntries", "128")
+    raw.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"graft.memo.maxEntries must be a positive integer, got '$raw'"))
   }
   /** Live memoized-entry count for `spark` — bench/serving telemetry. */
   def liveEntries(spark: SparkSession): Int = Ledger.size(spark)

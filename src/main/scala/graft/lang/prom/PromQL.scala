@@ -645,12 +645,14 @@ object PromQL {
       }
       s.matchers.foldLeft(withMetric) { case (df, (k, op, v)) =>
         val tag = col(S.LabelsCol).getItem(k)
-        op match {
-          case "="  => df.where(tag === v)
-          case "!=" => df.where(tag.isNull || tag =!= v)
-          case "=~" => df.where(tag.rlike(s"^(?:$v)$$"))
-          case "!~" => df.where(tag.isNull || !tag.rlike(s"^(?:$v)$$"))
-        }
+        val regex = op.endsWith("~")
+        val hit = if (regex) tag.rlike(s"^(?:$v)$$") else tag === v
+        // Prometheus reads a missing label as "": decided at plan time, so
+        // a matcher that "" fails keeps its plain predicate
+        val emptyMatches = if (regex) "".matches(s"^(?:$v)$$") else v.isEmpty
+        df.where(if (op.startsWith("!")) {
+          if (emptyMatches) tag.isNotNull && !hit else tag.isNull || !hit
+        } else if (emptyMatches) tag.isNull || hit else hit)
       }
     }
 

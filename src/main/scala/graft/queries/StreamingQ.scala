@@ -25,9 +25,9 @@ object StreamingQ extends QueryPack {
 
   /** Start and fully drain a registry stream with the state shuffle sized
     * to the query's key cardinality (default 8, overridable via the
-    * session conf `graft.stream.statePartitions` — the sweep tool
-    * [[graft.tools.StateShuffleSweep]] uses that knob to measure the
-    * commit-fan-out curve) instead of the session default (32): every
+    * session conf `graft.stream.statePartitions`; each cell of the
+    * commit-fan-out curve is `SPARK_GRAFT_EXTRA_CONF=graft.stream.statePartitions=P
+    * … Tool time:2 <q> <sf>`) instead of the session default (32): every
     * stateful micro-batch commits one state-store delta PER SHUFFLE
     * PARTITION, and at registry data sizes those commits — not row work —
     * are the wall clock (this same cut took streaming_ingest_roundtrip
@@ -129,7 +129,7 @@ object StreamingQ extends QueryPack {
     }
     // the dedup state shuffle is the roundtrip's fixed cost: at the default
     // 32 partitions every micro-batch commits 32 state-store deltas for a
-    // few thousand rows. r14 swept 1/2/4/8 (StateShuffleSweep: 3.26/2.92/
+    // few thousand rows. r14 swept 1/2/4/8 (min-of-2 warm: 3.26/2.92/
     // 2.93/3.41s): 4 matches the measured minimum while keeping parallel
     // headroom for the real per-trigger row work (state-store count is a
     // per-query setting in production, sized to the ingest key cardinality)

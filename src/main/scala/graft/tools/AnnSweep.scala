@@ -23,7 +23,7 @@ import graft.pipelines.Similarity
   */
 object AnnSweep {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    val sfDir = graft.Bench.sfDir(args.headOption)
     val mult = args.lift(1).map(_.toInt).getOrElse(1)
     val spark = graft.core.Session()
     import org.apache.spark.sql.functions._

@@ -19,12 +19,13 @@ import org.apache.spark.sql.functions._
   *     appends a final NO-DATA micro-batch (one more offset+commit+state
   *     round-trip) that update-mode monotone-snapshot queries never need.
   *
-  * Then three real registry queries (min-of-2 warm) for the comparison
-  * line. Run: `SPARK_GRAFT_SF_DIR=... runMain graft.tools.StreamFloorProbe`.
+  * Then three real registry queries (timed by [[graft.Bench.timeFamily]])
+  * for the comparison line. Run: `runMain graft.tools.StreamFloorProbe`
+  * (sf: [[graft.Bench.sfDir]]).
   * Findings land in OPERATORS.md next to the state-shuffle sweep. */
 object StreamFloorProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = graft.Bench.sfDir(None)
     val spark = graft.core.Session()
 
     // GRAFT_FLOOR_DIR relocates the staging/checkpoint dirs (e.g. to
@@ -90,17 +91,12 @@ object StreamFloorProbe {
       "floor_stateful_1" -> minOf(3)(drainOnce(1, stateful = true, noData = true)),
       "floor_nodata_off_4" -> minOf(3)(drainOnce(4, stateful = true, noData = false)))
 
-    val queries = Seq("streaming_kmv_distinct", "streaming_hll_distinct",
-      "streaming_ingest_roundtrip")
-    val regTimes = queries.map { n =>
-      val fn = graft.SparkEntry.queries(n)
-      def once(): Double = {
-        val t0 = System.nanoTime(); fn(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      once() // warm (shared derived inputs, codegen)
-      n -> minOf(2)(once())
-    }
+    // the registry queries under the suite bench's own setup and rule
+    val queries = Seq("streaming_hll_distinct", "streaming_ingest_roundtrip",
+      "streaming_kmv_distinct").map(n => n -> graft.SparkEntry.queries(n))
+    graft.Bench.timingSession(spark)
+    val regTimes = graft.Bench.timeFamily(spark, sfDir, queries)((n, time) =>
+      n -> time().fold(Double.NaN)(_.map(_._1).min))
 
     println("| probe | min sec |")
     println("|---|---|")

@@ -1,0 +1,108 @@
+package graft.tools
+
+import graft.{Bench, SparkEntry}
+import graft.core.{Memo, Session}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
+
+/** The one developer entry point over the query registry
+  * (`runMain graft.tools.Tool <sub> …`; `sf` as in [[graft.Bench.sfDir]]):
+  *  - `show|count|explain|save:<dir> <name> [sf]`: rows, row count,
+  *    formatted plan, or the result as one parquet file for DuckDB;
+  *  - `time[:N] <name> [sf]`: N timed passes (default 3), then `secs_min=`;
+  *  - `explain <outDir> <suffix> <name…>`: one `<name>_<suffix>.txt` plan
+  *    file per query from one JVM; a build that throws (builds can run
+  *    jobs) is written as `EXPLAIN FAILED` and the sweep goes on;
+  *  - `family <name|all> [sf]`: one isolated-warm JSON line per family,
+  *    measured by the suite's own [[graft.Bench.timeFamily]].
+  * Timed subcommands use the bench's timing setup and single pass, so they
+  * clock the suite's work. An unknown subcommand, query or family fails
+  * before any Spark work, naming the valid choices. */
+object Tool {
+  private val usage = "usage: Tool show|count|explain|save:<dir>|time[:N] <name> [sf]" +
+    " | explain <outDir> <suffix> <name...> | family <name|all> [sf]"
+
+  private def choice[A](kind: String, name: String, all: Map[String, A]): A =
+    all.getOrElse(name, throw new IllegalArgumentException(
+      s"unknown $kind '$name'; expected one of ${all.keys.toSeq.sorted.mkString(", ")}"))
+
+  private def query(name: String): Bench.Query = choice("query", name, SparkEntry.queries)
+
+  /** Validates `args` without touching Spark and returns the action. */
+  def command(args: Seq[String]): SparkSession => Unit = args match {
+    case Seq("explain", outDir, suffix, names @ _*) if names.nonEmpty =>
+      dumpPlans(Bench.sfDir(None), outDir, suffix, names.map(n => n -> query(n)))
+    case Seq("family", fam, sf @ _*) if sf.size <= 1 =>
+      family(Bench.sfDir(sf.headOption), choice("family", fam,
+        Bench.familyNames.map { case (id, n) => n -> Set(id) } + ("all" -> Bench.familyNames.keySet)))
+    case Seq(sub, name, sf @ _*) if sf.size <= 1 =>
+      val act = mode(sub)
+      val (fn, sfDir) = (query(name), Bench.sfDir(sf.headOption))
+      spark => act(spark, sfDir, name, fn)
+    case _ => throw new IllegalArgumentException(usage)
+  }
+
+  def run(spark: SparkSession, args: Seq[String]): Unit = command(args)(spark)
+
+  def main(args: Array[String]): Unit = {
+    val cmd = command(args.toSeq)
+    val spark = Session()
+    try cmd(spark)
+    finally { Memo.clearSession(spark); spark.stop() }
+  }
+
+  private def mode(sub: String): (SparkSession, String, String, Bench.Query) => Unit = sub match {
+    case "show" => (spark, sf, _, fn) =>
+      val df = fn(spark, sf); df.show(30, truncate = false); println(s"rows=${df.count()}")
+    case "count" => (spark, sf, _, fn) => println(s"rows=${fn(spark, sf).count()}")
+    case "explain" => (spark, sf, _, fn) => fn(spark, sf).explain("formatted")
+    case s if s.startsWith("save:") => (spark, sf, _, fn) =>
+      val dir = s.stripPrefix("save:")
+      fn(spark, sf).coalesce(1).write.mode("overwrite").parquet(dir)
+      println(s"saved rows=${spark.read.parquet(dir).count()}")
+    case s if s == "time" || s.startsWith("time:") =>
+      val n = if (s == "time") 3 else s.stripPrefix("time:").toIntOption.filter(_ > 0)
+        .getOrElse(throw new IllegalArgumentException(s"bad '$s'; expected time:N with N > 0"))
+      (spark, sf, name, fn) =>
+        Bench.timingSession(spark)
+        val secs = (1 to n).map { i =>
+          val t = Bench.pass(spark, sf, fn)._1
+          println(s"[tool] $name run $i: ${Bench.f2(t)} s"); t
+        }
+        println(s"secs_min=${Bench.f2(secs.min)}")
+    case _ => throw new IllegalArgumentException(s"unknown subcommand '$sub'; $usage")
+  }
+
+  private def dumpPlans(sf: String, outDir: String, suffix: String,
+                        fns: Seq[(String, Bench.Query)]): SparkSession => Unit = spark => {
+    Files.createDirectories(Paths.get(outDir))
+    for ((name, fn) <- fns) {
+      val text =
+        try fn(spark, sf).queryExecution.explainString(FormattedMode)
+        catch { case e: Throwable => s"EXPLAIN FAILED: ${e.getClass.getName}: ${e.getMessage}" }
+      Files.write(Paths.get(outDir, s"${name}_$suffix.txt"), text.getBytes(UTF_8))
+      Console.err.println(s"[explain] wrote $name")
+    }
+  }
+
+  private def family(sf: String, ids: Set[Int]): SparkSession => Unit = spark => {
+    Bench.timingSession(spark)
+    val byFamily = SparkEntry.queries.toSeq.groupBy(q => Bench.family(q._1))
+    for (id <- ids.toSeq.sorted; qs <- byFamily.get(id)) {
+      val runs = Bench.timeFamily(spark, sf, qs)((name, time) => name -> time())
+      println(familyLine(Bench.familyNames(id), sf, runs))
+      Console.out.flush()
+    }
+  }
+
+  /** One `family` line: each query's min pass. A query that threw is
+    * listed under `failed` and left out of `queries` and `total`. */
+  def familyLine(fam: String, sf: String, runs: Seq[(String, Option[Seq[Bench.Pass]])]): String = {
+    val mins = runs.collect { case (n, Some(ps)) => n -> ps.map(_._1).min }
+    val qs = mins.map { case (n, t) => s""""$n":${Bench.f2(t)}""" }.mkString("{", ",", "}")
+    val failed = runs.collect { case (n, None) => s""""$n"""" }.mkString("[", ",", "]")
+    s"""{"family":"$fam","sf":"$sf","queries":$qs,"total":${Bench.f2(mins.map(_._2).sum)},"failed":$failed}"""
+  }
+}

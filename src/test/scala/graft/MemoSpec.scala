@@ -49,6 +49,28 @@ class MemoSpec extends SparkTestBase {
     assert(Memo.liveEntries(s) == 0)
   }
 
+  test("a malformed or non-positive maxEntries fails by name and persists nothing") {
+    for (bad <- Seq("abc", "0")) {
+      val s = spark.newSession()
+      s.conf.set("graft.memo.maxEntries", bad)
+      val (live, rdds) = (Memo.liveEntries(s), spark.sparkContext.getPersistentRDDs.size)
+      // builds that would persist and materialize a frame if they ran
+      def build(): DataFrame = {
+        val d = s.range(10).select((col("id") + 7).as("v")).persist()
+        d.count(); d
+      }
+      val memo = new Memo[Int]
+      val pm = new PlanMemo[Int, DataFrame](_.unpersist(blocking = false))
+      val errs = Seq(
+        intercept[IllegalArgumentException](memo(s, 1)(build())),
+        intercept[IllegalArgumentException](pm(s.range(3).toDF("id"), 1)(build())))
+      errs.foreach(e => assert(e.getMessage.contains("graft.memo.maxEntries") &&
+        e.getMessage.contains(s"'$bad'"), e.getMessage))
+      assert(Memo.liveEntries(s) == live)
+      assert(spark.sparkContext.getPersistentRDDs.size == rdds)
+    }
+  }
+
   test("planMemo frees evicted values and rebuilds sameResult-identical") {
     val s = freshSession(2)
     var freed = List.empty[String]

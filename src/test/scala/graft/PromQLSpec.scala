@@ -25,6 +25,19 @@ class PromQLSpec extends SparkTestBase {
       Map("dc:b,name:req" -> Seq(S(2), S(4), S(6), S(8), S(10), S(12), S(14), S(16), S(18), S(20))))
   }
 
+  test("matchers read a missing label as the empty string") {
+    val jobs = samplesDF(
+      series("name:m,job:a", Seq.fill(10)(S(1))) ++
+      series("name:m,job:b", Seq.fill(10)(S(2))) ++
+      series("name:m", Seq.fill(10)(S(3))))
+    def keys(q: String) = toGolden(PromQL.query(spark, jobs, g, q)).keySet
+    assert(keys("""m{job=""}""") == Set("name:m"))
+    assert(keys("""m{job!=""}""") == Set("job:a,name:m", "job:b,name:m"))
+    assert(keys("""m{job=~".*"}""") == Set("job:a,name:m", "job:b,name:m", "name:m"))
+    assert(keys("""m{job=~"a|"}""") == Set("job:a,name:m", "name:m"))
+    assert(keys("""m{job!~"a"}""") == Set("job:b,name:m", "name:m"))
+  }
+
   test("sum by (dc)") {
     assertSeries(run("""sum by (dc) (req)"""),
       Map("dc:a" -> Seq(S(1), S(2), S(3), S(4), S(5), S(6), S(7), S(8), S(9), S(10)),
