@@ -145,8 +145,9 @@ object Dist {
     * empty `keyNames` it partitions by a constant so WindowExec doesn't log
     * its scary-but-irrelevant "No Partition Defined" warning for a frame
     * this size. PrefixScanSpec pins the boundedness.)
-    * Callers: series ranking (`sort`/`head`/`topk`), sequence packing,
-    * weighted source mixing.
+    * Callers: the M3 `sort` rank, sequence packing, weighted source
+    * mixing, running sums (`SeriesStats`, histogram quantiles) and the other
+    * ranks that every row keeps. A rank that keeps only k rows is [[topK]].
     *
     * Returns the input plus `_scan` (the running total, in `value`'s summed
     * type). `localOrd` must be a total order within each range partition ×
@@ -185,21 +186,31 @@ object Dist {
       .drop("_pid", "_scan0", "_off")
   }
 
-  /** Distributed bottom-k: the k smallest rows by `ord` — which must be a
-    * TOTAL order (add a unique tiebreaker), or ranks are partition-
-    * dependent. Local bottom-k inside `buckets` disjoint hash-buckets of
-    * `bucketOn` first (any row outside its bucket's bottom-k cannot be in
-    * the global bottom-k), so the global [[prefixScan]] ranks at most
-    * buckets·k survivors — no sort ever funnels the full frame. Appends
-    * `_rn`, the 1-based global rank. */
-  def bottomK(df: DataFrame, ord: Seq[Column], k: Int, bucketOn: Column,
-              buckets: Int = 32): DataFrame = {
-    val wLocal = Window.partitionBy(pmod(bucketOn, lit(buckets)))
-      .orderBy(ord: _*)
-    val pruned = df.withColumn("_rl", row_number().over(wLocal))
-      .where(col("_rl") <= k).drop("_rl")
-    prefixScan(pruned, ord, lit(1L), ord)
-      .where(col("_scan") <= k).withColumnRenamed("_scan", "_rn")
+  /** Bounded top-k: at most `k` rows per `groups` group, ranked 1..k in
+    * `rankCol` (an int, like `row_number`) over `ord`, which must be a TOTAL
+    * order (end it with a unique tiebreaker), or ranks are
+    * partition-dependent. The plan follows from the input:
+    *  - no groups: `orderBy(ord).limit(k)`, which Spark plans as a
+    *    distributed TakeOrderedAndProject (each partition keeps its own k,
+    *    one task merges them — the reference's shard-local top-k plus
+    *    coordinator merge, TopKStage.java:33-47), then `row_number` over
+    *    the <= k survivors in one [[singleWindowKey]] window keyed by the
+    *    tiebreaker;
+    *  - groups: `row_number` over `partitionBy(groups)` filtered to `<= k`,
+    *    which Spark plans with a partial WindowGroupLimit below the shuffle.
+    * No sort ever sees more than partitions·k rows per group. */
+  def topK(df: DataFrame, ord: Seq[Column], k: Int, groups: Seq[Column] = Nil,
+           rankCol: String = "_rn"): DataFrame = {
+    require(k >= 0, s"top-k needs k >= 0, got $k")
+    if (groups.isEmpty) {
+      val tie = org.apache.spark.sql.graft.ColumnBridge.unsorted(ord.last)
+      df.orderBy(ord: _*).limit(k)
+        .withColumn(rankCol, row_number().over(
+          Window.partitionBy(singleWindowKey(tie)).orderBy(ord: _*)))
+    } else
+      df.withColumn(rankCol, row_number().over(
+          Window.partitionBy(groups: _*).orderBy(ord: _*)))
+        .where(col(rankCol) <= k)
   }
 
   /** Test/bench utility: place each row in partition `firstLongCol mod n`

@@ -159,12 +159,6 @@ object PromQL {
       while (i < in.length && in(i) != q) i += 1
       val out = in.substring(s, i); i += 1; out
     }
-    private def bracketDuration(): Long = {
-      ws(); val s = i
-      while (i < in.length && in(i) != ']') i += 1
-      graft.lang.m3.Duration.parse(in.substring(s, i).trim)
-        .getOrElse(throw PromParseError(s"bad duration '${in.substring(s, i)}'"))
-    }
     /** A bare duration token (after `offset`): `5m`, `1h30m`, `90s`… */
     private def bareDuration(): Long = {
       ws(); val s = i

@@ -25,10 +25,8 @@ object Dedup {
 
   /** Exact dedup: keep the first row (lowest doc_id) per distinct key set.
     * One hash-shuffle; at 100TB this is the cheapest possible full dedup. */
-  def exact(docs: DataFrame, keys: Seq[String], idCol: String = "doc_id"): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(idCol))
-    docs.withColumn("_rn", row_number().over(w)).where(col("_rn") === 1).drop("_rn")
-  }
+  def exact(docs: DataFrame, keys: Seq[String], idCol: String = "doc_id"): DataFrame =
+    graft.core.Dist.topK(docs, Seq(col(idCol)), 1, keys.map(col)).drop("_rn")
 
   /** PARAGRAPH-level dedup (the Dolma/RefinedWeb pass): across the whole
     * corpus, each distinct paragraph survives only at its FIRST occurrence

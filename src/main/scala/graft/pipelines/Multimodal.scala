@@ -361,10 +361,4 @@ object Multimodal {
     }
     spark.createDataFrame(rdd, schema)
   }
-
-  /** Partitioning for 100TB media tables: bucket by media_id so joins against
-    * per-media features co-locate, and keep payloads out of shuffles by
-    * projecting them away before any wide operation. */
-  def featureJoin(media: DataFrame, features: DataFrame): DataFrame =
-    media.drop("payload").join(features.drop("modality"), Seq("media_id"))
 }

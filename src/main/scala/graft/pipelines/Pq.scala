@@ -2,7 +2,6 @@ package graft.pipelines
 
 import graft.functions.VectorExprs.fastCosine
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
@@ -206,26 +205,21 @@ object Pq {
     val books = trainCodebooks(emb, m, ks, iters, dim, idCol, vecCol)
     val probes = unit.where(col(idCol).isin(queryIds.map(x => x: Any): _*))
       .select(col(idCol).as("probe_id"), col("nv").as("qn"))
-    val candIds = unit
+    val approx = unit
       .withColumn("_codes", codesArr(books, col("nv"), dsub))
       .crossJoin(broadcast(probes))
       .where(col(idCol) =!= col("probe_id"))
       .withColumn("approx", adcFromCodes(books, col("qn"), col("_codes"), dsub))
-      .withColumn("arnk", row_number().over(
-        Window.partitionBy("probe_id")
-          .orderBy(col("approx").asc, col(idCol))))
-      .where(col("arnk") <= k * rerank)
+    val candIds = graft.core.Dist.topK(approx,
+        Seq(col("approx").asc, col(idCol)), k * rerank, Seq(col("probe_id")), "arnk")
       .select(col("probe_id"), col(idCol))
     val probesRaw = emb.where(col(idCol).isin(queryIds.map(x => x: Any): _*))
       .select(col(idCol).as("probe_id"), col(vecCol).as("q_emb"))
-    emb.join(candIds, idCol)
+    val scored = emb.join(candIds, idCol)
       .join(broadcast(probesRaw), Seq("probe_id"))
       .withColumn("cosine",
         fastCosine(col(vecCol), col("q_emb")))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("cosine").desc, col(idCol))))
-      .where(col("rnk") <= k)
-      .select(col("probe_id"), col(idCol), col("cosine"), col("rnk"))
+    Similarity.cosineTopK(scored, k, idCol, batched = true)
   }
 
   /** Per-probe oracles unioned — [[pqTopKBatch]] equals [[pqTopK]] probe
@@ -297,16 +291,11 @@ object Pq {
   private def rerankTail(emb: DataFrame, candIds: DataFrame, queryId: Long,
                          k: Int, idCol: String, vecCol: String): DataFrame = {
     val qRaw = emb.where(col(idCol) === queryId).select(col(vecCol).as("q_emb"))
-    emb.join(candIds, idCol)
+    val scored = emb.join(candIds, idCol)
       .crossJoin(broadcast(qRaw))
       .withColumn("cosine",
         fastCosine(col(vecCol), col("q_emb")))
-      .orderBy(col("cosine").desc, col(idCol)).limit(k)
-      // k-row frame in one window partition (see Dist.singleWindowKey)
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(graft.core.Dist.singleWindowKey(col(idCol)))
-          .orderBy(col("cosine").desc, col(idCol))))
-      .select(col(idCol), col("cosine"), col("rnk"))
+    Similarity.cosineTopK(scored, k, idCol)
   }
 
   /** Materialize the offline serving index: `<table>` = (idCol, codes) —

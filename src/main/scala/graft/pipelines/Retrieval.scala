@@ -2,7 +2,6 @@ package graft.pipelines
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Lexical (term-based) retrieval over the document corpus: inverted
@@ -91,13 +90,7 @@ object Retrieval {
   }
 
   private def rankUnits(unitsByDoc: DataFrame, k: Int, idCol: String): DataFrame =
-    unitsByDoc
-      .orderBy(col("units").desc, col(idCol))
-      .limit(k)
-      // k-row frame in one window partition (see Dist.singleWindowKey)
-      .withColumn("rnk",
-        row_number().over(Window.partitionBy(graft.core.Dist.singleWindowKey(col(idCol)))
-          .orderBy(col("units").desc, col(idCol))))
+    graft.core.Dist.topK(unitsByDoc, Seq(col("units").desc, col(idCol)), k, rankCol = "rnk")
       .select(col(idCol), (col("units") / lit(1e9)).as("bm25"), col("rnk"))
 
   /** Top-k documents by BM25 against the DISTINCT terms of document
@@ -347,16 +340,11 @@ object Retrieval {
       .select(col(idCol).as("id"), col("rnk").as("lrnk"))
     val sem = Similarity.bruteForceTopK(emb, queryId, pool, idCol = embIdCol)
       .select(col(embIdCol).as("id"), col("rnk").as("srnk"))
-    lex.join(sem, Seq("id"), "full_outer")
+    val fused = lex.join(sem, Seq("id"), "full_outer")
       .withColumn("rrf",
         coalesce(lit(1.0) / (lit(kf.toDouble) + col("lrnk")), lit(0.0)) +
           coalesce(lit(1.0) / (lit(kf.toDouble) + col("srnk")), lit(0.0)))
-      .orderBy(col("rrf").desc, col("id"))
-      .limit(k)
-      // k-row frame in one window partition (see Dist.singleWindowKey)
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(graft.core.Dist.singleWindowKey(col("id")))
-          .orderBy(col("rrf").desc, col("id"))))
+    graft.core.Dist.topK(fused, Seq(col("rrf").desc, col("id")), k, rankCol = "rnk")
       .select(col("id").as(idCol), col("rrf"), col("rnk"))
   }
 

@@ -125,24 +125,17 @@ object Similarity {
           .as("embedding"))
   }
 
-  /** Top-k tail shared by every variant: the distributed TakeOrdered keeps
-    * the <= k best-scored rows, which then get a dense 1..k rank partitioned
-    * by the probe id (one group per probe — generalizes to batched probes
-    * without a global single-partition window). The window's input is the
-    * ALREADY-LIMITED k rows, never the corpus — but a LITERAL probe-id
-    * partition key is folded out of the spec by EliminateWindowPartitions
-    * and WindowExec then logs `No Partition Defined` (r15, VERDICT r14
-    * item 7): [[graft.core.Dist.singleWindowKey]] is 0 on every row yet
-    * non-foldable, so the spec survives and the k-row single-task execution
-    * is unchanged. */
-  private[graft] def rankTail(scored: DataFrame, k: Int, idCol: String): DataFrame =
-    scored
-      .orderBy(col("cosine").desc, col(idCol))
-      .limit(k)
-      .withColumn("rnk",
-        row_number().over(Window.partitionBy(graft.core.Dist.singleWindowKey(col(idCol)))
-          .orderBy(col("cosine").desc, col(idCol))))
-      .select(col(idCol), col("cosine"), col("rnk"))
+  /** The result contract shared by every ANN variant: the k best rows by
+    * (cosine desc, id), ranked 1..k in `rnk` — per probe when `batched`
+    * (`probe_id` leads the output) — through [[graft.core.Dist.topK]]: a
+    * distributed TakeOrdered for one probe, a per-probe WindowGroupLimit
+    * for a batch. */
+  private[pipelines] def cosineTopK(scored: DataFrame, k: Int, idCol: String,
+                                    batched: Boolean = false): DataFrame = {
+    val probe = if (batched) Seq(col("probe_id")) else Nil
+    graft.core.Dist.topK(scored, Seq(col("cosine").desc, col(idCol)), k, probe, "rnk")
+      .select(probe ++ Seq(col(idCol), col("cosine"), col("rnk")): _*)
+  }
 
   /** Exact top-k by cosine to the query vector (query side broadcast; the
     * ranking is a distributed TakeOrdered — no global sort materialized). */
@@ -153,7 +146,7 @@ object Similarity {
     val scored = emb.where(col(idCol) =!= queryId)
       .crossJoin(broadcast(q))
       .withColumn("cosine", fastCosine(col("embedding"), col("q_emb")))
-    rankTail(scored, k, idCol)
+    cosineTopK(scored, k, idCol)
   }
 
   /** Banded-signature LSH index for one corpus — (id, embedding, bkeys),
@@ -204,7 +197,7 @@ object Similarity {
     val scored = idx.join(candIds, idCol)
       .crossJoin(broadcast(q.select("q_emb")))
       .withColumn("cosine", fastCosine(col("embedding"), col("q_emb")))
-    rankTail(scored, k, idCol)
+    cosineTopK(scored, k, idCol)
   }
 
   /** Top-k by cosine in the Johnson–Lindenstrauss PROJECTED space
@@ -230,7 +223,7 @@ object Similarity {
       .withColumn("cosine",
         when(col("_na") === 0.0 || col("_nb") === 0.0, lit(0.0))
           .otherwise(dot(col("yv"), col("qv")) / (col("_na") * col("_nb"))))
-    rankTail(scored, k, idCol)
+    cosineTopK(scored, k, idCol)
   }
 
   /** Batched multiprobe LSH: N probes resolve in ONE pass over the banded
@@ -257,13 +250,10 @@ object Similarity {
       .join(broadcast(qKeys), Seq("band", "bkey"))
       .where(col(idCol) =!= col("probe_id"))
       .select(col("probe_id"), col(idCol)).distinct()
-    idx.join(candIds, idCol)
+    val scored = idx.join(candIds, idCol)
       .join(broadcast(probes.select("probe_id", "q_emb")), Seq("probe_id"))
       .withColumn("cosine", fastCosine(col("embedding"), col("q_emb")))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("cosine").desc, col(idCol))))
-      .where(col("rnk") <= k)
-      .select(col("probe_id"), col(idCol), col("cosine"), col("rnk"))
+    cosineTopK(scored, k, idCol, batched = true)
   }
 
   /** IVF index for one corpus: centroids + the per-vector cell assignment,
@@ -295,11 +285,10 @@ object Similarity {
       val nc =
         if (nCentroidsOverride > 0) nCentroidsOverride
         else math.max(16, math.sqrt(emb.count().toDouble).round.toInt)
-      def assign(c: DataFrame, keep: Int) = emb.crossJoin(broadcast(c))
-        .withColumn("sim", fastCosine(col("embedding"), col("cent_emb")))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col(idCol)).orderBy(col("sim").desc, col("cent_id"))))
-        .where(col("rn") <= keep)
+      def assign(c: DataFrame, keep: Int) = graft.core.Dist.topK(
+          emb.crossJoin(broadcast(c))
+            .withColumn("sim", fastCosine(col("embedding"), col("cent_emb"))),
+          Seq(col("sim").desc, col("cent_id")), keep, Seq(col(idCol)), "rn")
         .select(col(idCol), col("embedding"), col("cent_id"))
       // seed centroids = deterministic sample of the corpus (ids hashed),
       // then `lloydIters` rounds of assign → per-cell elementwise mean
@@ -341,7 +330,7 @@ object Similarity {
       .crossJoin(broadcast(q))
       .withColumn("cosine",
         fastCosine(col("embedding"), col("q_emb")))
-    rankTail(scored, k, idCol)
+    cosineTopK(scored, k, idCol)
   }
 
   /** The IVF cell structures for composition by other ANN paths (IVF-PQ):
@@ -364,13 +353,10 @@ object Similarity {
                           idCol: String = "vec_id"): DataFrame = {
     val probes = emb.where(col(idCol).isin(queryIds.map(x => x: Any): _*))
       .select(col(idCol).as("probe_id"), col("embedding").as("q_emb"))
-    emb.crossJoin(broadcast(probes))
+    val scored = emb.crossJoin(broadcast(probes))
       .where(col(idCol) =!= col("probe_id"))
       .withColumn("cosine", fastCosine(col("embedding"), col("q_emb")))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("cosine").desc, col(idCol))))
-      .where(col("rnk") <= k)
-      .select(col("probe_id"), col(idCol), col("cosine"), col("rnk"))
+    cosineTopK(scored, k, idCol, batched = true)
   }
 
   /** SQ8 scalar-quantization index: per-dimension [min, max] over the corpus
@@ -436,7 +422,7 @@ object Similarity {
     val scored = emb.join(candIds, idCol)
       .crossJoin(broadcast(q))
       .withColumn("cosine", fastCosine(col("embedding"), col("q_emb")))
-    rankTail(scored, k, idCol)
+    cosineTopK(scored, k, idCol)
   }
 
   /** Batched SQ8: N probes share ONE pass over the code table — the probe
@@ -450,22 +436,18 @@ object Similarity {
     val idx = sq8Index(emb, idCol)
     val probes = emb.where(col(idCol).isin(queryIds.map(x => x: Any): _*))
       .select(col(idCol).as("probe_id"), col("embedding").as("q_emb"))
-    val candIds = idx.codes
+    val approx = idx.codes
       .crossJoin(broadcast(probes)).crossJoin(broadcast(idx.stats))
       .where(col(idCol) =!= col("probe_id"))
       .withColumn("approx",
         sq8Cosine(col("codes"), col("q_emb"), col("dim_stats")))
-      .withColumn("arnk", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("approx").desc, col(idCol))))
-      .where(col("arnk") <= k * rerank)
+    val candIds = graft.core.Dist.topK(approx,
+        Seq(col("approx").desc, col(idCol)), k * rerank, Seq(col("probe_id")), "arnk")
       .select(col("probe_id"), col(idCol))
-    emb.join(candIds, idCol)
+    val scored = emb.join(candIds, idCol)
       .join(broadcast(probes), Seq("probe_id"))
       .withColumn("cosine", fastCosine(col("embedding"), col("q_emb")))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("cosine").desc, col(idCol))))
-      .where(col("rnk") <= k)
-      .select(col("probe_id"), col(idCol), col("cosine"), col("rnk"))
+    cosineTopK(scored, k, idCol, batched = true)
   }
 
   /** IVF-style variant: kmeans — partition vectors by nearest of the index's
@@ -491,7 +473,7 @@ object Similarity {
     val scored = idx.assigned.where(col(idCol) =!= queryId)
       .join(broadcast(qCells), Seq("cent_id"))
       .withColumn("cosine", fastCosine(col("embedding"), col("q_emb")))
-    rankTail(scored, k, idCol)
+    cosineTopK(scored, k, idCol)
   }
 
   /** Persist the IVF index as TABLES — the offline form of the in-session
@@ -522,12 +504,10 @@ object Similarity {
   def appendIvfIndex(spark: org.apache.spark.sql.SparkSession, table: String,
                      newEmb: DataFrame, idCol: String = "vec_id"): Unit = {
     val cents = spark.table(s"${table}_cents")
-    newEmb.crossJoin(broadcast(cents))
+    val sims = newEmb.crossJoin(broadcast(cents))
       .withColumn("sim",
         fastCosine(col("embedding"), col("cent_emb")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col(idCol)).orderBy(col("sim").desc, col("cent_id"))))
-      .where(col("rn") === 1)
+    graft.core.Dist.topK(sims, Seq(col("sim").desc, col("cent_id")), 1, Seq(col(idCol)))
       .select(col(idCol), col("embedding"), col("cent_id"))
       .write.mode("append").partitionBy("cent_id").saveAsTable(table)
   }
@@ -557,7 +537,7 @@ object Similarity {
     val scored = scanned.where(col(idCol) =!= queryId)
       .crossJoin(broadcast(q))
       .withColumn("cosine", fastCosine(col("embedding"), col("q_emb")))
-    rankTail(scored, k, idCol)
+    cosineTopK(scored, k, idCol)
   }
 
   /** Batched IVF probes: all probes' nProbe-cell selections resolve in one
@@ -572,20 +552,16 @@ object Similarity {
     val idx = ivfIndex(emb, idCol, nCentroids, lloydIters)
     val probes = idx.assigned.where(col(idCol).isin(queryIds.map(x => x: Any): _*))
       .select(col(idCol).as("probe_id"), col("embedding").as("q_emb"))
-    val qCells = probes.crossJoin(broadcast(idx.cents))
+    val sims = probes.crossJoin(broadcast(idx.cents))
       .withColumn("sim", fastCosine(col("q_emb"), col("cent_emb")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("sim").desc, col("cent_id"))))
-      .where(col("rn") <= nProbe)
+    val qCells = graft.core.Dist.topK(sims, Seq(col("sim").desc, col("cent_id")),
+        nProbe, Seq(col("probe_id")), "rn")
       .select(col("probe_id"), col("cent_id"), col("q_emb"))
-    idx.assigned
+    val scored = idx.assigned
       .join(broadcast(qCells), Seq("cent_id"))
       .where(col(idCol) =!= col("probe_id"))
       .withColumn("cosine", fastCosine(col("embedding"), col("q_emb")))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("cosine").desc, col(idCol))))
-      .where(col("rnk") <= k)
-      .select(col("probe_id"), col(idCol), col("cosine"), col("rnk"))
+    cosineTopK(scored, k, idCol, batched = true)
   }
 
   /** Seeded PORTABLE K-MEANS over the embedding column — the topic/domain

@@ -181,33 +181,23 @@ object Sketches {
     * 2k-row combine, not a join of the crawls. Integer state end to end.
     *
     * Scale shape: one distinct shuffle on (group, hash) — two longs a
-    * row — then a TWO-PHASE min-k: local min-k inside each of `buckets`
-    * hash-buckets, global min-k over the ≤ buckets·k survivors. No
-    * single-partition sort ever sees more than buckets·k rows per group.
+    * row — then the min-k through [[graft.core.Dist.topK]] (`_rn` = the
+    * 1-based rank): a distributed TakeOrdered with no groups, a partial
+    * WindowGroupLimit below the group shuffle otherwise. No sort ever sees
+    * more than partitions·k rows per group.
     */
   def kmvSketch(df: DataFrame, valueCol: Column, groupCols: Seq[Column],
-                k: Int = 256, buckets: Int = 32): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+                k: Int = 256): DataFrame = {
     val h = graft.core.OracleSafe.hashLong(
       concat(lit("kmv:"), valueCol.cast("string")))
     val hashed = df.select(groupCols :+ h.as("_h"): _*).distinct()
-    val gNames = hashed.columns.dropRight(1).toSeq
-    val wLocal = Window
-      .partitionBy(gNames.map(col) :+ pmod(col("_h"), lit(buckets.toLong)): _*)
-      .orderBy(col("_h"))
-    // localCheckpoint the ≤ groups·buckets·k survivors: the global rank
-    // below reads its input twice (prefixScan's two phases) and overlap
-    // consumers re-reference the sketch 3-4×; without the cut each
-    // reference replays the corpus scan + distinct (measured 24 parquet
-    // scans in the two-sketch overlap plan). One corpus pass, then
+    val groups = hashed.columns.dropRight(1).toSeq.map(col)
+    // localCheckpoint the ≤ groups·k sketch rows: [[kmvOverlap]] reads each
+    // sketch twice (the combine and its own estimate), and without the cut
+    // each reference replays the corpus scan + distinct (measured 24
+    // parquet scans in the two-sketch overlap plan). One corpus pass, then
     // everything downstream reads the sketch-sized checkpoint.
-    val pruned = hashed
-      .withColumn("_rl", row_number().over(wLocal)).where(col("_rl") <= k)
-      .drop("_rl")
-      .localCheckpoint(true)
-    graft.core.Dist.prefixScan(pruned, Seq(col("_h")), lit(1L),
-        Seq(col("_h")), keyNames = gNames)
-      .where(col("_scan") <= k).withColumnRenamed("_scan", "_rn")
+    graft.core.Dist.topK(hashed, Seq(col("_h")), k, groups).localCheckpoint(true)
   }
 
   /** Distinct estimate from a KMV sketch: (k−1)·2^32 / h₍k₎ — the numerator
@@ -237,14 +227,11 @@ object Sketches {
     val comb0 = ha.join(hb, Seq("_h"), "full")
       .select(col("_h"), coalesce(col("_ina"), lit(0L)).as("_ina"),
         coalesce(col("_inb"), lit(0L)).as("_inb"))
-    // rank by hash via the shared two-phase scan (distinct hashes ⇒ the
-    // inclusive count IS the rank) — no single-partition window even here
-    val comb = graft.core.Dist.prefixScan(
-        comb0, Seq(col("_h")), lit(1L), Seq(col("_h")))
-      .where(col("_scan") <= k)
+    // the combined bottom-k by hash (distinct hashes ⇒ a total order)
+    val comb = graft.core.Dist.topK(comb0, Seq(col("_h")), k)
     val stats = comb.agg(
       max(col("_h")).as("_theta"), count(lit(1)).as("_nu"),
-      sum(when(col("_ina") + col("_inb") === 2L && col("_scan") < k, 1L)
+      sum(when(col("_ina") + col("_inb") === 2L && col("_rn") < k, 1L)
         .otherwise(0L)).as("_common"),
       sum(when(col("_ina") + col("_inb") === 2L, 1L).otherwise(0L))
         .as("_commonAll"))

@@ -63,13 +63,12 @@ object TextAnalysis {
     val tf = toks.groupBy(col(idCol), col("token")).agg(count(lit(1)).as("tf"))
     val df = tf.groupBy("token").agg(count(lit(1)).as("df"))
     val n = docs.agg(count_distinct(col(idCol)).as("_n"))
-    val w = Window.partitionBy(idCol).orderBy(col("tfidf").desc, col("token").asc)
-    tf.join(df, Seq("token"))
+    val scored = tf.join(df, Seq("token"))
       .crossJoin(broadcast(n))
       .withColumn("tfidf", (col("tf") * log(col("_n").cast(DoubleType) / col("df")))
         .cast(DecimalType(38, 9)).cast(DoubleType))
-      .withColumn("_rn", row_number().over(w))
-      .where(col("_rn") <= topK)
+    graft.core.Dist.topK(scored, Seq(col("tfidf").desc, col("token").asc), topK,
+        Seq(col(idCol)))
       .select(idCol, "token", "tf", "df", "tfidf")
   }
 
@@ -606,9 +605,8 @@ object TextAnalysis {
       .select(col(idCol), col("phrase"), col("n_words"),
         (col("_nano").cast(DoubleType) / lit(1e9)).as("score"))
       .distinct()
-    val wR = Window.partitionBy(col(idCol))
-      .orderBy(col("score").desc, col("phrase").asc)
-    pd.withColumn("rnk", row_number().over(wR)).where(col("rnk") <= topK)
+    graft.core.Dist.topK(pd, Seq(col("score").desc, col("phrase").asc), topK,
+      Seq(col(idCol)), "rnk")
   }
 
   val Stopwords = Seq(
@@ -649,7 +647,6 @@ object TextAnalysis {
     * at least two DISTINCT ones to pass the stop-word rule. */
   val GopherEssential: Seq[String] =
     Seq("the", "be", "to", "of", "and", "that", "have", "with")
-  def GopherEssentialSql: String = GopherEssential.map(w => s"'$w'").mkString(", ")
 
   /** Gopher-style document quality rules (Rae et al. 2021, appendix A — the
     * text-only subset, thresholds adapted to the short synthetic corpus):
@@ -798,11 +795,8 @@ object TextAnalysis {
     require(k >= 1, "k must be >= 1")
     val h = graft.core.OracleSafe.hashLong(
       concat(lit(seed), lit(":"), col(idCol).cast("string")))
-    val w = Window.partitionBy(col(groupCol))
-      .orderBy(col("_h").asc, col(idCol).asc)
-    docs.withColumn("_h", h)
-      .withColumn("_rn", row_number().over(w))
-      .where(col("_rn") <= k)
+    graft.core.Dist.topK(docs.withColumn("_h", h),
+        Seq(col("_h").asc, col(idCol).asc), k, Seq(col(groupCol)))
       .drop("_h", "_rn")
   }
 
@@ -821,10 +815,10 @@ object TextAnalysis {
     * weights are excluded up front (they can never be drawn; keeping them
     * would divide by zero under ANSI).
     *
-    * Distributed shape: a per-row key then [[graft.core.Dist.bottomK]] —
-    * local prune inside 32 hash-buckets, global rank over ≤ 32·k
-    * survivors; nothing global ever sorts the corpus. Output: the
-    * surviving rows + `rnk` (1-based draw order). */
+    * Distributed shape: a per-row key then [[graft.core.Dist.topK]] — a
+    * distributed TakeOrdered (each partition keeps its k smallest keys, one
+    * task merges them); nothing global ever sorts the corpus. Output: the
+    * surviving rows + `rnk` (1-based draw order, BIGINT). */
   def sampleWeighted(docs: DataFrame, k: Int, weightCol: Column,
                      seed: String = "graft",
                      idCol: String = "doc_id"): DataFrame = {
@@ -833,10 +827,8 @@ object TextAnalysis {
     val key = -log(lit(1.0) - u) / weightCol.cast(DoubleType)
     val keyed = docs.where(weightCol > 0)
       .withColumn("_sk", floor(key * lit(1e9)).cast(LongType))
-    graft.core.Dist.bottomK(keyed,
-        Seq(col("_sk").asc, col(idCol).asc), k,
-        graft.core.OracleSafe.hashLong(col(idCol).cast("string")))
-      .withColumnRenamed("_rn", "rnk").drop("_sk")
+    graft.core.Dist.topK(keyed, Seq(col("_sk").asc, col(idCol).asc), k, rankCol = "rnk")
+      .withColumn("rnk", col("rnk").cast(LongType)).drop("_sk")
   }
 
   /** Sliding-window OVERLAP CHUNKING (the RAG/embedding-index splitter):

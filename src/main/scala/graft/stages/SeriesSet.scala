@@ -11,10 +11,10 @@ import org.apache.spark.sql.types._
   *
   * These are the reference's coordinator-only stages (PipelineStage.isCoordinatorOnly,
   * query/stage/PipelineStage.java:82) — the ones that need a global view. In
-  * Spark they are the stages that introduce a shuffle; topK/limit pushes
-  * partial ordering into each partition (TakeOrderedAndProject), matching the
-  * reference's shard-local-topK + coordinator re-merge
-  * (ref: TopKStage.java:33-47,108,172).
+  * Spark they are the stages that introduce a shuffle; topK/head/tail rank
+  * through [[graft.core.Dist.topK]], a TakeOrderedAndProject that keeps k
+  * series per partition and merges them in one task — the reference's
+  * shard-local-topK + coordinator re-merge (ref: TopKStage.java:33-47,108,172).
   *
   * All decisions that depend on the data (single right group, common label
   * keys, divisor cardinality) are folded into the lazy plan as 1-row broadcast
@@ -47,9 +47,28 @@ object SeriesSet {
     case other => throw new IllegalArgumentException(s"sort by: $other")
   }
 
-  /** Attach `_rank` = dense series rank by the key (ties broken by series key
-    * string for determinism — the order is total, so the rank is
-    * layout-independent).
+  /** One row per series: `series_id`, `_key` (the sort key by `by`) and
+    * `_skey` (the series key string, the tiebreaker that makes the order
+    * total, so every rank is layout-independent). */
+  private def seriesKeys(df: DataFrame, by: String): DataFrame =
+    if (by == "name") df.select(col(S.SeriesId), TsSchema.seriesKey(col(S.LabelsCol)).as("_skey"))
+      .distinct().withColumn("_key", col("_skey").cast(StringType))
+    else df.groupBy(S.SeriesId)
+      .agg(seriesKeyAgg(by).as("_k0"), first(TsSchema.seriesKey(col(S.LabelsCol))).as("_skey"))
+      // NaN sorts BELOW any number (ref: SortComparatorUtil.java:52-63 —
+      // "NaN < any number"); Spark natively orders NaN above every double,
+      // so map NaN keys to null and pin nulls to the small end
+      .withColumn("_key", when(isnan(col("_k0")), lit(null)).otherwise(col("_k0")))
+      .drop("_k0")
+
+  /** The series order over [[seriesKeys]]; `reverse` flips every key, so
+    * the first n of the reversed order are the last n of the order. */
+  private def seriesOrder(desc: Boolean, reverse: Boolean = false): Seq[Column] = {
+    val key = if (desc != reverse) col("_key").desc_nulls_last else col("_key").asc_nulls_first
+    Seq(key, if (reverse) col("_skey").desc else col("_skey").asc)
+  }
+
+  /** Attach `_rank` = the full series rank 1..N by the key, for `sort`.
     *
     * Scale design: the rank is [[graft.core.Dist.prefixScan]] (two-phase
     * distributed scan — running count of 1) over the tiny per-series key
@@ -57,27 +76,33 @@ object SeriesSet {
     * the rank table (AQE picks a broadcast join while it fits), so sorting
     * holds past the former ~1M-series coordinator ceiling; the reference's
     * analogous structure is shard-local partials + coordinator merge
-    * (SortStage/TopKStage). */
+    * (SortStage). */
   private def ranked(df0: DataFrame, by: String, desc: Boolean): DataFrame = {
     val df = df0.drop("_rank")
-    val keys =
-      if (by == "name") df.select(col(S.SeriesId), TsSchema.seriesKey(col(S.LabelsCol)).as("_skey"))
-        .distinct().withColumn("_key", col("_skey").cast(StringType))
-      else df.groupBy(S.SeriesId)
-        .agg(seriesKeyAgg(by).as("_k0"), first(TsSchema.seriesKey(col(S.LabelsCol))).as("_skey"))
-        // NaN sorts BELOW any number (ref: SortComparatorUtil.java:52-63 —
-        // "NaN < any number"); Spark natively orders NaN above every double,
-        // so map NaN keys to null and pin nulls to the small end
-        .withColumn("_key", when(isnan(col("_k0")), lit(null)).otherwise(col("_k0")))
-        .drop("_k0")
-    val ord =
-      if (desc) Seq(col("_key").desc_nulls_last, col("_skey").asc)
-      else Seq(col("_key").asc_nulls_first, col("_skey").asc)
-    val rk = graft.core.Dist.prefixScan(keys, ord, lit(1L), ord)
+    val ord = seriesOrder(desc)
+    val rk = graft.core.Dist.prefixScan(seriesKeys(df, by), ord, lit(1L), ord)
       // int like row_number() — the rank's public type across the engine
       .withColumn("_rank", col("_scan").cast(IntegerType))
       .select(S.SeriesId, "_rank")
     df.join(rk, Seq(S.SeriesId))
+  }
+
+  /** Keep the first `n` series by the key (the last `n` when `fromEnd`),
+    * with `_rank` 1..n in the order. Bounded: [[graft.core.Dist.topK]] over
+    * the per-series key frame (the reversed order for `fromEnd`), and the
+    * <= n-row rank frame is broadcast back onto the series — no full rank
+    * and no total count. */
+  private def firstN(df0: DataFrame, n: Int, by: String, desc: Boolean,
+                     fromEnd: Boolean): DataFrame = {
+    val df = df0.drop("_rank")
+    // a negative count keeps no series, like a rank filter `_rank <= n`
+    val top = graft.core.Dist.topK(seriesKeys(df, by), seriesOrder(desc, fromEnd),
+      math.max(n, 0), rankCol = "_rank")
+    // the tail's survivors renumbered in the forward order (<= n rows)
+    val rk = if (!fromEnd) top else top.withColumn("_rank", row_number().over(
+      Window.partitionBy(graft.core.Dist.singleWindowKey(col("_skey")))
+        .orderBy(seriesOrder(desc): _*)))
+    df.join(broadcast(rk.select(S.SeriesId, "_rank")), Seq(S.SeriesId))
   }
 
   /** `sort [by] [asc|desc]` — order the series list (ref: SortStage.java:27-41).
@@ -85,24 +110,25 @@ object SeriesSet {
   def sortSeries(df: DataFrame, by: String = "avg", desc: Boolean = true): DataFrame =
     ranked(df, by, desc).orderBy(col("_rank"), col(S.Ts))
 
-  /** `head n` / `tail n` — first/last n series by rank (ref: SliceStage.java:30-44).
-    * The tail cutoff is a 1-row broadcast join, not a driver action, so empty
-    * input yields an empty result (the reference returns empty, not an error). */
+  /** `head n` / `tail n` — first/last n series by rank (ref: SliceStage.java:30-44),
+    * with `_rank` renumbered 1..n, so a following slice takes the head of the
+    * CURRENT order. A preceding `sort` stage's ranking is honored; on that
+    * path the tail cutoff is a 1-row broadcast join, not a driver action, so
+    * empty input yields an empty result (the reference returns empty, not an
+    * error). */
   def slice(df: DataFrame, n: Int, by: String = "avg", desc: Boolean = true,
-            tail: Boolean = false): DataFrame = {
-    // a preceding `sort` stage's ranking is honored (ref SliceStage takes the
-    // head of the CURRENT series order); else rank by the default key
-    val r = if (df.columns.contains("_rank")) df else ranked(df, by, desc)
-    if (!tail) r.where(col("_rank") <= n)
+            tail: Boolean = false): DataFrame =
+    if (!df.columns.contains("_rank")) firstN(df, n, by, desc, fromEnd = tail)
+    else if (!tail) df.where(col("_rank") <= n)
     else {
-      val tot = r.agg(coalesce(max("_rank"), lit(0)).as("_total"))
-      r.crossJoin(broadcast(tot)).where(col("_rank") > col("_total") - n).drop("_total")
+      val cut = df.agg(greatest(coalesce(max("_rank"), lit(0)) - n, lit(0)).as("_cut"))
+      df.crossJoin(broadcast(cut)).where(col("_rank") > col("_cut"))
+        .withColumn("_rank", col("_rank") - col("_cut")).drop("_cut")
     }
-  }
 
   /** `topK k by order` (ref: TopKStage.java:33-47; defaults k=10, by=current). */
   def topK(df: DataFrame, k: Int = 10, by: String = "current", desc: Boolean = true): DataFrame =
-    ranked(df, by, desc).where(col("_rank") <= k)
+    firstN(df, k, by, desc, fromEnd = false)
 
   /** `union <ref…>` — concatenate series sets, duplicates retained
     * (ref: UnionStage.java:23-30). */
@@ -473,10 +499,7 @@ object SeriesSet {
     val ord =
       if (bottom) Seq(key.asc_nulls_last, TsSchema.seriesKey(col(S.LabelsCol)).asc)
       else Seq(key.desc_nulls_last, TsSchema.seriesKey(col(S.LabelsCol)).asc)
-    df.withColumn("_rn", row_number().over(
-        Window.partitionBy(grpCols: _*).orderBy(ord: _*)))
-      .where(col("_rn") <= k)
-      .drop("_rn")
+    graft.core.Dist.topK(df, ord, k, grpCols).drop("_rn")
   }
 
   /** Prometheus experimental `limitk(k, v)` — at most k series per
@@ -487,9 +510,7 @@ object SeriesSet {
     * on the group hash, no global ordering. */
   def limitKAtTimestamp(df: DataFrame, k: Int, by: Seq[String] = Nil): DataFrame = {
     val grpCols = by.map(kk => coalesce(col(S.LabelsCol).getItem(kk), lit(MissingV))) :+ col(S.Ts)
-    df.withColumn("_rn", row_number().over(
-        Window.partitionBy(grpCols: _*).orderBy(TsSchema.seriesKey(col(S.LabelsCol)).asc)))
-      .where(col("_rn") <= k)
+    graft.core.Dist.topK(df, Seq(TsSchema.seriesKey(col(S.LabelsCol)).asc), k, grpCols)
       .drop("_rn")
   }
 

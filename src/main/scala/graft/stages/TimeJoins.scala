@@ -241,10 +241,9 @@ object TimeJoins {
                typeCol: String = "event_type",
                tieCol: String = "event_id"): DataFrame = {
     require(pathLen >= 1 && topN >= 1, "pathLen and topN must be >= 1")
-    val w = Window.partitionBy(col(keyCol)).orderBy(col(tsCol), col(tieCol))
-    val paths = events.select(col(keyCol), col(tsCol), col(tieCol), col(typeCol))
-      .withColumn("_rn", row_number().over(w))
-      .where(col("_rn") <= pathLen)
+    val paths = graft.core.Dist.topK(
+        events.select(col(keyCol), col(tsCol), col(tieCol), col(typeCol)),
+        Seq(col(tsCol), col(tieCol)), pathLen, Seq(col(keyCol)))
       .groupBy(col(keyCol))
       .agg(array_join(
         transform(

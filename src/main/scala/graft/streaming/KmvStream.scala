@@ -57,10 +57,9 @@ object KmvStream {
   }
 
   /** Reduce accumulated snapshot rows to the sketch: distinct hashes,
-    * global bottom-k (`Dist.bottomK` — the snapshot table is small but
-    * the same two-phase shape holds at any size), ready for
+    * global bottom-k (`Dist.topK` — the snapshot table is small but the
+    * distributed TakeOrdered holds at any size), ready for
     * [[graft.pipelines.Sketches.kmvEstimate]]. */
   def finalizeSketch(snapshots: DataFrame, k: Int = 256): DataFrame =
-    graft.core.Dist.bottomK(snapshots.select("_h").distinct(),
-      Seq(col("_h").asc), k, col("_h"))
+    graft.core.Dist.topK(snapshots.select("_h").distinct(), Seq(col("_h").asc), k)
 }

@@ -15,4 +15,10 @@ object ColumnBridge {
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
+  /** The value under a sort order (`col("x").desc` gives `col("x")`); any
+    * other column unchanged. */
+  def unsorted(c: Column): Column = c.node match {
+    case s: org.apache.spark.sql.internal.SortOrder => new Column(s.child)
+    case _ => c
+  }
 }

@@ -63,6 +63,50 @@ class PlanSpec extends AnyFunSuite {
 
   private def count(p: String, re: String): Int = re.r.findAllIn(p).length
 
+  /** Exchange nodes (shuffles and broadcasts) of a query's own physical
+    * plan. A persisted input's cached plan is left out: its string form
+    * doubles once the cache is built (AQE prints the initial and the final
+    * plan), so a count over the plan string would depend on test order. */
+  private def ownExchanges(name: String): Seq[String] = {
+    val plan = graft.queries.Registry.queries(name)(spark, sf).queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    plan.collect { case e: org.apache.spark.sql.execution.exchange.Exchange => e.nodeName }
+  }
+
+  for (name <- Seq("m3_topk", "m3_head", "m3_tail")) check(name) { p =>
+    // bounded series rank: a TakeOrdered over the per-series key frame, its
+    // <= k rows broadcast back — no range-partitioned prefix scan (the one
+    // range partitioning is the verify harness's output orderBy) and, for
+    // tail, no total-count join
+    assert(p.contains("TakeOrderedAndProject"), s"$name must rank via TakeOrdered:\n$p")
+    assert(count(p, "rangepartitioning") == 1, s"$name must not range-partition to rank:\n$p")
+    val ex = ownExchanges(name)
+    assert(ex.size <= 5, s"$name exchange count regressed: $ex\n$p")
+  }
+
+  check("corpus_sample_weighted") { p =>
+    // the k smallest keys are one distributed TakeOrdered: no range
+    // partitioning, and no exchange at all (the dump's orderBy over the
+    // single-partition TakeOrdered output needs none)
+    assert(p.contains("TakeOrderedAndProject"), s"weighted sample must TakeOrdered:\n$p")
+    assert(count(p, "rangepartitioning") == 0, s"no range-partitioned rank:\n$p")
+    val ex = ownExchanges("corpus_sample_weighted")
+    assert(ex.isEmpty, s"weighted sample exchanges regressed: $ex\n$p")
+  }
+
+  check("sketch_kmv_overlap") { p =>
+    // both sketches are checkpointed TakeOrdereds; the combined bottom-k
+    // is a third TakeOrdered over <= 2k rows — no range-partitioned scan
+    assert(p.contains("TakeOrderedAndProject"), s"combined bottom-k must TakeOrdered:\n$p")
+    assert(count(p, "rangepartitioning") == 0, s"no range-partitioned rank:\n$p")
+    // the 6: the full join's two shuffles, each sketch's count to one
+    // partition, and the two 1-row count broadcasts
+    val ex = ownExchanges("sketch_kmv_overlap")
+    assert(ex.size <= 6, s"kmv overlap exchange count regressed: $ex\n$p")
+  }
+
   check("m3_is_non_null") { p =>
     // densify = ONE full-outer join of grid points against samples (labels
     // ride along both sides); the old union+distinct+2-join shape would show

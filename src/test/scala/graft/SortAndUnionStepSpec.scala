@@ -44,6 +44,26 @@ class SortAndUnionStepSpec extends SparkTestBase {
       Map("host:b,name:m" -> 1, "host:a,name:m" -> 2, "host:c,name:m" -> 3))
   }
 
+  /** host:h1..h8, value = i: the default (avg desc) order is h8 … h1. */
+  private def eight = samplesDF((1 to 8).flatMap(i =>
+    series(s"name:m,host:h$i", Seq.fill(10)(S(i.toDouble)))))
+
+  test("tail renumbers its ranks, so a following head takes the head of the tail") {
+    // ref SliceStage takes the head of the CURRENT order: tail 3 = h3, h2, h1
+    val out = M3QL.query(spark, eight, g, "fetch name:m | tail 3 | head 2")
+    assert(ranks(out) == Map("host:h3,name:m" -> 1, "host:h2,name:m" -> 2))
+    val sorted = M3QL.query(spark, eight, g, "fetch name:m | sort max | tail 3 | head 1")
+    assert(ranks(sorted) == Map("host:h3,name:m" -> 1))
+  }
+
+  test("tail over a sorted set keeps the order and ranks 1..n") {
+    val out = M3QL.query(spark, eight, g, "fetch name:m | sort max | tail 3")
+    assert(ranks(out) == Map("host:h3,name:m" -> 1, "host:h2,name:m" -> 2,
+      "host:h1,name:m" -> 3))
+    val all = M3QL.query(spark, eight, g, "fetch name:m | sortSeries max ascending | tail 20")
+    assert(ranks(all) == (1 to 8).map(i => s"host:h$i,name:m" -> i).toMap)
+  }
+
   test("mixed-step union divides PAIRWISE per branch") {
     val data = samplesDF(
       series("name:c,host:x", Seq.fill(10)(S(10))) ++
