@@ -366,9 +366,12 @@ object Bench {
         s""""isolated_ref_queries":${isolatedRef.size}}"""
     }
     // the environment block that makes heap-pressure discrepancies
-    // attributable from the artifact alone (r9's were not)
+    // attributable from the artifact alone (r9's were not). `cpus` is the
+    // JVM's core count; `default_parallelism` the session's task slots.
+    val cpus = s""""cpus":${Runtime.getRuntime.availableProcessors},""" +
+      s""""default_parallelism":${spark.sparkContext.defaultParallelism}"""
     val env =
-      s"""{"max_heap_bytes":${Runtime.getRuntime.maxMemory},"cpus":${spark.sparkContext.defaultParallelism},""" +
+      s"""{"max_heap_bytes":${Runtime.getRuntime.maxMemory},$cpus,""" +
       s""""storage_mem_peak":$storagePeakMem,"storage_disk_peak":$storagePeakDisk,""" +
       s""""memo_entries_peak":$memoPeak,"gc_ms_total":$gcTotal,""" +
       s""""blocks_dropped_min_runs":$droppedTotal,""" +
@@ -407,7 +410,7 @@ object Bench {
       s"""{"metric":"total","value":${f2(total)},"unit":"sec","value_single_pass":${f2(singlePass)},""" +
         s""""adjudication":$adjCompact,""" +
         s""""shuffle_bytes_total":$shuffleTotal,"spill_bytes_total":$spillTotal,""" +
-        s""""full_json":"$outPath","queries":$compactQs,""" +
+        s""""full_json":"$outPath",$cpus,"queries":$compactQs,""" +
         s""""queries_omitted":${results.size - keep.size},"sf":"$sfDir"}"""
     }
     // bounded candidate sizes: Iterator.iterate(40)(_ / 2) would reach 0 and

@@ -99,30 +99,33 @@ object Pq {
       rows.filter(_._1 == s).sortBy(_._2).map(_._3): Array[Array[Double]])
   }
 
-  /** PQ top-k for one probe: one-loop training (cached per corpus+params),
-    * encode + ADC scan in ONE pass over the corpus, exact re-rank of
-    * `k*rerank` candidates. Result contract matches the other ANN variants:
-    * (idCol, cosine, rnk). */
-  def pqTopK(emb: DataFrame, queryId: Long, k: Int, m: Int = 16, ks: Int = 16,
+  /** PQ top-k for each probe in `queryIds`: one-loop training (cached per
+    * corpus+params), then encode + ADC scan in ONE pass over the corpus for
+    * the whole probe set — the probe set broadcasts, the
+    * [[graft.functions.PqAdc]] kernel scores every (row, probe) pair — and
+    * the [[exactRerank]] tail over each probe's `k*rerank` candidates (top
+    * by (approx asc, id)). Result contract matches the other ANN variants:
+    * (probe_id, idCol, cosine, rnk). */
+  def pqTopK(emb: DataFrame, queryIds: Seq[Long], k: Int, m: Int = 16, ks: Int = 16,
              iters: Int = 2, rerank: Int = 16, dim: Int = 64,
              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val dsub = dim / m
     val unit = unitize(emb, idCol, vecCol)
     val books = trainCodebooks(emb, m, ks, iters, dim, idCol, vecCol)
-
+    val probes = Similarity.probeRows(unit, idCol, queryIds, col("nv").as("qn"))
     // ADC: per subspace, distance from the query's sub-vector to the row's
     // assigned centroid (codebook literal lookup), summed in subspace order.
     // Encoding and scan share one pass here; [[writePqIndex]] persists the
     // codes so the offline form scans only those.
-    val q = unit.where(col(idCol) === queryId).select(col("nv").as("qn"))
-    val codes = codesArr(books, col("nv"), dsub)
-    val candIds = unit.crossJoin(broadcast(q))
-      .where(col(idCol) =!= queryId)
-      .withColumn("approx", adcFromCodes(books, col("qn"), codes, dsub))
-      .orderBy(col("approx").asc, col(idCol))
-      .limit(k * rerank)
-      .select(idCol)
-    rerankTail(emb, candIds, queryId, k, idCol, vecCol)
+    val approx = unit
+      .withColumn("_codes", codesArr(books, col("nv"), dsub))
+      .crossJoin(broadcast(probes))
+      .where(col(idCol) =!= col("probe_id"))
+      .withColumn("approx", adcFromCodes(books, col("qn"), col("_codes"), dsub))
+    val candIds = graft.core.Dist.topK(approx, Seq(col("approx").asc, col(idCol)),
+        k * rerank, Similarity.probeGroups(queryIds), "arnk")
+      .select(col("probe_id"), col(idCol))
+    exactRerank(emb, candIds, queryIds, k, idCol, vecCol)
   }
 
   /** IVF-PQ: the production ANN composition — IVF cells prune the corpus
@@ -178,56 +181,23 @@ object Pq {
     val members =
       if (spill > 1) members0.dropDuplicates(Seq(idCol)) else members0
     val q = unitize(emb.where(col(idCol) === queryId), idCol, vecCol)
-      .select(col("nv").as("qn"))
+      .select(lit(queryId).as("probe_id"), col("nv").as("qn"))
     val unitM = unitize(members, idCol, vecCol)
     val codes = codesArr(books, col("nv"), dsub)
     val candIds = unitM.crossJoin(broadcast(q))
       .withColumn("approx", adcFromCodes(books, col("qn"), codes, dsub))
       .orderBy(col("approx").asc, col(idCol))
       .limit(k * rerank)
-      .select(idCol)
-    rerankTail(emb, candIds, queryId, k, idCol, vecCol)
-  }
-
-  /** Batched PQ: N probes share ONE encode+ADC pass over the corpus — the
-    * probe set broadcasts, the [[graft.functions.PqAdc]] kernel scores every
-    * (row, probe) pair, per-probe WindowGroupLimit keeps k·rerank
-    * candidates, and one id-join fetches the candidate floats for the exact
-    * re-rank. Per-probe results are identical to [[pqTopK]] (same candidate
-    * rule — top k·rerank by (approx asc, id) — and same re-rank ordering),
-    * so the oracle is the per-probe oracle unioned. */
-  def pqTopKBatch(emb: DataFrame, queryIds: Seq[Long], k: Int, m: Int = 16,
-                  ks: Int = 16, iters: Int = 2, rerank: Int = 16,
-                  dim: Int = 64, idCol: String = "vec_id",
-                  vecCol: String = "embedding"): DataFrame = {
-    val dsub = dim / m
-    val unit = unitize(emb, idCol, vecCol)
-    val books = trainCodebooks(emb, m, ks, iters, dim, idCol, vecCol)
-    val probes = unit.where(col(idCol).isin(queryIds.map(x => x: Any): _*))
-      .select(col(idCol).as("probe_id"), col("nv").as("qn"))
-    val approx = unit
-      .withColumn("_codes", codesArr(books, col("nv"), dsub))
-      .crossJoin(broadcast(probes))
-      .where(col(idCol) =!= col("probe_id"))
-      .withColumn("approx", adcFromCodes(books, col("qn"), col("_codes"), dsub))
-    val candIds = graft.core.Dist.topK(approx,
-        Seq(col("approx").asc, col(idCol)), k * rerank, Seq(col("probe_id")), "arnk")
       .select(col("probe_id"), col(idCol))
-    val probesRaw = emb.where(col(idCol).isin(queryIds.map(x => x: Any): _*))
-      .select(col(idCol).as("probe_id"), col(vecCol).as("q_emb"))
-    val scored = emb.join(candIds, idCol)
-      .join(broadcast(probesRaw), Seq("probe_id"))
-      .withColumn("cosine",
-        fastCosine(col(vecCol), col("q_emb")))
-    Similarity.cosineTopK(scored, k, idCol, batched = true)
+    exactRerank(emb, candIds, Seq(queryId), k, idCol, vecCol)
   }
 
-  /** Per-probe oracles unioned — [[pqTopKBatch]] equals [[pqTopK]] probe
-    * by probe (spec-pinned), so the batch oracle is the single-probe
-    * replay repeated. */
-  def pqTopKBatchSql(queryIds: Seq[Long], k: Int, m: Int = 16, ks: Int = 16,
-                     iters: Int = 2, rerank: Int = 16,
-                     dim: Int = 64): String =
+  /** Per-probe oracles unioned — a multi-probe [[pqTopK]] equals the same
+    * probes run one at a time (spec-pinned), so its oracle is the
+    * single-probe replay repeated. */
+  def pqTopKPerProbeSql(queryIds: Seq[Long], k: Int, m: Int = 16, ks: Int = 16,
+                        iters: Int = 2, rerank: Int = 16,
+                        dim: Int = 64): String =
     queryIds.map(q =>
       s"SELECT $q AS probe_id, vec_id, rnk FROM (\n${pqTopKSql(q, k, m, ks, iters, rerank, dim)})")
       .mkString("", "\nUNION ALL\n", "\nORDER BY probe_id, rnk")
@@ -287,15 +257,17 @@ object Pq {
       .select(col(idCol), codesArr(books, col("nv"), dsub).as("codes"))
   }
 
-  /** Exact-cosine re-rank of the candidate ids — the shared ANN tail. */
-  private def rerankTail(emb: DataFrame, candIds: DataFrame, queryId: Long,
-                         k: Int, idCol: String, vecCol: String): DataFrame = {
-    val qRaw = emb.where(col(idCol) === queryId).select(col(vecCol).as("q_emb"))
+  /** Exact-cosine re-rank of `(probe_id, idCol)` candidates — the one PQ
+    * tail: one id-join fetches the candidate floats, the raw probe vectors
+    * broadcast, and the final rank runs per [[Similarity.probeGroups]]. */
+  private def exactRerank(emb: DataFrame, candIds: DataFrame, queryIds: Seq[Long],
+                          k: Int, idCol: String, vecCol: String): DataFrame = {
+    val probesRaw = Similarity.probeRows(emb, idCol, queryIds, col(vecCol).as("q_emb"))
     val scored = emb.join(candIds, idCol)
-      .crossJoin(broadcast(qRaw))
+      .join(broadcast(probesRaw), Seq("probe_id"))
       .withColumn("cosine",
         fastCosine(col(vecCol), col("q_emb")))
-    Similarity.cosineTopK(scored, k, idCol)
+    Similarity.cosineTopK(scored, k, idCol, queryIds)
   }
 
   /** Materialize the offline serving index: `<table>` = (idCol, codes) —
@@ -357,7 +329,7 @@ object Pq {
       (0 until m).map(s => bookRows.filter(_._1 == s).sortBy(_._2).map(_._3))
     val q = emb.where(col(idCol) === queryId)
       .withColumn("_n", Vectors.norm(col(vecCol)))
-      .select(transform(col(vecCol),
+      .select(lit(queryId).as("probe_id"), transform(col(vecCol),
         x => when(col("_n") === 0d, 0d)
           .otherwise(x.cast(DoubleType) / col("_n"))).as("qn"))
     val candIds = spark.table(table)
@@ -366,8 +338,8 @@ object Pq {
       .withColumn("approx", adcFromCodes(books, col("qn"), col("codes"), dsub))
       .orderBy(col("approx").asc, col(idCol))
       .limit(k * rerank)
-      .select(idCol)
-    rerankTail(emb, candIds, queryId, k, idCol, vecCol)
+      .select(col("probe_id"), col(idCol))
+    exactRerank(emb, candIds, Seq(queryId), k, idCol, vecCol)
   }
 
   /** DuckDB replay of [[pqTopK]]: normalization, the m hash-seeded Lloyd

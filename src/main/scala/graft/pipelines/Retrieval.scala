@@ -338,7 +338,7 @@ object Retrieval {
                     embIdCol: String = "vec_id"): DataFrame = {
     val lex = bm25TopK(docs, queryId, pool, idCol = idCol)
       .select(col(idCol).as("id"), col("rnk").as("lrnk"))
-    val sem = Similarity.bruteForceTopK(emb, queryId, pool, idCol = embIdCol)
+    val sem = Similarity.bruteForceTopK(emb, Seq(queryId), pool, idCol = embIdCol)
       .select(col(embIdCol).as("id"), col("rnk").as("srnk"))
     val fused = lex.join(sem, Seq("id"), "full_outer")
       .withColumn("rrf",

@@ -126,27 +126,48 @@ object Similarity {
   }
 
   /** The result contract shared by every ANN variant: the k best rows by
-    * (cosine desc, id), ranked 1..k in `rnk` — per probe when `batched`
-    * (`probe_id` leads the output) — through [[graft.core.Dist.topK]]: a
-    * distributed TakeOrdered for one probe, a per-probe WindowGroupLimit
-    * for a batch. */
+    * (cosine desc, id), ranked 1..k in `rnk` through
+    * [[graft.core.Dist.topK]]. A probe-keyed search passes its `queryIds`:
+    * `probe_id` then leads the output, and the rank runs per
+    * [[probeGroups]]. */
   private[pipelines] def cosineTopK(scored: DataFrame, k: Int, idCol: String,
-                                    batched: Boolean = false): DataFrame = {
-    val probe = if (batched) Seq(col("probe_id")) else Nil
-    graft.core.Dist.topK(scored, Seq(col("cosine").desc, col(idCol)), k, probe, "rnk")
+                                    queryIds: Seq[Long] = Nil): DataFrame = {
+    val probe = if (queryIds.isEmpty) Nil else Seq(col("probe_id"))
+    graft.core.Dist.topK(scored, Seq(col("cosine").desc, col(idCol)), k,
+        probeGroups(queryIds), "rnk")
       .select(probe ++ Seq(col(idCol), col("cosine"), col("rnk")): _*)
   }
 
-  /** Exact top-k by cosine to the query vector (query side broadcast; the
-    * ranking is a distributed TakeOrdered — no global sort materialized). */
-  def bruteForceTopK(emb: DataFrame, queryId: Long, k: Int,
+  /** The rank groups a probe set needs, read off the input: none for one
+    * distinct probe (a distributed TakeOrdered), `probe_id` for a batch (a
+    * per-probe WindowGroupLimit — the rank filter pushed into the shuffle,
+    * so the ranking stays distributed at any batch size). */
+  private[pipelines] def probeGroups(queryIds: Seq[Long]): Seq[Column] =
+    if (queryIds.distinct.size > 1) Seq(col("probe_id")) else Nil
+
+  /** The probe rows of `df`, keyed `probe_id`, with `cols`. For one distinct
+    * probe the key is a literal: Catalyst then folds the self-exclusion into
+    * a scan filter and each probe-keyed join into a cross join against the
+    * one broadcast probe row — the plan of a single-probe search. */
+  private[pipelines] def probeRows(df: DataFrame, idCol: String, queryIds: Seq[Long],
+                                   cols: Column*): DataFrame = {
+    require(queryIds.nonEmpty, "an ANN search needs at least one probe id")
+    val key = if (probeGroups(queryIds).isEmpty) lit(queryIds.head) else col(idCol)
+    df.where(col(idCol).isin(queryIds.map(x => x: Any): _*))
+      .select(key.as("probe_id") +: cols: _*)
+  }
+
+  /** Exact top-k by cosine for each probe in `queryIds` against ONE corpus
+    * scan — the production shape (probes arrive in batches, and the corpus
+    * scan is the dominant cost, so it must amortize across them). The probe
+    * set rides as a broadcast; no global sort is materialized. */
+  def bruteForceTopK(emb: DataFrame, queryIds: Seq[Long], k: Int,
                      idCol: String = "vec_id"): DataFrame = {
-    val q = emb.where(col(idCol) === queryId)
-      .select(col("embedding").as("q_emb"))
-    val scored = emb.where(col(idCol) =!= queryId)
-      .crossJoin(broadcast(q))
+    val probes = probeRows(emb, idCol, queryIds, col("embedding").as("q_emb"))
+    val scored = emb.crossJoin(broadcast(probes))
+      .where(col(idCol) =!= col("probe_id"))
       .withColumn("cosine", fastCosine(col("embedding"), col("q_emb")))
-    cosineTopK(scored, k, idCol)
+    cosineTopK(scored, k, idCol, queryIds)
   }
 
   /** Banded-signature LSH index for one corpus — (id, embedding, bkeys),
@@ -172,32 +193,36 @@ object Similarity {
     * then get an exact cosine re-rank.
     *
     * Scale path: the bucket probe is an ids-only equi-join on (band, key)
-    * against a broadcast ~bands·C(planes,≤h) probe-key set — embeddings are
-    * joined back by id only for the candidate fraction. Defaults measured on
-    * the UNIFORM sf0.1 corpus (the structure-free worst case — see
-    * tools/AnnSweep, curve in OPERATORS.md): recall@10 = 0.92 at 0.42
-    * candidate fraction; real clustered corpora recall the same neighbors
-    * at a far smaller fraction. */
-  def lshTopK(emb: DataFrame, queryId: Long, k: Int, bands: Int = 16,
+    * against a broadcast ~bands·C(planes,≤h) probe-key set keyed by
+    * probe_id — embeddings are joined back by id only for the candidate
+    * fraction, and N probes resolve in ONE pass over the banded signature
+    * index. Defaults measured on the UNIFORM sf0.1 corpus (the
+    * structure-free worst case — see tools/AnnSweep, curve in
+    * OPERATORS.md): recall@10 = 0.92 at 0.42 candidate fraction; real
+    * clustered corpora recall the same neighbors at a far smaller
+    * fraction. */
+  def lshTopK(emb: DataFrame, queryIds: Seq[Long], k: Int, bands: Int = 16,
               planesPerBand: Int = 8, probeHamming: Int = 1,
               idCol: String = "vec_id"): DataFrame = {
     val idx = lshIndex(emb, idCol, bands, planesPerBand)
     val masks = (0 until (1 << planesPerBand))
       .filter(m => Integer.bitCount(m) <= probeHamming)
-    val q = idx.where(col(idCol) === queryId)
-      .select(col("embedding").as("q_emb"), col("bkeys").as("q_bkeys"))
-    val qKeys = q
-      .select(posexplode(col("q_bkeys")).as(Seq("band", "_qk")))
+    val probes = probeRows(idx, idCol, queryIds,
+      col("embedding").as("q_emb"), col("bkeys").as("q_bkeys"))
+    val qKeys = probes
+      .select(col("probe_id"), posexplode(col("q_bkeys")).as(Seq("band", "_qk")))
       .withColumn("_m", explode(typedlit(masks)))
-      .select(col("band"), col("_qk").bitwiseXOR(col("_m")).as("bkey"))
-    val candIds = idx.where(col(idCol) =!= queryId)
+      .select(col("probe_id"), col("band"),
+        col("_qk").bitwiseXOR(col("_m")).as("bkey"))
+    val candIds = idx
       .select(col(idCol), posexplode(col("bkeys")).as(Seq("band", "bkey")))
       .join(broadcast(qKeys), Seq("band", "bkey"))
-      .select(idCol).distinct()
+      .where(col(idCol) =!= col("probe_id"))
+      .select(col("probe_id"), col(idCol)).distinct()
     val scored = idx.join(candIds, idCol)
-      .crossJoin(broadcast(q.select("q_emb")))
+      .join(broadcast(probes.select("probe_id", "q_emb")), Seq("probe_id"))
       .withColumn("cosine", fastCosine(col("embedding"), col("q_emb")))
-    cosineTopK(scored, k, idCol)
+    cosineTopK(scored, k, idCol, queryIds)
   }
 
   /** Top-k by cosine in the Johnson–Lindenstrauss PROJECTED space
@@ -224,36 +249,6 @@ object Similarity {
         when(col("_na") === 0.0 || col("_nb") === 0.0, lit(0.0))
           .otherwise(dot(col("yv"), col("qv")) / (col("_na") * col("_nb"))))
     cosineTopK(scored, k, idCol)
-  }
-
-  /** Batched multiprobe LSH: N probes resolve in ONE pass over the banded
-    * signature index — the probe-key set (now keyed by probe_id) still rides
-    * as a broadcast, the bucket probe is still an ids-only equi-join, and
-    * the per-probe rank is a WindowGroupLimit. Per-probe results are
-    * identical to [[lshTopK]] (same candidate rule, same ordering keys). */
-  def lshTopKBatch(emb: DataFrame, queryIds: Seq[Long], k: Int, bands: Int = 16,
-                   planesPerBand: Int = 8, probeHamming: Int = 1,
-                   idCol: String = "vec_id"): DataFrame = {
-    val idx = lshIndex(emb, idCol, bands, planesPerBand)
-    val masks = (0 until (1 << planesPerBand))
-      .filter(m => Integer.bitCount(m) <= probeHamming)
-    val probes = idx.where(col(idCol).isin(queryIds.map(x => x: Any): _*))
-      .select(col(idCol).as("probe_id"), col("embedding").as("q_emb"),
-        col("bkeys").as("q_bkeys"))
-    val qKeys = probes
-      .select(col("probe_id"), posexplode(col("q_bkeys")).as(Seq("band", "_qk")))
-      .withColumn("_m", explode(typedlit(masks)))
-      .select(col("probe_id"), col("band"),
-        col("_qk").bitwiseXOR(col("_m")).as("bkey"))
-    val candIds = idx
-      .select(col(idCol), posexplode(col("bkeys")).as(Seq("band", "bkey")))
-      .join(broadcast(qKeys), Seq("band", "bkey"))
-      .where(col(idCol) =!= col("probe_id"))
-      .select(col("probe_id"), col(idCol)).distinct()
-    val scored = idx.join(candIds, idCol)
-      .join(broadcast(probes.select("probe_id", "q_emb")), Seq("probe_id"))
-      .withColumn("cosine", fastCosine(col("embedding"), col("q_emb")))
-    cosineTopK(scored, k, idCol, batched = true)
   }
 
   /** IVF index for one corpus: centroids + the per-vector cell assignment,
@@ -343,22 +338,6 @@ object Similarity {
     (idx.cents, idx.assigned, idx.nCentroids)
   }
 
-  /** Batched exact top-k: N probe vectors against ONE corpus scan — the
-    * production shape (probes arrive in batches, and the corpus scan is the
-    * dominant cost, so it must amortize across them). The probe set rides as
-    * a broadcast; ranking is per-probe (`Window.partitionBy(probe_id)` —
-    * WindowGroupLimit pushes the rank filter into the shuffle, and the
-    * per-probe groups keep the ranking distributed at any batch size). */
-  def bruteForceTopKBatch(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                          idCol: String = "vec_id"): DataFrame = {
-    val probes = emb.where(col(idCol).isin(queryIds.map(x => x: Any): _*))
-      .select(col(idCol).as("probe_id"), col("embedding").as("q_emb"))
-    val scored = emb.crossJoin(broadcast(probes))
-      .where(col(idCol) =!= col("probe_id"))
-      .withColumn("cosine", fastCosine(col("embedding"), col("q_emb")))
-    cosineTopK(scored, k, idCol, batched = true)
-  }
-
   /** SQ8 scalar-quantization index: per-dimension [min, max] over the corpus
     * (one posexplode aggregate), then every vector stored as ARRAY<INT> byte
     * codes — 4× smaller than FLOAT, which at 100TB is the difference between
@@ -402,78 +381,64 @@ object Similarity {
 
   /** Approximate top-k over the SQ8 codes with asymmetric scoring (ADC: the
     * float query against decoded corpus codes), keeping `k × rerank`
-    * candidates, then an exact float re-rank of just those ids. SQ8
+    * candidates per probe, then an exact float re-rank of just those ids.
+    * N probes share ONE pass over the code table: the probe set
+    * broadcasts, and one id-join fetches the candidate floats. SQ8
     * distortion is per-dimension ≤ step/2, so the approximate ranking is
     * nearly exact and the rerank buffer absorbs the residual swaps —
     * measured recall@10 in IvfRecallSpec alongside the LSH/IVF variants. */
-  def sq8TopK(emb: DataFrame, queryId: Long, k: Int, rerank: Int = 4,
+  def sq8TopK(emb: DataFrame, queryIds: Seq[Long], k: Int, rerank: Int = 4,
               idCol: String = "vec_id"): DataFrame = {
     val idx = sq8Index(emb, idCol)
-    val q = emb.where(col(idCol) === queryId).select(col("embedding").as("q_emb"))
+    val probes = probeRows(emb, idCol, queryIds, col("embedding").as("q_emb"))
     // the approximate pass scans every code row — it rides the codegen'd
     // sq8_cosine (decode + dot + norms in one primitive loop), the same
     // fast path every other ANN variant's scan uses
-    val candIds = idx.codes.where(col(idCol) =!= queryId)
-      .crossJoin(broadcast(q)).crossJoin(broadcast(idx.stats))
-      .withColumn("approx",
-        sq8Cosine(col("codes"), col("q_emb"), col("dim_stats")))
-      .orderBy(col("approx").desc, col(idCol)).limit(k * rerank)
-      .select(idCol)
-    val scored = emb.join(candIds, idCol)
-      .crossJoin(broadcast(q))
-      .withColumn("cosine", fastCosine(col("embedding"), col("q_emb")))
-    cosineTopK(scored, k, idCol)
-  }
-
-  /** Batched SQ8: N probes share ONE pass over the code table — the probe
-    * set broadcasts, the codegen'd sq8_cosine scores every (code row, probe)
-    * pair, per-probe WindowGroupLimit keeps k·rerank candidates, and one
-    * id-join fetches the candidate floats for the exact re-rank. Per-probe
-    * results are identical to [[sq8TopK]] (same candidate rule — top
-    * k·rerank by (approx desc, id) — and same re-rank ordering). */
-  def sq8TopKBatch(emb: DataFrame, queryIds: Seq[Long], k: Int, rerank: Int = 4,
-                   idCol: String = "vec_id"): DataFrame = {
-    val idx = sq8Index(emb, idCol)
-    val probes = emb.where(col(idCol).isin(queryIds.map(x => x: Any): _*))
-      .select(col(idCol).as("probe_id"), col("embedding").as("q_emb"))
     val approx = idx.codes
       .crossJoin(broadcast(probes)).crossJoin(broadcast(idx.stats))
       .where(col(idCol) =!= col("probe_id"))
       .withColumn("approx",
         sq8Cosine(col("codes"), col("q_emb"), col("dim_stats")))
     val candIds = graft.core.Dist.topK(approx,
-        Seq(col("approx").desc, col(idCol)), k * rerank, Seq(col("probe_id")), "arnk")
+        Seq(col("approx").desc, col(idCol)), k * rerank, probeGroups(queryIds), "arnk")
       .select(col("probe_id"), col(idCol))
     val scored = emb.join(candIds, idCol)
       .join(broadcast(probes), Seq("probe_id"))
       .withColumn("cosine", fastCosine(col("embedding"), col("q_emb")))
-    cosineTopK(scored, k, idCol, batched = true)
+    cosineTopK(scored, k, idCol, queryIds)
   }
 
   /** IVF-style variant: kmeans — partition vectors by nearest of the index's
     * centroids (hash-sample seed + Lloyd refinement, ~√N cells), probe the
     * query's nearest `nProbe` cells only. The 100TB path: cells are the
     * partition pruning unit, and the assignment is a persisted index shared
-    * across queries. Recall@10 vs [[bruteForceTopK]] is data-dependent: on a
-    * clustered corpus a handful of probes recall the in-cell neighbors; the
+    * across queries. All probes' cell selections resolve in one broadcast
+    * round, then ONE pass over the assignment table serves the whole set —
+    * a row is scored once per probe whose cells contain it (the per-probe
+    * candidate fractions are unchanged; only the scan amortizes).
+    *
+    * Recall@10 vs [[bruteForceTopK]] is data-dependent: on a clustered
+    * corpus a handful of probes recall the in-cell neighbors; the
     * synthetic corpus is UNIFORM random (no structure — the ANN worst case),
     * where recall tracks the probed fraction plus the directional
     * correlation of near neighbors. Defaults picked from the measured
     * sweep (tools/AnnSweep, curve in OPERATORS.md): recall@10 ≥ 0.8 at
     * sf0.1. Tune nProbe down for speed, up for recall. */
-  def ivfTopK(emb: DataFrame, queryId: Long, k: Int, nCentroids: Int = 0,
+  def ivfTopK(emb: DataFrame, queryIds: Seq[Long], k: Int, nCentroids: Int = 0,
               nProbe: Int = 32, idCol: String = "vec_id",
               lloydIters: Int = 2): DataFrame = {
     val idx = ivfIndex(emb, idCol, nCentroids, lloydIters)
-    val qCells = idx.assigned.where(col(idCol) === queryId).select(col("embedding").as("q_emb"))
-      .crossJoin(broadcast(idx.cents))
+    val probes = probeRows(idx.assigned, idCol, queryIds, col("embedding").as("q_emb"))
+    val sims = probes.crossJoin(broadcast(idx.cents))
       .withColumn("sim", fastCosine(col("q_emb"), col("cent_emb")))
-      .orderBy(col("sim").desc, col("cent_id")).limit(nProbe)
-      .select(col("cent_id"), col("q_emb"))
-    val scored = idx.assigned.where(col(idCol) =!= queryId)
+    val qCells = graft.core.Dist.topK(sims, Seq(col("sim").desc, col("cent_id")),
+        nProbe, probeGroups(queryIds), "rn")
+      .select(col("probe_id"), col("cent_id"), col("q_emb"))
+    val scored = idx.assigned
       .join(broadcast(qCells), Seq("cent_id"))
+      .where(col(idCol) =!= col("probe_id"))
       .withColumn("cosine", fastCosine(col("embedding"), col("q_emb")))
-    cosineTopK(scored, k, idCol)
+    cosineTopK(scored, k, idCol, queryIds)
   }
 
   /** Persist the IVF index as TABLES — the offline form of the in-session
@@ -538,30 +503,6 @@ object Similarity {
       .crossJoin(broadcast(q))
       .withColumn("cosine", fastCosine(col("embedding"), col("q_emb")))
     cosineTopK(scored, k, idCol)
-  }
-
-  /** Batched IVF probes: all probes' nProbe-cell selections resolve in one
-    * broadcast round against the shared index, then ONE pass over the
-    * assignment table serves the whole batch — a row is scored once per
-    * probe whose probe-set contains its cell (the per-probe candidate
-    * fractions are unchanged; only the scan amortizes). Per-probe
-    * distributed rank, same as [[bruteForceTopKBatch]]. */
-  def ivfTopKBatch(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                   nCentroids: Int = 0, nProbe: Int = 32,
-                   idCol: String = "vec_id", lloydIters: Int = 2): DataFrame = {
-    val idx = ivfIndex(emb, idCol, nCentroids, lloydIters)
-    val probes = idx.assigned.where(col(idCol).isin(queryIds.map(x => x: Any): _*))
-      .select(col(idCol).as("probe_id"), col("embedding").as("q_emb"))
-    val sims = probes.crossJoin(broadcast(idx.cents))
-      .withColumn("sim", fastCosine(col("q_emb"), col("cent_emb")))
-    val qCells = graft.core.Dist.topK(sims, Seq(col("sim").desc, col("cent_id")),
-        nProbe, Seq(col("probe_id")), "rn")
-      .select(col("probe_id"), col("cent_id"), col("q_emb"))
-    val scored = idx.assigned
-      .join(broadcast(qCells), Seq("cent_id"))
-      .where(col(idCol) =!= col("probe_id"))
-      .withColumn("cosine", fastCosine(col("embedding"), col("q_emb")))
-    cosineTopK(scored, k, idCol, batched = true)
   }
 
   /** Seeded PORTABLE K-MEANS over the embedding column — the topic/domain
@@ -731,7 +672,7 @@ object Similarity {
     * right for a broadcastable corpus or a re-rank tier; for a 100 TB
     * corpus put the IVF cell assignment in front (fold over broadcast
     * centroids, equi-join on cell) so the join is cell-pruned, exactly as
-    * [[ivfTopKBatch]] does in batch. Scoring is the same codegen'd
+    * [[ivfTopK]] does in batch. Scoring is the same codegen'd
     * [[graft.functions.VectorExprs.fastCosine]] as every batch path. */
   def streamingAnnProbe(emb: DataFrame, probes: DataFrame, k: Int,
                         idCol: String = "vec_id",

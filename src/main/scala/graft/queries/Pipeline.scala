@@ -327,7 +327,8 @@ object Pipeline extends QueryPack {
   private def qAnnHashed(s: SparkSession, sf: String): DataFrame =
     Similarity.bruteForceTopK(
         Similarity.hashedEmbedding(Tables.documents(s, sf), dim = 64),
-        queryId = 0L, k = 10, idCol = "doc_id")
+        queryIds = Seq(0L), k = 10, idCol = "doc_id")
+      .drop("probe_id")
       .orderBy("rnk")
   private val qAnnHashedSql = {
     val (a, b) = Dedup.portableHashParams(1).head
@@ -383,7 +384,8 @@ object Pipeline extends QueryPack {
         col("chunk_text"))
     val emb = Similarity.hashedEmbedding(chunks, dim = 64,
       idCol = "chunk_key", textCol = "chunk_text")
-    Similarity.bruteForceTopK(emb, queryId = 0L, k = 10, idCol = "chunk_key")
+    Similarity.bruteForceTopK(emb, queryIds = Seq(0L), k = 10, idCol = "chunk_key")
+      .drop("probe_id")
       .orderBy("rnk")
   }
   private val qRagChunkSearchSql = {
@@ -681,7 +683,7 @@ object Pipeline extends QueryPack {
 
   // ---- similarity search ---------------------------------------------------
   private def qAnnBrute(s: SparkSession, sf: String): DataFrame =
-    Similarity.bruteForceTopK(Tables.embeddings(s, sf), queryId = 0L, k = 10)
+    Similarity.bruteForceTopK(Tables.embeddings(s, sf), queryIds = Seq(0L), k = 10)
       .select("vec_id", "rnk")
       .orderBy("rnk")
   private val qAnnBruteSql =
@@ -759,7 +761,7 @@ object Pipeline extends QueryPack {
   }
 
   private def qAnnLsh(s: SparkSession, sf: String): DataFrame =
-    Similarity.lshTopK(Tables.embeddings(s, sf), queryId = 0L, k = 10)
+    Similarity.lshTopK(Tables.embeddings(s, sf), queryIds = Seq(0L), k = 10)
       .select("vec_id", "rnk")
       .orderBy("rnk")
 
@@ -841,12 +843,12 @@ object Pipeline extends QueryPack {
     * (nProbe < nCells) is gated by IvfRecallSpec's recall assertions and
     * the partition-pruned plan pin. */
   private def qAnnIvf(s: SparkSession, sf: String): DataFrame =
-    Similarity.ivfTopK(Tables.embeddings(s, sf), queryId = 0L, k = 10)
+    Similarity.ivfTopK(Tables.embeddings(s, sf), queryIds = Seq(0L), k = 10)
       .select("vec_id", "rnk")
       .orderBy("rnk")
 
   private def qAnnSq8(s: SparkSession, sf: String): DataFrame =
-    Similarity.sq8TopK(Tables.embeddings(s, sf), queryId = 0L, k = 10)
+    Similarity.sq8TopK(Tables.embeddings(s, sf), queryIds = Seq(0L), k = 10)
       .select("vec_id", "rnk")
       .orderBy("rnk")
 
@@ -855,7 +857,7 @@ object Pipeline extends QueryPack {
     * WHOLE chain including the 8 trainings (the kmeans-replay discipline),
     * so this is oracle-exact. */
   private def qAnnPq(s: SparkSession, sf: String): DataFrame =
-    graft.pipelines.Pq.pqTopK(Tables.embeddings(s, sf), queryId = 0L, k = 10)
+    graft.pipelines.Pq.pqTopK(Tables.embeddings(s, sf), queryIds = Seq(0L), k = 10)
       .select("vec_id", "rnk")
       .orderBy("rnk")
   private val qAnnPqSql: String = graft.pipelines.Pq.pqTopKSql(0L, 10)
@@ -876,7 +878,7 @@ object Pipeline extends QueryPack {
   }
 
   private def qAnnBatch(s: SparkSession, sf: String): DataFrame =
-    Similarity.bruteForceTopKBatch(Tables.embeddings(s, sf),
+    Similarity.bruteForceTopK(Tables.embeddings(s, sf),
         queryIds = Seq(0L, 7L, 42L), k = 5)
       .select("probe_id", "vec_id", "rnk")
       .orderBy("probe_id", "rnk")
@@ -896,7 +898,7 @@ object Pipeline extends QueryPack {
     * against the same per-probe top-k SQL as [[qAnnBatch]] (the role
     * dedup_embedding_exact plays for the banded near-dup path). */
   private def qAnnSq8Batch(s: SparkSession, sf: String): DataFrame =
-    Similarity.sq8TopKBatch(Tables.embeddings(s, sf),
+    Similarity.sq8TopK(Tables.embeddings(s, sf),
         queryIds = Seq(0L, 7L, 42L), k = 5, rerank = 1000)
       .select("probe_id", "vec_id", "rnk")
       .orderBy("probe_id", "rnk")
@@ -2554,12 +2556,12 @@ object Pipeline extends QueryPack {
     * Identical per probe to ann_pq, so the oracle is the single-probe
     * replay unioned. */
   private def qAnnPqBatch(s: SparkSession, sf: String): DataFrame =
-    graft.pipelines.Pq.pqTopKBatch(Tables.embeddings(s, sf),
+    graft.pipelines.Pq.pqTopK(Tables.embeddings(s, sf),
         queryIds = Seq(0L, 7L, 42L), k = 5)
       .select("probe_id", "vec_id", "rnk")
       .orderBy("probe_id", "rnk")
   private val qAnnPqBatchSql: String =
-    graft.pipelines.Pq.pqTopKBatchSql(Seq(0L, 7L, 42L), 5)
+    graft.pipelines.Pq.pqTopKPerProbeSql(Seq(0L, 7L, 42L), 5)
 
   /** CMS term-frequency estimates for the 10 heaviest terms, next to their
     * exact counts: a 4×256 integer counter table (mergeable by addition,

@@ -45,7 +45,7 @@ object AnnSweep {
     val n = emb.count()
     val queries = Seq(0L, 7L, 42L, 100L, 499L)
     val exact = queries.map { q =>
-      q -> Similarity.bruteForceTopK(emb, q, 10)
+      q -> Similarity.bruteForceTopK(emb, Seq(q), 10)
         .select("vec_id").collect().map(_.getLong(0)).toSet
     }.toMap
 
@@ -60,14 +60,14 @@ object AnnSweep {
     println(s"corpus $sfDir n=$n queries=${queries.mkString(",")}")
     for (np <- Seq(4, 8, 16, 24, 32, 48, 64)) {
       val t0 = System.nanoTime()
-      val r = recall(q => Similarity.ivfTopK(emb, q, 10, nProbe = np))
+      val r = recall(q => Similarity.ivfTopK(emb, Seq(q), 10, nProbe = np))
       val dt = (System.nanoTime() - t0) / 1e9
       val nc = math.max(16, math.sqrt(n.toDouble).round.toInt)
       println(f"ivf  nProbe=$np%-3d nCells=$nc recall@10=$r%.2f  fraction~${np.toDouble / nc}%.2f  (${dt}%.1fs all-queries)")
     }
     for ((m, rr) <- Seq((8, 4), (8, 16), (16, 8), (16, 16), (16, 32))) {
       val t0 = System.nanoTime()
-      val r = recall(q => graft.pipelines.Pq.pqTopK(emb, q, 10, m = m, rerank = rr))
+      val r = recall(q => graft.pipelines.Pq.pqTopK(emb, Seq(q), 10, m = m, rerank = rr))
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"pq   m=$m%-3d rerank=$rr%-3d bits=${m * 4} recall@10=$r%.2f  fraction=${10.0 * rr / n}%.3f  (${dt}%.1fs all-queries)")
     }
@@ -84,13 +84,13 @@ object AnnSweep {
     }
     for ((b, ppb, h) <- Seq((8, 10, 2), (8, 10, 1), (12, 10, 1), (8, 12, 2), (16, 8, 1))) {
       val t0 = System.nanoTime()
-      val r = recall(q => Similarity.lshTopK(emb, q, 10,
+      val r = recall(q => Similarity.lshTopK(emb, Seq(q), 10,
         bands = b, planesPerBand = ppb, probeHamming = h))
       val dt = (System.nanoTime() - t0) / 1e9
       // candidate fraction for one probe = distinct bucket-mates / corpus
       val frac = {
         val q = queries.head
-        val idx = Similarity.lshTopK(emb, q, n.toInt,
+        val idx = Similarity.lshTopK(emb, Seq(q), n.toInt,
           bands = b, planesPerBand = ppb, probeHamming = h).count()
         idx.toDouble / n
       }

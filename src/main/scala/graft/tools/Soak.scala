@@ -98,10 +98,10 @@ object Soak {
         docs.where(col("doc_id") >= nDocs / 2), 3)
     }
     op(s"PQ batched ANN (${probeIds.size} probes, k=10)") {
-      graft.pipelines.Pq.pqTopKBatch(emb, probeIds, 10)
+      graft.pipelines.Pq.pqTopK(emb, probeIds, 10)
     }
     op(s"IVF batched ANN (${probeIds.size} probes, k=10)") {
-      graft.pipelines.Similarity.ivfTopKBatch(emb, probeIds, 10)
+      graft.pipelines.Similarity.ivfTopK(emb, probeIds, 10)
     }
     op("BM25 top-10 (ad-hoc, doc 42 as query)") {
       graft.pipelines.Retrieval.bm25TopK(docs, 42L, 10)

@@ -4,13 +4,17 @@ import graft.{Bench, SparkEntry}
 import graft.core.{Memo, Session}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
+import org.apache.spark.sql.execution.{ExplainUtils, LeafExecNode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
 /** The one developer entry point over the query registry
   * (`runMain graft.tools.Tool <sub> …`; `sf` as in [[graft.Bench.sfDir]]):
   *  - `show|count|explain|save:<dir> <name> [sf]`: rows, row count,
-  *    formatted plan, or the result as one parquet file for DuckDB;
+  *    formatted plan ([[planDump]]), or the result as one parquet file for
+  *    DuckDB;
   *  - `time[:N] <name> [sf]`: N timed passes (default 3), then `secs_min=`;
   *  - `explain <outDir> <suffix> <name…>`: one `<name>_<suffix>.txt` plan
   *    file per query from one JVM; a build that throws (builds can run
@@ -57,7 +61,7 @@ object Tool {
     case "show" => (spark, sf, _, fn) =>
       val df = fn(spark, sf); df.show(30, truncate = false); println(s"rows=${df.count()}")
     case "count" => (spark, sf, _, fn) => println(s"rows=${fn(spark, sf).count()}")
-    case "explain" => (spark, sf, _, fn) => fn(spark, sf).explain("formatted")
+    case "explain" => (spark, sf, _, fn) => println(planDump(fn(spark, sf)))
     case s if s.startsWith("save:") => (spark, sf, _, fn) =>
       val dir = s.stripPrefix("save:")
       fn(spark, sf).coalesce(1).write.mode("overwrite").parquet(dir)
@@ -80,11 +84,38 @@ object Tool {
     Files.createDirectories(Paths.get(outDir))
     for ((name, fn) <- fns) {
       val text =
-        try fn(spark, sf).queryExecution.explainString(FormattedMode)
+        try planDump(fn(spark, sf))
         catch { case e: Throwable => s"EXPLAIN FAILED: ${e.getClass.getName}: ${e.getMessage}" }
       Files.write(Paths.get(outDir, s"${name}_$suffix.txt"), text.getBytes(UTF_8))
       Console.err.println(s"[explain] wrote $name")
     }
+  }
+
+  /** The formatted physical plan of `df`, stable across runs: the AQE
+    * initial plan, with each persisted input printed as one
+    * `InMemoryTableScan` node (its output, pushed predicates and storage
+    * level) instead of its cached plan. A cached plan prints as an executed
+    * AQE plan once some earlier query has built that cache, so dumping it
+    * would make a plan depend on the queries run before it. */
+  def planDump(df: DataFrame): String = {
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    val text = new StringBuilder("== Physical Plan ==\n")
+    ExplainUtils.processPlan[SparkPlan](plan.transformUpWithSubqueries {
+      case s: InMemoryTableScanExec =>
+        PersistedInput(s.output, s.predicates, s.relation.cacheBuilder.storageLevel.toString)
+    }, t => { text.append(t); () })
+    text.toString
+  }
+
+  /** A persisted input as [[planDump]] prints it; never executed. */
+  private final case class PersistedInput(output: Seq[Attribute], predicates: Seq[Expression],
+                                          storageLevel: String) extends LeafExecNode {
+    override def nodeName: String = "InMemoryTableScan"
+    override protected def doExecute() =
+      throw new UnsupportedOperationException("a plan-dump node does not execute")
   }
 
   private def family(sf: String, ids: Set[Int]): SparkSession => Unit = spark => {

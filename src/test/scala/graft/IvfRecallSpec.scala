@@ -31,8 +31,8 @@ class IvfRecallSpec extends SparkTestBase {
     // this pins the probe/re-rank mechanism, not an approximation quality
     val queries = Seq(0L, 7L, 42L)
     queries.foreach { q =>
-      val exact = ids(Similarity.bruteForceTopK(emb, q, 10))
-      val approx = top(Similarity.ivfTopK(emb, q, 10))
+      val exact = ids(Similarity.bruteForceTopK(emb, Seq(q), 10))
+      val approx = top(Similarity.ivfTopK(emb, Seq(q), 10))
       assert(approx.size == 10)
       // sorted descending, full k
       assert(approx.map(_._2) == approx.map(_._2).sorted.reverse)
@@ -66,7 +66,7 @@ class IvfRecallSpec extends SparkTestBase {
     // probing every cell (nProbe >= nCells) degenerates to the exact scan —
     // the same mechanism pin as the in-session variant
     for (q <- Seq(0L, 7L)) {
-      val exact = ids(Similarity.bruteForceTopK(emb, q, 10))
+      val exact = ids(Similarity.bruteForceTopK(emb, Seq(q), 10))
       val viaIndex = Similarity.ivfTopKFromIndex(spark, table, emb, q, 10, nProbe = 8)
       assert(ids(viaIndex) == exact, s"query $q: all-cell index probe must equal brute force")
     }
@@ -104,7 +104,7 @@ class IvfRecallSpec extends SparkTestBase {
   test("sq8 approximate scan rides whole-stage codegen (plan pinned)") {
     assume(new java.io.File(s"$sfDir/embeddings.parquet").exists)
     val emb = graft.core.Tables.embeddings(spark, sfDir)
-    val out = Similarity.sq8TopK(emb, 0L, 10)
+    val out = Similarity.sq8TopK(emb, Seq(0L), 10)
     // collect() executes THIS plan (count() would compile a separate one);
     // AQE materializes WholeStageCodegen spans in the FINAL plan only. In
     // the plan string a codegen'd operator prints with a `*(n)` stage
@@ -121,11 +121,11 @@ class IvfRecallSpec extends SparkTestBase {
     assume(new java.io.File(s"$sfDir/embeddings.parquet").exists)
     val emb = graft.core.Tables.embeddings(spark, sfDir)
     val queries = Seq(0L, 7L, 42L)
-    val batch = Similarity.ivfTopKBatch(emb, queries, 10)
+    val batch = Similarity.ivfTopK(emb, queries, 10)
       .select("probe_id", "vec_id", "rnk")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val single = queries.flatMap { q =>
-      Similarity.ivfTopK(emb, q, 10).select("vec_id", "rnk")
+      Similarity.ivfTopK(emb, Seq(q), 10).select("vec_id", "rnk")
         .collect().map(r => (q, r.getLong(0), r.getInt(1)))
     }.toSet
     assert(batch == single)
@@ -135,11 +135,11 @@ class IvfRecallSpec extends SparkTestBase {
     assume(new java.io.File(s"$sfDir/embeddings.parquet").exists)
     val emb = graft.core.Tables.embeddings(spark, sfDir)
     val queries = Seq(0L, 7L, 42L)
-    val batch = Similarity.lshTopKBatch(emb, queries, 10)
+    val batch = Similarity.lshTopK(emb, queries, 10)
       .select("probe_id", "vec_id", "rnk")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val single = queries.flatMap { q =>
-      Similarity.lshTopK(emb, q, 10).select("vec_id", "rnk")
+      Similarity.lshTopK(emb, Seq(q), 10).select("vec_id", "rnk")
         .collect().map(r => (q, r.getLong(0), r.getInt(1)))
     }.toSet
     assert(batch == single)
@@ -149,11 +149,11 @@ class IvfRecallSpec extends SparkTestBase {
     assume(new java.io.File(s"$sfDir/embeddings.parquet").exists)
     val emb = graft.core.Tables.embeddings(spark, sfDir)
     val queries = Seq(0L, 7L, 42L)
-    val batch = Similarity.sq8TopKBatch(emb, queries, 10)
+    val batch = Similarity.sq8TopK(emb, queries, 10)
       .select("probe_id", "vec_id", "rnk")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val single = queries.flatMap { q =>
-      Similarity.sq8TopK(emb, q, 10).select("vec_id", "rnk")
+      Similarity.sq8TopK(emb, Seq(q), 10).select("vec_id", "rnk")
         .collect().map(r => (q, r.getLong(0), r.getInt(1)))
     }.toSet
     assert(batch == single)
@@ -169,13 +169,13 @@ class IvfRecallSpec extends SparkTestBase {
     val queries = Seq(0L, 7L, 42L, 100L, 499L)
     def recallOf(fn: Long => org.apache.spark.sql.DataFrame): Double = {
       val rs = queries.map { q =>
-        val exact = ids(Similarity.bruteForceTopK(emb, q, 10))
+        val exact = ids(Similarity.bruteForceTopK(emb, Seq(q), 10))
         exact.intersect(ids(fn(q))).size / 10.0
       }
       rs.sum / rs.size
     }
-    val lsh = recallOf(q => Similarity.lshTopK(emb, q, 10))
-    val ivf = recallOf(q => Similarity.ivfTopK(emb, q, 10))
+    val lsh = recallOf(q => Similarity.lshTopK(emb, Seq(q), 10))
+    val ivf = recallOf(q => Similarity.ivfTopK(emb, Seq(q), 10))
     info(f"sf0.1 recall@10: lsh=$lsh%.2f ivf=$ivf%.2f")
     // sweep-measured: lsh 0.92 (0.42 candidate fraction), ivf 0.92 (32/45
     // cells on this small corpus; the fraction shrinks as √N grows)
@@ -192,8 +192,8 @@ class IvfRecallSpec extends SparkTestBase {
     val emb = graft.core.Tables.embeddings(spark, big)
     val queries = Seq(0L, 7L, 42L, 100L, 499L)
     val rs = queries.map { q =>
-      val exact = ids(Similarity.bruteForceTopK(emb, q, 10))
-      exact.intersect(ids(Similarity.sq8TopK(emb, q, 10))).size / 10.0
+      val exact = ids(Similarity.bruteForceTopK(emb, Seq(q), 10))
+      exact.intersect(ids(Similarity.sq8TopK(emb, Seq(q), 10))).size / 10.0
     }
     val sq8 = rs.sum / rs.size
     info(f"sf0.1 recall@10: sq8=$sq8%.2f")
@@ -204,11 +204,11 @@ class IvfRecallSpec extends SparkTestBase {
     assume(new java.io.File(s"$sfDir/embeddings.parquet").exists)
     val emb = graft.core.Tables.embeddings(spark, sfDir)
     val queries = Seq(0L, 7L, 42L)
-    val batch = graft.pipelines.Pq.pqTopKBatch(emb, queries, 10)
+    val batch = graft.pipelines.Pq.pqTopK(emb, queries, 10)
       .select("probe_id", "vec_id", "rnk")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val single = queries.flatMap { q =>
-      graft.pipelines.Pq.pqTopK(emb, q, 10).select("vec_id", "rnk")
+      graft.pipelines.Pq.pqTopK(emb, Seq(q), 10).select("vec_id", "rnk")
         .collect().map(r => (q, r.getLong(0), r.getInt(1)))
     }.toSet
     assert(batch == single)
@@ -224,10 +224,10 @@ class IvfRecallSpec extends SparkTestBase {
     graft.pipelines.Pq.writePqIndex(emb, table)
 
     for (q <- Seq(0L, 7L)) {
-      val adhoc = graft.pipelines.Pq.pqTopK(emb, q, 10)
+      val adhoc = graft.pipelines.Pq.pqTopK(emb, Seq(q), 10).select("vec_id", "cosine", "rnk")
         .collect().map(r => (r.getLong(0), r.getInt(2))).toSeq
       val viaIdx = graft.pipelines.Pq.pqTopKFromIndex(spark, table, emb, q, 10)
-        .collect().map(r => (r.getLong(0), r.getInt(2))).toSeq
+        .select("vec_id", "cosine", "rnk").collect().map(r => (r.getLong(0), r.getInt(2))).toSeq
       assert(viaIdx == adhoc, s"query $q: index path diverged")
     }
     // the approximate pass must scan the CODE table (ints), never the
@@ -257,8 +257,8 @@ class IvfRecallSpec extends SparkTestBase {
     // m=16/16 → 0.86 — the defaults sit at the last point (64-bit codes,
     // 8% rerank scan fraction at this corpus size)
     val rs = queries.map { q =>
-      val exact = ids(Similarity.bruteForceTopK(emb, q, 10))
-      exact.intersect(ids(graft.pipelines.Pq.pqTopK(emb, q, 10))).size / 10.0
+      val exact = ids(Similarity.bruteForceTopK(emb, Seq(q), 10))
+      exact.intersect(ids(graft.pipelines.Pq.pqTopK(emb, Seq(q), 10))).size / 10.0
     }
     val pq = rs.sum / rs.size
     info(f"sf0.1 recall@10: pq=$pq%.2f (per-query ${rs.mkString(",")})")
@@ -275,9 +275,9 @@ class IvfRecallSpec extends SparkTestBase {
     // passed explicitly since the r12 default flip to the refine path)
     for (q <- Seq(0L, 7L)) {
       val full = graft.pipelines.Pq.ivfPqTopK(emb, q, 10, nProbe = 64,
-          rerank = 16, spill = 1)
+          rerank = 16, spill = 1).select("vec_id", "cosine", "rnk")
         .collect().map(r => (r.getLong(0), r.getInt(2))).toSeq
-      val plain = graft.pipelines.Pq.pqTopK(emb, q, 10)
+      val plain = graft.pipelines.Pq.pqTopK(emb, Seq(q), 10).select("vec_id", "cosine", "rnk")
         .collect().map(r => (r.getLong(0), r.getInt(2))).toSeq
       assert(full == plain, s"query $q: all-cell ivf-pq diverged from pq")
     }
@@ -287,7 +287,7 @@ class IvfRecallSpec extends SparkTestBase {
     val queries = Seq(0L, 7L, 42L, 100L, 499L)
     val byProbe = Seq(16, 32).map { np =>
       val rs = queries.map { q =>
-        val exact = ids(Similarity.bruteForceTopK(emb, q, 10))
+        val exact = ids(Similarity.bruteForceTopK(emb, Seq(q), 10))
         exact.intersect(ids(graft.pipelines.Pq.ivfPqTopK(emb, q, 10,
           nProbe = np))).size / 10.0
       }
@@ -309,10 +309,10 @@ class IvfRecallSpec extends SparkTestBase {
     // ann_ivfpq_rerank oracle-sharing precondition
     for (q <- Seq(0L, 7L)) {
       val lev = graft.pipelines.Pq.ivfPqTopK(emb, q, 10, nProbe = 64,
-          rerank = 32, spill = 2)
+          rerank = 32, spill = 2).select("vec_id", "cosine", "rnk")
         .collect().map(r => (r.getLong(0), r.getInt(2))).toSeq
-      val plain = graft.pipelines.Pq.pqTopK(emb, q, 10, rerank = 32)
-        .collect().map(r => (r.getLong(0), r.getInt(2))).toSeq
+      val plain = graft.pipelines.Pq.pqTopK(emb, Seq(q), 10, rerank = 32)
+        .select("vec_id", "cosine", "rnk").collect().map(r => (r.getLong(0), r.getInt(2))).toSeq
       assert(lev == plain, s"query $q: all-cell spill ivf-pq diverged from pq(rerank=32)")
     }
     // pruned regime (nProbe=16 of 45 cells): single-assignment recall is
@@ -322,7 +322,7 @@ class IvfRecallSpec extends SparkTestBase {
     val queries = Seq(0L, 7L, 42L, 100L, 499L)
     val bySpill = Seq(1, 2, 3).map { sp =>
       val rs = queries.map { q =>
-        val exact = ids(Similarity.bruteForceTopK(emb, q, 10))
+        val exact = ids(Similarity.bruteForceTopK(emb, Seq(q), 10))
         exact.intersect(ids(graft.pipelines.Pq.ivfPqTopK(emb, q, 10,
           nProbe = 16, rerank = 32, spill = sp))).size / 10.0
       }
@@ -345,7 +345,7 @@ class IvfRecallSpec extends SparkTestBase {
     val queries = Seq(0L, 7L, 42L)
     def recallAt(dOut: Int): Double = {
       val rs = queries.map { q =>
-        val exact = ids(Similarity.bruteForceTopK(emb, q, 10))
+        val exact = ids(Similarity.bruteForceTopK(emb, Seq(q), 10))
         val jl = top(Similarity.jlTopK(emb, q, 10, dOut = dOut))
         assert(jl.size == 10)
         assert(jl.map(_._2) == jl.map(_._2).sorted.reverse)

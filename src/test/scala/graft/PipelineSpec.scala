@@ -417,7 +417,7 @@ class PipelineSpec extends SparkTestBase {
       (1L, Array(0.6f, 0.8f, 0f)),
       (2L, Array(1f, 0.01f, 0f)),
       (3L, Array(-1f, 0f, 0f))).toDF("vec_id", "embedding")
-    val top = Similarity.bruteForceTopK(df, queryId = 0L, k = 2)
+    val top = Similarity.bruteForceTopK(df, queryIds = Seq(0L), k = 2)
       .select("vec_id", "rnk").as[(Long, Int)].collect().toMap
     assert(top(2L) == 1)
     assert(top(1L) == 2)
@@ -427,11 +427,11 @@ class PipelineSpec extends SparkTestBase {
     val emb = (0L until 40L).map(i =>
       (i, Array.tabulate(8)(d => ((i * 7 + d * 13) % 19 - 9).toFloat)))
       .toDF("vec_id", "embedding")
-    val batch = Similarity.bruteForceTopKBatch(emb, Seq(0L, 5L), k = 3)
+    val batch = Similarity.bruteForceTopK(emb, Seq(0L, 5L), k = 3)
       .select("probe_id", "vec_id", "rnk")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val single = Seq(0L, 5L).flatMap { q =>
-      Similarity.bruteForceTopK(emb, q, 3).select("vec_id", "rnk")
+      Similarity.bruteForceTopK(emb, Seq(q), 3).select("vec_id", "rnk")
         .collect().map(r => (q, r.getLong(0), r.getInt(1)))
     }.toSet
     assert(batch == single)
