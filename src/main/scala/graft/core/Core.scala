@@ -261,116 +261,61 @@ object Dist {
     }
 }
 
-/** Session-scoped memo of persisted derived DataFrames. Every instance
-  * registers itself process-wide so [[Memo.clearSession]] can evict all the
-  * cached plans one session accumulated — without the hook these maps pin
-  * MEMORY_AND_DISK blocks for the JVM lifetime across sessions and scale
-  * factors (long-lived test JVMs, multi-SF harness runs).
+/** The one session cache: a value built once per (session, caller key) and,
+  * for frame-keyed callers, per source plan — persisted derived frames,
+  * driver-side index arrays, staged stream-source directories. `free`
+  * releases a value when its entry leaves the cache.
   *
-  * STANDING-SET BUDGET: every entry also registers in the process-wide
-  * [[Memo.Ledger]], which caps the number of live memoized frames per
-  * session (`graft.memo.maxEntries`, default 128) and unpersists the
-  * least-recently-used entry past the cap. Eviction is safe by
-  * construction — a memoized frame is a pure derivation of its inputs, so
-  * the next request rebuilds a `sameResult`-identical plan (MemoSpec pins
-  * this) — it only trades recompute for memory. Without the cap a
-  * long-lived session (a serving process, a 291-query bench) accumulates
-  * every family's caches until the block manager thrashes: wall time
-  * explodes while spill metrics stay flat, because block-manager eviction
-  * is not task spill. */
-final class Memo[K] {
-  private val m = scala.collection.concurrent.TrieMap.empty[(SparkSession, K), DataFrame]
-  Memo.register(this)
-  // Ledger tokens must be unique PER MEMO INSTANCE: the ledger's map is
-  // process-wide and equals()-keyed, and several Memo[String] instances key
-  // by the same sf string (chainMemo/clusterMemo/portablePairsMemo), so a
-  // bare (spark, key) token would alias across memos — the later add()
-  // would replace the earlier memo's slot (its frame escaping the LRU cap)
-  // and one memo's forget() would drop the other's. Prefixing `this`
-  // (reference equality — Memo doesn't override equals) makes collisions
-  // impossible, the same per-entry-identity rule PlanMemo applies.
-  private def token(spark: SparkSession, key: K): AnyRef = (this, spark, key)
-  def apply(spark: SparkSession, key: K)(build: => DataFrame): DataFrame = {
-    val mk = (spark, key)
-    m.get(mk) match {
-      case Some(df) => Memo.Ledger.touch(token(spark, key)); df
+  * Identity: an entry is keyed by the session, the caller's `K` and, for
+  * frame-keyed calls (`apply(src, key)`), the source's analyzed plan —
+  * hashed by `semanticHash`, compared by `sameResult`, so a hash
+  * collision between two plans costs at most a second build and never
+  * serves the wrong value.
+  *
+  * Builds run OUTSIDE any lock (they can launch multi-job Spark work, e.g.
+  * IVF k-means); two concurrent first callers of one key may both build,
+  * the loser's value is freed and the winner's is shared from then on.
+  *
+  * STANDING-SET BUDGET: every entry is its own token in the process-wide
+  * [[Memo.Ledger]], which caps the live entries per session
+  * (`graft.memo.maxEntries`, default 128) and frees the least-recently-used
+  * entry past the cap. A token is the entry object itself (reference
+  * identity), so entries of two instances with equal keys never alias.
+  * Eviction is safe by construction — a cached value is a pure derivation
+  * of its inputs, so the next request rebuilds a `sameResult`-identical
+  * plan (MemoSpec pins this) — it only trades recompute for memory. Without
+  * the cap a long-lived session (a serving process, a 291-query bench)
+  * accumulates every family's caches until the block manager thrashes:
+  * wall time explodes while spill metrics stay flat, because block-manager
+  * eviction is not task spill. [[Memo.clearSession]] frees every entry of a
+  * session through the same ledger. */
+final class Memo[K, V] private (keep: V => V, free: V => Unit) {
+  def this(free: V => Unit) = this(v => v, free)
+
+  private final class Entry(val value: V)
+  private val m = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, K, Option[Memo.PlanKey]), Entry]
+
+  def apply(spark: SparkSession, key: K)(build: => V): V =
+    get((spark, key, None), build)
+
+  /** Keyed by `src`'s analyzed plan as well as `key`. */
+  def apply(src: DataFrame, key: K)(build: => V): V =
+    get((src.sparkSession, key, Some(new Memo.PlanKey(src.queryExecution.analyzed))), build)
+
+  private def get(k: (SparkSession, K, Option[Memo.PlanKey]), build: => V): V = {
+    val spark = k._1
+    m.get(k) match {
+      case Some(e) => Memo.Ledger.touch(e); e.value
       case None =>
         Memo.maxEntries(spark)
-        val df = m.getOrElseUpdate(mk,
-          build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        Memo.Ledger.add(token(spark, key), spark, () =>
-          m.remove(mk).foreach(_.unpersist(blocking = false)))
-        df
-    }
-  }
-  private[core] def evict(spark: SparkSession): Unit =
-    m.keys.filter(_._1 eq spark).foreach { k =>
-      m.remove(k).foreach(_.unpersist(blocking = false))
-      Memo.Ledger.forget(token(k._1, k._2))
-    }
-}
-/** Session-scoped cache of derived index structures keyed by a source
-  * DataFrame's ANALYZED PLAN plus a parameter tuple. The 32-bit
-  * `semanticHash` is only the fast bucket key — plan identity is verified
-  * with `sameResult` on every hit, so a hash collision between two different
-  * corpus plans costs at worst a second build, never serves the wrong index.
-  * `free` releases a value's persisted frames when [[Memo.clearSession]]
-  * evicts the session. Builds run OUTSIDE the cache lock (they can trigger
-  * multi-job Spark work, e.g. IVF k-means — holding the lock would serialize
-  * unrelated corpora and sessions on the same memo); two concurrent
-  * first-callers of the same key may both build, the loser's copy is freed
-  * and the winner's is shared from then on. */
-final class PlanMemo[K, V](free: V => Unit) {
-  // each entry carries a unique ledger token so LRU eviction can target
-  // exactly one (plan, value) even when two plans share a semanticHash
-  private final case class Entry(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      value: V, token: AnyRef)
-  private val m = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, Int, K), List[Entry]]
-  Memo.onClearSession { s =>
-    m.keys.filter(_._1 eq s).foreach(k =>
-      m.remove(k).foreach(_.foreach { e => free(e.value); Memo.Ledger.forget(e.token) }))
-  }
-  def apply(src: DataFrame, key: K)(build: => V): V = {
-    val plan = src.queryExecution.analyzed
-    val bucket = (src.sparkSession, plan.semanticHash(), key)
-    def lookup(): Option[Entry] = synchronized {
-      m.getOrElse(bucket, Nil).find(_.plan.sameResult(plan))
-    }
-    lookup() match {
-      case Some(e) => Memo.Ledger.touch(e.token); e.value
-      case None =>
-        Memo.maxEntries(src.sparkSession)
-        val v = build
-        val outcome: Either[V, Entry] = synchronized {
-          // re-check under the lock: another thread may have won the build race
-          m.getOrElse(bucket, Nil).find(_.plan.sameResult(plan)) match {
-            case Some(winner) => free(v); Left(winner.value)
-            case None =>
-              val e = Entry(plan, v, new Object)
-              m.update(bucket, e :: m.getOrElse(bucket, Nil))
-              Right(e)
-          }
-        }
-        outcome match {
-          case Left(winner) => winner
-          case Right(e) =>
-            // register OUTSIDE this memo's lock: ledger overflow runs other
-            // memos' evict closures, and holding two memo monitors at once
-            // would be an AB-BA deadlock. On overflow this entry drops from
-            // the bucket list and its persisted frames free — a later
-            // identical request rebuilds.
-            Memo.Ledger.add(e.token, src.sparkSession,
-              () => synchronized {
-                m.get(bucket).foreach { lst =>
-                  if (lst.exists(_ eq e)) {
-                    free(e.value)
-                    val rest = lst.filterNot(_ eq e)
-                    if (rest.isEmpty) m.remove(bucket) else m.update(bucket, rest)
-                  }
-                }
-              })
+        val e = new Entry(keep(build))
+        m.putIfAbsent(k, e) match {
+          case Some(winner) => free(e.value); Memo.Ledger.touch(winner); winner.value
+          case None =>
+            // remove(k, e) is conditional: a rebuilt entry under the same
+            // key is never dropped by the evicted one's closure
+            Memo.Ledger.add(e, spark, () => if (m.remove(k, e)) free(e.value))
             e.value
         }
     }
@@ -378,55 +323,72 @@ final class PlanMemo[K, V](free: V => Unit) {
 }
 
 object Memo {
-  private val all = new java.util.concurrent.ConcurrentLinkedQueue[Memo[_]]()
   private val hooks = new java.util.concurrent.ConcurrentLinkedQueue[SparkSession => Unit]()
-  private def register(memo: Memo[_]): Unit = all.add(memo)
 
-  /** Process-wide LRU ledger of LIVE memoized entries across every [[Memo]]
-    * and [[PlanMemo]] instance — the structural budget on the standing
-    * cache set. Each session keeps at most `graft.memo.maxEntries`
-    * (session conf, default 128) entries; inserting past the cap evicts
-    * the least-recently-USED entries (access-ordered), whose owner then
-    * unpersists/frees them. Eviction trades recompute for memory and can
-    * never change results — MemoSpec proves a re-derived frame is
-    * `sameResult`-identical to the evicted one. Evict closures run with NO
-    * ledger or memo lock held by the ledger (victims are detached under
-    * the ledger lock, freed after), so owners may synchronize internally. */
+  /** A memo of frames: each built frame is persisted MEMORY_AND_DISK and
+    * unpersisted, non-blocking, when freed. */
+  def frames[K]: Memo[K, DataFrame] = new Memo[K, DataFrame](
+    _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+    _.unpersist(blocking = false))
+
+  /** A source plan as a map key: `semanticHash` buckets, `sameResult`
+    * decides (both read the canonicalized plan, so equal keys hash alike). */
+  private final class PlanKey(val plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) {
+    private val h = plan.semanticHash()
+    override def hashCode: Int = h
+    override def equals(o: Any): Boolean = o match {
+      case p: PlanKey => plan.sameResult(p.plan)
+      case _ => false
+    }
+  }
+
+  /** Process-wide LRU ledger of LIVE entries across every [[Memo]]
+    * instance — the structural budget on the standing cache set. Each
+    * session keeps at most `graft.memo.maxEntries` (session conf, default
+    * 128) entries; inserting past the cap evicts the least-recently-USED
+    * entries (access-ordered), whose owner then frees them. Eviction trades
+    * recompute for memory and can never change results — MemoSpec proves a
+    * re-derived frame is `sameResult`-identical to the evicted one. Evict
+    * closures run with no ledger lock held (victims are detached under the
+    * lock, freed after). */
   private[core] object Ledger {
     private final case class Slot(session: SparkSession, evict: () => Unit)
     // access-order LinkedHashMap: iteration order is least-recently-used first
     private val order = new java.util.LinkedHashMap[AnyRef, Slot](64, 0.75f, true)
+    import scala.jdk.CollectionConverters._
+    // iterator (NOT a Set view) — LinkedHashMap's access order is the
+    // whole point, and a scala Set filter would hash-scramble it
+    private def slotsOf(session: SparkSession): List[(AnyRef, Slot)] =
+      order.entrySet.iterator.asScala
+        .filter(_.getValue.session eq session)
+        .map(e => (e.getKey, e.getValue)).toList // LRU-first
+    private def detach(slots: List[(AnyRef, Slot)]): List[() => Unit] = {
+      slots.foreach(e => order.remove(e._1))
+      slots.map(_._2.evict)
+    }
+    private def run(victims: List[() => Unit]): Unit =
+      victims.foreach(f => try f() catch { case scala.util.control.NonFatal(_) => () })
     def touch(token: AnyRef): Unit =
       order.synchronized { order.get(token); () }
-    def forget(token: AnyRef): Unit =
-      order.synchronized { order.remove(token); () }
     def add(token: AnyRef, session: SparkSession, evict: () => Unit): Unit = {
       val max = maxEntries(session)
-      val victims: List[() => Unit] = order.synchronized {
+      run(order.synchronized {
         order.put(token, Slot(session, evict))
-        import scala.jdk.CollectionConverters._
-        // iterator (NOT a Set view) — LinkedHashMap's access order is the
-        // whole point, and a scala Set filter would hash-scramble it
-        val mine = order.entrySet.iterator.asScala
-          .filter(_.getValue.session eq session)
-          .map(e => (e.getKey, e.getValue)).toList // LRU-first
-        if (mine.size > max) {
-          val over = mine.take(mine.size - max)
-          over.foreach(e => order.remove(e._1))
-          over.map(_._2.evict)
-        } else Nil
-      }
-      victims.foreach(f => try f() catch { case _: Throwable => () })
+        val mine = slotsOf(session)
+        detach(mine.take(mine.size - max))
+      })
     }
+    /** Free every entry of `session`. */
+    def clear(session: SparkSession): Unit =
+      run(order.synchronized(detach(slotsOf(session))))
     /** Live-entry count for one session (telemetry/tests). */
     def size(session: SparkSession): Int = order.synchronized {
-      import scala.jdk.CollectionConverters._
       order.values.asScala.count(_.session eq session)
     }
   }
   /** The session's ledger cap, `graft.memo.maxEntries` (default 128).
-    * Memo and PlanMemo read it before building on a miss, so a malformed
-    * or non-positive value fails by name and leaves nothing persisted. */
+    * A memo reads it before building on a miss, so a malformed or
+    * non-positive value fails by name and leaves nothing persisted. */
   def maxEntries(spark: SparkSession): Int = {
     val raw = spark.conf.get("graft.memo.maxEntries", "128")
     raw.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
@@ -434,14 +396,14 @@ object Memo {
   }
   /** Live memoized-entry count for `spark` — bench/serving telemetry. */
   def liveEntries(spark: SparkSession): Int = Ledger.size(spark)
-  /** Extra per-session eviction hook for session-scoped caches that don't fit
-    * the DataFrame-valued Memo shape (multi-frame indexes, tier registries) —
-    * they must not outlive their session any more than a Memo entry does. */
+  /** Per-session hook for a session-scoped registry that is registered,
+    * not built on a miss (Rollup's serving tier) — it must not outlive its
+    * session any more than a memo entry does. */
   def onClearSession(f: SparkSession => Unit): Unit = hooks.add(f)
-  /** Unpersist and forget every memoized DataFrame built under `spark`,
-    * then run the registered per-session hooks. */
+  /** Free every memo entry built under `spark`, then run the registered
+    * per-session hooks. */
   def clearSession(spark: SparkSession): Unit = {
-    all.forEach(_.evict(spark))
+    Ledger.clear(spark)
     hooks.forEach(_(spark))
   }
 }
@@ -457,7 +419,7 @@ object Tables {
     * instead of being silently recomputed from the 6h-bucket decimal
     * aggregation — repeated recomputation is exactly what skews a long bench
     * run (and a 100× production run). */
-  private val memo = new Memo[(String, String)]
+  private val memo = Memo.frames[(String, String)]
   private def cached(spark: SparkSession, sfDir: String, key: String)
                     (build: => DataFrame): DataFrame =
     memo(spark, (sfDir, key))(build)

@@ -562,34 +562,36 @@ object PromQL {
       * accumulator). */
     private val RollupOverTime = Set("sum", "avg", "count", "min", "max", "last")
 
+    /** The tier rows behind an aligned range selector `s[d]` over grid `g`:
+      * the one plan-time alignment gate every rollup route shares (window,
+      * step, origin and selector offset all multiples of the tier's bucket),
+      * then the selector's matchers and its offset shift on `bucket_ts`.
+      * None — fall back to raw — when no tier is registered for these
+      * samples or anything misaligns. */
+    private def rollupWindow(s: Selector, d: Long, g: QueryGrid): Option[DataFrame] =
+      graft.streaming.Rollup.tierFor(spark, samples).collect {
+        case (rolled, bucketMs) if d % bucketMs == 0 && g.stepMs % bucketMs == 0 &&
+            Math.floorMod(g.startMs, bucketMs) == 0 && s.offsetMs % bucketMs == 0 =>
+          val off = s.offsetMs
+          val base = applyMatchers(s, rolled.where(
+            col("bucket_ts") >= g.startMs - off - d &&
+              col("bucket_ts") <= g.endMs - off))
+          if (off != 0) base.withColumn("bucket_ts", col("bucket_ts") + off)
+          else base
+      }
+
     /** Rollup-tier routing for aligned COUNTER windows (`rate`/`increase`/
       * `delta`): under the tier's serving-resolution precondition (≤ 1
       * sample per bucket, stamped at the bucket start) every tier row IS
       * its bucket's sample — `rlast` the value, `bucket_ts` the timestamp —
       * so the counter math (reset segmentation, window-edge extrapolation)
       * runs UNCHANGED over the far smaller tier scan and is bit-identical
-      * to the raw path. Same plan-time alignment gate as
-      * [[overTimeFromRollup]]; any misalignment falls back to raw. */
+      * to the raw path. Gated by [[rollupWindow]]. */
     private def counterFromRollup(s: Selector, d: Long,
                                   g: QueryGrid): Option[DataFrame] =
-      graft.streaming.Rollup.tierFor(spark, samples).flatMap { case (rolled, bucketMs) =>
-        val aligned = d % bucketMs == 0 && g.stepMs % bucketMs == 0 &&
-          Math.floorMod(g.startMs, bucketMs) == 0 &&
-          s.offsetMs % bucketMs == 0
-        if (!aligned) None
-        else {
-          val off = s.offsetMs
-          val base = applyMatchers(s, rolled.where(
-            col("bucket_ts") >= g.startMs - off - d &&
-              col("bucket_ts") <= g.endMs - off))
-          val shifted =
-            if (off != 0) base.withColumn("bucket_ts", col("bucket_ts") + off)
-            else base
-          Some(shifted.select(col(S.SeriesId), col(S.LabelsCol),
-            col("bucket_ts").as(S.Ts),
-            col("rlast").cast(org.apache.spark.sql.types.DoubleType).as(S.Value)))
-        }
-      }
+      rollupWindow(s, d, g).map(_.select(col(S.SeriesId), col(S.LabelsCol),
+        col("bucket_ts").as(S.Ts),
+        col("rlast").cast(org.apache.spark.sql.types.DoubleType).as(S.Value)))
 
     /** The range input for a counter window function, preferring the rollup
       * tier when the argument is a plain aligned range selector. */
@@ -601,35 +603,22 @@ object PromQL {
       }).getOrElse(rangeInput(arg, g))
     private def overTimeFromRollup(s: Selector, d: Long, agg: String,
                                    g: QueryGrid): Option[DataFrame] =
-      graft.streaming.Rollup.tierFor(spark, samples).flatMap { case (rolled, bucketMs) =>
-        val aligned = d % bucketMs == 0 && g.stepMs % bucketMs == 0 &&
-          Math.floorMod(g.startMs, bucketMs) == 0 &&
-          s.offsetMs % bucketMs == 0
-        if (!aligned) None
-        else {
-          val off = s.offsetMs
-          val base = applyMatchers(s, rolled.where(
-            col("bucket_ts") >= g.startMs - off - d &&
-              col("bucket_ts") <= g.endMs - off))
-          val shifted =
-            if (off != 0) base.withColumn("bucket_ts", col("bucket_ts") + off)
-            else base
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(S.SeriesId).orderBy(col("bucket_ts")).rangeBetween(-selD(d), 0)
-          import org.apache.spark.sql.types.DoubleType
-          val v = agg match {
-            case "sum"   => sum(col("rsum")).over(w).cast(DoubleType)
-            case "avg"   => sum(col("rsum")).over(w).cast(DoubleType) /
-                              sum(col("rcount")).over(w)
-            case "count" => sum(col("rcount")).over(w).cast(DoubleType)
-            case "min"   => min(col("rmin")).over(w)
-            case "max"   => max(col("rmax")).over(w)
-            case "last"  => expr("max_by(rlast, rlast_ts)").over(w)
-          }
-          Some(shifted.withColumn(S.Value, v)
-            .select(col(S.SeriesId), col(S.LabelsCol),
-              col("bucket_ts").as(S.Ts), col(S.Value)))
+      rollupWindow(s, d, g).map { shifted =>
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(S.SeriesId).orderBy(col("bucket_ts")).rangeBetween(-selD(d), 0)
+        import org.apache.spark.sql.types.DoubleType
+        val v = agg match {
+          case "sum"   => sum(col("rsum")).over(w).cast(DoubleType)
+          case "avg"   => sum(col("rsum")).over(w).cast(DoubleType) /
+                            sum(col("rcount")).over(w)
+          case "count" => sum(col("rcount")).over(w).cast(DoubleType)
+          case "min"   => min(col("rmin")).over(w)
+          case "max"   => max(col("rmax")).over(w)
+          case "last"  => expr("max_by(rlast, rlast_ts)").over(w)
         }
+        shifted.withColumn(S.Value, v)
+          .select(col(S.SeriesId), col(S.LabelsCol),
+            col("bucket_ts").as(S.Ts), col(S.Value))
       }
 
     private def applyMatchers(s: Selector, base: DataFrame): DataFrame = {

@@ -20,8 +20,7 @@ object Dedup {
   /** Session-scoped persisted reference shingle sets for [[streamingNovelty]]
     * — one frame per (reference plan, n, idCol), released on
     * [[graft.core.Memo.clearSession]]. */
-  private val refShingleMemo =
-    new graft.core.PlanMemo[(Int, String), DataFrame](_.unpersist(blocking = false))
+  private val refShingleMemo = graft.core.Memo.frames[(Int, String)]
 
   /** Exact dedup: keep the first row (lowest doc_id) per distinct key set.
     * One hash-shuffle; at 100TB this is the cheapest possible full dedup. */
@@ -211,16 +210,17 @@ object Dedup {
     * (reference plan, n, idCol) through a session-scoped memo — repeated
     * gates against the same reference in one session share a single
     * MEMORY_AND_DISK frame instead of accumulating copies, and
-    * [[graft.core.Memo.clearSession]] releases it with everything else. */
-  def streamingNovelty(reference: DataFrame, incoming: DataFrame, n: Int,
-                       idCol: String = "doc_id"): DataFrame = {
-    val refSh = refShingleMemo(reference, (n, idCol)) {
-      shingles(reference, n, idCol).select("shingle").distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    * [[graft.core.Memo.clearSession]] releases it with everything else.
+    * The set is memoized when the gate is built, so a caller can build the
+    * gate before staging the stream it applies it to. */
+  def streamingNovelty(reference: DataFrame, n: Int,
+                       idCol: String = "doc_id"): DataFrame => DataFrame = {
+    val refSh = refShingleMemo(reference, (n, idCol))(
+      shingles(reference, n, idCol).select("shingle").distinct())
     val sh = array_distinct(filter(wordNgramsCol(col("text"), n),
       s => length(s) > 0))
-    incoming.select(col(idCol).cast(LongType).as(idCol), explode(sh).as("shingle"))
+    incoming => incoming
+      .select(col(idCol).cast(LongType).as(idCol), explode(sh).as("shingle"))
       .join(refSh.withColumn("_seen", lit(1)), Seq("shingle"), "left")
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_shingles"),
@@ -1473,16 +1473,11 @@ object Dedup {
     * every consumer would re-tokenize and re-hash the corpus per subtree per
     * action. Streams bypass the memo (a stream cannot persist); eviction
     * rides the session ledger. */
-  private val spanGramsMemo =
-    new graft.core.PlanMemo[(Int, String, String), DataFrame](
-      _.unpersist(blocking = false))
+  private val spanGramsMemo = graft.core.Memo.frames[(Int, String, String)]
   private def spanGramsCached(docs: DataFrame, k: Int, idCol: String,
                               textCol: String): DataFrame =
     if (docs.isStreaming) spanGrams(docs, k, idCol, textCol)
-    else spanGramsMemo(docs, (k, idCol, textCol)) {
-      spanGrams(docs, k, idCol, textCol)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    else spanGramsMemo(docs, (k, idCol, textCol))(spanGrams(docs, k, idCol, textCol))
 
   /** Gaps-and-islands merge of flagged window positions into maximal spans:
     * windows all span k tokens, so sorted by pos the running span end is

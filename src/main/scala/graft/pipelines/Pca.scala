@@ -201,7 +201,7 @@ object Pca {
   }
 
   private val prepMemo =
-    new graft.core.PlanMemo[(String, String, Int),
+    new graft.core.Memo[(String, String, Int),
       (Array[Double], Array[Array[Double]])](_ => ())
 
   /** Index-order projection fold (x−mean)·v as a per-row expression. */

@@ -32,7 +32,7 @@ object Pq {
   /** Trained codebooks per (corpus plan, params) — driver-side arrays, so
     * nothing to unpersist on eviction. */
   private val booksCache =
-    new graft.core.PlanMemo[(String, String, Int, Int, Int),
+    new graft.core.Memo[(String, String, Int, Int, Int),
       Seq[Array[Array[Double]]]](_ => ())
 
   /** Index-order squared-distance fold over two double arrays. */

@@ -65,14 +65,9 @@ object Retrieval {
     * eviction, rebuild is sameResult-identical. */
   def postingsCached(docs: DataFrame, idCol: String = "doc_id",
                      textCol: String = "text"): DataFrame =
-    postingsMemo(docs, (idCol, textCol)) {
-      postings(docs, idCol, textCol)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    postingsMemo(docs, (idCol, textCol))(postings(docs, idCol, textCol))
 
-  private val postingsMemo =
-    new graft.core.PlanMemo[(String, String), DataFrame](
-      _.unpersist(blocking = false))
+  private val postingsMemo = graft.core.Memo.frames[(String, String)]
 
   /** Per-term BM25 contribution in integer nano-units (see class doc).
     * All inputs are integer columns; the only transcendental is quantized

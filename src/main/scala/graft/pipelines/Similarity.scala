@@ -176,13 +176,11 @@ object Similarity {
     * corpus's analyzed plan (sameResult-verified — a semanticHash collision
     * can never alias two corpora) plus params, and evicted with the session
     * via [[graft.core.Memo.clearSession]]. */
-  private val lshMemo = new graft.core.PlanMemo[(String, Int, Int), DataFrame](
-    _.unpersist(blocking = false))
+  private val lshMemo = graft.core.Memo.frames[(String, Int, Int)]
   private def lshIndex(emb: DataFrame, idCol: String, bands: Int,
                        planesPerBand: Int): DataFrame =
     lshMemo(emb, (idCol, bands, planesPerBand))(
-      Vectors.withBandedKeys(emb, "embedding", bands, planesPerBand, seed = 7)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      Vectors.withBandedKeys(emb, "embedding", bands, planesPerBand, seed = 7))
 
   /** Approximate top-k via MULTIPROBE banded sign-LSH: `bands` bands of
     * `planesPerBand` planes each; a corpus vector is a candidate when any of
@@ -261,8 +259,8 @@ object Similarity {
     * `count()` here is index-build work, not per-query driver logic. */
   private final case class IvfIndex(cents: DataFrame, assigned: DataFrame, nCentroids: Int)
   // plan-keyed (sameResult-verified) like lshMemo — two frames per entry,
-  // so it rides PlanMemo with a two-frame free hook
-  private val ivfCache = new graft.core.PlanMemo[(String, Int, Int, Int), IvfIndex]({ i =>
+  // so it frees both
+  private val ivfCache = new graft.core.Memo[(String, Int, Int, Int), IvfIndex]({ i =>
     i.cents.unpersist(blocking = false); i.assigned.unpersist(blocking = false)
   })
 
@@ -349,7 +347,7 @@ object Similarity {
     * verification — and evicted with the session, like the LSH/IVF
     * indexes. */
   private final case class Sq8Index(stats: DataFrame, codes: DataFrame)
-  private val sq8Cache = new graft.core.PlanMemo[String, Sq8Index]({ i =>
+  private val sq8Cache = new graft.core.Memo[String, Sq8Index]({ i =>
     i.stats.unpersist(blocking = false); i.codes.unpersist(blocking = false)
   })
 
@@ -563,15 +561,11 @@ object Similarity {
                       idCol: String = "vec_id",
                       vecCol: String = "embedding"): DataFrame = {
     require(k >= 1 && iters >= 1, "k and iters must be >= 1")
-    kmeansCentsMemo(emb, (idCol, vecCol, k, iters)) {
-      buildKmeansCentroids(emb, k, iters, idCol, vecCol)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    kmeansCentsMemo(emb, (idCol, vecCol, k, iters))(
+      buildKmeansCentroids(emb, k, iters, idCol, vecCol))
   }
 
-  private val kmeansCentsMemo =
-    new graft.core.PlanMemo[(String, String, Int, Int), DataFrame](
-      _.unpersist(blocking = false))
+  private val kmeansCentsMemo = graft.core.Memo.frames[(String, String, Int, Int)]
 
   private def buildKmeansCentroids(emb: DataFrame, k: Int, iters: Int,
                                    idCol: String, vecCol: String): DataFrame = {

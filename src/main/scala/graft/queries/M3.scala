@@ -428,7 +428,7 @@ object M3 extends QueryPack {
     * of Filter(grid): shorter plans, less codegen to JIT per query, one
     * shared build. Values unchanged — the memo holds exactly the frame the
     * filter produced. */
-  private val binSideMemo = new graft.core.Memo[(String, String)]
+  private val binSideMemo = graft.core.Memo.frames[(String, String)]
   private def binSide(s: SparkSession, sf: String, name: String): DataFrame =
     binSideMemo(s, (sf, name))(
       g(s, sf).where(col(S.LabelsCol).getItem("name") === name))

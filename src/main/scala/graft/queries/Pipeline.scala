@@ -116,6 +116,7 @@ object Pipeline extends QueryPack {
   private def qDedupNgramIndexBuild(s: SparkSession, sf: String): DataFrame = {
     val table = "graft_shingle_idx_" +
       sf.replaceAll("[^A-Za-z0-9]", "_")
+    Registry.clearStaleLocations(s, Seq(table))
     Dedup.writeShingleIndex(Tables.documents(s, sf), n = 3, table = table)
     s.table(table).agg(
       count(lit(1)).as("n_entries"),
@@ -226,7 +227,7 @@ object Pipeline extends QueryPack {
     * are chained consecutively by doc_id, so each language group is a single
     * PATH component — the engine must converge via pointer jumping over
     * ~log(len) rounds while the oracle knows cluster = the group minimum. */
-  private val chainMemo = new graft.core.Memo[String]
+  private val chainMemo = graft.core.Memo.frames[String]
   private def chainEdges(s: SparkSession, sf: String): DataFrame =
     chainMemo(s, sf) {
       // shared derived INPUT of the two clustering queries (the operator
@@ -254,7 +255,7 @@ object Pipeline extends QueryPack {
     * clustering materialized once (the cluster-assignment table a real
     * pipeline persists); the component loop itself is what
     * `dedup_cluster_chain` and `dedup_cluster_lsh` time. */
-  private val clusterMemo = new graft.core.Memo[String]
+  private val clusterMemo = graft.core.Memo.frames[String]
   private def chainClusters(s: SparkSession, sf: String): DataFrame =
     clusterMemo(s, sf)(Dedup.clusterPairs(chainEdges(s, sf)))
 
@@ -1236,7 +1237,7 @@ object Pipeline extends QueryPack {
     * portable LSH pair set materialized once (the operators under test —
     * clusterPairs / keepCanonical — still run per query), mirroring the
     * chainEdges pattern above. */
-  private val portablePairsMemo = new graft.core.Memo[String]
+  private val portablePairsMemo = graft.core.Memo.frames[String]
   private def portablePairs(s: SparkSession, sf: String): DataFrame =
     portablePairsMemo(s, sf)(
       Dedup.minhashLshPairs(Tables.documents(s, sf),
@@ -1394,7 +1395,7 @@ object Pipeline extends QueryPack {
     * keep timing the CC loop itself — so it rides a session memo (the
     * cluster-assignment table a real pipeline persists) instead of re-running
     * the pointer-doubling loop per action. */
-  private val portableClustersMemo = new graft.core.Memo[String]
+  private val portableClustersMemo = graft.core.Memo.frames[String]
   private def portableClusters(s: SparkSession, sf: String): DataFrame =
     portableClustersMemo(s, sf)(Dedup.clusterPairs(portablePairs(s, sf)))
   private def qKeepCentral(s: SparkSession, sf: String): DataFrame =

@@ -28,13 +28,20 @@ object Registry {
   def ensureTable(s: SparkSession, table: String,
                   companions: Seq[String] = Nil)(build: => Unit): Unit =
     if (!s.catalog.tableExists(table)) {
-      (table +: companions).foreach { t =>
-        val loc = new org.apache.hadoop.fs.Path(
-          new org.apache.hadoop.fs.Path(
-            new java.net.URI(s.conf.get("spark.sql.warehouse.dir"))), t)
-        loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
-      }
+      clearStaleLocations(s, table +: companions)
       build
+    }
+
+  /** Delete the warehouse locations of `tables` that the catalog does not
+    * know: a stale location makes `saveAsTable` fail with
+    * LOCATION_ALREADY_EXISTS, while a cataloged table's own location is
+    * replaced by an overwrite. */
+  def clearStaleLocations(s: SparkSession, tables: Seq[String]): Unit =
+    tables.filterNot(s.catalog.tableExists).foreach { t =>
+      val loc = new org.apache.hadoop.fs.Path(
+        new org.apache.hadoop.fs.Path(
+          new java.net.URI(s.conf.get("spark.sql.warehouse.dir"))), t)
+      loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
     }
 
   lazy val all: Seq[QueryDef] = packs.flatMap(_.all)

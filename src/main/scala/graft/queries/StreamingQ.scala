@@ -67,17 +67,24 @@ object StreamingQ extends QueryPack {
     * still starts a fresh query with a FRESH checkpoint (memory sinks get a
     * new temp checkpoint per start; the roundtrip passes its own), so every
     * timed run streams ALL files through the full parse→state→sink path —
-    * only the redundant re-staging of identical bytes is gone. Session-
-    * scoped like every memo: cleared with [[graft.core.Memo.clearSession]],
-    * so a new session (or the bench's family eviction... which clears
-    * memos, re-staging once at family warm-up) rebuilds from the parquet
-    * inputs. */
-  private val stagedDirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), String]
-  // r15 (ADVICE r14): clearing a session must also DELETE its staged temp
-  // directories — before this only the map entries were dropped, so a
-  // long-lived multi-session JVM accumulated full-corpus JSON copies on
-  // disk for as long as the process lived.
+    * only the redundant re-staging of identical bytes is gone.
+    *
+    * A staged directory is a memo entry like any other: it counts toward
+    * `graft.memo.maxEntries`, is evicted LRU, and is deleted from disk when
+    * evicted or cleared with [[graft.core.Memo.clearSession]] — the next
+    * call stages it again. A query therefore calls this after building its
+    * other memoized inputs, right before `readStream`, so its staged source
+    * is the most recently used entry when the stream starts. */
+  private[graft] def stagedSrc(s: SparkSession, sf: String, tag: String)
+                              (write: String => Unit): String =
+    staged(s, (sf, tag)) {
+      val dir = java.nio.file.Files
+        .createTempDirectory(s"graft_$tag").toString + "/src"
+      write(dir)
+      dir
+    }
+  private val staged = new graft.core.Memo[(String, String), String](dir =>
+    deleteRec(java.nio.file.Paths.get(dir).getParent))
   // A symlink is unlinked, never entered: its target lies outside the
   // staged directory and is not ours to delete.
   private def deleteRec(p: java.nio.file.Path): Unit = {
@@ -88,26 +95,6 @@ object StreamingQ extends QueryPack {
     java.nio.file.Files.deleteIfExists(p)
     ()
   }
-  graft.core.Memo.onClearSession { s =>
-    stagedDirs.keys.filter(_._1 eq s).foreach { k =>
-      stagedDirs.remove(k).foreach { dir =>
-        // Files.list's stream rethrows I/O errors as UncheckedIOException
-        try deleteRec(java.nio.file.Paths.get(dir).getParent)
-        catch {
-          case _: java.io.IOException | _: java.io.UncheckedIOException |
-               _: SecurityException => ()
-        }
-      }
-    }
-  }
-  private[graft] def stagedSrc(s: SparkSession, sf: String, tag: String)
-                              (write: String => Unit): String =
-    stagedDirs.getOrElseUpdate((s, sf, tag), {
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_$tag").toString + "/src"
-      write(dir)
-      dir
-    })
 
   private def qRoundtrip(s: SparkSession, sf: String): DataFrame = {
     val base = java.nio.file.Files.createTempDirectory("graft_stream")
@@ -289,12 +276,12 @@ object StreamingQ extends QueryPack {
     * broadcast and the fold all have to preserve exactness for this entry
     * to hash-match. */
   private def qStreamTopics(s: SparkSession, sf: String): DataFrame = {
+    val cents = graft.pipelines.Similarity.kmeansCentroids(
+      Tables.embeddings(s, sf), k = 8, iters = 2)
     val src = stagedSrc(s, sf, "stopics") { dir =>
       Tables.embeddings(s, sf).select("vec_id", "embedding")
         .coalesce(2).write.mode("overwrite").json(dir)
     }
-    val cents = graft.pipelines.Similarity.kmeansCentroids(
-      Tables.embeddings(s, sf), k = 8, iters = 2)
     val stream = s.readStream
       .option("maxFilesPerTrigger", 1)
       .schema("vec_id BIGINT, embedding ARRAY<FLOAT>").json(src)
@@ -310,11 +297,11 @@ object StreamingQ extends QueryPack {
     * mode). The oracle replays the batch training + encode, so stream
     * parity with batch IS the check. */
   private def qStreamPqEncode(s: SparkSession, sf: String): DataFrame = {
+    val books = graft.pipelines.Pq.trainCodebooks(Tables.embeddings(s, sf))
     val src = stagedSrc(s, sf, "spq") { dir =>
       Tables.embeddings(s, sf).select("vec_id", "embedding")
         .coalesce(2).write.mode("overwrite").json(dir)
     }
-    val books = graft.pipelines.Pq.trainCodebooks(Tables.embeddings(s, sf))
     val stream = s.readStream
       .option("maxFilesPerTrigger", 1)
       .schema("vec_id BIGINT, embedding ARRAY<FLOAT>").json(src)
@@ -572,14 +559,13 @@ object StreamingQ extends QueryPack {
     * per-doc novelty the trigger they land — exact parity with the batch
     * scorer, so it shares the batch oracle. */
   private def qStreamNovelty(s: SparkSession, sf: String): DataFrame = {
+    val gate = graft.pipelines.Dedup.streamingNovelty(Pipeline.priorDocs(s, sf), n = 3)
     val src = stagedSrc(s, sf, "snov") { dir =>
       Pipeline.freshDocs(s, sf).select("doc_id", "text")
         .coalesce(2).write.mode("overwrite").json(dir)
     }
-    val stream = s.readStream.option("maxFilesPerTrigger", 1)
-      .schema("doc_id BIGINT, text STRING").json(src)
-    val out = graft.pipelines.Dedup.streamingNovelty(
-      Pipeline.priorDocs(s, sf), stream, n = 3)
+    val out = gate(s.readStream.option("maxFilesPerTrigger", 1)
+      .schema("doc_id BIGINT, text STRING").json(src))
     drain(s) { out.writeStream.format("memory")
       .queryName("snov_out").outputMode("update").start() }
     s.table("snov_out").groupBy("doc_id")

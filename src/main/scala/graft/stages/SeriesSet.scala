@@ -224,21 +224,26 @@ object SeriesSet {
     // min_by determinism is unaffected because a >1-series group raises
     // before any chosen value becomes observable
     val rKeyed = r0.withColumn("_sk", col(S.SeriesId))
-    // ONE pass: right series count + the VALID group-key extent — one global
-    // row, or one row per extra-group (per branch grid) in the fused path
+    // ONE pass: the right series-id extent + the VALID group-key extent —
+    // one global row, or one row per extra-group (per branch grid) in the
+    // fused path. "Exactly one" is an extent whose ends are equal (and so
+    // non-null: an empty side reads as not single). min/max, not
+    // count_distinct: two distinct aggregates plan as an Expand whose
+    // argument order is not stable from run to run.
     val extraCols = extra.map(col)
     val statAggs = Seq(
-      count_distinct(col("_sk")).as("_nrser"),
-      count_distinct(when(valid, col("_mk"))).as("_nmk"))
+      min(col("_sk")).as("_sklo"), max(col("_sk")).as("_skhi"),
+      min(when(valid, col("_mk"))).as("_mklo"), max(when(valid, col("_mk"))).as("_mkhi"))
     val rStats = broadcast(
       if (extra.isEmpty) rKeyed.agg(statAggs.head, statAggs.tail: _*)
       else rKeyed.groupBy(extraCols: _*).agg(statAggs.head, statAggs.tail: _*))
     def withStats(df: DataFrame): DataFrame =
       if (extra.isEmpty) df.crossJoin(rStats) else df.join(rStats, extra)
-    val single = col("_nrser") === 1 || col("_nmk") === 1
+    val oneSeries = col("_sklo") === col("_skhi")
+    val single = oneSeries || col("_mklo") === col("_mkhi")
     // rows feeding the groups: a lone series passes whole; else valid only
     val rIn = withStats(rKeyed)
-      .where(col("_nrser") === 1 || valid)
+      .where(oneSeries || valid)
       .withColumn("_jk", when(single, lit(SingleKey)).otherwise(col("_mk")))
     val rGrouped = merge match {
       case MergeSum =>
@@ -271,7 +276,7 @@ object SeriesSet {
     val lj = withStats(l0)
       .where(single || valid)
       .withColumn("_jk", when(single, lit(SingleKey)).otherwise(col("_mk")))
-      .drop("_mk", "_nrser", "_nmk")
+      .drop("_mk", "_sklo", "_skhi", "_mklo", "_mkhi")
     (lj, rj)
   }
 

@@ -96,21 +96,6 @@ object Rollup {
   /** The aggregates [[summarizeFromRollup]] can reconstruct exactly. */
   val Reconstructable: Set[String] = Set("sum", "avg", "min", "max", "count", "last")
 
-  /** TIER ROUTING: answer a summarize from the rollup when the grid aligns
-    * and the aggregate is reconstructable, else from raw samples. The
-    * decision is plan-time (pure arithmetic on the grid — no driver job),
-    * so a dashboard's aligned long-range queries hit the small rollup scan
-    * and everything else silently falls back to raw. */
-  def summarizeRouted(raw: DataFrame, rolled: DataFrame, bucketMs: Long,
-                      grid: QueryGrid, agg: String): DataFrame =
-    if (Reconstructable(agg) && grid.stepMs % bucketMs == 0 &&
-        grid.startMs % bucketMs == 0 && grid.endMs % bucketMs == 0)
-      summarizeFromRollup(rolled, bucketMs, grid, agg)
-    else
-      graft.stages.Temporal.summarize(
-        raw.where(col(S.Ts) >= grid.startMs && col(S.Ts) < grid.endMs),
-        grid.stepMs, agg, alignMs = grid.startMs)
-
   /** Maintain the rollup INCREMENTALLY from the ingest stream: every moment
     * is algebraic, so one watermarked tumbling-window aggregation keeps
     * (series, bucket) rows current — the serving tier no longer depends on
@@ -161,7 +146,7 @@ object Rollup {
     * samples frame it was rolled from. The routing paths verify the query's
     * samples against `source` with `sameResult`, so a tier rolled from a
     * DIFFERENT dataset can never silently substitute its data for a query's
-    * (the analytic analogue of PlanMemo's verified cache hits). */
+    * (the analytic analogue of Memo's plan-verified cache hits). */
   def registerTier(spark: SparkSession, rolled: DataFrame, bucketMs: Long,
                    source: DataFrame): Unit =
     tiers.put(spark, (rolled, bucketMs, source.queryExecution.analyzed))

@@ -54,6 +54,26 @@ class BucketedIndexSpec extends SparkTestBase {
     spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
+  test("the index-build row rebuilds over a stale warehouse location") {
+    // the catalog forgot the table but its location survives (an earlier
+    // JVM's warehouse): a plain saveAsTable fails LOCATION_ALREADY_EXISTS
+    val sf = java.nio.file.Files.createTempDirectory("graft_idx_sf").toString
+    Seq((1L, "the quick brown fox jumps over the lazy dog"),
+        (2L, "the quick brown fox jumps over the lazy cat"),
+        (3L, "unrelated content entirely")).toDF("doc_id", "text")
+      .write.parquet(s"$sf/documents.parquet")
+    val t = "graft_shingle_idx_" + sf.replaceAll("[^A-Za-z0-9]", "_")
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    val loc = new java.io.File(
+      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath, t)
+    assert(loc.mkdirs())
+    java.nio.file.Files.writeString(loc.toPath.resolve("stray.txt"), "x")
+    val row = graft.queries.Registry.queries("dedup_ngram_index_build")(spark, sf)
+      .collect().head
+    assert(row.getAs[Long]("n_docs") == 3L, row)
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
   test("append-maintained shingle index equals rebuild and dedups incrementally") {
     val t1 = "graft_test_incr_idx"
     val t2 = "graft_test_incr_rebuilt"

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{Memo, PlanMemo}
+import graft.core.Memo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -11,7 +11,9 @@ import org.apache.spark.storage.StorageLevel
   * `sameResult`-identical plan with identical rows — eviction can only ever
   * trade recompute for memory, never results. This is the structural fix
   * for the r9 bench collapse (unbounded session caches thrashing a default
-  * heap); Bench.scala additionally evicts between families. */
+  * heap); Bench.scala additionally evicts between families. `Memo` is the
+  * one session cache: frames, index values and staged stream sources all
+  * ride the same ledger. */
 class MemoSpec extends SparkTestBase {
 
   // isolated session: its own conf (cap) and its own ledger partition, so
@@ -24,7 +26,7 @@ class MemoSpec extends SparkTestBase {
 
   test("memo evicts LRU past the cap and keeps recently-touched entries") {
     val s = freshSession(2)
-    val memo = new Memo[Int]
+    val memo = Memo.frames[Int]
     def build(i: Int): DataFrame =
       s.range(10).select((col("id") + i).as("v"))
     val d1 = memo(s, 1)(build(1)); d1.count()
@@ -59,8 +61,8 @@ class MemoSpec extends SparkTestBase {
         val d = s.range(10).select((col("id") + 7).as("v")).persist()
         d.count(); d
       }
-      val memo = new Memo[Int]
-      val pm = new PlanMemo[Int, DataFrame](_.unpersist(blocking = false))
+      val memo = Memo.frames[Int]
+      val pm = new Memo[Int, DataFrame](_.unpersist(blocking = false))
       val errs = Seq(
         intercept[IllegalArgumentException](memo(s, 1)(build())),
         intercept[IllegalArgumentException](pm(s.range(3).toDF("id"), 1)(build())))
@@ -71,10 +73,10 @@ class MemoSpec extends SparkTestBase {
     }
   }
 
-  test("planMemo frees evicted values and rebuilds sameResult-identical") {
+  test("a frame-keyed memo frees evicted values and rebuilds sameResult-identical") {
     val s = freshSession(2)
     var freed = List.empty[String]
-    val pm = new PlanMemo[String, DataFrame](df => {
+    val pm = new Memo[String, DataFrame](df => {
       freed ::= df.columns.head; df.unpersist(blocking = false)
     })
     val src = s.range(100).toDF("id")
@@ -92,7 +94,7 @@ class MemoSpec extends SparkTestBase {
 
     var rebuilt = false
     val a2 = pm(src, "a") { rebuilt = true; build("a", 0) }
-    assert(rebuilt, "evicted planMemo entry must rebuild")
+    assert(rebuilt, "evicted frame-keyed entry must rebuild")
     assert(a2.queryExecution.analyzed.sameResult(a.queryExecution.analyzed))
     assert(a2.collect().head.getLong(0) == 4950L)
     Memo.clearSession(s)
@@ -101,15 +103,15 @@ class MemoSpec extends SparkTestBase {
 
   test("distinct memos with EQUAL keys never alias in the ledger") {
     // chainMemo/clusterMemo/portablePairsMemo are all Memo[String] keyed by
-    // the same sf string — their ledger tokens must be per-instance, or the
+    // the same sf string — their ledger tokens must be per-entry, or the
     // later add() replaces the earlier memo's slot (that frame escaping the
     // LRU cap and liveEntries) and one memo's eviction drops the other's
     // distinct literals per frame: aliases canonicalize away, so two
     // `range(n)` frames would share ONE CacheManager entry and unpersisting
-    // either would blank both — same discipline as the planMemo test above
+    // either would blank both — same discipline as the frame-keyed test above
     val s = freshSession(100)
-    val m1 = new Memo[String]
-    val m2 = new Memo[String]
+    val m1 = Memo.frames[String]
+    val m2 = Memo.frames[String]
     val d1 = m1(s, "sf0.01")(s.range(10).select((col("id") + 1).as("a"))); d1.count()
     val d2 = m2(s, "sf0.01")(s.range(10).select((col("id") + 2).as("b"))); d2.count()
     assert(Memo.liveEntries(s) == 2,
@@ -129,7 +131,7 @@ class MemoSpec extends SparkTestBase {
 
   test("clearSession releases every entry and hook-registered value") {
     val s = freshSession(100)
-    val memo = new Memo[String]
+    val memo = Memo.frames[String]
     val df = memo(s, "x")(s.range(5).toDF("id"))
     df.count()
     assert(df.storageLevel != StorageLevel.NONE)
@@ -157,5 +159,64 @@ class MemoSpec extends SparkTestBase {
     assert(!Files.exists(staged.getParent), "the staged dir is deleted")
     assert(Files.exists(kept), "the link target's files remain")
     Files.delete(kept); Files.delete(outside)
+  }
+
+  test("separately built sources with sameResult plans hit one entry") {
+    val s = freshSession(100)
+    val memo = Memo.frames[String]
+    def src(n: Int): DataFrame = s.range(n).select((col("id") * 3).as("x"))
+    val a = memo(src(50), "k")(src(50).select(sum("x").as("t")))
+    var rebuilt = false
+    val b = memo(src(50), "k") { rebuilt = true; src(50).select(sum("x").as("t")) }
+    assert(!rebuilt, "a sameResult source plan must hit the existing entry")
+    assert(b eq a)
+    assert(Memo.liveEntries(s) == 1)
+    // a different source plan under the same key is a different entry
+    val c = memo(src(51), "k")(src(51).select((sum("x") + 1).as("t")))
+    assert(!(c eq a) && Memo.liveEntries(s) == 2)
+    Memo.clearSession(s)
+    assert(Memo.liveEntries(s) == 0)
+  }
+
+  test("a staged stream source is a live entry, deleted when evicted and staged again") {
+    import java.nio.file.{Files, Paths}
+    val s = freshSession(2)
+    var writes = 0
+    def stage(): java.nio.file.Path = Paths.get(
+      graft.queries.StreamingQ.stagedSrc(s, "sf", "evict") { dir =>
+        writes += 1
+        val d = Files.createDirectories(Paths.get(dir))
+        Files.writeString(d.resolve("part.json"), "{}")
+      })
+    val first = stage()
+    assert(Memo.liveEntries(s) == 1, "the staged dir counts toward the cap")
+    assert(stage() == first && writes == 1, "a second call reuses the staged dir")
+    val memo = Memo.frames[Int]
+    memo(s, 1)(s.range(3).select((col("id") + 11).as("a"))).count()
+    memo(s, 2)(s.range(3).select((col("id") + 12).as("b"))).count() // evicts the staged dir (LRU)
+    assert(Memo.liveEntries(s) == 2)
+    assert(!Files.exists(first.getParent), "an evicted staged dir is deleted")
+    val again = stage()
+    assert(writes == 2 && Files.exists(again.resolve("part.json")),
+      "the next call stages the source again")
+    Memo.clearSession(s)
+    assert(!Files.exists(again.getParent))
+  }
+
+  test("src/main has one session cache: no PlanMemo, no session-keyed map outside core and Rollup") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val files = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    assert(files.nonEmpty, "source tree not found from the test working directory")
+    def hits(re: String): Seq[String] = files.filter(p =>
+      re.r.findFirstIn(Files.readString(p)).isDefined).map(_.getFileName.toString)
+    assert(hits("""\bPlanMemo\b""").isEmpty)
+    val sessionMaps = files.filter(p => !p.toString.contains("/core/") &&
+        """TrieMap\s*(?:\.empty)?\[\s*\(?\s*SparkSession""".r
+          .findFirstIn(Files.readString(p)).isDefined)
+      .map(_.getFileName.toString)
+    assert(sessionMaps == Seq("Rollup.scala"), sessionMaps)
+    assert(hits("""Memo\.onClearSession\(""") == Seq("Rollup.scala"))
   }
 }

@@ -200,6 +200,17 @@ class PlanSpec extends AnyFunSuite {
       assert(own.contains("WindowGroupLimit"), s"$name must rank per probe: $own")
     }
 
+  // the right-side "exactly one series / group" tests are min/max extents:
+  // two distinct aggregates plan as an Expand whose argument order changes
+  // from run to run, so a dumped binary-projection plan would too
+  for (name <- Seq("m3_divide_series", "m3_as_percent", "m3_diff_series",
+                   "m3_divide_mixed_step"))
+    test(s"plan: $name plans no Expand") {
+      if (!available) cancel(s"testdata not available at $sf")
+      val expands = nodesOf(name).map(_.nodeName).filter(_ == "Expand")
+      assert(expands.isEmpty, s"$name must not plan an Expand: $expands")
+    }
+
   test("src/main has one probe path per ANN index") {
     val files = Files.walk(Paths.get("src/main")).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toList

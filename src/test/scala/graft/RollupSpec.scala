@@ -59,24 +59,6 @@ class RollupSpec extends SparkTestBase {
     }
   }
 
-  test("summarizeRouted picks the rollup when aligned, raw otherwise — same answers") {
-    val rolled = Rollup.rollup(fx, bucketMs = 120000L)
-    def collectMap(df: org.apache.spark.sql.DataFrame) =
-      df.select(graft.core.TsSchema.seriesKey(col("labels")).as("k"),
-          col("timestamp"), col("value"))
-        .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    // aligned + reconstructable → identical to the rollup path
-    assert(collectMap(Rollup.summarizeRouted(fx, rolled, 120000L, g2, "max"))
-      == collectMap(Rollup.summarizeFromRollup(rolled, 120000L, g2, "max")))
-    // misaligned grid must NOT raise — it silently answers from raw
-    val g90 = QueryGrid(120000L, 600000L, 90000L)
-    val fromRaw = collectMap(Rollup.summarizeRouted(fx, rolled, 120000L, g90, "max"))
-    assert(fromRaw.nonEmpty)
-    // non-reconstructable aggregate routes to raw even on an aligned grid
-    val med = collectMap(Rollup.summarizeRouted(fx, rolled, 120000L, g2, "median"))
-    assert(med.nonEmpty)
-  }
-
   test("stream-maintained rollup equals the batch rollup of the same data") {
     import graft.streaming.Ingest
     val dir = java.nio.file.Files.createTempDirectory("graft_sroll").toFile.getAbsolutePath
