@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.core.{QueryGrid, Tables, TsSchema}
+import graft.core.OracleSafe.sqlSum
 import graft.stages._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -15,37 +16,12 @@ import org.apache.spark.sql.functions._
   * null values are dropped (M3's null-as-absence).
   */
 object M3 extends QueryPack {
+  import SeriesOracle._
   private val S = TsSchema
   private val grid = Tables.EventsGrid6h
   private val fetchGrid = QueryGrid(1704672000000L, 1705276800000L, grid.stepMs) // Jan 8 - Jan 15
 
-  // ---- shared Spark inputs -------------------------------------------------
-  private def raw(s: SparkSession, sf: String): DataFrame = Tables.eventSamples(s, sf)
-  private def g(s: SparkSession, sf: String): DataFrame = Tables.griddedEventSamples(s, sf)
-
-  private def flat(df: DataFrame, extra: Seq[String] = Nil): DataFrame = {
-    val base = Seq(
-      S.seriesKey(col(S.LabelsCol)).as("series"),
-      col(S.Ts).as("ts"), col(S.Value).as("value")) ++ extra.map(col)
-    df.select(base: _*)
-      .where(col("value").isNotNull)
-      .orderBy((Seq("series", "ts", "value") ++ extra).map(col): _*)
-  }
-
-  // ---- shared SQL fragments ------------------------------------------------
-  private val sCte =
-    "s AS (SELECT event_type AS etype, CAST(user_id % 10 AS VARCHAR) AS usr, " +
-      "epoch_ms(ts) AS t, value FROM events)"
-  private val gCte =
-    "g AS (SELECT etype, usr, 1704067200000 + ((t - 1704067200000) // 21600000) * 21600000 AS ts, " +
-      "CAST(sum(CAST(value AS DECIMAL(38,9))) AS DOUBLE) / count(value) AS value " +
-      "FROM s GROUP BY 1, 2, 3)"
-  private def withSG(body: String) = s"WITH $sCte, $gCte $body"
   private def withS(body: String) = s"WITH $sCte $body"
-  private val ser = "'name:' || etype || ',user:' || usr"
-  private val serName = "'name:' || etype"
-  private val ord = "ORDER BY series, ts, value"
-  private def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,9))) AS DOUBLE)"
 
   // ---- fetch ---------------------------------------------------------------
   private def qFetch(s: SparkSession, sf: String): DataFrame =
@@ -71,15 +47,15 @@ object M3 extends QueryPack {
       s"SELECT $serName AS series, ts, $sqlAgg AS value FROM g GROUP BY etype, ts $having $ord")))
 
   private val aggQueries = Seq(
-    agg("m3_sum", Grouping.sum(_, Seq("name")), dsum("value")),
-    agg("m3_avg", Grouping.avg(_, Seq("name")), s"${dsum("value")} / count(value)"),
+    agg("m3_sum", Grouping.sum(_, Seq("name")), sqlSum("value")),
+    agg("m3_avg", Grouping.avg(_, Seq("name")), s"${sqlSum("value")} / count(value)"),
     agg("m3_min", Grouping.min(_, Seq("name")), "min(value)"),
     agg("m3_max", Grouping.max(_, Seq("name")), "max(value)"),
 
     agg("m3_range", Grouping.range(_, Seq("name")), "max(value) - min(value)"),
     agg("m3_stddev", Grouping.stddev(_, Seq("name")),
       s"""CASE WHEN count(value) > 1 THEN
-         | sqrt((${dsum("value * value")} - ${dsum("value")} * ${dsum("value")} / CAST(count(value) AS DOUBLE))
+         | sqrt((${sqlSum("value * value")} - ${sqlSum("value")} * ${sqlSum("value")} / CAST(count(value) AS DOUBLE))
          |      / (CAST(count(value) AS DOUBLE) - 1.0)) END""".stripMargin,
       having = "HAVING count(value) > 1"))
 
@@ -93,7 +69,7 @@ object M3 extends QueryPack {
 
   private def qSumAll(s: SparkSession, sf: String): DataFrame = flat(Grouping.sum(g(s, sf), Nil))
   private val qSumAllSql = withSG(
-    s"SELECT '' AS series, ts, ${dsum("value")} AS value FROM g GROUP BY ts $ord")
+    s"SELECT '' AS series, ts, ${sqlSum("value")} AS value FROM g GROUP BY ts $ord")
 
   private def qMultiply(s: SparkSession, sf: String): DataFrame =
     flat(Grouping.multiplyExact(
@@ -129,8 +105,6 @@ object M3 extends QueryPack {
       "value * 60.0 / 21600.0"))
 
   // ---- temporal ------------------------------------------------------------
-  private val part = "PARTITION BY etype, usr ORDER BY ts"
-
   private def qDerivative(s: SparkSession, sf: String): DataFrame =
     flat(Temporal.derivative(g(s, sf), grid))
   private val qDerivativeSql = withSG(
@@ -231,7 +205,7 @@ object M3 extends QueryPack {
   private val qSummarizeSumSql = withSG(
     s"""SELECT $ser AS series,
        |  ${grid.startMs} + ((ts - ${grid.startMs}) // 86400000) * 86400000 AS ts,
-       |  ${dsum("value")} AS value
+       |  ${sqlSum("value")} AS value
        |FROM g GROUP BY etype, usr, 2 $ord""".stripMargin)
 
   private def qSummarizeLast(s: SparkSession, sf: String): DataFrame =
@@ -391,7 +365,7 @@ object M3 extends QueryPack {
     flat(SeriesSet.topK(g(s, sf), 5, "sum").drop("_rank"))
   private val qTopKSql = withSG(
     s""", keys AS (
-       |  SELECT etype, usr, ${dsum("value")} AS k, $ser AS sk
+       |  SELECT etype, usr, ${sqlSum("value")} AS k, $ser AS sk
        |  FROM g GROUP BY etype, usr),
        |top AS (SELECT etype, usr FROM keys
        |        QUALIFY row_number() OVER (ORDER BY k DESC, sk) <= 5)
@@ -403,7 +377,7 @@ object M3 extends QueryPack {
       .withColumnRenamed("_rank", "rnk"), Seq("rnk"))
   private val qSortSeriesSql = withSG(
     s""", keys AS (
-       |  SELECT etype, usr, ${dsum("value")} / count(value) AS k, $ser AS sk
+       |  SELECT etype, usr, ${sqlSum("value")} / count(value) AS k, $ser AS sk
        |  FROM g GROUP BY etype, usr),
        |rk AS (SELECT etype, usr, row_number() OVER (ORDER BY k DESC, sk) AS rnk FROM keys)
        |SELECT $ser AS series, g.ts, g.value, rk.rnk

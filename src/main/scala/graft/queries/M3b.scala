@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.core.{QueryGrid, Tables, TsSchema}
+import graft.core.OracleSafe.sqlSum
 import graft.lang.m3.M3QL
 import graft.lang.prom.PromQL
 import graft.stages._
@@ -12,41 +13,17 @@ import org.apache.spark.sql.functions._
   * queries through the M3QL parser and the PromQL compiler.
   */
 object M3b extends QueryPack {
+  import SeriesOracle._
   private val S = TsSchema
   private val grid = Tables.EventsGrid6h
 
-  private def raw(s: SparkSession, sf: String): DataFrame = Tables.eventSamples(s, sf)
-  private def g(s: SparkSession, sf: String): DataFrame = Tables.griddedEventSamples(s, sf)
-
-  private def flat(df: DataFrame, extra: Seq[String] = Nil): DataFrame = {
-    val base = Seq(
-      S.seriesKey(col(S.LabelsCol)).as("series"),
-      col(S.Ts).as("ts"), col(S.Value).as("value")) ++ extra.map(col)
-    df.select(base: _*)
-      .where(col("value").isNotNull)
-      .orderBy((Seq("series", "ts", "value") ++ extra).map(col): _*)
-  }
-
-  private val sCte =
-    "s AS (SELECT event_type AS etype, CAST(user_id % 10 AS VARCHAR) AS usr, " +
-      "epoch_ms(ts) AS t, value FROM events)"
-  private val gCte =
-    "g AS (SELECT etype, usr, 1704067200000 + ((t - 1704067200000) // 21600000) * 21600000 AS ts, " +
-      "CAST(sum(CAST(value AS DECIMAL(38,9))) AS DOUBLE) / count(value) AS value " +
-      "FROM s GROUP BY 1, 2, 3)"
   /** fetch-unfold view: LAST sample per 6h bucket — the reference keeps the
     * latest sample per aligned timestamp (TimeSeriesUnfoldAggregator:305-320),
     * so compiler-path (M3QL text) oracles read gl, not the avg view g. */
   private val glCte =
-    "gl AS (SELECT etype, usr, 1704067200000 + ((t - 1704067200000) // 21600000) * 21600000 AS ts, " +
+    s"gl AS (SELECT etype, usr, $bucket6h AS ts, " +
       "arg_max(value, t) AS value " +
       "FROM s GROUP BY 1, 2, 3)"
-  private def withSG(body: String) = s"WITH $sCte, $gCte $body"
-  private val ser = "'name:' || etype || ',user:' || usr"
-  private val serName = "'name:' || etype"
-  private val ord = "ORDER BY series, ts, value"
-  private val part = "PARTITION BY etype, usr ORDER BY ts"
-  private def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,9))) AS DOUBLE)"
   private val dayBucket = s"${grid.startMs} + ((ts - ${grid.startMs}) // 86400000) * 86400000"
 
   // ---- percentiles ---------------------------------------------------------
@@ -84,7 +61,7 @@ object M3b extends QueryPack {
   private val histCte =
     s""", h AS (
        |  SELECT etype, LEAST(CAST(floor(value / 5) AS BIGINT), 5) AS b,
-       |         1704067200000 + ((t - 1704067200000) // 21600000) * 21600000 AS ts,
+       |         $bucket6h AS ts,
        |         CAST(count(*) AS DOUBLE) AS cnt
        |  FROM s GROUP BY 1, 2, 3),
        |c AS (
@@ -153,13 +130,13 @@ object M3b extends QueryPack {
 
   private val summarizeQs = Seq(
     QueryDef("m3_summarize_p90", qSummarizeP90, Some(qSummarizeP90Sql)),
-    summarizeQ("m3_summarize_avg", "avg", s"${dsum("value")} / count(value)"),
+    summarizeQ("m3_summarize_avg", "avg", s"${sqlSum("value")} / count(value)"),
     summarizeQ("m3_summarize_min", "min", "min(value)"),
     summarizeQ("m3_summarize_max", "max", "max(value)"),
     summarizeQ("m3_summarize_count", "count", "CAST(count(value) AS DOUBLE)"),
     summarizeQ("m3_summarize_stddev", "stddev",
       s"""CASE WHEN count(value) > 1 THEN
-         | sqrt((${dsum("value * value")} - ${dsum("value")} * ${dsum("value")} / CAST(count(value) AS DOUBLE))
+         | sqrt((${sqlSum("value * value")} - ${sqlSum("value")} * ${sqlSum("value")} / CAST(count(value) AS DOUBLE))
          |      / (CAST(count(value) AS DOUBLE) - 1.0)) END""".stripMargin,
       having = "HAVING count(value) > 1"))
 
@@ -215,7 +192,7 @@ object M3b extends QueryPack {
     flat(SeriesSet.slice(g(s, sf), 3, by = "sum", tail = true).drop("_rank"))
   private def sliceSql(cmp: String) = withSG(
     s""", keys AS (
-       |  SELECT etype, usr, ${dsum("value")} AS k, $ser AS sk
+       |  SELECT etype, usr, ${sqlSum("value")} AS k, $ser AS sk
        |  FROM g GROUP BY etype, usr),
        |rk AS (SELECT etype, usr, row_number() OVER (ORDER BY k DESC, sk) AS rnk FROM keys),
        |nn AS (SELECT count(*) AS n FROM keys)
@@ -282,11 +259,11 @@ object M3b extends QueryPack {
     s""", $glCte,
        |l12 AS (
        |  SELECT usr, 1704067200000 + ((ts - 1704067200000) // 43200000) * 43200000 AS t2,
-       |         ${dsum("value")} / count(value) AS value
+       |         ${sqlSum("value")} / count(value) AS value
        |  FROM gl WHERE etype = 'click' GROUP BY 1, 2),
        |r12 AS (
        |  SELECT usr, (ts // 43200000) * 43200000 AS t2,
-       |         ${dsum("value")} AS value
+       |         ${sqlSum("value")} AS value
        |  FROM gl WHERE etype = 'view' GROUP BY 1, 2)
        |SELECT * FROM (
        |  SELECT 'name:click,type:ratios,user:' || l.usr AS series, l.t2 AS ts,
@@ -308,10 +285,10 @@ object M3b extends QueryPack {
   private val qDivideUnionMixedStepSql = withSG(
     s""", $glCte,
        |l6 AS (SELECT usr, ts, value FROM gl WHERE etype = 'click'),
-       |lv1 AS (SELECT usr, (ts // 86400000) * 86400000 AS ts, ${dsum("value")} AS value
+       |lv1 AS (SELECT usr, (ts // 86400000) * 86400000 AS ts, ${sqlSum("value")} AS value
        |        FROM gl WHERE etype = 'view' GROUP BY 1, 2),
        |r6 AS (SELECT usr, ts, value FROM gl WHERE etype = 'error'),
-       |r1 AS (SELECT usr, (ts // 86400000) * 86400000 AS ts, ${dsum("value")} / count(value) AS value
+       |r1 AS (SELECT usr, (ts // 86400000) * 86400000 AS ts, ${sqlSum("value")} / count(value) AS value
        |       FROM gl WHERE etype = 'error' GROUP BY 1, 2)
        |SELECT * FROM (
        |  SELECT 'name:click,type:ratios,user:' || l.usr AS series, l.ts AS ts,
@@ -332,7 +309,7 @@ object M3b extends QueryPack {
   private val qSortAscendingSql = withSG(
     s""", $glCte,
        |keys AS (
-       |  SELECT usr, ${dsum("value")} AS k, 'name:click,user:' || usr AS sk
+       |  SELECT usr, ${sqlSum("value")} AS k, 'name:click,user:' || usr AS sk
        |  FROM gl WHERE etype = 'click' GROUP BY usr),
        |rk AS (SELECT usr, row_number() OVER (ORDER BY k ASC, sk) AS rnk FROM keys)
        |SELECT 'name:click,user:' || gl.usr AS series, gl.ts AS ts, gl.value AS value, rk.rnk AS rnk
@@ -343,7 +320,7 @@ object M3b extends QueryPack {
   private def qPromAgg(s: SparkSession, sf: String): DataFrame =
     flat(PromQL.query(s, g(s, sf), grid, """sum(sqrt(click))"""))
   private val qPromAggSql = withSG(
-    s"""SELECT '' AS series, ts, ${dsum("sqrt(value)")} AS value
+    s"""SELECT '' AS series, ts, ${sqlSum("sqrt(value)")} AS value
        |FROM g WHERE etype = 'click' GROUP BY ts $ord""".stripMargin)
 
   private def qPromOverTime(s: SparkSession, sf: String): DataFrame =

@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.core.{Tables, TsSchema}
+import graft.core.Tables
+import graft.core.OracleSafe.sqlSum
 import graft.lang.prom.PromQL
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,30 +15,11 @@ import org.apache.spark.sql.functions._
   * same parquet.
   */
 object PromX extends QueryPack {
-  private val S = TsSchema
+  import SeriesOracle._
   private val grid = Tables.EventsGrid6h
 
-  private def g(s: SparkSession, sf: String): DataFrame = Tables.griddedEventSamples(s, sf)
   private def run(s: SparkSession, sf: String, q: String): DataFrame =
     PromQL.query(s, g(s, sf), grid, q)
-
-  private def flat(df: DataFrame): DataFrame =
-    df.select(
-        S.seriesKey(col(S.LabelsCol)).as("series"),
-        col(S.Ts).as("ts"), col(S.Value).as("value"))
-      .where(col("value").isNotNull)
-      .orderBy("series", "ts", "value")
-
-  private val sCte =
-    "s AS (SELECT event_type AS etype, CAST(user_id % 10 AS VARCHAR) AS usr, " +
-      "epoch_ms(ts) AS t, value FROM events)"
-  private val gCte =
-    "g AS (SELECT etype, usr, 1704067200000 + ((t - 1704067200000) // 21600000) * 21600000 AS ts, " +
-      "CAST(sum(CAST(value AS DECIMAL(38,9))) AS DOUBLE) / count(value) AS value " +
-      "FROM s GROUP BY 1, 2, 3)"
-  private def withSG(body: String) = s"WITH $sCte, $gCte $body"
-  private val ord = "ORDER BY series, ts, value"
-  private def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,9))) AS DOUBLE)"
 
   // ---- topk: per-instant rank (unlike M3 topK's per-series rank) -----------
   private def qTopk(s: SparkSession, sf: String): DataFrame =
@@ -53,7 +35,7 @@ object PromX extends QueryPack {
   private def qOffsetSum(s: SparkSession, sf: String): DataFrame =
     flat(run(s, sf, """sum(view{user="4"} offset 12h)"""))
   private val qOffsetSumSql = withSG(
-    s"""SELECT '' AS series, ts + 43200000 AS ts, ${dsum("value")} AS value
+    s"""SELECT '' AS series, ts + 43200000 AS ts, ${sqlSum("value")} AS value
        |FROM g WHERE etype = 'view' AND usr = '4' AND ts <= ${grid.endMs - 43200000L}
        |GROUP BY ts $ord""".stripMargin)
 
@@ -115,7 +97,7 @@ object PromX extends QueryPack {
   private def qOnDivide(s: SparkSession, sf: String): DataFrame =
     flat(run(s, sf, "click / on(user) (sum by (user) (view))"))
   private val qOnDivideSql = withSG(
-    s""", r AS (SELECT usr, ts, ${dsum("value")} AS rv
+    s""", r AS (SELECT usr, ts, ${sqlSum("value")} AS rv
        |        FROM g WHERE etype = 'view' GROUP BY usr, ts)
        |SELECT 'user:' || g.usr AS series, g.ts AS ts,
        |       CASE WHEN r.rv = 0 THEN CAST('NaN' AS DOUBLE) ELSE g.value / r.rv END AS value
@@ -133,7 +115,7 @@ object PromX extends QueryPack {
       """(label_replace(click, "op", "c", "", "") or label_replace(view, "op", "v", "", ""))""" +
         " * on(user) group_left (sum by (user) (error))"))
   private val qGroupLeftSql = withSG(
-    s""", r AS (SELECT usr, ts, ${dsum("value")} AS rv
+    s""", r AS (SELECT usr, ts, ${sqlSum("value")} AS rv
        |        FROM g WHERE etype = 'error' GROUP BY usr, ts)
        |SELECT 'op:' || (CASE WHEN g.etype = 'click' THEN 'c' ELSE 'v' END)
        |         || ',user:' || g.usr AS series, g.ts AS ts,
@@ -355,7 +337,7 @@ object PromX extends QueryPack {
     flat(run(s, sf, "click - scalar(sum(view))"))
       .where(!isnan(col("value")))
   private val qScalarBinopSql = withSG(
-    s""", sv AS (SELECT ts, ${dsum("value")} AS svv FROM g WHERE etype = 'view' GROUP BY ts)
+    s""", sv AS (SELECT ts, ${sqlSum("value")} AS svv FROM g WHERE etype = 'view' GROUP BY ts)
        |SELECT 'user:' || usr AS series, g.ts AS ts, g.value - sv.svv AS value
        |FROM g JOIN sv ON g.ts = sv.ts WHERE etype = 'click' $ord""".stripMargin)
 
@@ -411,14 +393,14 @@ object PromX extends QueryPack {
   private def qSumWithout(s: SparkSession, sf: String): DataFrame =
     flat(run(s, sf, "sum without (user) (view)"))
   private val qSumWithoutSql = withSG(
-    s"""SELECT '' AS series, ts, ${dsum("value")} AS value
+    s"""SELECT '' AS series, ts, ${sqlSum("value")} AS value
        |FROM g WHERE etype = 'view' GROUP BY ts $ord""".stripMargin)
 
   private def qAvgWithout(s: SparkSession, sf: String): DataFrame =
     flat(run(s, sf, "avg without () (click)"))
   private val qAvgWithoutSql = withSG(
     s"""SELECT 'user:' || usr AS series, ts,
-       |  ${dsum("value")} / count(value) AS value
+       |  ${sqlSum("value")} / count(value) AS value
        |FROM g WHERE etype = 'click' GROUP BY usr, ts $ord""".stripMargin)
 
   // ---- subquery staleness carry: selector inner + lookback-delta -----------
@@ -497,7 +479,7 @@ object PromX extends QueryPack {
        |c AS MATERIALIZED (SELECT sp.usr, sp.t, i.value, i.ti
        |      FROM sp ASOF JOIN i ON sp.usr = i.usr AND i.ti <= sp.t),
        |v AS (SELECT usr, t, value FROM c WHERE t - ti < $staleDelta),
-       |s2 AS (SELECT t, ${dsum("value")} AS value FROM v GROUP BY t)
+       |s2 AS (SELECT t, ${sqlSum("value")} AS value FROM v GROUP BY t)
        |SELECT '' AS series, t AS ts,
        |  CAST(sum(CAST(value AS DECIMAL(38,9))) OVER (ORDER BY t
        |       RANGE BETWEEN 86400000 PRECEDING AND CURRENT ROW) AS DOUBLE) AS value

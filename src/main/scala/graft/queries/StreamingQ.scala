@@ -96,9 +96,18 @@ object StreamingQ extends QueryPack {
     ()
   }
 
+  /** The roundtrip's base dir, one memo entry per (session, sf): the query
+    * returns a lazy read of its `table/`, so the dir lives until the entry
+    * is evicted or the session cleared, and is deleted then. */
+  private val roundtripBase = new graft.core.Memo[String, String](dir =>
+    deleteRec(java.nio.file.Paths.get(dir)))
+
   private def qRoundtrip(s: SparkSession, sf: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_stream")
+    val base = roundtripBase(s, sf)(
+      java.nio.file.Files.createTempDirectory("graft_stream").toString)
     val (table, ckpt) = (s"$base/table", s"$base/ckpt")
+    // every run ingests into an empty table from a fresh checkpoint
+    Seq(table, ckpt).foreach(d => deleteRec(java.nio.file.Paths.get(d)))
     // wire lines; max() per (series, ts) keeps the input unique per key so
     // the FIRST-dedup of the intentional duplicates is order-independent
     val src = stagedSrc(s, sf, "stream_wire") { dir =>
@@ -643,6 +652,14 @@ object StreamingQ extends QueryPack {
   private[graft] def ingestLagLedger(s: SparkSession, sf: String,
                                      mtimeOfBucket: Int => Long): DataFrame = {
     val base = java.nio.file.Files.createTempDirectory("graft_ilag")
+    // the result is a local frame of the collected ledger rows, so the
+    // table and checkpoint are deleted once the stream has stopped
+    try ingestLagRun(s, sf, mtimeOfBucket, base) finally deleteRec(base)
+  }
+
+  private def ingestLagRun(s: SparkSession, sf: String,
+                           mtimeOfBucket: Int => Long,
+                           base: java.nio.file.Path): DataFrame = {
     val table = s"$base/table"
     val wire = Tables.eventSamples(s, sf)
       .where(col(S.LabelsCol).getItem("name") === "click")

@@ -57,8 +57,8 @@ object IngestLag {
   /** Distinct sources retained (FIFO-evicted beyond this) — needed since
     * metering went default-on in `Ingest.writer`: every ingest stream
     * records under source = tablePath, and a long-lived session writing to
-    * per-run paths (the registry roundtrip query, the soak) would
-    * otherwise grow the ledger map monotonically. */
+    * per-run paths (the soak, per-test temp tables) would otherwise grow
+    * the ledger map monotonically. */
   val MaxSources = 256
 
   private val reg =
@@ -198,132 +198,57 @@ object IngestLag {
     } finally df.unpersist(blocking = false)
   }
 
-  /** Meter a NAMED streaming query from its progress events — the listener
-    * path for sinks this module doesn't wrap, e.g. the production
-    * day-partitioned parquet writer ([[graft.streaming.Ingest.writer]] —
-    * chain `.queryName(...)` before `.start()`). Spark populates the
-    * progress `eventTime` stats only for watermarked queries (the ingest
-    * path always is), and the per-row lag sum falls out of the average:
-    * Σ(arrival − t) = n·(arrival − avg). Arrival = trigger start; commit =
-    * trigger start + triggerExecution — the same two instants the metered
-    * sink stamps. Remove with [[detachListener]], or pass
-    * `autoDetach = true` to have the listener remove itself when a query
-    * that STARTED under `queryName` terminates (the default-on metering in
-    * [[graft.streaming.Ingest.writer]] uses this, one listener per stream
-    * lifetime). */
-  /** PENDING auto-attached listeners by source — attached but no query has
-    * started under their name yet. A `writer()` whose `start()` never
-    * happens (or throws) leaves a listener that can never self-detach;
-    * capping the pending set per source bounds that leak on retry loops.
-    * Eagerly REPLACING the previous pending listener would be wrong: two
-    * writers for the same table built before either starts would silently
-    * un-meter the first stream, so up to [[MaxPendingPerSource]] coexist
-    * and only older ones beyond the cap detach. A listener leaves the
-    * pending set the moment its query starts (then its termination
-    * detaches it from the bus). */
-  private val MaxPendingPerSource = 4
-  private val pendingAuto =
-    scala.collection.concurrent.TrieMap.empty[String, List[LagListener]]
-  private val pendingLock = new Object
+  /** Query-name prefix that marks a stream for listener metering. */
+  private val StreamPrefix = "graft_ingest:"
 
-  private final class LagListener(
-      spark: org.apache.spark.sql.SparkSession,
-      val queryName: String, source: String, autoDetach: Boolean)
+  /** The query name that meters a stream under `source`:
+    * [[graft.streaming.Ingest.writer]] names its query
+    * `streamName(tablePath)`. Spark rejects a second ACTIVE query with the
+    * same name, so a table has at most one ingest stream at a time. */
+  def streamName(source: String): String = StreamPrefix + source
+
+  /** Meters streaming queries from their progress events — the path for
+    * sinks this module doesn't wrap, e.g. the production day-partitioned
+    * parquet writer. Any query named `streamName(source)` is recorded under
+    * `source`. Spark populates the progress `eventTime` stats only for
+    * watermarked queries (the ingest path always is), and the per-row lag
+    * sum falls out of the average: Σ(arrival − t) = n·(arrival − avg).
+    * Arrival = trigger start; commit = trigger start + triggerExecution —
+    * the same two instants the metered sink stamps. It holds no per-query
+    * state, so one instance serves every session and a writer that never
+    * starts leaves nothing behind. */
+  private object LagListener
       extends org.apache.spark.sql.streaming.StreamingQueryListener {
     import org.apache.spark.sql.streaming.StreamingQueryListener._
-    /** true once a query STARTED under our name — a started listener is
-      * live (its termination will detach it) and must never be replaced. */
-    @volatile var sawStart = false
-    // runIds observed STARTING under our name: termination of one of
-    // them detaches this listener (the autoDetach lifecycle used by the
-    // default-metered ingest writer, so each ingest stream leaves no
-    // listener behind on the session)
-    private val owned =
-      java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
-    /** Adopt a runId observed ACTIVE on the session rather than via a
-      * QueryStartedEvent — used when this listener attached after the start
-      * event already fired (overflow-eviction path in [[attachListener]]).
-      * Marks the listener started so its lifecycle is owned by the
-      * termination event, exactly as if onQueryStarted had seen it. */
-    def adoptRun(runId: java.util.UUID): Unit = {
-      sawStart = true; owned.add(runId); ()
-    }
-    override def onQueryStarted(e: QueryStartedEvent): Unit =
-      if (autoDetach && queryName == e.name) {
-        sawStart = true; owned.add(e.runId)
-        // no longer pending: lifecycle is now owned by termination
-        pendingLock.synchronized {
-          pendingAuto.updateWith(source) {
-            case Some(ls) =>
-              val rest = ls.filterNot(_ eq this)
-              if (rest.isEmpty) None else Some(rest)
-            case None => None
-          }
-        }
-        ()
-      }
-    override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-      if (autoDetach && owned.remove(e.runId))
-        spark.streams.removeListener(this)
+    override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     override def onQueryProgress(e: QueryProgressEvent): Unit = {
       val p = e.progress
       val et = p.eventTime
-      if (queryName == p.name && p.numInputRows > 0 && et != null &&
+      if (p.name != null && p.name.startsWith(StreamPrefix) &&
+          p.numInputRows > 0 && et != null &&
           et.containsKey("min") && et.containsKey("avg")) {
         def ms(s: String): Long = java.time.Instant.parse(s).toEpochMilli
         val arrival = ms(p.timestamp)
         val commit = arrival +
           Option(p.durationMs.get("triggerExecution"))
             .map(_.longValue).getOrElse(0L)
-        record(BatchLag(source, p.batchId, p.numInputRows,
-          ms(et.get("min")), ms(et.get("max")), arrival, commit,
-          p.numInputRows * (arrival - ms(et.get("avg")))))
+        record(BatchLag(p.name.stripPrefix(StreamPrefix), p.batchId,
+          p.numInputRows, ms(et.get("min")), ms(et.get("max")), arrival,
+          commit, p.numInputRows * (arrival - ms(et.get("avg")))))
       }
     }
   }
 
-  def attachListener(spark: org.apache.spark.sql.SparkSession,
-                     queryName: String, source: String,
-                     autoDetach: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQueryListener = {
-    val l = new LagListener(spark, queryName, source, autoDetach)
-    if (autoDetach) pendingLock.synchronized {
-      // newest first; anything beyond the cap that still never started is
-      // an orphan from a failed/abandoned start and detaches now.
-      // sawStart is set by the ASYNC listener bus, so a listener whose
-      // query has already started may not know it yet — a burst of
-      // writer() builds for one tablePath must not un-meter that live
-      // stream. Anything matching an active query NAME is therefore
-      // treated as started: kept on the bus (its termination event will
-      // detach it) and exempt from the pending cap.
-      val prev = pendingAuto.getOrElse(source, Nil).filterNot(_.sawStart)
-      val all = l :: prev
-      val (keep, overflow) = all.splitAt(MaxPendingPerSource)
-      val activeRuns: Map[String, Seq[java.util.UUID]] =
-        spark.streams.active.toSeq
-          .flatMap(q => Option(q.name).map(_ -> q.runId))
-          .groupMap(_._1)(_._2)
-      val (live, drop) = overflow.partition(x => activeRuns.contains(x.queryName))
-      drop.foreach(spark.streams.removeListener)
-      // A kept-because-live listener attached AFTER its query's start event
-      // fired, so onQueryStarted can never populate `owned` — without
-      // adoption the termination event would not detach it, leaving a
-      // permanent bus listener that double-records every progress event
-      // (and `keep ++ live` would grow without bound). Adopting the active
-      // runIds (sawStart=true) hands its lifecycle to onQueryTerminated
-      // and removes it from the pending set, restoring the cap.
-      live.foreach(x => activeRuns(x.queryName).foreach(x.adoptRun))
-      if (keep.isEmpty) pendingAuto.remove(source)
-      else pendingAuto.put(source, keep)
-      ()
+  /** Installs the lag listener on `spark`'s streams once — one listener
+    * per session, whatever the number of streams; later calls are no-ops.
+    * [[graft.streaming.Ingest.writer]] calls it, so ingest streams are
+    * metered by default. */
+  def listen(spark: org.apache.spark.sql.SparkSession): Unit =
+    LagListener.synchronized {
+      if (!spark.streams.listListeners().contains(LagListener))
+        spark.streams.addListener(LagListener)
     }
-    spark.streams.addListener(l)
-    l
-  }
-
-  def detachListener(spark: org.apache.spark.sql.SparkSession,
-                     l: org.apache.spark.sql.streaming.StreamingQueryListener): Unit =
-    spark.streams.removeListener(l)
 
   import JsonEsc.esc
 

@@ -74,34 +74,23 @@ object Ingest {
       .drop("_event_time")
   }
 
-  /** Monotonic suffix so concurrent ingest streams to distinct tables (or
-    * restarts within one session) never collide on the active-query-name
-    * uniqueness Spark enforces. */
-  private val writerSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-
   /** Write the canonical stream to a day-partitioned parquet table.
     * trigger interval ≈ the reference's refresh interval (~1s visibility).
     *
-    * Ingestion-lag metering is ON BY DEFAULT (r11 verdict: the stats
-    * `ingestionLag` section must populate for every ingest stream without
-    * caller opt-in, the way the reference meters every bulk request): the
-    * query is named internally and a self-detaching
-    * [[graft.serve.IngestLag.attachListener]] records per-batch lag under
-    * source = `tablePath` — read it back with
-    * `IngestLag.batches(tablePath)` / `TsdbStats.renderGroupedWithLag`.
-    * To meter under a custom name, pass `queryName` HERE rather than
-    * chaining `.queryName` on the result (a chained override would orphan
-    * the internal listener's name). */
+    * Ingestion-lag metering is ON BY DEFAULT, the way the reference meters
+    * every bulk request: the query is named
+    * [[graft.serve.IngestLag.streamName]]`(tablePath)` and the session's one
+    * lag listener records per-batch lag under source = `tablePath` — read
+    * it back with `IngestLag.batches(tablePath)` /
+    * `TsdbStats.renderGroupedWithLag`. The name is derived from the table,
+    * so a second active writer to the same table fails at `start()` with
+    * Spark's duplicate-name error instead of sharing its `_spark_metadata`
+    * log; a restart after `stop()` starts normally. */
   def writer(samples: DataFrame, tablePath: String, checkpoint: String,
-             triggerMs: Long = 1000L,
-             queryName: Option[String] = None): DataStreamWriter[org.apache.spark.sql.Row] = {
-    val qn = queryName.getOrElse(
-      s"graft_ingest_${writerSeq.incrementAndGet()}_" +
-        Integer.toHexString(tablePath.hashCode))
-    graft.serve.IngestLag.attachListener(
-      samples.sparkSession, qn, source = tablePath, autoDetach = true)
+             triggerMs: Long = 1000L): DataStreamWriter[org.apache.spark.sql.Row] = {
+    graft.serve.IngestLag.listen(samples.sparkSession)
     samples.writeStream
-      .queryName(qn)
+      .queryName(graft.serve.IngestLag.streamName(tablePath))
       .format("parquet")
       .option("path", tablePath)
       .option("checkpointLocation", checkpoint)

@@ -8,7 +8,8 @@ import graft.queries.StreamingQ
   * user bucket and used to rely on "batch i == bucket i" via mtime-ordered
   * listing; here the mtimes are REVERSED (bucket 2 oldest → processed
   * first) and also scrambled, and the ledger must not move, because batch
-  * identity now comes from the rows themselves (`meteredSink` batchKey). */
+  * identity now comes from the rows themselves (`meteredSink` batchKey).
+  * It also pins the temp-dir bound of the two ingest registry rows. */
 class IngestLagOrderSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
@@ -38,6 +39,31 @@ class IngestLagOrderSpec extends SparkTestBase {
     val scrambled = ledger(b => 1000000000000L + Seq(1, 2, 0)(b) * 60000L)
     assert(scrambled == forward,
       "an arbitrary arrival permutation must not change the ledger")
+  }
+
+  test("streaming runs leave no ledger dir and one roundtrip dir, removed by clearSession") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    if (!available) cancel(s"testdata not available at $sf")
+    val s = spark.newSession()
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    // base dirs only: staged sources are named graft_<tag><n>
+    def dirs(re: String): Set[Path] = {
+      val st = Files.list(tmp)
+      try st.iterator.asScala.filter(p => p.getFileName.toString.matches(re)).toSet
+      finally st.close()
+    }
+    val (ledger0, roundtrip0) = (dirs("""graft_ilag\d+"""), dirs("""graft_stream\d+"""))
+    for (_ <- 0 until 2) {
+      graft.queries.Registry.queries("tsdb_ingest_lag")(s, sf).collect()
+      graft.queries.Registry.queries("streaming_ingest_roundtrip")(s, sf).collect()
+    }
+    assert(dirs("""graft_ilag\d+""") -- ledger0 == Set.empty,
+      "the ledger run deletes its table and checkpoint once the stream stops")
+    val roundtrip = dirs("""graft_stream\d+""") -- roundtrip0
+    assert(roundtrip.size == 1, s"one roundtrip dir per (session, sf), got $roundtrip")
+    graft.core.Memo.clearSession(s)
+    assert(!Files.exists(roundtrip.head), "clearSession deletes the roundtrip dir")
   }
 
   test("meteredSink rejects a batch whose batchKey is not constant") {

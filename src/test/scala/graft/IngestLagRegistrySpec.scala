@@ -2,11 +2,12 @@ package graft
 
 import graft.serve.IngestLag
 import graft.serve.IngestLag.BatchLag
+import graft.streaming.Ingest
 
-/** Bounds added when lag metering went default-on (r12): the ledger's
-  * source map is LRU-bounded and auto-attached listeners cannot
-  * accumulate. These are driver-memory contracts for long-lived sessions
-  * ingesting to per-run table paths. */
+/** Bounds of default-on lag metering: the ledger's source map is
+  * LRU-bounded, and a session carries one lag listener however many
+  * writers it builds. These are driver-memory contracts for long-lived
+  * sessions ingesting to per-run table paths. */
 class IngestLagRegistrySpec extends SparkTestBase {
 
   private def lag(src: String, batch: Long = 0L) =
@@ -37,59 +38,37 @@ class IngestLagRegistrySpec extends SparkTestBase {
     (0 until IngestLag.MaxSources).foreach(i => IngestLag.clear(s"ilagreg:churn$i"))
   }
 
-  test("pending auto-listeners are capped per source; explicit attach is not") {
-    val src = "ilagreg:pending"
-    val before = spark.streams.listListeners().length
-    // 10 writer-style auto attaches whose queries never start — the
-    // failed-start retry-loop shape; only the newest 4 may remain pending
-    val ls = (0 until 10).map(i =>
-      IngestLag.attachListener(spark, s"never_starts_$i", src, autoDetach = true))
-    val after = spark.streams.listListeners().length
-    assert(after - before <= 4,
-      s"pending auto-listeners must be capped, leaked ${after - before}")
-    // explicit (non-auto) listeners are caller-managed and unaffected
-    val explicit = IngestLag.attachListener(spark, "explicit_q", src)
-    assert(spark.streams.listListeners().length == after + 1)
-    // cleanup: detach whatever remains
-    (ls :+ explicit).foreach(IngestLag.detachListener(spark, _))
-    IngestLag.clear(src)
-  }
-
-  test("overflow auto-listeners matching an ACTIVE query adopt its runId " +
-       "and detach when it terminates") {
-    // r13 advice (medium): a listener attached AFTER its query's start
-    // event fired can never see QueryStartedEvent, so before the adoption
-    // fix an overflow listener kept-because-live had an empty `owned` set —
-    // termination never detached it, leaving a permanent bus listener per
-    // extra writer() build that double-records every progress event.
-    val src = "ilagreg:liveadopt"
-    val before = spark.streams.listListeners().length
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_adopt").toString
-    val q = spark.readStream.format("rate")
-      .option("rowsPerSecond", 1).load()
-      .writeStream.queryName("live_adopt_q").format("noop")
-      .option("checkpointLocation", ckpt)
-      .start()
-    val ls =
-      try {
-        // 6 auto attaches AFTER start: 4 stay pending (cap), 2 overflow —
-        // both match the active name, so both must be kept AND adopted
-        val ls = (0 until 6).map(_ =>
-          IngestLag.attachListener(spark, "live_adopt_q", src, autoDetach = true))
-        assert(spark.streams.listListeners().length - before == 6,
-          "listeners naming a live query must never be dropped from the bus")
-        ls
-      } finally q.stop()
-    // the two ADOPTED listeners own the runId now — termination detaches
-    // them (bus delivery is async: poll with a deadline)
-    val deadline = System.currentTimeMillis() + 15000
-    while (spark.streams.listListeners().length - before > 4 &&
-           System.currentTimeMillis() < deadline) Thread.sleep(100)
-    val leaked = spark.streams.listListeners().length - before
-    assert(leaked <= 4,
-      s"adopted overflow listeners must detach at termination, $leaked remain " +
-        "(expected only the 4 capped pending ones)")
-    ls.foreach(IngestLag.detachListener(spark, _))
-    IngestLag.clear(src)
+  test("one lag listener per session: streams and unstarted writers add at most one") {
+    // the listener holds no per-writer state: three metered streams and ten
+    // writers that never start (the failed-start retry-loop shape) leave at
+    // most the session's one listener behind, and every stream is metered
+    import java.nio.file.{Files, Paths}
+    val s = spark.newSession()
+    val before = s.streams.listListeners().length
+    val dir = Files.createTempDirectory("graft_onelis").toString
+    val src = s"$dir/src"
+    Files.createDirectories(Paths.get(src))
+    val late = System.currentTimeMillis() - 300000L
+    Files.write(Paths.get(s"$src/b1.json"), Seq(
+      s"""{"labels":"host a","timestamp":$late,"value":1.0}""",
+      s"""{"labels":"host b","timestamp":${late + 2000},"value":2.0}""")
+      .mkString("\n").getBytes)
+    val tables = (0 until 3).map(i => s"$dir/tbl$i")
+    try {
+      tables.zipWithIndex.foreach { case (t, i) => Ingest.runOnce(s, src, t, s"$dir/ckp$i") }
+      (0 until 10).foreach(i => Ingest.writer(
+        Ingest.withIngestSemantics(Ingest.readJsonStream(s, src), 60000L),
+        s"$dir/never$i", s"$dir/never_ckp$i"))
+      val grew = s.streams.listListeners().length - before
+      assert(grew <= 1, s"one listener per session, the session gained $grew")
+      // listener events are delivered async — poll briefly
+      val deadline = System.currentTimeMillis() + 15000
+      while (tables.exists(IngestLag.batches(_).isEmpty) &&
+             System.currentTimeMillis() < deadline) Thread.sleep(100)
+      tables.foreach { t =>
+        assert(IngestLag.batches(t).map(_.rows) == Vector(2L),
+          s"the runOnce batch into $t must be recorded once")
+      }
+    } finally tables.foreach(IngestLag.clear)
   }
 }

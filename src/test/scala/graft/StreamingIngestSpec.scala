@@ -84,11 +84,11 @@ class StreamingIngestSpec extends SparkTestBase {
         s"""{"labels":"host b","timestamp":${late + 2000},"value":2.0}""")
         .mkString("\n").getBytes)
     val source = s"lag-listener:$dir"
-    val l = graft.serve.IngestLag.attachListener(spark, "lag_listener_q", source)
     try {
       val q = Ingest.writer(
           Ingest.withIngestSemantics(Ingest.readJsonStream(spark, src), 60000L),
-          tbl, ckp, queryName = Some("lag_listener_q"))
+          tbl, ckp)
+        .queryName(graft.serve.IngestLag.streamName(source))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination(); q.stop()
@@ -107,10 +107,7 @@ class StreamingIngestSpec extends SparkTestBase {
       // avg from Σ(arrival − t) = n·(arrival − avg): between the extremes
       assert(b.avgLagMs >= b.coordinatorLagMs - 2000 &&
              b.avgLagMs <= b.coordinatorLagMs)
-    } finally {
-      graft.serve.IngestLag.detachListener(spark, l)
-      graft.serve.IngestLag.clear(source)
-    }
+    } finally graft.serve.IngestLag.clear(source)
   }
 
   test("listener-derived lag equals metered-sink lag on the SAME stream " +
@@ -136,7 +133,7 @@ class StreamingIngestSpec extends SparkTestBase {
         s"""{"labels":"host c","timestamp":${late + 7000},"value":3.0}""")
         .mkString("\n").getBytes)
     val sinkSrc = s"parity-sink:$dir"; val lisSrc = s"parity-listener:$dir"
-    val l = graft.serve.IngestLag.attachListener(spark, "lag_parity_q", lisSrc)
+    graft.serve.IngestLag.listen(spark)
     try {
       val sink = graft.serve.IngestLag.meteredSink(sinkSrc) {
         (df, _) => df.write.mode("append").parquet(tbl)
@@ -147,7 +144,7 @@ class StreamingIngestSpec extends SparkTestBase {
       val q = Ingest.withIngestSemantics(
           Ingest.readJsonStream(spark, src), 60000L)
         .drop("day")
-        .writeStream.queryName("lag_parity_q")
+        .writeStream.queryName(graft.serve.IngestLag.streamName(lisSrc))
         .foreachBatch(sink)
         .option("checkpointLocation", ckp)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -182,16 +179,15 @@ class StreamingIngestSpec extends SparkTestBase {
       // structural floor both channels must clear: the staleness injected
       assert(l0.coordinatorLagMs >= 293000L && s0.coordinatorLagMs >= 293000L)
     } finally {
-      graft.serve.IngestLag.detachListener(spark, l)
       graft.serve.IngestLag.clear(sinkSrc); graft.serve.IngestLag.clear(lisSrc)
     }
   }
 
   test("ingest lag meters by default — no explicit attach — and the " +
-       "listener detaches itself at termination") {
+       "listener count is unchanged across streams") {
     // r11 verdict item 3: Ingest.writer users must get the ingestionLag
-    // stats section populated WITHOUT remembering attachListener; the
-    // auto-attached listener must also not accumulate on the session
+    // stats section populated without any opt-in; the session's one lag
+    // listener must also not accumulate with the streams it meters
     val dir = Files.createTempDirectory("graft_laga").toFile.getAbsolutePath
     val src = s"$dir/src"; val tbl = s"$dir/tbl"; val ckp = s"$dir/ckp"
     new java.io.File(src).mkdirs()
@@ -201,8 +197,9 @@ class StreamingIngestSpec extends SparkTestBase {
         s"""{"labels":"host a","timestamp":$late,"value":1.0}""",
         s"""{"labels":"host b","timestamp":${late + 2000},"value":2.0}""")
         .mkString("\n").getBytes)
-    val listenersBefore = spark.streams.listListeners().length
+    val tbl2 = s"$dir/tbl2"
     Ingest.runOnce(spark, src, tbl, ckp)   // plain production entry point
+    val listeners = spark.streams.listListeners().length
     try {
       val deadline = System.currentTimeMillis() + 15000
       while (graft.serve.IngestLag.batches(tbl).isEmpty &&
@@ -211,13 +208,37 @@ class StreamingIngestSpec extends SparkTestBase {
       assert(bs.nonEmpty, "default-on metering recorded no batches")
       assert(bs.head.rows == 2)
       assert(bs.head.coordinatorLagMs >= 300000L)
-      // the auto listener removes itself once the query terminates
-      val detachBy = System.currentTimeMillis() + 15000
-      while (spark.streams.listListeners().length > listenersBefore &&
-             System.currentTimeMillis() < detachBy) Thread.sleep(100)
-      assert(spark.streams.listListeners().length == listenersBefore,
-        "auto-attached lag listener must detach at query termination")
-    } finally graft.serve.IngestLag.clear(tbl)
+      // a second stream reuses the session's listener
+      Ingest.runOnce(spark, src, tbl2, s"$dir/ckp2")
+      assert(spark.streams.listListeners().length == listeners,
+        "a further ingest stream must not add a listener to the session")
+    } finally Seq(tbl, tbl2).foreach(graft.serve.IngestLag.clear)
+  }
+
+  test("a second active writer to one table fails at start by name; " +
+       "a restart after stop still starts") {
+    // the query name is derived from the table, so two live streams can
+    // never share one table's _spark_metadata log
+    val dir = Files.createTempDirectory("graft_dupw").toFile.getAbsolutePath
+    val src = s"$dir/src"; val tbl = s"$dir/tbl"
+    new java.io.File(src).mkdirs()
+    Files.write(java.nio.file.Paths.get(s"$src/b1.json"),
+      """{"labels":"host a","timestamp":1704067200000,"value":1.0}""".getBytes)
+    def writer(ckp: String) = Ingest.writer(
+      Ingest.withIngestSemantics(Ingest.readJsonStream(spark, src), 60000L),
+      tbl, ckp)
+    val first = writer(s"$dir/ckp1").start()
+    try {
+      val e = intercept[IllegalArgumentException](writer(s"$dir/ckp2").start())
+      assert(e.getMessage.contains(
+        s"Cannot start query with name ${graft.serve.IngestLag.streamName(tbl)}"), e.getMessage)
+      assert(e.getMessage.contains("already active"), e.getMessage)
+      first.processAllAvailable()
+    } finally first.stop()
+    val again = writer(s"$dir/ckp1").start()
+    try again.processAllAvailable() finally again.stop()
+    assert(spark.read.parquet(tbl).count() == 1)
+    graft.serve.IngestLag.clear(tbl)
   }
 
   test("streaming ingest writes day-partitioned parquet with dedup") {
