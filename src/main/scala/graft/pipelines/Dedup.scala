@@ -483,19 +483,8 @@ object Dedup {
     * exchange-free plan. */
   def writeShingleIndex(docs: DataFrame, n: Int, table: String,
                         idCol: String = "doc_id", buckets: Int = 64): Unit =
-    shingles(docs, n, idCol)
-      // repartition ON the bucket key with bucket-count partitions:
-      // repartition's HashPartitioning and the writer's bucket-id formula
-      // are the same pmod(murmur3, n), so each task holds exactly one
-      // bucket and writes ONE file — without it every input task writes a
-      // file per bucket it touches (W·B tiny files; measured 2000+ per
-      // build at 32 tasks × 64 buckets, and the file-open/commit overhead
-      // dominated the build)
-      .repartition(buckets, col("shingle"))
-      .write.mode("overwrite")
-      .bucketBy(buckets, "shingle")
-      .sortBy("shingle")
-      .saveAsTable(table)
+    graft.core.Dist.writeBucketed(shingles(docs, n, idCol), table, "overwrite",
+      buckets, "shingle")
 
   /** Append a snapshot's shingles into an existing bucketed index table —
     * the maintenance half of the incremental crawl-over-crawl loop: dedup
@@ -504,12 +493,8 @@ object Dedup {
     * so the co-located join property is preserved without a rebuild. */
   def appendShingleIndex(docs: DataFrame, n: Int, table: String,
                          idCol: String = "doc_id", buckets: Int = 64): Unit =
-    shingles(docs, n, idCol)
-      .repartition(buckets, col("shingle")) // one file per bucket, see writeShingleIndex
-      .write.mode("append")
-      .bucketBy(buckets, "shingle")
-      .sortBy("shingle")
-      .saveAsTable(table)
+    graft.core.Dist.writeBucketed(shingles(docs, n, idCol), table, "append",
+      buckets, "shingle")
 
   /** Candidate pairs + exact Jaccard from a persisted bucketed index (the
     * offline two-job form of [[ngramJaccardPairs]]): same math, but the
@@ -1530,12 +1515,9 @@ object Dedup {
   def writeSpanIndex(docs: DataFrame, k: Int, table: String,
                      idCol: String = "doc_id", textCol: String = "text",
                      buckets: Int = 64): Unit =
-    spanGramsCached(docs, k, idCol, textCol)
-      .select(col("_x").as("x")).distinct()
-      .repartition(buckets, col("x")) // one file per bucket, see writeShingleIndex
-      .write.mode("overwrite")
-      .bucketBy(buckets, "x").sortBy("x")
-      .saveAsTable(table)
+    graft.core.Dist.writeBucketed(
+      spanGramsCached(docs, k, idCol, textCol).select(col("_x").as("x")).distinct(),
+      table, "overwrite", buckets, "x")
 
   /** Append a snapshot's window hashes into the span index (bucketed files
     * append per bucket, so co-location survives without a rebuild).
@@ -1545,12 +1527,9 @@ object Dedup {
   def appendSpanIndex(docs: DataFrame, k: Int, table: String,
                       idCol: String = "doc_id", textCol: String = "text",
                       buckets: Int = 64): Unit =
-    spanGramsCached(docs, k, idCol, textCol)
-      .select(col("_x").as("x")).distinct()
-      .repartition(buckets, col("x")) // one file per bucket, see writeShingleIndex
-      .write.mode("append")
-      .bucketBy(buckets, "x").sortBy("x")
-      .saveAsTable(table)
+    graft.core.Dist.writeBucketed(
+      spanGramsCached(docs, k, idCol, textCol).select(col("_x").as("x")).distinct(),
+      table, "append", buckets, "x")
 
   /** Cross-CRAWL duplicated spans without re-scanning prior crawls: a
     * window in `incoming` is flagged when its hash exists in the persisted
@@ -1671,45 +1650,22 @@ object Dedup {
       .distinct()
   }
 
-  /** ROW-LOCAL winnowing fingerprint set — the [[winnowingFingerprints]]
-    * selection (rolling window hash, leftmost-min trailing window,
-    * short-document rule) computed as one array expression over a single
-    * text value: no explode, no per-document window, so it runs on a
-    * STREAMING DataFrame (append mode, stateless) and as a narrow batch
-    * projection. Returns the DISTINCT fp array (positions dropped — pair
-    * probing joins on fp alone); empty array for documents shorter than k
-    * tokens. Selection-identical to the window formulation (spec-pinned per
-    * document in WinnowingSpec). */
-  def winnowFingerprintArray(text: Column, k: Int, w: Int): Column = {
-    require(k >= 1 && w >= 1, "k and w must be >= 1")
-    val toks = split(trim(text), "\\s+")
-    val th = transform(toks, t => polyHash(lower(t)))
-    // codegen'd window fold; evaluated only under the size >= k guard below
-    val grams = graft.functions.TextExprs.rollingWindowHashesCol(
-      th, k, GramR, PortableP)
-    // key packing = hash·2^32 + pos: one long min is the leftmost-smallest-
-    // hash rule (identical to the batch window's `_key`)
-    val keys = transform(grams, (x, i) => shiftleft(x, 32) + i.cast(LongType))
-    val m = size(keys)
-    val sel = transform(sequence(least(lit(w), m) - 1, m - 1),
-      j => array_min(slice(keys, greatest(j - w + lit(2), lit(1)),
-        least(lit(w), j + 1))))
-    when(size(toks) >= k,
-        array_distinct(transform(sel, key => shiftright(key, 32))))
-      .otherwise(array().cast("array<bigint>"))
-  }
-
-  /** Staged (doc, fp) stream of [[winnowFingerprintArray]] — selection-
-    * identical, but each intermediate array (token hashes, then packed
-    * gram keys) materializes ONCE per row behind an `explode(array(...))`
-    * generator boundary. The single-Column form nests its lambdas, and
-    * interpreted higher-order functions re-evaluate a referenced subtree
-    * at every outer element (no common-subexpression sharing inside
-    * lambdas): the trailing-window pass re-derives the whole key array per
+  /** ROW-LOCAL winnowing fingerprints as a (doc, fp) stream — the
+    * [[winnowingFingerprints]] selection (rolling window hash, leftmost-min
+    * trailing window, short-document rule) computed per row: no per-document
+    * window, so it runs on a STREAMING DataFrame (append mode, stateless)
+    * and as a narrow batch projection. Emits the DISTINCT fps of each
+    * document (positions dropped — pair probing joins on fp alone); none
+    * for documents shorter than k tokens. Selection-identical to the window
+    * formulation (spec-pinned per document in WinnowingSpec).
+    *
+    * Each intermediate array (token hashes, then packed gram keys)
+    * materializes ONCE per row behind an `explode(array(...))` generator
+    * boundary: interpreted higher-order functions re-evaluate a referenced
+    * subtree at every outer element (no common-subexpression sharing inside
+    * lambdas), so one nested Column re-derived the whole key array per
     * window, O(m²·k) per document where this is O(m·(k+w)) — a measured
-    * ~3000× per-row gap on real documents. Generators are stream-safe, so
-    * this is the form every bulk path (and the streaming probe) uses; the
-    * one-Column variant remains for single-expression contexts. */
+    * ~3000× per-row gap on real documents. Generators are stream-safe. */
   private[graft] def winnowFpRows(df: DataFrame, k: Int, w: Int,
                                   idCol: String, textCol: String,
                                   outId: String): DataFrame = {
@@ -1736,7 +1692,7 @@ object Dedup {
   }
 
   /** STREAMING winnowing probe: dedup the crawl AS IT LANDS. Each arriving
-    * document fingerprints row-locally ([[winnowFingerprintArray]] — no
+    * document fingerprints row-locally ([[winnowFpRows]] — no
     * window, stream-safe), joins the persisted postings index (stream-
     * static equi-join on fp), and emits (new doc, indexed doc, shared
     * fingerprint count) pairs with at least `minShared` overlap — the
@@ -1815,9 +1771,7 @@ object Dedup {
     val fp = winnowingFingerprints(docs, k, w, idCol, textCol)
       .select(col("fp"), col(idCol).cast(LongType).as("doc_id")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    fp.repartition(buckets, col("fp")) // one file per bucket, see writeShingleIndex
-      .write.mode("overwrite")
-      .bucketBy(buckets, "fp").sortBy("fp").saveAsTable(table)
+    graft.core.Dist.writeBucketed(fp, table, "overwrite", buckets, "fp")
     fp.groupBy("doc_id").agg(count(lit(1)).as("sz"))
       .write.mode("overwrite").saveAsTable(table + "_sz")
     fp.unpersist()
@@ -1833,9 +1787,7 @@ object Dedup {
     val fp = winnowingFingerprints(docs, k, w, idCol, textCol)
       .select(col("fp"), col(idCol).cast(LongType).as("doc_id")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    fp.repartition(buckets, col("fp")) // one file per bucket, see writeShingleIndex
-      .write.mode("append")
-      .bucketBy(buckets, "fp").sortBy("fp").saveAsTable(table)
+    graft.core.Dist.writeBucketed(fp, table, "append", buckets, "fp")
     fp.groupBy("doc_id").agg(count(lit(1)).as("sz"))
       .write.mode("append").saveAsTable(table + "_sz")
     fp.unpersist()

@@ -301,13 +301,18 @@ object Pq {
                     newEmb: DataFrame, dim: Int = 64,
                     idCol: String = "vec_id",
                     vecCol: String = "embedding"): Unit = {
+    encode(newEmb, readBooks(spark, table), dim, idCol, vecCol)
+      .write.mode("append").saveAsTable(table)
+  }
+
+  /** The codebooks of a [[writePqIndex]] table, decoded from its
+    * `<table>_books` companion (m·ks rows, collected bounded). */
+  private def readBooks(spark: org.apache.spark.sql.SparkSession,
+                        table: String): Seq[Array[Array[Double]]] = {
     val bookRows = spark.table(s"${table}_books").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     val m = bookRows.map(_._1).max + 1
-    val books: Seq[Array[Array[Double]]] =
-      (0 until m).map(s => bookRows.filter(_._1 == s).sortBy(_._2).map(_._3))
-    encode(newEmb, books, dim, idCol, vecCol)
-      .write.mode("append").saveAsTable(table)
+    (0 until m).map(s => bookRows.filter(_._1 == s).sortBy(_._2).map(_._3))
   }
 
   /** Probe a [[writePqIndex]] table: the ADC pass scans ONLY the code
@@ -321,12 +326,8 @@ object Pq {
                       rerank: Int = 16, dim: Int = 64,
                       idCol: String = "vec_id",
                       vecCol: String = "embedding"): DataFrame = {
-    val bookRows = spark.table(s"${table}_books").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-    val m = bookRows.map(_._1).max + 1
-    val dsub = dim / m
-    val books: Seq[Array[Array[Double]]] =
-      (0 until m).map(s => bookRows.filter(_._1 == s).sortBy(_._2).map(_._3))
+    val books = readBooks(spark, table)
+    val dsub = dim / books.size
     val q = emb.where(col(idCol) === queryId)
       .withColumn("_n", Vectors.norm(col(vecCol)))
       .select(lit(queryId).as("probe_id"), transform(col(vecCol),

@@ -277,15 +277,9 @@ object Retrieval {
     val dfAll = post.groupBy("term").agg(count(lit(1)).as("df"))
     dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_len"))
       .write.mode("overwrite").saveAsTable(s"${table}_stats")
-    post
-      .join(dfAll, Seq("term"))
-      .join(dl, Seq(idCol))
-      // one file per bucket (repartition's HashPartitioning == the
-      // writer's bucket-id formula) — see Dedup.writeShingleIndex
-      .repartition(buckets, col("term"))
-      .write.mode("overwrite")
-      .bucketBy(buckets, "term").sortBy("term")
-      .saveAsTable(table)
+    graft.core.Dist.writeBucketed(
+      post.join(dfAll, Seq("term")).join(dl, Seq(idCol)),
+      table, "overwrite", buckets, "term")
   }
 
   /** Probe a [[writeBm25Index]] table with the distinct terms of document

@@ -23,46 +23,11 @@ object StreamingQ extends QueryPack {
   private val S = TsSchema
   private val grid = Tables.EventsGrid6h
 
-  /** Start and fully drain a registry stream with the state shuffle sized
-    * to the query's key cardinality (default 8, overridable via the
-    * session conf `graft.stream.statePartitions`; each cell of the
-    * commit-fan-out curve is `SPARK_GRAFT_EXTRA_CONF=graft.stream.statePartitions=P
-    * … Tool time:2 <q> <sf>`) instead of the session default (32): every
-    * stateful micro-batch commits one state-store delta PER SHUFFLE
-    * PARTITION, and at registry data sizes those commits — not row work —
-    * are the wall clock (this same cut took streaming_ingest_roundtrip
-    * 4.3s → 2.5s isolated; the measured 4/8/16/32 curve is in
-    * OPERATORS.md). Partition count can never change results (each
-    * query's parity spec pins that); production sizes state stores per
-    * query the same way. The conf is restored before the sink table is
-    * read back, so downstream batch aggregation keeps the session's
-    * parallelism. */
-  private def withStateShuffle[T](s: SparkSession, default: Int)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      s.conf.get("graft.stream.statePartitions", default.toString))
-    try body
-    finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  /** `stateParts` is PER QUERY, sized to its stateful key cardinality (the
-    * r12 sweep's own finding applied): a global-sketch stream whose state
-    * is a handful of shard/register keys pays pure commit fan-out for every
-    * partition past that — the measured curve (OPERATORS.md) has
-    * streaming_kmv_distinct at 2.71s @ 4 vs 2.81s @ 8 vs 4.14s @ 32 —
-    * while a per-user/per-doc stream (hundreds–thousands of keys per
-    * trigger) keeps the default 8. The sweep tool's session conf still
-    * overrides both, so the 4/8/16/32 curve stays measurable. Partition
-    * count can never change results (each query's parity spec pins that). */
-  private def drain(s: SparkSession, stateParts: Int = 8)
-                   (start: => org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    withStateShuffle(s, stateParts) { val q = start; q.processAllAvailable(); q.stop() }
-
   /** Stage a deterministic batch frame as an on-disk stream SOURCE once per
     * (session, sf, tag) — r14, guide §1.2/§2.4: the serialization is test
     * scaffolding (a production stream source exists; it is not re-written
     * per query), yet before this memo every timed run of every streaming
-    * query re-serialized its source corpus (a full scan + 2-task JSON
+    * query re-serialized its source corpus (a full scan + 2-task
     * write) before the drain even started. The DRAIN is untouched: each run
     * still starts a fresh query with a FRESH checkpoint (memory sinks get a
     * new temp checkpoint per start; the roundtrip passes its own), so every
@@ -77,23 +42,56 @@ object StreamingQ extends QueryPack {
     * is the most recently used entry when the stream starts. */
   private[graft] def stagedSrc(s: SparkSession, sf: String, tag: String)
                               (write: String => Unit): String =
+    stage(s, sf, tag)(write).dir
+  private def stage(s: SparkSession, sf: String, tag: String)
+                   (write: String => Unit): Staged =
     staged(s, (sf, tag)) {
       val dir = java.nio.file.Files
         .createTempDirectory(s"graft_$tag").toString + "/src"
       write(dir)
-      dir
+      new Staged(s, dir)
     }
-  private val staged = new graft.core.Memo[(String, String), String](dir =>
-    deleteRec(java.nio.file.Paths.get(dir).getParent))
-  // A symlink is unlinked, never entered: its target lies outside the
-  // staged directory and is not ours to delete.
-  private def deleteRec(p: java.nio.file.Path): Unit = {
+  /** A staged source dir. `schema` reads a parquet-staged dir's footer
+    * once: the read is a Spark job, about 0.1 s of every run if repeated. */
+  private final class Staged(s: SparkSession, val dir: String) {
+    lazy val schema: org.apache.spark.sql.types.StructType =
+      s.read.parquet(dir).schema
+  }
+  private val staged = new graft.core.Memo[(String, String), Staged](st =>
+    deleteRec(java.nio.file.Paths.get(st.dir).getParent))
+  /** Delete `p` and everything under it. A symlink is unlinked, never
+    * entered: its target lies outside the deleted tree and is not ours. */
+  private[graft] def deleteRec(p: java.nio.file.Path): Unit = {
     if (java.nio.file.Files.isDirectory(p, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
       val st = java.nio.file.Files.list(p)
       try st.forEach(deleteRec(_)) finally st.close()
     }
     java.nio.file.Files.deleteIfExists(p)
     ()
+  }
+
+  /** The registry's staged streaming rows, one path: `input` is staged once
+    * per (session, sf, tag) as 2 parquet files ([[stagedSrc]]) — an exact
+    * binary round trip, floats included — and streamed back one file per
+    * trigger (so state really carries across triggers) with the staged
+    * files' own schema. `op` turns the stream into the query's output,
+    * which [[Ingest.drain]] runs to completion into the memory sink
+    * `<tag>_out` in output `mode`, with the state shuffle sized to the
+    * query's stateful key cardinality (`stateParts`; default 8 for
+    * per-user/per-doc state, less for a handful of sketch keys — the
+    * measured curve is in OPERATORS.md). Returns the sink table. Build the
+    * query's other memoized inputs before calling this, so the staged
+    * source is the most recently used entry when the stream starts. */
+  private def streamed(s: SparkSession, sf: String, tag: String, mode: String,
+                       stateParts: Int = 8)(input: => DataFrame)
+                      (op: DataFrame => DataFrame): DataFrame = {
+    val src = stage(s, sf, tag)(
+      input.coalesce(2).write.mode("overwrite").parquet(_))
+    val stream = s.readStream.schema(src.schema)
+      .option("maxFilesPerTrigger", 1).parquet(src.dir)
+    Ingest.drain(s, op(stream).writeStream.format("memory")
+      .queryName(s"${tag}_out").outputMode(mode), stateParts)
+    s.table(s"${tag}_out")
   }
 
   /** The roundtrip's base dir, one memo entry per (session, sf): the query
@@ -123,13 +121,7 @@ object StreamingQ extends QueryPack {
           col(S.Ts).as("timestamp"), col(S.Value).as("value"))
       wire.unionAll(wire).coalesce(2).write.mode("overwrite").json(dir)
     }
-    // the dedup state shuffle is the roundtrip's fixed cost: at the default
-    // 32 partitions every micro-batch commits 32 state-store deltas for a
-    // few thousand rows. r14 swept 1/2/4/8 (min-of-2 warm: 3.26/2.92/
-    // 2.93/3.41s): 4 matches the measured minimum while keeping parallel
-    // headroom for the real per-trigger row work (state-store count is a
-    // per-query setting in production, sized to the ingest key cardinality)
-    withStateShuffle(s, 4)(Ingest.runOnce(s, src, table, ckpt))
+    Ingest.runOnce(s, src, table, ckpt)
     val back = s.read.parquet(table)
       .select(S.SeriesId, S.LabelsCol, S.Ts, S.Value)
     M3QL.query(s, back, grid, "fetch name:click")
@@ -214,27 +206,27 @@ object StreamingQ extends QueryPack {
        |GROUP BY series, 2
        |ORDER BY series, ts""".stripMargin
 
-  /** STREAMING content-dedup roundtrip: every document serialized TWICE to
-    * a json stream, AvailableNow through the watermark-bounded content-hash
-    * dedup ([[graft.pipelines.Dedup.streamingExactDedup]]); the surviving
-    * text set must equal DISTINCT text — rows double if the state dedup
-    * breaks, text corruption anywhere in the json hop hash-mismatches.
+  /** STREAMING content-dedup roundtrip: every document staged TWICE and
+    * streamed one file per trigger through the watermark-bounded
+    * content-hash dedup ([[graft.pipelines.Dedup.streamingExactDedup]]) —
+    * a copy arriving in a later trigger must be dropped by the dedup STATE.
+    * `ingest_ts` is `doc_id` modulo half the watermark delay in
+    * milliseconds, so the staged input spans less than the delay at any
+    * corpus size: no row is ever late and no dedup key expires. The
+    * surviving text set must equal DISTINCT text — rows double if the
+    * state dedup breaks.
     * Output is the content set (not doc ids): the surviving ROW for a text
     * shared by several doc ids is arrival-order dependent, the content set
     * is not. */
   private def qStreamDedup(s: SparkSession, sf: String): DataFrame = {
-    val src = stagedSrc(s, sf, "sdedup") { dir =>
+    val lateMs = 60000L
+    streamed(s, sf, "sdedup", "append") {
       val docs = Tables.documents(s, sf)
         .select(col("doc_id"), col("text"),
-          (lit(1704067200000L) + col("doc_id")).as("ingest_ts"))
-      docs.unionAll(docs).coalesce(2).write.mode("overwrite").json(dir)
-    }
-    val stream = s.readStream
-      .schema("doc_id BIGINT, text STRING, ingest_ts BIGINT").json(src)
-    val out = graft.pipelines.Dedup.streamingExactDedup(stream, lateMs = 60000L)
-    drain(s) { out.writeStream.format("memory")
-      .queryName("sdedup_out").outputMode("append").start() }
-    s.table("sdedup_out").select("text").orderBy("text")
+          (lit(1704067200000L) + col("doc_id") % (lateMs / 2)).as("ingest_ts"))
+      docs.unionAll(docs)
+    }(graft.pipelines.Dedup.streamingExactDedup(_, lateMs))
+      .select("text").orderBy("text")
   }
   private val qStreamDedupSql =
     "SELECT DISTINCT text FROM documents ORDER BY text"
@@ -248,23 +240,14 @@ object StreamingQ extends QueryPack {
     * token counts. State carry across triggers breaks this if the shard
     * summary ever resets; eviction bugs surface as nonzero error or
     * missing tokens. */
-  private def qHeavyHitters(s: SparkSession, sf: String): DataFrame = {
-    val src = stagedSrc(s, sf, "hh") { dir =>
-      Tables.documents(s, sf).select("doc_id", "text")
-        .coalesce(2).write.mode("overwrite").json(dir)
-    }
-    val stream = s.readStream
-      .option("maxFilesPerTrigger", 1)   // force real multi-trigger state carry
-      .schema("doc_id BIGINT, text STRING").json(src)
-    val out = graft.streaming.HeavyHitters.heavyHitters(
-      stream, capacity = 1 << 16, shards = 8, minCount = 10L)
-    drain(s, stateParts = 4) { out.writeStream.format("memory")
-      .queryName("hh_out").outputMode("update").start() }
-    s.table("hh_out")
+  private def qHeavyHitters(s: SparkSession, sf: String): DataFrame =
+    streamed(s, sf, "hh", "update", stateParts = 4)(
+      Tables.documents(s, sf).select("doc_id", "text"))(
+      graft.streaming.HeavyHitters.heavyHitters(
+        _, capacity = 1 << 16, shards = 8, minCount = 10L))
       .groupBy("token")
       .agg(max(col("count")).as("n"), max(col("error")).as("error"))
       .orderBy("token")
-  }
   private val qHeavyHittersSql =
     """WITH toks AS (
       |  SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS token
@@ -274,30 +257,22 @@ object StreamingQ extends QueryPack {
       |SELECT token, n, CAST(0 AS BIGINT) AS error FROM c
       |WHERE n >= 10 ORDER BY token""".stripMargin
 
-  /** STREAMING nearest-centroid topic assignment: the embedding corpus is
-    * serialized to a json stream (two triggers) and scored in APPEND mode
+  /** STREAMING nearest-centroid topic assignment: the embedding corpus
+    * streams in two triggers and is scored in APPEND mode
     * against the BATCH-trained k-means centroids — the production shape of
     * cluster-then-route ingestion (train offline, score the firehose
     * statelessly). The scoring expression is the same per-row fold as the
     * batch path ([[graft.pipelines.Similarity.assignToCentroids]]), so the
     * stream's assignments and distances must be BIT-IDENTICAL to the batch
-    * clustering oracle — the json float roundtrip, the stream-static
-    * broadcast and the fold all have to preserve exactness for this entry
-    * to hash-match. */
+    * clustering oracle — the stream-static broadcast and the fold both
+    * have to preserve exactness for this entry to hash-match. */
   private def qStreamTopics(s: SparkSession, sf: String): DataFrame = {
     val cents = graft.pipelines.Similarity.kmeansCentroids(
       Tables.embeddings(s, sf), k = 8, iters = 2)
-    val src = stagedSrc(s, sf, "stopics") { dir =>
-      Tables.embeddings(s, sf).select("vec_id", "embedding")
-        .coalesce(2).write.mode("overwrite").json(dir)
-    }
-    val stream = s.readStream
-      .option("maxFilesPerTrigger", 1)
-      .schema("vec_id BIGINT, embedding ARRAY<FLOAT>").json(src)
-    val out = graft.pipelines.Similarity.assignToCentroids(stream, cents)
-    drain(s) { out.writeStream.format("memory")
-      .queryName("stopics_out").outputMode("append").start() }
-    s.table("stopics_out").orderBy("vec_id")
+    streamed(s, sf, "stopics", "append")(
+      Tables.embeddings(s, sf).select("vec_id", "embedding"))(
+      graft.pipelines.Similarity.assignToCentroids(_, cents))
+      .orderBy("vec_id")
   }
 
   /** STREAMING PQ encode: the embedding stream dense-coded against
@@ -307,17 +282,9 @@ object StreamingQ extends QueryPack {
     * parity with batch IS the check. */
   private def qStreamPqEncode(s: SparkSession, sf: String): DataFrame = {
     val books = graft.pipelines.Pq.trainCodebooks(Tables.embeddings(s, sf))
-    val src = stagedSrc(s, sf, "spq") { dir =>
-      Tables.embeddings(s, sf).select("vec_id", "embedding")
-        .coalesce(2).write.mode("overwrite").json(dir)
-    }
-    val stream = s.readStream
-      .option("maxFilesPerTrigger", 1)
-      .schema("vec_id BIGINT, embedding ARRAY<FLOAT>").json(src)
-    val out = graft.pipelines.Pq.encode(stream, books)
-    drain(s) { out.writeStream.format("memory")
-      .queryName("spq_out").outputMode("append").start() }
-    s.table("spq_out")
+    streamed(s, sf, "spq", "append")(
+      Tables.embeddings(s, sf).select("vec_id", "embedding"))(
+      graft.pipelines.Pq.encode(_, books))
       .select(col("vec_id"),
         concat_ws(",", transform(col("codes"), _.cast("string")))
           .as("codes_str"))
@@ -336,22 +303,13 @@ object StreamingQ extends QueryPack {
     * streamed estimate equals the batch KMV estimate and the oracle is
     * the direct batch replay. */
   private def qStreamKmv(s: SparkSession, sf: String): DataFrame = {
-    val src = stagedSrc(s, sf, "skmv") { dir =>
-      Tables.lineitem(s, sf).select("l_orderkey")
-        .coalesce(2).write.mode("overwrite").json(dir)
-    }
-    val stream = s.readStream
-      .option("maxFilesPerTrigger", 1)
-      .schema("l_orderkey BIGINT").json(src)
-    val snaps = graft.streaming.KmvStream.kmvBuckets(
-      stream, col("l_orderkey"))
     // r14 sweep: 8 bottom-k shard keys — 1 partition is the measured min
     // (3.10/3.16/3.53/4.25s at 1/2/4/8); parity spec pins result invariance
-    drain(s, stateParts = 1) { snaps.writeStream.format("memory")
-      .queryName("skmv_out").outputMode("update").start() }
+    val snaps = streamed(s, sf, "skmv", "update", stateParts = 1)(
+      Tables.lineitem(s, sf).select("l_orderkey"))(
+      graft.streaming.KmvStream.kmvBuckets(_, col("l_orderkey")))
     graft.pipelines.Sketches.kmvEstimate(
-      graft.streaming.KmvStream.finalizeSketch(s.table("skmv_out")),
-      Seq.empty)
+      graft.streaming.KmvStream.finalizeSketch(snaps), Seq.empty)
   }
   private val qStreamKmvSql = {
     val k = 256
@@ -366,20 +324,11 @@ object StreamingQ extends QueryPack {
   }
 
   private def qStreamHll(s: SparkSession, sf: String): DataFrame = {
-    val src = stagedSrc(s, sf, "shll") { dir =>
-      Tables.lineitem(s, sf).select("l_orderkey")
-        .coalesce(2).write.mode("overwrite").json(dir)
-    }
-    val stream = s.readStream
-      .option("maxFilesPerTrigger", 1)
-      .schema("l_orderkey BIGINT").json(src)
-    val regs = graft.pipelines.Sketches.hllRegisters(
-      stream, col("l_orderkey"), Seq.empty)
     // r14 sweep: 64 register keys, trivial state — 1 partition measured min
     // (2.22/2.70/3.00/2.41s at 1/2/4/8)
-    drain(s, stateParts = 1) { regs.writeStream.format("memory")
-      .queryName("shll_out").outputMode("update").start() }
-    val finalRegs = s.table("shll_out")
+    val finalRegs = streamed(s, sf, "shll", "update", stateParts = 1)(
+      Tables.lineitem(s, sf).select("l_orderkey"))(
+      graft.pipelines.Sketches.hllRegisters(_, col("l_orderkey"), Seq.empty))
       .groupBy("_b").agg(max("_mr").as("_mr"))
     graft.pipelines.Sketches.hllEstimate(finalRegs, Seq.empty)
   }
@@ -392,19 +341,10 @@ object StreamingQ extends QueryPack {
     * which is the oracle (shared with `sketch_cms_terms`). */
   private def qStreamCms(s: SparkSession, sf: String): DataFrame = {
     val post = graft.pipelines.Retrieval.postingsCached(Tables.documents(s, sf))
-    val src = stagedSrc(s, sf, "scms") { dir =>
-      post.coalesce(2).write.mode("overwrite").json(dir)
-    }
-    val stream = s.readStream
-      .option("maxFilesPerTrigger", 1)
-      .schema("doc_id BIGINT, term STRING, tf BIGINT").json(src)
-    val counters = graft.pipelines.Sketches.cmsCounters(
-      stream, col("term"), col("tf"))
     // r14 sweep: ≤1024 counter cells — 2 ≈ 4 (2.15s both), 2 keeps one
     // commit pair per trigger off the clock
-    drain(s, stateParts = 2) { counters.writeStream.format("memory")
-      .queryName("scms_out").outputMode("update").start() }
-    val finalCounters = s.table("scms_out")
+    val finalCounters = streamed(s, sf, "scms", "update", stateParts = 2)(post)(
+      graft.pipelines.Sketches.cmsCounters(_, col("term"), col("tf")))
       .groupBy("j", "b").agg(max("cnt").as("cnt"))
     val top = post.groupBy("term").agg(sum("tf").as("exact"))
       .orderBy(col("exact").desc, col("term")).limit(10)
@@ -417,19 +357,11 @@ object StreamingQ extends QueryPack {
     * the append-only sink reduces to the latest snapshot per user
     * (max_by over the monotone events-seen counter), which must equal the
     * BATCH funnel bit-for-bit — the shared oracle pins the parity. */
-  private def qStreamFunnel(s: SparkSession, sf: String): DataFrame = {
-    val src = stagedSrc(s, sf, "sfunnel") { dir =>
-      Tables.eventsMillis(s, sf).select("user_id", "event_type", "tm")
-        .coalesce(2).write.mode("overwrite").json(dir)
-    }
-    val stream = s.readStream
-      .option("maxFilesPerTrigger", 1)
-      .schema("user_id BIGINT, event_type STRING, tm BIGINT").json(src)
-    val out = graft.streaming.StreamingFunnel.funnel(
-      stream, Seq("view", "click", "purchase"), windowMs = 7200000L)
-    drain(s) { out.writeStream.format("memory")
-      .queryName("sfunnel_out").outputMode("update").start() }
-    s.table("sfunnel_out")
+  private def qStreamFunnel(s: SparkSession, sf: String): DataFrame =
+    streamed(s, sf, "sfunnel", "update")(
+      Tables.eventsMillis(s, sf).select("user_id", "event_type", "tm"))(
+      graft.streaming.StreamingFunnel.funnel(
+        _, Seq("view", "click", "purchase"), windowMs = 7200000L))
       .groupBy("user_id")
       .agg(expr("max_by(struct(ts, reached), n_seen)").as("_f"))
       .select(col("user_id"),
@@ -438,26 +370,16 @@ object StreamingQ extends QueryPack {
         col("_f.ts").getItem(2).as("ts_3"),
         col("_f.reached").as("reached"))
       .orderBy("user_id")
-  }
 
   /** STREAMING retention cohorts: the event stream in two triggers through
     * per-key custom state; the sink reduces to each user's latest snapshot
     * (max_by over the monotone counter), offsets explode from the period
     * set, and the cohort × offset counts must equal the BATCH cohort table
     * exactly — late earlier events re-assign the cohort in-state. */
-  private def qStreamCohorts(s: SparkSession, sf: String): DataFrame = {
-    val src = stagedSrc(s, sf, "scohort") { dir =>
-      Tables.eventsMillis(s, sf).select("user_id", "tm")
-        .coalesce(2).write.mode("overwrite").json(dir)
-    }
-    val stream = s.readStream
-      .option("maxFilesPerTrigger", 1)
-      .schema("user_id BIGINT, tm BIGINT").json(src)
-    val out = graft.streaming.StreamingCohorts.cohorts(stream,
-      periodMs = 86400000L)
-    drain(s) { out.writeStream.format("memory")
-      .queryName("scohort_out").outputMode("update").start() }
-    s.table("scohort_out")
+  private def qStreamCohorts(s: SparkSession, sf: String): DataFrame =
+    streamed(s, sf, "scohort", "update")(
+      Tables.eventsMillis(s, sf).select("user_id", "tm"))(
+      graft.streaming.StreamingCohorts.cohorts(_, periodMs = 86400000L))
       .groupBy("user_id")
       .agg(expr("max_by(struct(cohort, periods), n_seen)").as("_s"))
       .select(col("_s.cohort").as("cohort"),
@@ -465,7 +387,6 @@ object StreamingQ extends QueryPack {
       .groupBy(col("cohort"), (col("_p") - col("cohort")).as("period_offset"))
       .agg(count(lit(1)).as("n_active"))
       .orderBy("cohort", "period_offset")
-  }
 
   /** STREAMING transition matrix: per-key custom state re-derives the
     * consecutive-pair multiset each trigger (a late event inserted between
@@ -473,20 +394,10 @@ object StreamingQ extends QueryPack {
     * the sink reduces to each key's latest snapshot, explodes the parallel
     * from/to arrays, counts and normalizes — must equal the BATCH matrix
     * exactly, shared oracle. */
-  private def qStreamTransitions(s: SparkSession, sf: String): DataFrame = {
-    val src = stagedSrc(s, sf, "strans") { dir =>
-      Tables.eventsMillis(s, sf)
-        .select("user_id", "event_type", "tm", "event_id")
-        .coalesce(2).write.mode("overwrite").json(dir)
-    }
-    val stream = s.readStream
-      .option("maxFilesPerTrigger", 1)
-      .schema("user_id BIGINT, event_type STRING, tm BIGINT, event_id BIGINT")
-      .json(src)
-    val out = graft.streaming.StreamingTransitions.transitions(stream)
-    drain(s) { out.writeStream.format("memory")
-      .queryName("strans_out").outputMode("update").start() }
-    s.table("strans_out")
+  private def qStreamTransitions(s: SparkSession, sf: String): DataFrame =
+    streamed(s, sf, "strans", "update")(
+      Tables.eventsMillis(s, sf).select("user_id", "event_type", "tm", "event_id"))(
+      graft.streaming.StreamingTransitions.transitions(_))
       .groupBy("user_id")
       .agg(expr("max_by(struct(froms, tos), n_seen)").as("_s"))
       .select(col("_s.froms").as("f"), col("_s.tos").as("t"))
@@ -497,7 +408,6 @@ object StreamingQ extends QueryPack {
         sum(col("n")).over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("from_type"))))
       .orderBy("from_type", "to_type")
-  }
 
   /** STREAMING winnowing probe: the fresh crawl streams through the
     * row-local fingerprint expression and joins the persisted postings
@@ -507,47 +417,31 @@ object StreamingQ extends QueryPack {
     * by source half with the index-side df cull. */
   private def qStreamWinnow(s: SparkSession, sf: String): DataFrame = {
     val table = Pipeline.winnowIndexFor(s, sf)
-    val src = stagedSrc(s, sf, "swinq") { dir =>
-      Pipeline.freshDocs(s, sf).select("doc_id", "text")
-        .coalesce(2).write.mode("overwrite").json(dir)
-    }
-    val stream = s.readStream.option("maxFilesPerTrigger", 1)
-      .schema("doc_id BIGINT, text STRING").json(src)
-    val out = graft.pipelines.Dedup.streamingWinnowProbe(s, table, stream,
-      k = 3, w = 4)
-    drain(s) { out.writeStream.format("memory")
-      .queryName("swinq_out").outputMode("update").start() }
-    s.table("swinq_out").groupBy("doc_id_new", "doc_id_old")
+    streamed(s, sf, "swinq", "update")(
+      Pipeline.freshDocs(s, sf).select("doc_id", "text"))(
+      graft.pipelines.Dedup.streamingWinnowProbe(s, table, _, k = 3, w = 4))
+      .groupBy("doc_id_new", "doc_id_old")
       .agg(max("shared_fp").as("shared_fp"))
       .orderBy("doc_id_new", "doc_id_old")
   }
 
-  /** STREAMING ANN serving: probe vectors stream through a parquet source
-    * (exact binary roundtrip — json would wobble the floats), each trigger
+  /** STREAMING ANN serving: probe vectors stream in, each trigger
     * joins the static corpus, and the per-probe exact top-5 comes out of
     * one update-mode sorted-prefix aggregation. Oracle is the batch brute-
     * force per-probe rank — the streamed path must be EXACT. */
   private def qStreamAnn(s: SparkSession, sf: String): DataFrame = {
     val emb = Tables.embeddings(s, sf)
-    val src = stagedSrc(s, sf, "sann") { dir =>
-      emb.where(col("vec_id").isin(1L, 8L, 21L))
-        .select(col("vec_id").as("probe_id"), col("embedding").as("q_emb"))
-        .coalesce(2).write.mode("overwrite").parquet(dir)
-    }
-    val stream = s.readStream
-      .schema("probe_id BIGINT, q_emb ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", 1).parquet(src)
-    val out = graft.pipelines.Similarity.streamingAnnProbe(emb, stream, k = 5)
     // r14 sweep: 3 probe keys — 2 partitions measured min (1.21/1.03/1.12/
     // 1.22s at 1/2/4/8)
-    drain(s, stateParts = 2) { out.writeStream.format("memory")
-      .queryName("sann_out").outputMode("update").start() }
+    val out = streamed(s, sf, "sann", "update", stateParts = 2)(
+      emb.where(col("vec_id").isin(1L, 8L, 21L))
+        .select(col("vec_id").as("probe_id"), col("embedding").as("q_emb")))(
+      graft.pipelines.Similarity.streamingAnnProbe(emb, _, k = 5))
     // Update-mode sinks append one snapshot per trigger that touches a key;
     // each probe_id arrives exactly once here, but reduce to one snapshot
     // per key anyway (the defensive pattern qStreamWinnow/qStreamNovelty
     // use) so a re-delivered probe could never posexplode duplicate ranks.
-    s.table("sann_out")
-      .groupBy("probe_id").agg(max(col("topk")).as("topk"))
+    out.groupBy("probe_id").agg(max(col("topk")).as("topk"))
       .select(col("probe_id"), posexplode(col("topk")).as(Seq("_pos", "_t")))
       .select(col("probe_id"), col("_t.vid").as("vec_id"),
         (col("_pos") + 1).cast("int").as("rnk"))
@@ -569,15 +463,9 @@ object StreamingQ extends QueryPack {
     * scorer, so it shares the batch oracle. */
   private def qStreamNovelty(s: SparkSession, sf: String): DataFrame = {
     val gate = graft.pipelines.Dedup.streamingNovelty(Pipeline.priorDocs(s, sf), n = 3)
-    val src = stagedSrc(s, sf, "snov") { dir =>
-      Pipeline.freshDocs(s, sf).select("doc_id", "text")
-        .coalesce(2).write.mode("overwrite").json(dir)
-    }
-    val out = gate(s.readStream.option("maxFilesPerTrigger", 1)
-      .schema("doc_id BIGINT, text STRING").json(src))
-    drain(s) { out.writeStream.format("memory")
-      .queryName("snov_out").outputMode("update").start() }
-    s.table("snov_out").groupBy("doc_id")
+    streamed(s, sf, "snov", "update")(
+      Pipeline.freshDocs(s, sf).select("doc_id", "text"))(gate)
+      .groupBy("doc_id")
       .agg(max("n_shingles").as("n_shingles"), max("n_novel").as("n_novel"))
       .withColumn("novelty",
         col("n_novel").cast("double") / col("n_shingles"))
@@ -726,16 +614,16 @@ object StreamingQ extends QueryPack {
     }
     // FAILFAST: a malformed wire line must abort the query with its parse
     // error in the log, not silently drop rows into a hash mismatch
-    val q = Ingest.parseWire(
+    // a stateless stream: the metered sink's per-batch aggregates keep
+    // the session's shuffle width
+    Ingest.drain(s, Ingest.parseWire(
         s.readStream.schema(Ingest.wireSchema)
           .option("maxFilesPerTrigger", 1)
           .option("mode", "FAILFAST").json(src))
       .writeStream
       .foreachBatch(sink)
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(); q.stop()
+      .option("checkpointLocation", s"$base/ckpt"),
+      s.conf.get("spark.sql.shuffle.partitions").toInt)
     import s.implicits._
     val recorded = graft.serve.IngestLag.batches(source)
     if (diagOn) {

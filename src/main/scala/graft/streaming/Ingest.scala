@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.core.TsSchema
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -87,7 +87,7 @@ object Ingest {
     * Spark's duplicate-name error instead of sharing its `_spark_metadata`
     * log; a restart after `stop()` starts normally. */
   def writer(samples: DataFrame, tablePath: String, checkpoint: String,
-             triggerMs: Long = 1000L): DataStreamWriter[org.apache.spark.sql.Row] = {
+             triggerMs: Long = 1000L): DataStreamWriter[Row] = {
     graft.serve.IngestLag.listen(samples.sparkSession)
     samples.writeStream
       .queryName(graft.serve.IngestLag.streamName(tablePath))
@@ -105,17 +105,49 @@ object Ingest {
     writer(withIngestSemantics(readJsonStream(spark, sourcePath), oooToleranceMs),
       tablePath, checkpoint).start()
 
-  /** One-shot ingest of everything currently in `sourcePath`
-    * (Trigger.AvailableNow), blocking until the sink commits — the batch face
-    * of [[start]], used by the verify harness to drive the full parse →
-    * watermark → dedup → partitioned-parquet path deterministically. */
+  /** One-shot ingest of everything currently in `sourcePath`, blocking
+    * until the sink commits — the batch face of [[start]], used by the
+    * verify harness to drive the full parse → watermark → dedup →
+    * partitioned-parquet path deterministically. */
   def runOnce(spark: SparkSession, sourcePath: String, tablePath: String,
               checkpoint: String, oooToleranceMs: Long = 60000L): Unit =
-    writer(withIngestSemantics(readJsonStream(spark, sourcePath), oooToleranceMs),
-      tablePath, checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
+    drain(spark, writer(withIngestSemantics(readJsonStream(spark, sourcePath),
+      oooToleranceMs), tablePath, checkpoint), RunOnceStateParts)
+
+  /** [[runOnce]]'s dedup state shuffle width. That state is the one-shot
+    * ingest's fixed cost: at the default 32 partitions every micro-batch
+    * commits 32 state-store deltas for a few thousand rows. A sweep of
+    * 1/2/4/8 on `streaming_ingest_roundtrip` (min-of-2 warm: 3.26/2.92/
+    * 2.93/3.41 s) put 4 at the measured minimum while keeping parallel
+    * headroom for the per-trigger row work. */
+  private val RunOnceStateParts = 4
+
+  /** Run a stream to completion — the one place a stream is drained. Starts
+    * `writer` under `Trigger.AvailableNow` (every file in the source, in as
+    * many micro-batches as the source's `maxFilesPerTrigger` makes) with
+    * the state shuffle at `stateParts` partitions, blocks until it
+    * terminates and returns the stopped query, whose `recentProgress`
+    * stays readable.
+    *
+    * Every stateful micro-batch commits one state-store delta PER SHUFFLE
+    * PARTITION, and at registry data sizes those commits — not row work —
+    * are the wall clock, so each caller sizes `stateParts` to its stateful
+    * key cardinality instead of taking the session default (the measured
+    * curve is in OPERATORS.md). Partition count never changes results.
+    * `start()` clones the session, and the stream keeps the clone's value
+    * for its whole life (it is recorded in the checkpoint), so the
+    * session's own `spark.sql.shuffle.partitions` is restored right after
+    * `start()` — batch work meanwhile keeps the session's parallelism. */
+  def drain(spark: SparkSession, writer: DataStreamWriter[Row],
+            stateParts: Int): StreamingQuery = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, stateParts.toString)
+    val q = try writer.trigger(Trigger.AvailableNow()).start()
+      finally spark.conf.set(key, prev)
+    try q.awaitTermination() finally q.stop()
+    q
+  }
 
   /** Retention: drop whole day partitions older than the horizon — the
     * TimeBasedRetention equivalent, metadata-only at scale. */
@@ -260,14 +292,8 @@ object Ingest {
 
   /** [[optimizeToBucketed]] from an in-session frame (same layout contract). */
   def optimizeToBucketed(samples: DataFrame, table: String, buckets: Int): Unit =
-    samples
-      // one file per bucket (repartition's HashPartitioning == the
-      // writer's bucket-id formula) — see Dedup.writeShingleIndex
-      .repartition(buckets, org.apache.spark.sql.functions.col(TsSchema.SeriesId))
-      .write.mode("overwrite")
-      .bucketBy(buckets, TsSchema.SeriesId)
-      .sortBy(TsSchema.SeriesId, TsSchema.Ts)
-      .saveAsTable(table)
+    graft.core.Dist.writeBucketed(samples, table, "overwrite", buckets,
+      TsSchema.SeriesId, TsSchema.Ts)
 
   /** Finish or undo a compaction swap that died mid-flight. With the pending
     * marker present: all `+` files on disk → roll forward (delete exactly

@@ -180,12 +180,11 @@ object Soak {
        "dup ratio 0.5, watermark+dedup+day partition)") {
       val stream = spark.readStream
         .schema(spark.read.parquet(ingestStage).schema).parquet(ingestStage)
-      val q = graft.streaming.Ingest.writer(
+      // the dedup state keeps the session's shuffle width
+      graft.streaming.Ingest.drain(spark, graft.streaming.Ingest.writer(
           graft.streaming.Ingest.withIngestSemantics(stream, 60000L),
-          ingestTable, s"$work/series_ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+          ingestTable, s"$work/series_ckpt"),
+        spark.conf.get("spark.sql.shuffle.partitions").toInt)
       spark.read.parquet(ingestTable)
     }
 
@@ -283,15 +282,12 @@ object Soak {
     println("| streaming operator | state rows | state (MB) | per-trigger (s) | total (s) |")
     println("|---|---|---|---|---|")
     def opStream(name: String)
-                (start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+                (writer: => org.apache.spark.sql.streaming.DataStreamWriter[
+                  org.apache.spark.sql.Row]): Unit = {
       graft.core.Memo.clearSession(spark)
       spark.catalog.clearCache()
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
       val t0 = System.nanoTime()
-      val q =
-        try { val q = start; q.processAllAvailable(); q.stop(); q }
-        finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val q = graft.streaming.Ingest.drain(spark, writer, stateParts = 8)
       val secs = (System.nanoTime() - t0) / 1e9
       val progs = q.recentProgress.filter(_.numInputRows > 0)
       val trig = progs.map(p =>
@@ -310,7 +306,6 @@ object Soak {
         .writeStream.format("noop")
         .outputMode("update")
         .option("checkpointLocation", s"$work/ckpt_funnel_scale")
-        .start()
     }
     opStream(s"funnel, same $nEv events folded to FIXED 1k keys") {
       graft.streaming.StreamingFunnel.funnel(
@@ -319,14 +314,12 @@ object Soak {
         .writeStream.format("noop")
         .outputMode("update")
         .option("checkpointLocation", s"$work/ckpt_funnel_fixed")
-        .start()
     }
     opStream(s"KMV bottom-k distinct sketch ($nEv events, 32 shards × k=256)") {
       graft.streaming.KmvStream.kmvBuckets(evStream, col("user_id"))
         .writeStream.format("noop")
         .outputMode("update")
         .option("checkpointLocation", s"$work/ckpt_kmv")
-        .start()
     }
 
     graft.core.Memo.clearSession(spark)

@@ -45,10 +45,8 @@ object StreamFloorProbe {
     def drainOnce(parts: Int, stateful: Boolean, noData: Boolean): Double = {
       ckptSeq += 1
       val ckpt = s"$base/ckpt$ckptSeq"
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
       val prevNoData =
         spark.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
       spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
         noData.toString)
       val t0 = System.nanoTime()
@@ -57,15 +55,11 @@ object StreamFloorProbe {
           .schema("k BIGINT, v BIGINT").json(src)
         val out = if (stateful) in.groupBy(pmod(col("k"), lit(8)).as("g"))
           .agg(count(lit(1)).as("n"), max("v").as("mv")) else in
-        val q = out.writeStream.format("memory")
+        graft.streaming.Ingest.drain(spark, out.writeStream.format("memory")
           .queryName(s"floor_out$ckptSeq")
           .outputMode(if (stateful) "update" else "append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination(); q.stop()
+          .option("checkpointLocation", ckpt), parts)
       } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
         prevNoData match {
           case Some(v) =>
             spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", v)

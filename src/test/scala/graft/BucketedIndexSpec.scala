@@ -57,7 +57,7 @@ class BucketedIndexSpec extends SparkTestBase {
   test("the index-build row rebuilds over a stale warehouse location") {
     // the catalog forgot the table but its location survives (an earlier
     // JVM's warehouse): a plain saveAsTable fails LOCATION_ALREADY_EXISTS
-    val sf = java.nio.file.Files.createTempDirectory("graft_idx_sf").toString
+    val sf = tempDir("idx_sf").toString
     Seq((1L, "the quick brown fox jumps over the lazy dog"),
         (2L, "the quick brown fox jumps over the lazy cat"),
         (3L, "unrelated content entirely")).toDF("doc_id", "text")

@@ -21,7 +21,7 @@ class BucketedSamplesSpec extends SparkTestBase {
       series("name:m,dc:a", Seq(S(1), S(2), S(3), S(4), S(5), S(6), S(7), S(8), S(9), S(10))) ++
       series("name:m,dc:b", Seq(S(2), S(4), S(6), S(8), S(10), S(12), S(14), S(16), S(18), S(20))))
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_bucket_src").toString
+    val dir = tempDir("bucket_src").toString
     fx.write.mode("overwrite").parquet(dir)
 
     spark.sql(s"DROP TABLE IF EXISTS $table")

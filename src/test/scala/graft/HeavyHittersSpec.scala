@@ -31,7 +31,7 @@ class HeavyHittersSpec extends SparkTestBase {
   }
 
   test("exact mode across streaming triggers equals plain token counts") {
-    val dir = Files.createTempDirectory("graft_hh_spec").toFile.getAbsolutePath
+    val dir = tempDir("hh_spec").toString
     val src = s"$dir/src"
     new java.io.File(src).mkdirs()
     // two micro-batch files; 'aa' spans both so its count must CARRY

@@ -45,7 +45,7 @@ class IngestLagRegistrySpec extends SparkTestBase {
     import java.nio.file.{Files, Paths}
     val s = spark.newSession()
     val before = s.streams.listListeners().length
-    val dir = Files.createTempDirectory("graft_onelis").toString
+    val dir = tempDir("onelis").toString
     val src = s"$dir/src"
     Files.createDirectories(Paths.get(src))
     val late = System.currentTimeMillis() - 300000L

@@ -144,7 +144,7 @@ class MemoSpec extends SparkTestBase {
   test("clearSession unlinks a symlink in a staged dir and keeps its target") {
     import java.nio.file.{Files, LinkOption}
     val s = spark.newSession()
-    val outside = Files.createTempDirectory("graft_memo_outside")
+    val outside = tempDir("memo_outside")
     val kept = Files.writeString(outside.resolve("keep.txt"), "x")
     val staged = java.nio.file.Paths.get(
       graft.queries.StreamingQ.stagedSrc(s, "sf", "symlink") { dir =>
@@ -158,7 +158,6 @@ class MemoSpec extends SparkTestBase {
       "the link is unlinked")
     assert(!Files.exists(staged.getParent), "the staged dir is deleted")
     assert(Files.exists(kept), "the link target's files remain")
-    Files.delete(kept); Files.delete(outside)
   }
 
   test("separately built sources with sameResult plans hit one entry") {

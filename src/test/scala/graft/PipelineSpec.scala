@@ -176,29 +176,21 @@ class PipelineSpec extends SparkTestBase {
     // clusters where localCheckpoint's executor-local blocks would die with
     // a lost executor) must be a pure materialization-strategy swap: same
     // labels, and superseded rounds' checkpoint files deleted as it runs
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
-    try {
-      val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
-        .toDF("doc_id_a", "doc_id_b")
-      val local = Dedup.clusterPairs(pairs).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val durable = Dedup.clusterPairs(pairs, checkpointDir = Some(dir.getAbsolutePath))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(durable == local)
-      // every superseded round was freed; only the final round's files remain
-      def rddDirs(f: java.io.File): Seq[java.io.File] =
-        if (!f.isDirectory) Nil
-        else if (f.getName.startsWith("rdd-")) Seq(f)
-        else f.listFiles().toSeq.flatMap(rddDirs)
-      assert(rddDirs(dir).size <= 1,
-        s"superseded checkpoint rounds not cleaned: ${rddDirs(dir)}")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(dir)
-    }
+    val dir = tempDir("ckpt").toFile
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
+      .toDF("doc_id_a", "doc_id_b")
+    val local = Dedup.clusterPairs(pairs).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val durable = Dedup.clusterPairs(pairs, checkpointDir = Some(dir.getAbsolutePath))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(durable == local)
+    // every superseded round was freed; only the final round's files remain
+    def rddDirs(f: java.io.File): Seq[java.io.File] =
+      if (!f.isDirectory) Nil
+      else if (f.getName.startsWith("rdd-")) Seq(f)
+      else f.listFiles().toSeq.flatMap(rddDirs)
+    assert(rddDirs(dir).size <= 1,
+      s"superseded checkpoint rounds not cleaned: ${rddDirs(dir)}")
   }
 
   test("keepCanonical drops all but one doc per cluster") {

@@ -61,7 +61,7 @@ class RollupSpec extends SparkTestBase {
 
   test("stream-maintained rollup equals the batch rollup of the same data") {
     import graft.streaming.Ingest
-    val dir = java.nio.file.Files.createTempDirectory("graft_sroll").toFile.getAbsolutePath
+    val dir = tempDir("sroll").toString
     val src = s"$dir/src"
     new java.io.File(src).mkdirs()
     val recs = for (h <- Seq("a", "b"); i <- 1 to 10)
@@ -95,7 +95,7 @@ class RollupSpec extends SparkTestBase {
 
   test("registered tier routes fetch|summarize to the rollup scan at plan time") {
     import graft.lang.m3.M3QL
-    val dir = java.nio.file.Files.createTempDirectory("graft_route").toFile.getAbsolutePath
+    val dir = tempDir("route").toString
     // ONE bound frame for rollup, registration and queries: the tier is
     // registered FOR a samples frame (plan identity via sameResult), so a
     // fresh fixture per call would — correctly — never route
@@ -133,7 +133,7 @@ class RollupSpec extends SparkTestBase {
 
   test("registered tier routes aligned PromQL sum_over_time to the rollup scan") {
     import graft.lang.prom.PromQL
-    val dir = java.nio.file.Files.createTempDirectory("graft_promroute").toFile.getAbsolutePath
+    val dir = tempDir("promroute").toString
     // bucket = the 60s sample spacing, so the tier holds one sample per
     // bucket stamped at the bucket start — the serving-resolution
     // precondition under which the rollup answer is exact
@@ -177,7 +177,7 @@ class RollupSpec extends SparkTestBase {
 
   test("registered tier routes aligned increase/rate to the rollup scan") {
     import graft.lang.prom.PromQL
-    val dir = java.nio.file.Files.createTempDirectory("graft_ctrroute").toFile.getAbsolutePath
+    val dir = tempDir("ctrroute").toString
     // serving resolution: one sample per 60s bucket stamped at the bucket
     // start, so tier rows ARE the samples and the counter math over them is
     // bit-identical to the raw path
@@ -210,7 +210,7 @@ class RollupSpec extends SparkTestBase {
   }
 
   test("rollupSweep writes a day-partitioned rollup table that reads back") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rollup").toFile.getAbsolutePath
+    val dir = tempDir("rollup").toString
     fx.write.mode("overwrite").parquet(s"$dir/raw")
     Rollup.rollupSweep(spark, s"$dir/raw", s"$dir/rollup", bucketMs = 120000L)
     val back = spark.read.parquet(s"$dir/rollup")

@@ -22,16 +22,27 @@ class SessionSpec extends SparkTestBase {
     assert(s.sparkContext.getConf.get("spark.ui.enabled") == "false")
   }
 
-  test("src/main has exactly one session builder and no function registration") {
+  /** (file name, count) of every src/main Scala file containing `needle`. */
+  private def hits(needle: String): Seq[(String, Int)] = {
     val files = Files.walk(Paths.get("src/main")).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toList
     assert(files.nonEmpty, "source tree not found from the test working directory")
-    def hits(needle: String): Seq[(String, Int)] = files.map { p =>
+    files.map { p =>
       p.getFileName.toString -> java.util.regex.Pattern.quote(needle).r
         .findAllMatchIn(Files.readString(p)).size
     }.filter(_._2 > 0)
+  }
+
+  test("src/main has exactly one session builder and no function registration") {
     assert(hits("SparkSession.builder") == Seq("Session.scala" -> 1))
     assert(hits("createOrReplaceTempFunction").isEmpty)
+  }
+
+  test("src/main runs streams to completion only in Ingest.drain") {
+    assert(hits("processAllAvailable").isEmpty)
+    for (needle <- Seq("awaitTermination", "Trigger.AvailableNow"))
+      assert(hits(needle).map(_._1) == Seq("Ingest.scala"), s"$needle: ${hits(needle)}")
+    assert(hits("graft.stream.statePartitions").isEmpty)
   }
 
   test("product aggregates as a HashAggregate when built with no active session") {

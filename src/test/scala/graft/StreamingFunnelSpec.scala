@@ -11,7 +11,7 @@ class StreamingFunnelSpec extends SparkTestBase {
   import spark.implicits._
 
   private def run(batches: Seq[Seq[(Long, String, Long)]]): Seq[(Long, Long, Int)] = {
-    val dir = java.nio.file.Files.createTempDirectory("sfunnel_spec")
+    val dir = tempDir("sfunnel_spec")
     batches.zipWithIndex.foreach { case (b, i) =>
       b.toDF("user_id", "event_type", "tm").coalesce(1)
         .write.json(s"$dir/src/b$i")
@@ -82,7 +82,7 @@ class StreamingFunnelSpec extends SparkTestBase {
   }
 
   test("streaming cohorts: a late earlier event re-assigns the cohort") {
-    val dir = java.nio.file.Files.createTempDirectory("scohort_spec")
+    val dir = tempDir("scohort_spec")
     // trigger A: periods 5 and 7 seen -> cohort 5, offsets {0, 2}
     // trigger B: a LATE period-2 event -> cohort moves to 2, offsets {0,3,5}
     Seq((1L, 520L), (1L, 790L)).toDF("user_id", "tm")
@@ -107,7 +107,7 @@ class StreamingFunnelSpec extends SparkTestBase {
   }
 
   test("streaming transitions: a late inserted event SPLITS an existing pair") {
-    val dir = java.nio.file.Files.createTempDirectory("strans_spec")
+    val dir = tempDir("strans_spec")
     // trigger A: a@10 -> c@30 pairs as (a,c)
     // trigger B: a LATE b@20 arrives between them -> (a,b),(b,c)
     Seq((1L, 10L, 1L, "a"), (1L, 30L, 3L, "c"))

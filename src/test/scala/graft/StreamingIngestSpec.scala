@@ -28,7 +28,7 @@ class StreamingIngestSpec extends SparkTestBase {
     // floor, and the lag must be visible in the /_tsdb/stats render —
     // matching the reference's coordinatorLag histogram semantics
     // (action/TSDBIngestionLagActionFilter.java:101: now - minSampleTs)
-    val dir = Files.createTempDirectory("graft_lag").toFile.getAbsolutePath
+    val dir = tempDir("lag").toString
     val src = s"$dir/src"; val tbl = s"$dir/tbl"; val ckp = s"$dir/ckp"
     new java.io.File(src).mkdirs()
     val now = System.currentTimeMillis()
@@ -74,7 +74,7 @@ class StreamingIngestSpec extends SparkTestBase {
     // the real Ingest.writer sink (day-partitioned parquet, watermark set)
     // metered WITHOUT wrapping it: the progress-event listener derives the
     // same three instants the metered sink stamps
-    val dir = Files.createTempDirectory("graft_lagl").toFile.getAbsolutePath
+    val dir = tempDir("lagl").toString
     val src = s"$dir/src"; val tbl = s"$dir/tbl"; val ckp = s"$dir/ckp"
     new java.io.File(src).mkdirs()
     val late = System.currentTimeMillis() - 300000L
@@ -122,7 +122,7 @@ class StreamingIngestSpec extends SparkTestBase {
     // only by (a) the instants sampled (trigger start vs batch entry —
     // both inside the same trigger, so bounded by its wall time) and
     // (b) ±1ms rounding in the progress avg.
-    val dir = Files.createTempDirectory("graft_lagp").toFile.getAbsolutePath
+    val dir = tempDir("lagp").toString
     val src = s"$dir/src"; val tbl = s"$dir/tbl"; val ckp = s"$dir/ckp"
     new java.io.File(src).mkdirs()
     val late = System.currentTimeMillis() - 300000L
@@ -188,7 +188,7 @@ class StreamingIngestSpec extends SparkTestBase {
     // r11 verdict item 3: Ingest.writer users must get the ingestionLag
     // stats section populated without any opt-in; the session's one lag
     // listener must also not accumulate with the streams it meters
-    val dir = Files.createTempDirectory("graft_laga").toFile.getAbsolutePath
+    val dir = tempDir("laga").toString
     val src = s"$dir/src"; val tbl = s"$dir/tbl"; val ckp = s"$dir/ckp"
     new java.io.File(src).mkdirs()
     val late = System.currentTimeMillis() - 300000L
@@ -215,11 +215,36 @@ class StreamingIngestSpec extends SparkTestBase {
     } finally Seq(tbl, tbl2).foreach(graft.serve.IngestLag.clear)
   }
 
+  test("Ingest.drain runs a stream to completion at its own state shuffle " +
+       "and leaves the session conf unchanged") {
+    val src = tempDir("drain").toString + "/src"
+    new java.io.File(src).mkdirs()
+    // two files => two data batches under maxFilesPerTrigger=1; key 2 in
+    // both, so its count must carry across the triggers in state
+    Seq("a.json" -> Seq(1, 2, 3), "b.json" -> Seq(2, 4)).foreach { case (f, ks) =>
+      Files.write(java.nio.file.Paths.get(s"$src/$f"),
+        ks.map(k => s"""{"k":$k}""").mkString("\n").getBytes)
+    }
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    val counts = spark.readStream.option("maxFilesPerTrigger", 1)
+      .schema("k BIGINT").json(src).groupBy("k").count()
+    val q = Ingest.drain(spark, counts.writeStream.format("memory")
+      .queryName("drainz").outputMode("update"), stateParts = 3)
+    assert(!q.isActive)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == before)
+    val data = q.recentProgress.filter(_.numInputRows > 0)
+    assert(data.length == 2, s"data batches: ${data.length}")
+    assert(q.lastProgress.stateOperators.head.numShufflePartitions == 3)
+    val got = spark.table("drainz").groupBy("k").agg(max("count"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == Map(1L -> 1L, 2L -> 2L, 3L -> 1L, 4L -> 1L))
+  }
+
   test("a second active writer to one table fails at start by name; " +
        "a restart after stop still starts") {
     // the query name is derived from the table, so two live streams can
     // never share one table's _spark_metadata log
-    val dir = Files.createTempDirectory("graft_dupw").toFile.getAbsolutePath
+    val dir = tempDir("dupw").toString
     val src = s"$dir/src"; val tbl = s"$dir/tbl"
     new java.io.File(src).mkdirs()
     Files.write(java.nio.file.Paths.get(s"$src/b1.json"),
@@ -242,7 +267,7 @@ class StreamingIngestSpec extends SparkTestBase {
   }
 
   test("streaming ingest writes day-partitioned parquet with dedup") {
-    val dir = Files.createTempDirectory("graft_ingest").toFile.getAbsolutePath
+    val dir = tempDir("ingest").toString
     val src = s"$dir/src"; val tbl = s"$dir/tbl"; val ckp = s"$dir/ckp"
     new java.io.File(src).mkdirs()
     val lines = Seq(
@@ -295,7 +320,7 @@ class StreamingIngestSpec extends SparkTestBase {
       Ingest.runOnce(spark, src, tbl, ckp)
       spark.read.parquet(tbl).count()
     }
-    val dir = Files.createTempDirectory("graft_restart").toFile.getAbsolutePath
+    val dir = tempDir("restart").toString
     val n = ingestInTwoRuns(dir)
     // run 1 committed 2 rows; run 2 must process ONLY b2 (b1 is in the
     // checkpoint's committed offsets) and dedup its internal duplicate:
@@ -304,7 +329,7 @@ class StreamingIngestSpec extends SparkTestBase {
   }
 
   test("streaming summarize aggregates tumbling windows") {
-    val dir = Files.createTempDirectory("graft_sumz").toFile.getAbsolutePath
+    val dir = tempDir("sumz").toString
     val src = s"$dir/src"
     new java.io.File(src).mkdirs()
     val lines = (0 until 10).map { i =>
@@ -323,7 +348,7 @@ class StreamingIngestSpec extends SparkTestBase {
   }
 
   test("streaming sessionize merges events within the gap and splits across it") {
-    val dir = Files.createTempDirectory("graft_sess").toFile.getAbsolutePath
+    val dir = tempDir("sess").toString
     val src = s"$dir/src"
     new java.io.File(src).mkdirs()
     val t0 = 1704067200000L
@@ -348,7 +373,7 @@ class StreamingIngestSpec extends SparkTestBase {
   }
 
   test("streaming exact dedup drops later copies across micro-batch files") {
-    val dir = Files.createTempDirectory("graft_sdedup").toFile.getAbsolutePath
+    val dir = tempDir("sdedup").toString
     val src = s"$dir/src"
     new java.io.File(src).mkdirs()
     val t0 = 1704067200000L
@@ -389,7 +414,7 @@ class StreamingIngestSpec extends SparkTestBase {
     // because the DuckDB oracle mirror must break on `delta > gap`, not
     // `>=`. Streaming state-merged sessions must equal the batch run row
     // for row.
-    val dir = Files.createTempDirectory("graft_sess2").toFile.getAbsolutePath
+    val dir = tempDir("sess2").toString
     val src = s"$dir/src"
     new java.io.File(src).mkdirs()
     val t0 = 1704067200000L
@@ -419,7 +444,7 @@ class StreamingIngestSpec extends SparkTestBase {
   }
 
   test("streaming range join pairs two live streams within [t-w, t]") {
-    val dir = Files.createTempDirectory("graft_ssjoin").toFile.getAbsolutePath
+    val dir = tempDir("ssjoin").toString
     val (lsrc, rsrc) = (s"$dir/l", s"$dir/r")
     new java.io.File(lsrc).mkdirs(); new java.io.File(rsrc).mkdirs()
     val t0 = 1704067200000L
@@ -452,7 +477,7 @@ class StreamingIngestSpec extends SparkTestBase {
   }
 
   test("retention sweep drops old day partitions") {
-    val dir = Files.createTempDirectory("graft_ret").toFile.getAbsolutePath
+    val dir = tempDir("ret").toString
     import spark.implicits._
     Seq((1L, "2023-01-01 00:00:00"), (2L, "2024-01-01 00:00:00"))
       .toDF("x", "day_s")
@@ -465,7 +490,7 @@ class StreamingIngestSpec extends SparkTestBase {
   }
 
   test("compaction sweep rewrites fragmented day partitions losslessly") {
-    val dir = Files.createTempDirectory("graft_cmp").toFile.getAbsolutePath
+    val dir = tempDir("cmp").toString
     import spark.implicits._
     // 12 files in one day partition (micro-batch accretion), 1 in the other
     (1L to 120L).map(i => (i, "2024-01-01 00:00:00")).toDF("x", "day_s")
@@ -494,7 +519,7 @@ class StreamingIngestSpec extends SparkTestBase {
   }
 
   test("compaction recovery rolls a died-mid-delete swap forward") {
-    val dir = Files.createTempDirectory("graft_cmp_fwd").toFile.getAbsolutePath
+    val dir = tempDir("cmp_fwd").toString
     import spark.implicits._
     (1L to 60L).map(i => (i, "2024-01-01 00:00:00")).toDF("x", "day_s")
       .withColumn("day", col("day_s").cast("timestamp"))
@@ -534,7 +559,7 @@ class StreamingIngestSpec extends SparkTestBase {
   }
 
   test("compaction recovery rolls a died-mid-move swap back") {
-    val dir = Files.createTempDirectory("graft_cmp_back").toFile.getAbsolutePath
+    val dir = tempDir("cmp_back").toString
     import spark.implicits._
     (1L to 60L).map(i => (i, "2024-01-01 00:00:00")).toDF("x", "day_s")
       .withColumn("day", col("day_s").cast("timestamp"))

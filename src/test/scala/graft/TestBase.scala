@@ -3,6 +3,7 @@ package graft
 import graft.core.{QueryGrid, TsSchema}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session + golden-fixture helpers.
@@ -12,8 +13,22 @@ import org.scalatest.funsuite.AnyFunSuite
   * a series is a labels string "k:v,k:v" plus a values array laid positionally
   * on a FIXED_INTERVAL grid; `None` means NO sample (null-as-absence).
   */
-trait SparkTestBase extends AnyFunSuite {
+trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
+
+  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+
+  /** A fresh `graft_<tag>` temp dir, deleted with its contents after the
+    * spec's last test (symlinks inside are unlinked, never followed). */
+  def tempDir(tag: String): java.nio.file.Path = tempDirs.synchronized {
+    val d = java.nio.file.Files.createTempDirectory(s"graft_$tag")
+    tempDirs += d
+    d
+  }
+
+  override protected def afterAll(): Unit =
+    try tempDirs.synchronized(tempDirs.foreach(graft.queries.StreamingQ.deleteRec))
+    finally super.afterAll()
 
   /** Grid used by most golden cases: 10 points at 1m steps, end-exclusive. */
   val g: QueryGrid = QueryGrid(60000L, 60000L * 11, 60000L)

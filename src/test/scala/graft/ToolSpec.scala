@@ -58,7 +58,7 @@ class ToolSpec extends SparkTestBase {
     assert(lines.exists(_.contains("== Physical Plan ==")), lines)
     assert(s.conf.get("graft.ingestlag.diag") == "false", "time runs under the timing setup")
 
-    val dir = Files.createTempDirectory("tool_explain")
+    val dir = tempDir("tool_explain")
     Tool.run(s, Seq("explain", dir.toString, "t", "tpch_q6_scan_agg"))
     assert(Files.readString(dir.resolve("tpch_q6_scan_agg_t.txt")).contains("== Physical Plan =="))
   }

@@ -19,7 +19,7 @@ class TpchPartsuppSpec extends SparkTestBase {
   private val realSf = "/root/testdata/sf0.001"
 
   private lazy val stagedSf: String = {
-    val dir = Files.createTempDirectory("graft_partsupp").toString
+    val dir = tempDir("partsupp").toString
     for (t <- Seq("lineitem", "orders", "part", "supplier", "nation", "region"))
       Files.createSymbolicLink(
         Paths.get(dir, s"$t.parquet"), Paths.get(realSf, s"$t.parquet"))
@@ -86,7 +86,7 @@ class TpchPartsuppSpec extends SparkTestBase {
       new java.io.File("/root/testdata/sf0.001/partsupp.parquet").exists(),
       "hook may only fire when the table actually shipped")
     // a staged root WITH the table activates; one missing sf deactivates
-    val root = Files.createTempDirectory("graft_psroot").toString
+    val root = tempDir("psroot").toString
     val sfA = Paths.get(root, "sfA"); Files.createDirectories(sfA)
     Files.createFile(sfA.resolve("lineitem.parquet"))
     Files.createFile(sfA.resolve("partsupp.parquet"))

@@ -109,7 +109,7 @@ class WinnowingSpec extends SparkTestBase {
     assert(row.head.getDouble(3) > 0.8, s"jaccard ${row.head.getDouble(3)}")
   }
 
-  test("row-local fingerprint array equals the window-formulated selection") {
+  test("row-local staged fingerprints equal the window-formulated selection") {
     // spans the short-doc rule (< w windows), exact-w, and long documents,
     // plus within-doc repetition (duplicate fps must collapse identically)
     val texts = Seq(
@@ -120,26 +120,18 @@ class WinnowingSpec extends SparkTestBase {
              (1 to 12).map(i => s"w$i").mkString(" ")),
       5L -> "only two")
     val batch = fps(texts: _*)
-    val local = docsOf(texts: _*)
-      .select(col("doc_id"), explode(
-        graft.pipelines.Dedup.winnowFingerprintArray(col("text"), k, w))
-        .as("fp"))
-      .collect().groupBy(_.getLong(0))
-      .map { case (id, rows) => id -> rows.map(_.getLong(1)).toSet }
-    assert(local == batch.filter(_._2.nonEmpty),
-      s"row-local $local vs window $batch")
-    // doc 5 is shorter than k tokens: empty array, absent from both
-    assert(!local.contains(5L) && !batch.contains(5L))
-    // the staged generator formulation (the bulk/streaming path) too
+    // the staged generator formulation (the bulk/streaming path)
     val staged = graft.pipelines.Dedup.winnowFpRows(
         docsOf(texts: _*), k, w, "doc_id", "text", "doc_id")
       .collect().groupBy(_.getLong(0))
       .map { case (id, rows) => id -> rows.map(_.getLong(1)).toSet }
-    assert(staged == local, s"staged $staged vs row-local $local")
+    assert(staged == batch.filter(_._2.nonEmpty),
+      s"staged $staged vs window $batch")
+    // doc 5 is shorter than k tokens: no fingerprint in either
+    assert(!staged.contains(5L) && !batch.contains(5L))
   }
 
   test("streaming winnow probe equals the static probe against the index") {
-    import java.nio.file.Files
     val old = docsOf(
       10L -> (1 to 30).map(i => s"word$i").mkString(" "),
       11L -> (1 to 30).map(i => s"other$i").mkString(" "),
@@ -154,7 +146,7 @@ class WinnowingSpec extends SparkTestBase {
       20L -> ((1 to 30).map(i => s"word$i").mkString(" ") + " tail"),
       21L -> "nothing in common with anything indexed either",
       22L -> (1 to 30).map(i => s"other$i").mkString(" "))
-    val src = Files.createTempDirectory("graft_swin").toString + "/src"
+    val src = tempDir("swin").toString + "/src"
     fresh.coalesce(2).write.mode("overwrite").json(src)
     val stream = spark.readStream.option("maxFilesPerTrigger", 1)
       .schema("doc_id BIGINT, text STRING").json(src)
