@@ -13,10 +13,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * storage pool once the registry is large enough — block-manager eviction +
   * recompute + GC thrash that task-spill metrics never see (wall time
   * exploded 6× in r9 with spill_bytes_total = 0). So this bench runs family
-  * by family and EVICTS between families (`Memo.clearSession` +
-  * `catalog.clearCache`): the standing set is one family's caches, which is
-  * also exactly how a production serving session should budget (the Memo
-  * ledger's `graft.memo.maxEntries` enforces the same bound structurally).
+  * by family and EVICTS between families (`Memo.clearSession`, which frees
+  * every frame kept past its call): the standing set is one family's
+  * caches, which is also exactly how a production serving session should
+  * budget (the Memo ledger's `graft.memo.maxEntries` enforces the same
+  * bound structurally).
   * Each family then warms up on its first query UNTIMED, so rebuild of that
   * family's shared inputs and its codegen/JIT paths never lands in a timed
   * region (min-of-N would hide it anyway, but value_single_pass shouldn't
@@ -119,7 +120,10 @@ object Bench {
   def timeFamily[R](spark: SparkSession, sfDir: String, qs: Seq[(String, Query)])(
       record: (String, () => Option[Seq[Pass]]) => R): Seq[R] = {
     Memo.clearSession(spark)
-    spark.catalog.clearCache()
+    // a frame persisted outside the memo escapes the eviction: name it
+    val left = org.apache.spark.sql.graft.CacheBridge.cachedEntries(spark)
+    if (left > 0)
+      Console.err.println(s"[bench] $left CacheManager entries survive Memo.clearSession")
     System.gc()
     val sorted = qs.sortBy(_._1)
     sorted.headOption.foreach { case (_, fn) =>

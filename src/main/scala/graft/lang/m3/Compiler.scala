@@ -22,8 +22,8 @@ import org.apache.spark.sql.{functions => F}
   * TimeSeriesNormalizer (AbstractBinaryProjectionStage PAIRWISE/BATCH; diff
   * is NormalizationStrategy.NONE and is left unnormalized).
   *
-  * Macros become named DataFrames, cached when referenced more than once —
-  * the reference's unfold-cache CSE (SourceBuilderVisitor.java:372-394).
+  * Macros become named DataFrames, memoized when referenced more than once
+  * — the reference's unfold-cache CSE (SourceBuilderVisitor.java:372-394).
   */
 final class Compiler(spark: SparkSession, samples: DataFrame, grid: QueryGrid) {
 
@@ -70,7 +70,7 @@ final class Compiler(spark: SparkSession, samples: DataFrame, grid: QueryGrid) {
         val p = macroDefs.getOrElse(name,
           throw new IllegalArgumentException(s"undefined macro: $name"))
         val bs = compilePipeline(p, macroDF)
-        if (refCounts(name) > 1) bs.map { case (df, m) => (df.cache(), m) } else bs
+        if (refCounts(name) > 1) bs.map { case (df, m) => (Compiler.shared(df), m) } else bs
       })
 
     Normalizer.collapse(compilePipeline(q.main, macroDF))._1
@@ -414,10 +414,10 @@ final class Compiler(spark: SparkSession, samples: DataFrame, grid: QueryGrid) {
           // is exact. Common keys still come from the FULL operand sets
           // (ref: extractCommonTagKeys runs over all series, :376-403), so
           // one shared 1-row aggregate is passed into every branch.
-          // every branch re-plans the right subtree — cache it once so B
+          // every branch re-plans the right subtree — memoize it once so B
           // branches read the computed right operand instead of executing it
-          // ~2B times (same cache-on-reuse policy as multi-reference macros)
-          val rdfC = if (bs.lengthCompare(1) > 0) rdf.cache() else rdf
+          // ~2B times (same policy as multi-reference macros)
+          val rdfC = if (bs.lengthCompare(1) > 0) Compiler.shared(rdf) else rdf
           val ck = if (keys.isEmpty) Some(SeriesSet.commonKeysDF(df, rdfC)) else None
           val aligned = bs.map { case (ldf, lm) =>
             Normalizer.alignOperands(ldf, lm, rdfC, rmeta, grid.endMs)
@@ -438,7 +438,7 @@ final class Compiler(spark: SparkSession, samples: DataFrame, grid: QueryGrid) {
           val rAll = aligned.groupBy(_._3).map { case (m2, as) =>
             as.head._2.withColumn("_stp", F.lit(gridTag(m2)))
           }.reduce(_ unionByName _)
-          val fused = SeriesSet.divideStepped(lAll, rAll, keys, ck).cache()
+          val fused = Compiler.shared(SeriesSet.divideStepped(lAll, rAll, keys, ck))
           aligned.zipWithIndex.map { case ((_, _, m2), i) =>
             (fused.where(F.col("_bk") === i).drop("_bk", "_stp"), m2)
           }
@@ -484,6 +484,15 @@ final class Compiler(spark: SparkSession, samples: DataFrame, grid: QueryGrid) {
         throw new IllegalArgumentException(s"unknown M3QL stage: $other")
     }
   }
+}
+
+object Compiler {
+  /** Compiled frames read more than once in one plan. A frame keys itself:
+    * its plan holds samples, grid and stage arguments (the schema joins the
+    * key, as canonicalization erases alias names), so a recompile on the
+    * same grid reuses the entry and a new grid adds one the ledger bounds. */
+  private val memo = graft.core.Memo.frames[org.apache.spark.sql.types.StructType]
+  private def shared(df: DataFrame): DataFrame = memo(df, df.schema)(df)
 }
 
 object M3QL {

@@ -3,6 +3,7 @@ package graft.lang.prom
 import graft.core.{QueryGrid, TsSchema}
 import graft.stages._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable.ListBuffer
 
@@ -527,19 +528,25 @@ object PromQL {
       else if (at == AtEnd) grid.alignedEndMs
       else at
 
+    /** The `@ t` stamp: the vector AS OF a fixed instant, constant across
+      * the grid — each series' newest row of `df` in `[t - lookback, t]`,
+      * stamped on every point of `g`. The window is a fixed absolute range,
+      * so partition pruning still applies below it. */
+    private def stampAt(df: DataFrame, t: Long, g: QueryGrid): DataFrame =
+      df.where(col(S.Ts) >= t - LookbackDeltaMs && col(S.Ts) <= t)
+        .groupBy(col(S.SeriesId))
+        .agg(expr(s"max_by(${S.Value}, ${S.Ts})").as(S.Value),
+          first(col(S.LabelsCol)).as(S.LabelsCol))
+        .crossJoin(g.gridDF(spark))
+        .select(S.SeriesId, S.LabelsCol, S.Ts, S.Value)
+
+    /** The trailing range-window frame `[t - d, t]` per series, ordered by
+      * `ts` (sample timestamps, or `bucket_ts` on a rollup tier). */
+    private def trailing(d: Long, ts: String = S.Ts): WindowSpec =
+      Window.partitionBy(S.SeriesId).orderBy(col(ts)).rangeBetween(-selD(d), 0)
+
     private def selectorDF(s: Selector, g: QueryGrid): DataFrame = s.atMs match {
-      case Some(at0) =>
-        // `@ t`: the vector AS OF a fixed instant, constant across the grid —
-        // latest sample per series in [t-lookback, t], stamped on every grid
-        // point. The scan is a fixed absolute window: pruning still applies.
-        val t = resolveAt(at0) - s.offsetMs
-        val pinned = applyMatchers(s,
-          samples.where(col(S.Ts) >= t - LookbackDeltaMs && col(S.Ts) <= t))
-        pinned.groupBy(col(S.SeriesId))
-          .agg(expr(s"max_by(${S.Value}, ${S.Ts})").as(S.Value),
-            first(col(S.LabelsCol)).as(S.LabelsCol))
-          .crossJoin(g.gridDF(spark))
-          .select(S.SeriesId, S.LabelsCol, S.Ts, S.Value)
+      case Some(at0) => stampAt(applyMatchers(s, samples), resolveAt(at0) - s.offsetMs, g)
       case None =>
         val filtered = applyMatchers(s, samples.where(
           col(S.Ts) >= g.startMs - s.offsetMs && col(S.Ts) <= g.endMs - s.offsetMs))
@@ -604,8 +611,7 @@ object PromQL {
     private def overTimeFromRollup(s: Selector, d: Long, agg: String,
                                    g: QueryGrid): Option[DataFrame] =
       rollupWindow(s, d, g).map { shifted =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(S.SeriesId).orderBy(col("bucket_ts")).rangeBetween(-selD(d), 0)
+        val w = trailing(d, "bucket_ts")
         import org.apache.spark.sql.types.DoubleType
         val v = agg match {
           case "sum"   => sum(col("rsum")).over(w).cast(DoubleType)
@@ -957,22 +963,13 @@ object PromQL {
       // `@` on a range argument — rate(m[5m] @ t), avg_over_time(m[1h:5m] @ t):
       // the whole call is evaluated once with the scan pinned to the fixed
       // window ending at t, then the value AT t (newest function output
-      // within the instant-vector lookback, mirroring the instant-`@` path)
-      // is stamped onto every grid point. The pinned scan is a fixed
-      // absolute range, so partition pruning still applies.
+      // within the instant-vector lookback) is stamped like an instant `@`
       case Call(fn, args) if args.exists(a => rangeAt(a).isDefined) =>
         val t = resolveAt(
           args.collectFirst { case a if rangeAt(a).isDefined => rangeAt(a).get }.get)
         val stripped = Call(fn, args.map(stripRangeAt))
         val buf = lookback(stripped) + LookbackDeltaMs
-        val pinned = eval(stripped, QueryGrid(t - buf, t + 1, g.stepMs))
-        pinned
-          .where(col(S.Ts) >= t - LookbackDeltaMs && col(S.Ts) <= t)
-          .groupBy(col(S.SeriesId))
-          .agg(expr(s"max_by(${S.Value}, ${S.Ts})").as(S.Value),
-            first(col(S.LabelsCol)).as(S.LabelsCol))
-          .crossJoin(g.gridDF(spark))
-          .select(S.SeriesId, S.LabelsCol, S.Ts, S.Value)
+        stampAt(eval(stripped, QueryGrid(t - buf, t + 1, g.stepMs)), t, g)
 
       case Call(fn, args) =>
         // under promParity the range-window family drops the metric name
@@ -1006,8 +1003,7 @@ object PromQL {
           // value (Prometheus instant rate, no extrapolation). idelta is
           // the raw difference.
           val (in, d) = rangeInput(args.head, g)
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(S.SeriesId).orderBy(S.Ts)
+          val w = Window.partitionBy(S.SeriesId).orderBy(S.Ts)
           val base = in
             .withColumn("_pv", lag(S.Value, 1).over(w))
             .withColumn("_pt", lag(S.Ts, 1).over(w))
@@ -1043,8 +1039,7 @@ object PromQL {
           val (in, d) = rangeInput(args.lift(1).getOrElse(
             throw PromParseError("expected quantile_over_time(φ, m[d])")), g)
           val phi = requireScalar(args.headOption, "quantile_over_time φ")
-          val frame = org.apache.spark.sql.expressions.Window
-            .partitionBy(S.SeriesId).orderBy(S.Ts).rangeBetween(-selD(d), 0)
+          val frame = trailing(d)
           in.withColumn(S.Value,
             expr(s"percentile(${S.Value}, $phi)").over(frame))
         case overTime(sub) =>
@@ -1069,8 +1064,7 @@ object PromQL {
           // window aggregates; ties on value resolve to the latest timestamp
           // like Prometheus (scan order there, max ts here for determinism).
           val (in, d) = rangeInput(args.head, g)
-          val frame = org.apache.spark.sql.expressions.Window
-            .partitionBy(S.SeriesId).orderBy(S.Ts).rangeBetween(-selD(d), 0)
+          val frame = trailing(d)
           // NaN samples must never win max/min (Prometheus comparison
           // semantics; Spark's struct ordering would rank NaN above every
           // number) — NULL-out their ordering key so max_by/min_by skip
@@ -1098,8 +1092,7 @@ object PromQL {
           // Median of an even count is the midpoint, matching Prometheus's
           // linear-interpolated q=0.5.
           val (in, d) = rangeInput(args.head, g)
-          val frame = org.apache.spark.sql.expressions.Window
-            .partitionBy(S.SeriesId).orderBy(S.Ts).rangeBetween(-selD(d), 0)
+          val frame = trailing(d)
           def medianOf(a: Column): Column = {
             val s = array_sort(a)
             val n = size(a)
@@ -1121,8 +1114,7 @@ object PromQL {
         case "present_over_time" =>
           val (in, d) = rangeInput(args.head, g)
           val dense = GridOps.densify(in, g)
-          val frame = org.apache.spark.sql.expressions.Window
-            .partitionBy(S.SeriesId).orderBy(S.Ts).rangeBetween(-selD(d), 0)
+          val frame = trailing(d)
           dense.withColumn("_n", count(S.Value).over(frame))
             .where(col("_n") > 0)
             .withColumn(S.Value, lit(1.0))
@@ -1434,8 +1426,7 @@ object PromQL {
             explode(sequence(col("_lo"),
               least(col("_hi") + lit(LookbackDeltaMs), lit(capInstant)),
               lit(stepMs))).as("_b"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(S.SeriesId).orderBy(col("_b"))
+        val w = Window.partitionBy(S.SeriesId).orderBy(col("_b"))
           .rangeBetween(-LookbackDeltaMs, 0)
         span
           .join(bucketed.select(col(S.SeriesId), col("_b"), col(S.Value), col("_sts")),

@@ -17,10 +17,10 @@ import org.apache.spark.sql.types._
   */
 object Dedup {
 
-  /** Session-scoped persisted reference shingle sets for [[streamingNovelty]]
-    * — one frame per (reference plan, n, idCol), released on
-    * [[graft.core.Memo.clearSession]]. */
-  private val refShingleMemo = graft.core.Memo.frames[(Int, String)]
+  /** Every derived frame an operator here keeps past its call, one entry
+    * per (source plan, tag, every parameter that shapes the frame), bounded
+    * by the session ledger and released on [[graft.core.Memo.clearSession]]. */
+  private val memo = graft.core.Memo.frames[Product]
 
   /** Exact dedup: keep the first row (lowest doc_id) per distinct key set.
     * One hash-shuffle; at 100TB this is the cheapest possible full dedup. */
@@ -80,19 +80,20 @@ object Dedup {
   private def shingles(docs: DataFrame, n: Int, idCol: String): DataFrame =
     rawShingles(docs, n, idCol).distinct()
 
+  /** [[shingles]] memoized + persisted per (corpus plan, n, idCol): the
+    * index feeds sizes, document frequencies AND both join sides of every
+    * pair operator, so it is tokenized once per corpus instead of once per
+    * branch (at 100TB you'd write it to storage; MEMORY_AND_DISK is the
+    * single-job equivalent). */
+  private def shingleIndex(docs: DataFrame, n: Int, idCol: String): DataFrame =
+    memo(docs, ("shingles", n, idCol))(shingles(docs, n, idCol))
+
   /** N-gram Jaccard near-dup pairs: inverted index on shingles, count common
     * shingles per candidate pair, exact Jaccard >= threshold.
     * `maxDf` drops stop-shingles (skew + noise guard at scale). */
   def ngramJaccardPairs(docs: DataFrame, n: Int, threshold: Double,
                         idCol: String = "doc_id", maxDf: Int = 1000): DataFrame = {
-    // the shingle index feeds sizes, document frequencies, AND both join
-    // sides — materialize it once instead of re-tokenizing the corpus per
-    // branch (at 100TB you'd write this index to storage; MEMORY_AND_DISK is
-    // the single-job equivalent). The cache lives until the session evicts
-    // it — callers running many dedups in one session can release it with
-    // spark.catalog.clearCache() between corpora.
-    val sh = shingles(docs, n, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = shingleIndex(docs, n, idCol)
     val sizes = sh.groupBy(idCol).agg(count(lit(1)).as("sz"))
     val filtered = sh.join(
       sh.groupBy("shingle").agg(count(lit(1)).as("df")).where(col("df") <= maxDf && col("df") >= 2),
@@ -121,8 +122,7 @@ object Dedup {
     * quadratic in corpus size. */
   def containmentPairs(docs: DataFrame, n: Int, threshold: Double,
                        idCol: String = "doc_id", maxDf: Int = 1000): DataFrame = {
-    val sh = shingles(docs, n, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = shingleIndex(docs, n, idCol)
     val sizes = sh.groupBy(idCol).agg(count(lit(1)).as("sz"))
     val filtered = sh.join(
       sh.groupBy("shingle").agg(count(lit(1)).as("df")).where(col("df") <= maxDf && col("df") >= 2),
@@ -215,7 +215,7 @@ object Dedup {
     * gate before staging the stream it applies it to. */
   def streamingNovelty(reference: DataFrame, n: Int,
                        idCol: String = "doc_id"): DataFrame => DataFrame = {
-    val refSh = refShingleMemo(reference, (n, idCol))(
+    val refSh = memo(reference, ("refShingles", n, idCol))(
       shingles(reference, n, idCol).select("shingle").distinct())
     val sh = array_distinct(filter(wordNgramsCol(col("text"), n),
       s => length(s) > 0))
@@ -277,19 +277,18 @@ object Dedup {
     * pathological sizes. */
   def prefixJaccardPairs(docs: DataFrame, n: Int, threshold: Double,
                          idCol: String = "doc_id"): DataFrame = {
-    val sh = shingles(docs, n, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = shingleIndex(docs, n, idCol)
     val sizes = sh.groupBy(idCol).agg(count(lit(1)).as("sz"))
     val dfreq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
     val w = Window.partitionBy(idCol).orderBy(col("df").asc, col("shingle").asc)
-    // both sides of the candidate self-join read this frame — persist it
+    // both sides of the candidate self-join read this frame — memoize it
     // or the df-count shuffle and the rank window run twice
-    val prefix = sh.join(dfreq, Seq("shingle"))
-      .withColumn("pos", row_number().over(w))
-      .join(sizes, Seq(idCol))
-      .where(col("pos") <= col("sz") - ceil(lit(threshold) * col("sz")) + 1)
-      .select(col(idCol), col("shingle"), col("pos"), col("sz"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val prefix = memo(docs, ("prefixes", n, threshold, idCol))(
+      sh.join(dfreq, Seq("shingle"))
+        .withColumn("pos", row_number().over(w))
+        .join(sizes, Seq(idCol))
+        .where(col("pos") <= col("sz") - ceil(lit(threshold) * col("sz")) + 1)
+        .select(col(idCol), col("shingle"), col("pos"), col("sz")))
     val a = prefix.select(col(idCol).as("doc_id_a"), col("shingle"),
       col("pos").as("_pa"), col("sz").as("sz_a"))
     val b = prefix.select(col(idCol).as("doc_id_b"), col("shingle"),
@@ -419,9 +418,7 @@ object Dedup {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val rows = numHashes / bands
     // one shingle index shared by the signature build and the verify joins
-    // (see ngramJaccardPairs for the 100TB rationale)
-    val sh = shingles(docs, shingleN, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = shingleIndex(docs, shingleN, idCol)
     val sig = signatures(sh, numHashes, idCol)
     val bandCols = (0 until bands).map { b =>
       struct(lit(b).as("band"),
@@ -1309,12 +1306,10 @@ object Dedup {
                     cosineThreshold: Double,
                     idCol: String = "vec_id"): DataFrame = {
     // both pair-join sides read the same clustered frame — materialize the
-    // Lloyd rounds once instead of twice (the ngramJaccardPairs caching
-    // rationale; the session evicts it like every other derived index)
-    val assigned = Similarity.kmeansTopics(emb, k, iters, idCol)
-      .select(col(idCol), col("cluster"))
-    val withVec = assigned.join(emb, Seq(idCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // Lloyd rounds once instead of twice
+    val withVec = memo(emb, ("clusteredVecs", k, iters, idCol))(
+      Similarity.kmeansTopics(emb, k, iters, idCol)
+        .select(col(idCol), col("cluster")).join(emb, Seq(idCol)))
     val a = withVec.select(col("cluster"), col(idCol).as("vec_id_a"),
       col("embedding").as("ea"))
     val b = withVec.select(col("cluster"), col(idCol).as("vec_id_b"),
@@ -1458,11 +1453,10 @@ object Dedup {
     * every consumer would re-tokenize and re-hash the corpus per subtree per
     * action. Streams bypass the memo (a stream cannot persist); eviction
     * rides the session ledger. */
-  private val spanGramsMemo = graft.core.Memo.frames[(Int, String, String)]
   private def spanGramsCached(docs: DataFrame, k: Int, idCol: String,
                               textCol: String): DataFrame =
     if (docs.isStreaming) spanGrams(docs, k, idCol, textCol)
-    else spanGramsMemo(docs, (k, idCol, textCol))(spanGrams(docs, k, idCol, textCol))
+    else memo(docs, ("spanGrams", k, idCol, textCol))(spanGrams(docs, k, idCol, textCol))
 
   /** Gaps-and-islands merge of flagged window positions into maximal spans:
     * windows all span k tokens, so sorted by pos the running span end is
@@ -1738,9 +1732,9 @@ object Dedup {
                      minShared: Int = 2, maxDf: Int = 1000,
                      idCol: String = "doc_id",
                      textCol: String = "text"): DataFrame = {
-    val fp = winnowingFingerprints(docs, k, w, idCol, textCol)
-      .select(col(idCol), col("fp")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val fp = memo(docs, ("winnowSets", k, w, idCol, textCol))(
+      winnowingFingerprints(docs, k, w, idCol, textCol)
+        .select(col(idCol), col("fp")).distinct())
     val kept = fp.join(
       fp.groupBy("fp").agg(count(lit(1)).as("_df"))
         .where(col("_df") <= maxDf && col("_df") >= 2),
@@ -1809,17 +1803,18 @@ object Dedup {
                                 k: Int, w: Int, minShared: Int = 2,
                                 maxDf: Int = 1000, idCol: String = "doc_id",
                                 textCol: String = "text"): DataFrame = {
-    val inc = winnowingFingerprints(incoming, k, w, idCol, textCol)
-      .select(col("fp"), col(idCol).cast(LongType).as("doc_id")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val inc = memo(incoming, ("winnowPostings", k, w, idCol, textCol))(
+      winnowingFingerprints(incoming, k, w, idCol, textCol)
+        .select(col("fp"), col(idCol).cast(LongType).as("doc_id")).distinct())
     val probed = spark.table(table)
       .join(inc.select("fp").distinct(), Seq("fp"), "left_semi")
-    // persisted: the table-scan -> semi-join -> union -> distinct chain
-    // feeds the df count, the df cull, and BOTH sides of the pair join —
-    // without the cache it re-executes once per consumer (4x the probe I/O;
-    // mirrors the batch path persisting `fp`)
-    val allp = probed.unionByName(inc).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the table-scan -> semi-join -> union -> distinct chain feeds the df
+    // count, the df cull, and BOTH sides of the pair join — without a cut
+    // it re-executes once per consumer (4x the probe I/O). A per-call
+    // lineage cut, not a memo entry: it reads `table`, which
+    // [[appendWinnowIndex]] appends to in the same session, and a memo
+    // keyed by the scan's plan would keep serving the pre-append postings.
+    val allp = probed.unionByName(inc).distinct().localCheckpoint(true)
     val kept = allp.join(
       allp.groupBy("fp").agg(count(lit(1)).as("_df"))
         .where(col("_df") <= maxDf && col("_df") >= 2),

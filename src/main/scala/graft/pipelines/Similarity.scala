@@ -170,16 +170,19 @@ object Similarity {
     cosineTopK(scored, k, idCol, queryIds)
   }
 
+  /** This object's persisted derived frames (LSH index, k-means
+    * centroids), keyed by the corpus plan, a tag and the parameters. */
+  private val memo = graft.core.Memo.frames[Product]
+
   /** Banded-signature LSH index for one corpus — (id, embedding, bkeys),
     * built ONCE and persisted like [[ivfIndex]]: the bands×planes plane dots
     * run corpus-wide exactly once, every probe reuses them. Keyed by the
     * corpus's analyzed plan (sameResult-verified — a semanticHash collision
     * can never alias two corpora) plus params, and evicted with the session
     * via [[graft.core.Memo.clearSession]]. */
-  private val lshMemo = graft.core.Memo.frames[(String, Int, Int)]
   private def lshIndex(emb: DataFrame, idCol: String, bands: Int,
                        planesPerBand: Int): DataFrame =
-    lshMemo(emb, (idCol, bands, planesPerBand))(
+    memo(emb, ("lshIndex", idCol, bands, planesPerBand))(
       Vectors.withBandedKeys(emb, "embedding", bands, planesPerBand, seed = 7))
 
   /** Approximate top-k via MULTIPROBE banded sign-LSH: `bands` bands of
@@ -561,11 +564,9 @@ object Similarity {
                       idCol: String = "vec_id",
                       vecCol: String = "embedding"): DataFrame = {
     require(k >= 1 && iters >= 1, "k and iters must be >= 1")
-    kmeansCentsMemo(emb, (idCol, vecCol, k, iters))(
+    memo(emb, ("kmeansCentroids", idCol, vecCol, k, iters))(
       buildKmeansCentroids(emb, k, iters, idCol, vecCol))
   }
-
-  private val kmeansCentsMemo = graft.core.Memo.frames[(String, String, Int, Int)]
 
   private def buildKmeansCentroids(emb: DataFrame, k: Int, iters: Int,
                                    idCol: String, vecCol: String): DataFrame = {

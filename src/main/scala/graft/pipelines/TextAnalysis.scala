@@ -554,6 +554,10 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_words"), sum(col("_nsym")).as("n_bpe"))
   }
 
+  /** [[rakeKeywords]]' stopword-split phrase member rows, persisted per
+    * (corpus plan, idCol) on the session ledger. */
+  private val rakeIslands = graft.core.Memo.frames[String]
+
   /** RAKE keyword extraction (Rose et al. 2010): candidate phrases are the
     * maximal stopword-free token runs of each document; a word's score is
     * degree/frequency over those phrases (degree = the summed length of
@@ -579,11 +583,10 @@ object TextAnalysis {
     val wRun = Window.partitionBy(col(idCol)).orderBy(col("_pos"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // phrase member rows feed phrases, word stats AND phrase scores —
-    // materialize once (the corpus re-tokenizes per consumer otherwise)
-    val isl = toks.withColumn("_g", sum(col("_st")).over(wRun))
+    // materialize once per corpus (it re-tokenizes per consumer otherwise)
+    val isl = rakeIslands(docs, idCol)(toks.withColumn("_g", sum(col("_st")).over(wRun))
       .where(col("_st") === 0)
-      .select(col(idCol), col("_g"), col("_pos"), col("_w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col(idCol), col("_g"), col("_pos"), col("_w")))
     val ph = isl.groupBy(col(idCol), col("_g"))
       .agg(concat_ws(" ",
           transform(array_sort(collect_list(struct(col("_pos"), col("_w")))),

@@ -19,13 +19,6 @@ object Normalizer {
   def gcd(a: Long, b: Long): Long = if (b == 0) a else gcd(b, a % b)
   def lcm(a: Long, b: Long): Long = a / gcd(a, b) * b
 
-  /** Common step for a set of input steps (LCM strategy, MAX fallback when the
-    * LCM explodes past the query range — ref TimeSeriesNormalizer:16-45). */
-  def commonStep(steps: Seq[Long], rangeMs: Long): Long = {
-    val l = steps.reduce(lcm)
-    if (l > rangeMs) steps.max else l
-  }
-
   private def consolidate(fn: String): Column => Column = fn match {
     case "avg"  => OracleSafe.dAvg
     case "sum"  => OracleSafe.dSum
@@ -69,19 +62,6 @@ object Normalizer {
         first(isCounter).as("_counter"))
       .withColumn(S.Value, when(col("_counter"), col("_sum")).otherwise(col("_avg")))
       .select(S.SeriesId, S.LabelsCol, S.Ts, S.Value)
-  }
-
-  /** Normalize two inputs with (possibly) different native steps onto their
-    * common grid, then both sides are safe for a binary projection. Range =
-    * union of both (ref: output range = union). */
-  def normalizePair(left: DataFrame, leftStep: Long, right: DataFrame, rightStep: Long,
-                    range: QueryGrid, fn: String = "avg"): (DataFrame, DataFrame, QueryGrid) = {
-    if (leftStep == rightStep) (left, right, range.copy(stepMs = leftStep))
-    else {
-      val step = commonStep(Seq(leftStep, rightStep), range.endMs - range.startMs)
-      val target = range.copy(stepMs = step)
-      (resample(left, target, fn), resample(right, target, fn), target)
-    }
   }
 
   /** Normalize N operands onto their common grid the way the reference runs

@@ -96,6 +96,7 @@ object AnnSweep {
       }
       println(f"lsh  bands=$b%-3d planes=$ppb h<=$h recall@10=$r%.2f  fraction=$frac%.2f  (${dt}%.1fs all-queries)")
     }
+    emb.unpersist(blocking = false)
     spark.stop()
   }
 }

@@ -71,14 +71,13 @@ object Soak {
     println("|---|---|---|---|")
     def op(name: String)(build: => DataFrame): Unit = {
       graft.core.Memo.clearSession(spark)
-      spark.catalog.clearCache()
       val t0 = System.nanoTime()
       val rows = build.count()
       val secs = (System.nanoTime() - t0) / 1e9
       val (sm, _, _) = graft.core.MetricsTap.storageGauge(spark)
       println(s"| $name | $rows | ${f2(secs)} | ${f2(sm / 1e6)} |")
       // RDD-level leftovers (e.g. a returned localCheckpoint the op dropped
-      // by reference) escape clearCache and would otherwise wait for driver
+      // by reference) are no memo entries and would otherwise wait for a JVM
       // GC — at 100x that standing set is real heap the next op needs
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
@@ -285,7 +284,6 @@ object Soak {
                 (writer: => org.apache.spark.sql.streaming.DataStreamWriter[
                   org.apache.spark.sql.Row]): Unit = {
       graft.core.Memo.clearSession(spark)
-      spark.catalog.clearCache()
       val t0 = System.nanoTime()
       val q = graft.streaming.Ingest.drain(spark, writer, stateParts = 8)
       val secs = (System.nanoTime() - t0) / 1e9

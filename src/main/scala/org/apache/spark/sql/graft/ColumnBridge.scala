@@ -22,3 +22,13 @@ object ColumnBridge {
     case _ => c
   }
 }
+
+/** The CacheManager's entry count, which the public `SparkSession` API no
+  * longer exposes in Spark 4. The manager is shared by every session of a
+  * context; graft's memoized frames are its only intended entries, so the
+  * count reads 0 once [[graft.core.Memo.clearSession]] has run. */
+object CacheBridge {
+  def cachedEntries(spark: org.apache.spark.sql.SparkSession): Int =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.numCachedEntries
+}

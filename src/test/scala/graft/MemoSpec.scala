@@ -218,4 +218,69 @@ class MemoSpec extends SparkTestBase {
     assert(sessionMaps == Seq("Rollup.scala"), sessionMaps)
     assert(hits("""Memo\.onClearSession\(""") == Seq("Rollup.scala"))
   }
+
+  private def cached(s: org.apache.spark.sql.SparkSession): Int =
+    org.apache.spark.sql.graft.CacheBridge.cachedEntries(s)
+
+  test("pair dedups over many corpora stay under the ledger cap, in the ledger and the CacheManager") {
+    val s = freshSession(2)
+    val before = cached(s)
+    for (c <- 0 until 3) {
+      val docs = s.createDataFrame(Seq(
+        (1L, s"corpus $c shares this whole line of text"),
+        (2L, s"corpus $c shares this whole line of text too"),
+        (3L, s"an unrelated document number $c"))).toDF("doc_id", "text")
+      assert(graft.pipelines.Dedup.ngramJaccardPairs(docs, 3, 0.5).count() == 1)
+    }
+    assert(Memo.liveEntries(s) == 2, "one shingle index per corpus, LRU-capped at 2")
+    assert(cached(s) - before <= 2, "no frame outlives its call outside the ledger")
+    Memo.clearSession(s)
+    assert(cached(s) == before)
+  }
+
+  test("an M3 macro read twice and a mixed-step divide are memo entries, freed by clearSession") {
+    val s = freshSession(100)
+    def row(labels: String) = series(labels, (1 to 10).map(i => Some(i.toDouble)))
+    val samples = samplesDF(Seq("name:click,user:1", "name:view,user:1", "name:error,user:1")
+      .flatMap(row), s)
+    val q = "b = fetch name:error; " +
+      "fetch name:click | b | (fetch name:view | summarize 2m sum) | divide(b) user"
+    def run(grid: graft.core.QueryGrid): Seq[org.apache.spark.sql.Row] =
+      graft.lang.m3.M3QL.query(s, samples, grid, q).collect().toSeq.sortBy(_.toString)
+    val first = run(g)
+    val one = Memo.liveEntries(s)
+    assert(one >= 2, s"the macro and the fused divide are memoized, got $one")
+    assert(run(g) == first && Memo.liveEntries(s) == one, "a recompile on the same grid reuses them")
+    run(g.copy(endMs = g.endMs - g.stepMs))
+    assert(Memo.liveEntries(s) == 2 * one, "another grid adds its own entries")
+    Memo.clearSession(s)
+    assert(Memo.liveEntries(s) == 0)
+    assert(run(g) == first, "a rebuilt compile gives the same rows")
+    Memo.clearSession(s)
+  }
+
+  test("clearSession empties the CacheManager") {
+    val s = freshSession(100)
+    val docs = s.createDataFrame(Seq((1L, "one two three four"), (2L, "one two three four")))
+      .toDF("doc_id", "text")
+    graft.pipelines.Dedup.prefixJaccardPairs(docs, 2, 0.5).count()
+    graft.pipelines.TextAnalysis.rakeKeywords(docs, 2).count()
+    assert(cached(s) > 0)
+    Memo.clearSession(s)
+    Memo.clearSession(spark)
+    assert(org.apache.spark.sql.graft.CacheBridge.cachedEntries(spark) == 0,
+      "every frame kept past its call is a memo entry of some session")
+  }
+
+  test("src/main persists only through Memo: no .cache() and no catalog.clearCache") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val files = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    assert(files.nonEmpty, "source tree not found from the test working directory")
+    def hits(re: String): Seq[String] = files.filter(p =>
+      re.r.findFirstIn(Files.readString(p)).isDefined).map(_.getFileName.toString)
+    assert(hits("""\.cache\(\)""").isEmpty)
+    assert(hits("""catalog\.clearCache""").isEmpty)
+  }
 }

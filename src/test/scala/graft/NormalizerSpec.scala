@@ -1,17 +1,11 @@
 package graft
 
-import graft.core.QueryGrid
+import graft.core.{QueryGrid, StepMeta}
 import graft.stages.{Normalizer, SeriesSet}
 
 class NormalizerSpec extends SparkTestBase {
   private val S = Some(_: Double)
   private val N = Option.empty[Double]
-
-  test("lcm/max common step") {
-    assert(Normalizer.commonStep(Seq(60000L, 90000L), 3600000L) == 180000L)
-    // LCM beyond range → MAX fallback
-    assert(Normalizer.commonStep(Seq(60000L, 77000L), 200000L) == 77000L)
-  }
 
   test("resample consolidates onto coarser grid") {
     val fine = samplesDF(series("name:a", Seq(S(1), S(2), S(3), S(4), S(5), S(6), N, N, N, N)))
@@ -34,14 +28,15 @@ class NormalizerSpec extends SparkTestBase {
     assert(out("name:g,type:gauge").take(2) == Seq(S(1.5), S(3.5)))
   }
 
-  test("normalizePair aligns steps then binary op works") {
-    val range = QueryGrid(60000L, 60000L * 11, 60000L)
+  test("alignOperands aligns steps then binary op works") {
     val fine = samplesDF(series("name:x,side:l", Seq(S(2), S(4), S(6), S(8), N, N, N, N, N, N)))
     val coarse = samplesDF(
       series("name:x,side:r", Seq(S(1), S(2), N, N, N, N, N, N, N, N),
         QueryGrid(60000L, 60000L * 11, 120000L)))
-    val (l, r, target) = Normalizer.normalizePair(fine, 60000L, coarse, 120000L, range)
-    assert(target.stepMs == 120000L)
+    val (l, r, m) = Normalizer.alignOperands(fine, StepMeta(60000L, 60000L),
+      coarse, StepMeta(120000L, 60000L), 60000L * 11)
+    assert(m == StepMeta(120000L, 60000L))
+    val target = QueryGrid(m.startMs, 60000L * 11, m.stepMs)
     val divided = toGolden(SeriesSet.divide(l, r), target)
     // left avg per 2m slot: (2+4)/2=3, (6+8)/2=7 ; right: 1, 2 → 3, 3.5
     assert(divided.keySet.head.contains("type:ratios"))

@@ -42,14 +42,14 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  def samplesDF(rows: Seq[Row]): DataFrame = {
+  def samplesDF(rows: Seq[Row], session: SparkSession = spark): DataFrame = {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("labels", MapType(StringType, StringType, valueContainsNull = false)),
       StructField("timestamp", LongType, nullable = false),
       StructField("value", DoubleType, nullable = false)))
     TsSchema.withSeriesId(
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema))
+      session.createDataFrame(session.sparkContext.parallelize(rows, 2), schema))
       .select("series_id", "labels", "timestamp", "value")
   }
 
@@ -85,5 +85,11 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = graft.core.Session(cpus = 4)
+  /** The shared test session. Its memo entries (persisted frames, staged
+    * stream-source dirs) are freed once, when the test JVM exits. */
+  lazy val session: SparkSession = {
+    val s = graft.core.Session(cpus = 4)
+    sys.addShutdownHook(graft.core.Memo.clearSession(s))
+    s
+  }
 }
