@@ -82,21 +82,59 @@ object TsSchema {
 
 /** Helpers producing bit-identical aggregates across engines (Spark vs a
   * DuckDB oracle): double summation is order-dependent, so cross-row sums are
-  * computed in exact decimal and only then converted back to double. */
+  * computed in exact decimal and only then converted back to double.
+  *
+  * `over` places each aggregate of an expression: identity (the default) for
+  * a grouped aggregate, `_.over(frame)` for a window aggregate — one
+  * definition serves groups, buckets and windows alike. */
 object OracleSafe {
   private val Dec = DecimalType(38, 9)
 
   /** Exact sum of a double column: decimal(38,9) accumulate, then one double cast. */
-  def dSum(c: Column): Column = sum(c.cast(Dec)).cast(DoubleType)
+  def dSum(c: Column, over: Column => Column = identity): Column =
+    over(sum(c.cast(Dec))).cast(DoubleType)
 
   /** Exact mean: decimal sum / count, single double division at the end. */
-  def dAvg(c: Column): Column = (sum(c.cast(Dec)).cast(DoubleType) / count(c))
+  def dAvg(c: Column, over: Column => Column = identity): Column =
+    dSum(c, over) / over(count(c))
+
+  /** The value aggregates of the series path over canonical samples, each
+    * written once: `sum`, `avg` (decimal-exact), `min`, `max`, `count` (of
+    * non-null values, as a double), `last` (the value at the newest
+    * timestamp), `stddev` (the SAMPLE form from decimal moments, null below
+    * two values — the manual formula keeps Spark and a SQL oracle
+    * bit-identical, see [[sqlStddev]]), and Spark's `stddev_pop` and
+    * `var_pop` (their partial buffers merge in shuffle order, so a grouped
+    * and a windowed form of one series may differ in the last ulp). */
+  def seriesAgg(fn: String, over: Column => Column = identity): Column = {
+    val v = col(TsSchema.Value)
+    fn match {
+      case "sum"   => dSum(v, over)
+      case "avg"   => dAvg(v, over)
+      case "min"   => over(min(v))
+      case "max"   => over(max(v))
+      case "count" => over(count(v)).cast(DoubleType)
+      case "last"  => over(expr(s"max_by(${TsSchema.Value}, ${TsSchema.Ts})"))
+      case "stddev" =>
+        val n = over(count(v)).cast(DoubleType)
+        val s1 = dSum(v, over)
+        val s2 = dSum(v * v, over)
+        when(n > 1, sqrt((s2 - s1 * s1 / n) / (n - lit(1.0))))
+      case "stddev_pop" => over(stddev_pop(v))
+      case "var_pop"    => over(var_pop(v))
+      case other => throw new IllegalArgumentException(s"series aggregate: $other")
+    }
+  }
 
   /** DuckDB SQL fragments mirroring the above, for oracle queries. */
   def sqlSum(expr: String): String =
     s"CAST(sum(CAST(($expr) AS DECIMAL(38,9))) AS DOUBLE)"
   def sqlAvg(expr: String): String =
     s"CAST(sum(CAST(($expr) AS DECIMAL(38,9))) AS DOUBLE) / count($expr)"
+  def sqlStddev(expr: String): String =
+    s"""CASE WHEN count($expr) > 1 THEN
+       | sqrt((${sqlSum(s"$expr * $expr")} - ${sqlSum(expr)} * ${sqlSum(expr)} / CAST(count($expr) AS DOUBLE))
+       |      / (CAST(count($expr) AS DOUBLE) - 1.0)) END""".stripMargin
 
   /** Deterministic [0,1) fraction of a string key: first 8 hex chars of its
     * md5, scaled by 2^32 — reproducible in any engine (DuckDB mirror:

@@ -339,11 +339,11 @@ final class Compiler(spark: SparkSession, samples: DataFrame, grid: QueryGrid) {
       case "removeEmpty"    => same(GridOps.removeEmpty(df))
       case "fallbackSeries" =>
         st.args.collectFirst {
-          case RefArg(n)  => () => Normalizer.collapse(macroDF(n))._1
-          case PipeArg(p) => () => Normalizer.collapse(compilePipeline(p, macroDF))._1
+          case RefArg(n)  => Normalizer.collapse(macroDF(n))._1
+          case PipeArg(p) => Normalizer.collapse(compilePipeline(p, macroDF))._1
         } match {
-          case Some(mk) => same(GridOps.fallbackSeriesBinary(df, mk()))
-          case None     => same(GridOps.fallbackSeries(spark, df, g, num(0)))
+          case Some(right) => same(GridOps.fallbackSeriesBinary(df, right))
+          case None        => same(GridOps.fallbackSeries(spark, df, g, num(0)))
         }
 
       // filters

@@ -1,6 +1,6 @@
 package graft.lang.prom
 
-import graft.core.{QueryGrid, TsSchema}
+import graft.core.{OracleSafe, QueryGrid, TsSchema}
 import graft.stages._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
@@ -535,7 +535,7 @@ object PromQL {
     private def stampAt(df: DataFrame, t: Long, g: QueryGrid): DataFrame =
       df.where(col(S.Ts) >= t - LookbackDeltaMs && col(S.Ts) <= t)
         .groupBy(col(S.SeriesId))
-        .agg(expr(s"max_by(${S.Value}, ${S.Ts})").as(S.Value),
+        .agg(OracleSafe.seriesAgg("last").as(S.Value),
           first(col(S.LabelsCol)).as(S.LabelsCol))
         .crossJoin(g.gridDF(spark))
         .select(S.SeriesId, S.LabelsCol, S.Ts, S.Value)
@@ -553,21 +553,6 @@ object PromQL {
         if (s.offsetMs != 0) filtered.withColumn(S.Ts, col(S.Ts) + s.offsetMs)
         else filtered
     }
-
-    /** Rollup-tier routing for aligned `*_over_time` windows: when a serving
-      * rollup tier is registered ([[graft.streaming.Rollup.registerTier]])
-      * and the window, step, origin and selector offset all align to its
-      * bucket resolution, the trailing-window moments merge directly from
-      * rollup rows — the scan reads the (at scale, far smaller) tier
-      * instead of raw samples, and the decision is plan-time arithmetic.
-      * Exact under the tier's serving-resolution precondition (≤ 1 sample
-      * per bucket, stamped at the bucket start): the closed window
-      * `[t-d, t]` then covers exactly the buckets `[t-d, t]`, emission
-      * instants are the nonempty buckets — the raw path's sample rows —
-      * and the decimal bucket sums re-merge bit-identically to the raw
-      * path's decimal window sums (movingAgg uses the same DECIMAL(38,9)
-      * accumulator). */
-    private val RollupOverTime = Set("sum", "avg", "count", "min", "max", "last")
 
     /** The tier rows behind an aligned range selector `s[d]` over grid `g`:
       * the one plan-time alignment gate every rollup route shares (window,
@@ -608,21 +593,24 @@ object PromQL {
           counterFromRollup(sel, d, g).map((_, d))
         case _ => None
       }).getOrElse(rangeInput(arg, g))
+
+    /** Rollup-tier routing for aligned `*_over_time` windows: when a serving
+      * rollup tier is registered ([[graft.streaming.Rollup.registerTier]])
+      * and the window, step, origin and selector offset all align to its
+      * bucket resolution, the trailing-window moments merge directly from
+      * rollup rows — the scan reads the (at scale, far smaller) tier
+      * instead of raw samples, and the decision is plan-time arithmetic.
+      * Exact under the tier's serving-resolution precondition (≤ 1 sample
+      * per bucket, stamped at the bucket start): the closed window
+      * `[t-d, t]` then covers exactly the buckets `[t-d, t]`, emission
+      * instants are the nonempty buckets — the raw path's sample rows —
+      * and [[graft.streaming.Rollup.fromMoments]] re-merges the decimal
+      * bucket sums bit-identically to the raw path's decimal window sums. */
     private def overTimeFromRollup(s: Selector, d: Long, agg: String,
                                    g: QueryGrid): Option[DataFrame] =
       rollupWindow(s, d, g).map { shifted =>
         val w = trailing(d, "bucket_ts")
-        import org.apache.spark.sql.types.DoubleType
-        val v = agg match {
-          case "sum"   => sum(col("rsum")).over(w).cast(DoubleType)
-          case "avg"   => sum(col("rsum")).over(w).cast(DoubleType) /
-                            sum(col("rcount")).over(w)
-          case "count" => sum(col("rcount")).over(w).cast(DoubleType)
-          case "min"   => min(col("rmin")).over(w)
-          case "max"   => max(col("rmax")).over(w)
-          case "last"  => expr("max_by(rlast, rlast_ts)").over(w)
-        }
-        shifted.withColumn(S.Value, v)
+        shifted.withColumn(S.Value, graft.streaming.Rollup.fromMoments(agg, _.over(w)))
           .select(col(S.SeriesId), col(S.LabelsCol),
             col("bucket_ts").as(S.Ts), col(S.Value))
       }
@@ -1044,7 +1032,7 @@ object PromQL {
             expr(s"percentile(${S.Value}, $phi)").over(frame))
         case overTime(sub) =>
           val routed = args.head match {
-            case Range(sel, d) if sel.atMs.isEmpty && RollupOverTime(sub) =>
+            case Range(sel, d) if sel.atMs.isEmpty && graft.streaming.Rollup.Reconstructable(sub) =>
               overTimeFromRollup(sel, d, sub, g)
             case _ => None
           }
@@ -1407,7 +1395,7 @@ object PromQL {
         .withColumn("_b",
           floor((col(S.Ts) + lit(stepMs - 1)) / lit(stepMs.toDouble)).cast("long") * stepMs)
         .groupBy(col(S.SeriesId), col("_b"))
-        .agg(expr(s"max_by(${S.Value}, ${S.Ts})").as(S.Value),
+        .agg(OracleSafe.seriesAgg("last").as(S.Value),
           max(col(S.Ts)).as("_sts"),
           first(col(S.LabelsCol)).as(S.LabelsCol))
       if (!carry)

@@ -1053,7 +1053,7 @@ object Dedup {
         .join(pr, col("_src") === col("_node"))
         .groupBy(col("_dst"))
         .agg((lit(1.0 - damping) + lit(damping) *
-          sum((col("_pr") / col("_deg")).cast(Dec)).cast(DoubleType))
+          graft.core.OracleSafe.dSum(col("_pr") / col("_deg")))
           .cast(Dec).cast(DoubleType).as("_pr"))
         .select(col("_dst").as("_node"), col("_pr"))
         .localCheckpoint(true)

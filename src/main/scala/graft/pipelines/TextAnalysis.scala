@@ -440,7 +440,7 @@ object TextAnalysis {
     val Dec = DecimalType(38, 9)
     lmScoreAgainst(docs, docs, idCol)
       .agg(sum(col("n_bigrams")).as("n_bigrams"),
-        (sum((col("lm_score") * col("n_bigrams")).cast(Dec)).cast(DoubleType) /
+        (graft.core.OracleSafe.dSum(col("lm_score") * col("n_bigrams")) /
           sum(col("n_bigrams"))).cast(Dec).cast(DoubleType).as("avg_logprob"))
       .withColumn("perplexity",
         exp(-col("avg_logprob")).cast(Dec).cast(DoubleType))
@@ -466,7 +466,7 @@ object TextAnalysis {
     val xy = graft.core.Dist.prefixScan(vocab, ord, lit(1L), ord)
       .select(qln(col("_scan").cast(DoubleType)).as("_x"),
         qln(col("freq").cast(DoubleType)).as("_y"))
-    def dSum(c: Column): Column = sum(c.cast(Dec)).cast(DoubleType)
+    import graft.core.OracleSafe.dSum
     xy.agg(count(lit(1)).cast(DoubleType).as("_n"),
         dSum(col("_x")).as("_sx"), dSum(col("_y")).as("_sy"),
         dSum((col("_x") * col("_y"))).as("_sxy"),

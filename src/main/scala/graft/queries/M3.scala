@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.core.{QueryGrid, Tables, TsSchema}
-import graft.core.OracleSafe.sqlSum
+import graft.core.OracleSafe.{sqlStddev, sqlSum}
 import graft.stages._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -53,10 +53,7 @@ object M3 extends QueryPack {
     agg("m3_max", Grouping.max(_, Seq("name")), "max(value)"),
 
     agg("m3_range", Grouping.range(_, Seq("name")), "max(value) - min(value)"),
-    agg("m3_stddev", Grouping.stddev(_, Seq("name")),
-      s"""CASE WHEN count(value) > 1 THEN
-         | sqrt((${sqlSum("value * value")} - ${sqlSum("value")} * ${sqlSum("value")} / CAST(count(value) AS DOUBLE))
-         |      / (CAST(count(value) AS DOUBLE) - 1.0)) END""".stripMargin,
+    agg("m3_stddev", Grouping.stddev(_, Seq("name")), sqlStddev("value"),
       having = "HAVING count(value) > 1"))
 
   private def qCount(s: SparkSession, sf: String): DataFrame =

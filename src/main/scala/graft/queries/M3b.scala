@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.core.{QueryGrid, Tables, TsSchema}
-import graft.core.OracleSafe.sqlSum
+import graft.core.OracleSafe.{sqlStddev, sqlSum}
 import graft.lang.m3.M3QL
 import graft.lang.prom.PromQL
 import graft.stages._
@@ -134,10 +134,7 @@ object M3b extends QueryPack {
     summarizeQ("m3_summarize_min", "min", "min(value)"),
     summarizeQ("m3_summarize_max", "max", "max(value)"),
     summarizeQ("m3_summarize_count", "count", "CAST(count(value) AS DOUBLE)"),
-    summarizeQ("m3_summarize_stddev", "stddev",
-      s"""CASE WHEN count(value) > 1 THEN
-         | sqrt((${sqlSum("value * value")} - ${sqlSum("value")} * ${sqlSum("value")} / CAST(count(value) AS DOUBLE))
-         |      / (CAST(count(value) AS DOUBLE) - 1.0)) END""".stripMargin,
+    summarizeQ("m3_summarize_stddev", "stddev", sqlStddev("value"),
       having = "HAVING count(value) > 1"))
 
   // ---- moving variants (reference-exact: frame [t-w, t) over the dense grid,

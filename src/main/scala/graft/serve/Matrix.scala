@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   * Values are stringified doubles (Prometheus wire format); timestamps are
   * epoch seconds. `includeMetadata` adds step/start/end per series.
   */
-/** Shared JSON string escaper for the serve-layer renderers. */
-private[serve] object JsonEsc {
+/** The one JSON string escaper: backslash, quote and every control char
+  * (< 0x20). Used by the serve-layer renderers and `Verify`'s oracle dump. */
+private[graft] object JsonEsc {
   def esc(s: String): String =
     s.flatMap {
       case '"'  => "\\\""

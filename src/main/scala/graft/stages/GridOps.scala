@@ -60,22 +60,24 @@ object GridOps {
   }
 
   /** `fallbackSeries <const>` — if the input has no series, emit one constant
-    * series over the query range (ref: FallbackSeriesUnaryStage.java:27-38).
-    * Driver-side isEmpty is acceptable: fallback feeds alert-scale subplans. */
-  def fallbackSeries(spark: SparkSession, df: DataFrame, grid: QueryGrid, const: Double): DataFrame =
-    if (!df.isEmpty) df
-    else {
-      import org.apache.spark.sql.types._
-      grid.gridDF(spark).select(
-        xxhash64(lit("fallback")).as(S.SeriesId),
-        map(lit("fallback"), lit("true"))
-          .cast(MapType(StringType, StringType, valueContainsNull = false)).as(S.LabelsCol),
-        col(S.Ts),
-        lit(const).as(S.Value))
-    }
+    * series over the query range (ref: FallbackSeriesUnaryStage.java:27-38). */
+  def fallbackSeries(spark: SparkSession, df: DataFrame, grid: QueryGrid, const: Double): DataFrame = {
+    import org.apache.spark.sql.types._
+    fallbackSeriesBinary(df, grid.gridDF(spark).select(
+      xxhash64(lit("fallback")).as(S.SeriesId),
+      map(lit("fallback"), lit("true"))
+        .cast(MapType(StringType, StringType, valueContainsNull = false)).as(S.LabelsCol),
+      col(S.Ts),
+      lit(const).as(S.Value)))
+  }
 
   /** `fallbackSeries <pipeline>` — binary form: left result if non-empty, else
-    * the right pipeline's result (ref: FallbackSeriesBinaryStage.java:22-32). */
-  def fallbackSeriesBinary(left: DataFrame, right: => DataFrame): DataFrame =
-    if (!left.isEmpty) left else right
+    * the right pipeline's result (ref: FallbackSeriesBinaryStage.java:22-32).
+    * Decided inside the plan, so building it runs no job: the right rows
+    * pass only under a broadcast 1-row flag, "the left's first row is
+    * missing" (a limit-1 probe, as `isEmpty` was, not a full count). */
+  def fallbackSeriesBinary(left: DataFrame, right: DataFrame): DataFrame = {
+    val leftEmpty = broadcast(left.limit(1).agg((count(lit(1)) === 0).as("_empty")))
+    left.unionByName(right.crossJoin(leftEmpty).where(col("_empty")).drop("_empty"))
+  }
 }

@@ -41,28 +41,28 @@ object Grouping {
     out.select(TsSchema.SeriesId, TsSchema.LabelsCol, TsSchema.Ts, TsSchema.Value)
   }
 
-  private def run(df: DataFrame, groupKeys: Seq[String])(aggFn: Column => Column): DataFrame = {
+  private def run(df: DataFrame, groupKeys: Seq[String])(agg: Column): DataFrame = {
     val (withKeys, gCols) = grouped(df, groupKeys)
-    finish(
-      withKeys.groupBy(gCols: _*).agg(aggFn(col(TsSchema.Value)).as(TsSchema.Value)),
-      groupKeys)
+    finish(withKeys.groupBy(gCols: _*).agg(agg.as(TsSchema.Value)), groupKeys)
   }
+
+  private def v: Column = col(TsSchema.Value)
 
   /** `sum [tags]` (ref: SumStage.java:20-61). Decimal-exact for oracle parity. */
   def sum(df: DataFrame, groupKeys: Seq[String] = Nil): DataFrame =
-    run(df, groupKeys)(OracleSafe.dSum)
+    run(df, groupKeys)(OracleSafe.seriesAgg("sum"))
 
   /** `avg` (ref: AvgStage.java:61,92-115 — SumCount partial state). */
   def avg(df: DataFrame, groupKeys: Seq[String] = Nil): DataFrame =
-    run(df, groupKeys)(OracleSafe.dAvg)
+    run(df, groupKeys)(OracleSafe.seriesAgg("avg"))
 
   /** `min` (ref: MinStage.java:20-41). */
   def min(df: DataFrame, groupKeys: Seq[String] = Nil): DataFrame =
-    run(df, groupKeys)(functions_min)
+    run(df, groupKeys)(OracleSafe.seriesAgg("min"))
 
   /** `max` (ref: MaxStage.java:20-41). */
   def max(df: DataFrame, groupKeys: Seq[String] = Nil): DataFrame =
-    run(df, groupKeys)(functions_max)
+    run(df, groupKeys)(OracleSafe.seriesAgg("max"))
 
   /** `count` — the number of SERIES in each group, emitted as a dense constant
     * series over the whole query grid (ref: CountStage.processGroup /
@@ -86,26 +86,26 @@ object Grouping {
   /** Per-timestamp count of series with data — the Spark-natural variant kept
     * for pipelines that want presence counts rather than cardinality. */
   def countAtTimestamp(df: DataFrame, groupKeys: Seq[String] = Nil): DataFrame =
-    run(df, groupKeys)(c => functions.count(c).cast(DoubleType))
+    run(df, groupKeys)(functions.count(v).cast(DoubleType))
 
   /** `range` — per-ts max-min, MinMax partial state (ref: RangeStage.java:22-45). */
   def range(df: DataFrame, groupKeys: Seq[String] = Nil): DataFrame =
-    run(df, groupKeys)(c => functions_max(c) - functions_min(c))
+    run(df, groupKeys)(functions.max(v) - functions.min(v))
 
   /** Prometheus `stddev` aggregation — POPULATION stddev across the group's
     * series at each timestamp (Prometheus aggregates are population-based,
     * unlike M3's sample stddev). */
   def stddevPop(df: DataFrame, groupKeys: Seq[String] = Nil): DataFrame =
-    run(df, groupKeys)(functions.stddev_pop)
+    run(df, groupKeys)(OracleSafe.seriesAgg("stddev_pop"))
 
   /** Prometheus `stdvar` aggregation — population variance per timestamp. */
   def varPop(df: DataFrame, groupKeys: Seq[String] = Nil): DataFrame =
-    run(df, groupKeys)(functions.var_pop)
+    run(df, groupKeys)(OracleSafe.seriesAgg("var_pop"))
 
   /** Prometheus `group` aggregation — constant 1 for every group that has at
     * least one sample at the timestamp. */
   def groupConst(df: DataFrame, groupKeys: Seq[String] = Nil): DataFrame =
-    run(df, groupKeys)(c => functions.count(c) * lit(0.0) + lit(1.0))
+    run(df, groupKeys)(functions.count(v) * lit(0.0) + lit(1.0))
 
   /** Prometheus `count_values("label", v)` — per timestamp, count the series
     * having each distinct value; the stringified value becomes a new label.
@@ -137,18 +137,18 @@ object Grouping {
   /** `multiply` — exact per-ts product (ref: MultiplyStage.java:20-41) via
     * the codegen'd [[graft.functions.ProductDecl]] aggregate. */
   def multiplyExact(df: DataFrame, groupKeys: Seq[String] = Nil): DataFrame =
-    run(df, groupKeys)(graft.functions.Product.product)
+    run(df, groupKeys)(graft.functions.Product.product(v))
 
   /** `percentile_of_series p [tags]` / `median` — exact per-ts percentile across
     * the group's series (ref: PercentileOfSeriesStage.java:38-66, MultiValue
     * partial state merged then sorted — exactly Spark's exact `percentile`). */
   def percentileOfSeries(df: DataFrame, p: Double, groupKeys: Seq[String] = Nil): DataFrame =
-    run(df, groupKeys)(c => percentile_approx(c, lit(p), lit(1000000)))
+    run(df, groupKeys)(percentile_approx(v, lit(p), lit(1000000)))
 
   /** Exact percentile with linear interpolation (Spark `percentile` semantics,
     * pos = p*(n-1) — used by the SQL-oracle demo queries). */
   def percentileExact(df: DataFrame, p: Double, groupKeys: Seq[String] = Nil): DataFrame =
-    run(df, groupKeys)(c => expr(s"percentile(${TsSchema.Value}, $p)"))
+    run(df, groupKeys)(expr(s"percentile(${TsSchema.Value}, $p)"))
 
   /** Whole-number percentiles print without the decimal point, fractional ones
     * with trailing zeros stripped (ref: PercentileUtils.formatPercentile,
@@ -207,15 +207,9 @@ object Grouping {
                    interpolate: Boolean = false): DataFrame =
     percentileM3(df, Seq(p), groupKeys, interpolate)
 
-  /** Per-ts sample stddev via decimal-exact moments (ref: StdDevBucketSummarizer;
-    * manual formula keeps Spark and a SQL oracle bit-identical). */
+  /** Per-ts sample stddev via decimal-exact moments (ref: StdDevBucketSummarizer). */
   def stddev(df: DataFrame, groupKeys: Seq[String] = Nil): DataFrame =
-    run(df, groupKeys) { c =>
-      val n = functions.count(c).cast(DoubleType)
-      val s = OracleSafe.dSum(c)
-      val s2 = OracleSafe.dSum(c * c)
-      when(n > 1, sqrt((s2 - s * s / n) / (n - lit(1.0))))
-    }
+    run(df, groupKeys)(OracleSafe.seriesAgg("stddev"))
 
   /** Upper bound of a `bucket_range` label value, as pure builtin expressions
     * (ref: HistogramPercentileStage.BucketInfo.parseBucket:560-640):
@@ -348,7 +342,5 @@ object Grouping {
     perP.reduce(_ unionByName _)
   }
 
-  private def functions_min(c: Column): Column = functions.min(c)
-  private def functions_max(c: Column): Column = functions.max(c)
   private val functions = org.apache.spark.sql.functions
 }

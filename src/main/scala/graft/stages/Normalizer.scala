@@ -1,7 +1,7 @@
 package graft.stages
 
 import graft.core.{OracleSafe, QueryGrid, StepMeta, TsSchema}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -19,18 +19,9 @@ object Normalizer {
   def gcd(a: Long, b: Long): Long = if (b == 0) a else gcd(b, a % b)
   def lcm(a: Long, b: Long): Long = a / gcd(a, b) * b
 
-  private def consolidate(fn: String): Column => Column = fn match {
-    case "avg"  => OracleSafe.dAvg
-    case "sum"  => OracleSafe.dSum
-    case "max"  => max(_)
-    case "min"  => min(_)
-    case "last" => c => expr(s"max_by(${S.Value}, ${S.Ts})")
-    case other  => throw new IllegalArgumentException(s"consolidation fn: $other")
-  }
-
   /** Resample a canonical samples DF onto `targetGrid` with the given
-    * consolidation function. One shuffle on (series, slot). With
-    * `skipNaN=true` (the TimeSeriesNormalizer behavior — NaN samples skipped,
+    * consolidation function, an [[OracleSafe.seriesAgg]] name. One shuffle
+    * on (series, slot). With `skipNaN=true` (the TimeSeriesNormalizer behavior — NaN samples skipped,
     * an all-NaN slot emits nothing; ref: TimeSeriesNormalizer.java:330-371);
     * the fetch-unfold path passes `skipNaN=false` because the unfold keeps
     * the latest sample per slot NaN included (TimeSeriesUnfoldAggregator
@@ -42,7 +33,7 @@ object Normalizer {
     in.withColumn("_slot", slot)
       .where(col("_slot") >= targetGrid.startMs && col("_slot") < targetGrid.endMs)
       .groupBy(col(S.SeriesId), col(S.LabelsCol), col("_slot").as(S.Ts))
-      .agg(consolidate(fn)(col(S.Value)).as(S.Value))
+      .agg(OracleSafe.seriesAgg(fn).as(S.Value))
       .select(S.SeriesId, S.LabelsCol, S.Ts, S.Value)
   }
 
@@ -66,8 +57,10 @@ object Normalizer {
 
   /** Normalize N operands onto their common grid the way the reference runs
     * TimeSeriesNormalizer (LCM step, AVG consolidation — ref:
-    * TimeSeriesNormalizer.java:188-268): common step = LCM of all steps,
-    * bucket origin = min of the operand origins. An operand already on the
+    * TimeSeriesNormalizer.java:16-45,188-268): common step = LCM of all
+    * steps, or their MAX when the LCM exceeds the query range (60 s and
+    * 77 s steps over 200 s align on 77 s, not on one 4620 s slot), bucket
+    * origin = min of the operand origins. An operand already on the
     * target grid (same step, origin a step-multiple away) is passed through
     * untouched, like the reference's already-aligned check
     * (AbstractBinaryProjectionStage.java:295-298). */
@@ -78,7 +71,9 @@ object Normalizer {
     if (metas.forall(m => m.stepMs == step0 && (m.startMs - start) % step0 == 0))
       (ops.map(_._1), StepMeta(step0, start))
     else {
-      val step = metas.map(_.stepMs).reduce(lcm)
+      val steps = metas.map(_.stepMs)
+      val lcmStep = steps.reduce(lcm)
+      val step = if (lcmStep > endMs - start) steps.max else lcmStep
       val end = start + ((endMs - start + step - 1) / step) * step
       val target = QueryGrid(start, end, step)
       (ops.map { case (df, m) =>

@@ -34,16 +34,8 @@ object SeriesSet {
     * SortByType avg,current,max,min,sum,stddev,name —
     * lang/m3/common/SortByType.java:14-43; `current` = last non-null value). */
   private def seriesKeyAgg(by: String): Column = by match {
-    case "avg"     => OracleSafe.dAvg(col(S.Value))
-    case "sum"     => OracleSafe.dSum(col(S.Value))
-    case "max"     => max(col(S.Value))
-    case "min"     => min(col(S.Value))
-    case "current" => expr(s"max_by(${S.Value}, ${S.Ts})")
-    case "stddev" =>
-      val n = count(col(S.Value)).cast(DoubleType)
-      val s1 = OracleSafe.dSum(col(S.Value))
-      val s2 = OracleSafe.dSum(col(S.Value) * col(S.Value))
-      when(n > 1, sqrt((s2 - s1 * s1 / n) / (n - lit(1.0))))
+    case "current" => OracleSafe.seriesAgg("last")
+    case "avg" | "sum" | "max" | "min" | "stddev" => OracleSafe.seriesAgg(by)
     case other => throw new IllegalArgumentException(s"sort by: $other")
   }
 

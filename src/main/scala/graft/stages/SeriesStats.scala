@@ -1,5 +1,6 @@
 package graft.stages
 
+import graft.core.OracleSafe.{dAvg, dSum}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -8,7 +9,6 @@ import org.apache.spark.sql.types._
 object SeriesStats {
 
   private val Dec = DecimalType(38, 9)
-  private def dSum(c: Column): Column = sum(c.cast(Dec)).cast(DoubleType)
 
   /** AUTOCORRELATION at lags 1..`maxLag` over an integer-period series
     * (seasonality/burstiness diagnostic): for each key,
@@ -28,7 +28,7 @@ object SeriesStats {
                       vCol: String = "x"): DataFrame = {
     require(maxLag >= 1, "maxLag must be >= 1")
     val stats = series.groupBy(col(keyCol))
-      .agg((dSum(col(vCol)) / count(col(vCol))).as("_mean"))
+      .agg(dAvg(col(vCol)).as("_mean"))
     val centered = series.join(stats, Seq(keyCol))
       .select(col(keyCol), col(tCol).as("_t"),
         (col(vCol) - col("_mean")).as("_c"))
@@ -102,7 +102,7 @@ object SeriesStats {
                        tCol: String = "t", vCol: String = "x"): DataFrame = {
     require(maxLag >= 0, "maxLag must be >= 0")
     def centered(df: DataFrame, cName: String): DataFrame = {
-      val m = df.agg((dSum(col(vCol)) / count(col(vCol))).as("_mean"))
+      val m = df.agg(dAvg(col(vCol)).as("_mean"))
       df.crossJoin(broadcast(m))
         .select(col(tCol).as("_t"), (col(vCol) - col("_mean")).as(cName))
     }

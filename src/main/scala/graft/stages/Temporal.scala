@@ -17,7 +17,6 @@ import org.apache.spark.sql.types._
 object Temporal {
   private val S = TsSchema
   private def w = Window.partitionBy(S.SeriesId).orderBy(S.Ts)
-  private val Dec = DecimalType(38, 9)
 
   /** `derivative` — v - lag(v), only when consecutive points are EXACTLY one
     * step apart, else the point is dropped (ref: DerivativeStage.java:25-36). */
@@ -67,7 +66,7 @@ object Temporal {
     val ws = Window.partitionBy(S.SeriesId, "_sess").orderBy(S.Ts)
       .rowsBetween(Window.unboundedPreceding, 0)
     withSess
-      .withColumn(S.Value, sum(col(S.Value).cast(Dec)).over(ws).cast(DoubleType))
+      .withColumn(S.Value, OracleSafe.dSum(col(S.Value), _.over(ws)))
       .drop("_sess")
   }
 
@@ -182,27 +181,13 @@ object Temporal {
       .drop("_hw_n")
   }
 
+  /** A window aggregate over `frame`: the shared [[OracleSafe.seriesAgg]]
+    * vocabulary, plus `median` — the INTERPOLATED percentile, unlike
+    * summarize's nearest-rank median, so it stays here. */
   private def movingAgg(fn: String,
-                        frame: org.apache.spark.sql.expressions.WindowSpec): Column = {
-    val v = col(S.Value)
-    fn match {
-      case "sum"    => sum(v.cast(Dec)).over(frame).cast(DoubleType)
-      case "avg"    => (sum(v.cast(Dec)).over(frame).cast(DoubleType) / count(v).over(frame))
-      case "min"    => min(v).over(frame)
-      case "max"    => max(v).over(frame)
-      case "count"  => count(v).over(frame).cast(DoubleType)
-      case "median" => expr(s"percentile(${S.Value}, 0.5)").over(frame)
-      case "last"   => expr(s"max_by(${S.Value}, ${S.Ts})").over(frame)
-      case "stddev" =>
-        val n = count(v).over(frame).cast(DoubleType)
-        val s1 = sum(v.cast(Dec)).over(frame).cast(DoubleType)
-        val s2 = sum((v * v).cast(Dec)).over(frame).cast(DoubleType)
-        when(n > 1, sqrt((s2 - s1 * s1 / n) / (n - lit(1.0))))
-      case "stddev_pop" => stddev_pop(v).over(frame)
-      case "var_pop"    => var_pop(v).over(frame)
-      case other    => throw new IllegalArgumentException(s"moving fn: $other")
-    }
-  }
+                        frame: org.apache.spark.sql.expressions.WindowSpec): Column =
+    if (fn == "median") expr(s"percentile(${S.Value}, 0.5)").over(frame)
+    else OracleSafe.seriesAgg(fn, _.over(frame))
 
   /** `keepLastValue [intervalMs]` — on the dense grid, fill missing points with
     * the last seen value, optionally only within `intervalMs` lookback
@@ -260,18 +245,12 @@ object Temporal {
     // WindowAggregationType.java:105-139): aliases, median, pNN; `count` is a
     // Spark-side extension the reference lacks
     val aggExpr: Column = fn.toLowerCase(java.util.Locale.ROOT) match {
-      case "sum"                => OracleSafe.dSum(v)
-      case "avg" | "average"    => OracleSafe.dAvg(v)
-      case "min" | "minimum"    => min(v)
-      case "max" | "maximum"    => max(v)
-      case "median"             => pctl(50.0)
-      case "count"              => count(v).cast(DoubleType)
-      case "last"               => expr(s"max_by(${S.Value}, ${S.Ts})")
-      case "stddev" =>
-        val n = count(v).cast(DoubleType)
-        val s1 = OracleSafe.dSum(v)
-        val s2 = OracleSafe.dSum(v * v)
-        when(n > 1, sqrt((s2 - s1 * s1 / n) / (n - lit(1.0))))
+      case "average" => OracleSafe.seriesAgg("avg")
+      case "minimum" => OracleSafe.seriesAgg("min")
+      case "maximum" => OracleSafe.seriesAgg("max")
+      case f @ ("sum" | "avg" | "min" | "max" | "count" | "last" | "stddev") =>
+        OracleSafe.seriesAgg(f)
+      case "median"  => pctl(50.0)
       case p if p.startsWith("p") && p.length > 1 &&
         scala.util.Try(p.substring(1).toFloat).toOption.exists(f => f >= 0 && f <= 100) =>
         pctl(p.substring(1).toFloat)
@@ -305,7 +284,7 @@ object Temporal {
     val smooth = Window.partitionBy(S.SeriesId).orderBy(S.Ts).rangeBetween(-lookbackMs, 0)
     rated
       .withColumn(S.Value,
-        (sum(col("_rate").cast(Dec)).over(smooth).cast(DoubleType) / count("_rate").over(smooth)))
+        OracleSafe.dAvg(col("_rate"), _.over(smooth)))
       .drop("_pv", "_reset", "_seg", "_spv", "_spt", "_rate")
   }
 

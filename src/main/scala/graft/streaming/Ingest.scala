@@ -61,18 +61,13 @@ object Ingest {
     * time partition column. Dedup of exact duplicate samples within the
     * watermark mirrors the reference's DedupIterator FIRST policy
     * (TimeSeriesUnfoldAggregator.java:270-276). */
-  def withIngestSemantics(samples: DataFrame, oooToleranceMs: Long,
-                          dedup: Boolean = true): DataFrame = {
-    val withEventTime = samples
+  def withIngestSemantics(samples: DataFrame, oooToleranceMs: Long): DataFrame =
+    samples
       .withColumn("_event_time", timestamp_millis(col(TsSchema.Ts)))
       .withWatermark("_event_time", s"$oooToleranceMs milliseconds")
-    val deduped =
-      if (dedup) withEventTime.dropDuplicatesWithinWatermark(TsSchema.SeriesId, TsSchema.Ts)
-      else withEventTime
-    deduped
+      .dropDuplicatesWithinWatermark(TsSchema.SeriesId, TsSchema.Ts)
       .withColumn("day", date_trunc("day", col("_event_time")))
       .drop("_event_time")
-  }
 
   /** Write the canonical stream to a day-partitioned parquet table.
     * trigger interval ≈ the reference's refresh interval (~1s visibility).

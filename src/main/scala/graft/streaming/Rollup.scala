@@ -1,7 +1,7 @@
 package graft.streaming
 
-import graft.core.{QueryGrid, TsSchema}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.{OracleSafe, QueryGrid, TsSchema}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
@@ -29,6 +29,35 @@ object Rollup {
   private val S = TsSchema
   private val Dec = DecimalType(38, 9)
 
+  /** The mergeable moments of one bucket of samples, written once for the
+    * batch [[rollup]] and the tumbling-window [[streamingRollup]]. */
+  private val moments: Seq[Column] = Seq(
+    sum(col(S.Value).cast(Dec)).as("rsum"),   // decimal — stays mergeable
+    count(col(S.Value)).as("rcount"),
+    OracleSafe.seriesAgg("min").as("rmin"),
+    OracleSafe.seriesAgg("max").as("rmax"),
+    OracleSafe.seriesAgg("last").as("rlast"),
+    max(col(S.Ts)).as("rlast_ts"))
+
+  /** Re-merge rollup moments into the value aggregate `agg` (one of
+    * [[Reconstructable]]); `over` places each merge as in
+    * [[OracleSafe.seriesAgg]] — identity for a coarser bucket, `_.over(w)`
+    * for a trailing window of buckets. The decimal sums re-merge
+    * bit-identically to the raw path's decimal sums. */
+  def fromMoments(agg: String, over: Column => Column = identity): Column = agg match {
+    case "sum"   => over(sum(col("rsum"))).cast(DoubleType)
+    case "avg"   => over(sum(col("rsum"))).cast(DoubleType) / over(sum(col("rcount")))
+    case "min"   => over(min(col("rmin")))
+    case "max"   => over(max(col("rmax")))
+    case "count" => over(sum(col("rcount"))).cast(DoubleType)
+    case "last"  => over(expr("max_by(rlast, rlast_ts)"))
+    case other   => throw new IllegalArgumentException(
+      s"'$other' is not reconstructable from rollup moments")
+  }
+
+  /** The aggregates [[fromMoments]] can reconstruct exactly. */
+  val Reconstructable: Set[String] = Set("sum", "avg", "min", "max", "count", "last")
+
   /** Aggregate canonical samples (series_id, labels, timestamp, value) to
     * `bucketMs` resolution. Null values (dense-grid gaps) don't exist on
     * the storage path. NaN/Inf samples follow the ENGINE's summarize
@@ -44,13 +73,7 @@ object Rollup {
       .withColumn("bucket_ts",
         floor(col(S.Ts) / lit(bucketMs.toDouble)).cast("long") * bucketMs)
       .groupBy(col(S.SeriesId), col(S.LabelsCol), col("bucket_ts"))
-      .agg(
-        sum(col(S.Value).cast(Dec)).as("rsum"),   // decimal — stays mergeable
-        count(col(S.Value)).as("rcount"),
-        min(col(S.Value)).as("rmin"),
-        max(col(S.Value)).as("rmax"),
-        expr(s"max_by(${S.Value}, ${S.Ts})").as("rlast"),
-        max(col(S.Ts)).as("rlast_ts"))
+      .agg(moments.head, moments.tail: _*)
 
   /** Sweep form: roll up a day-partitioned samples table into a rollup
     * table at `bucketMs`, partitioned the same way (day pruning keeps
@@ -76,25 +99,12 @@ object Rollup {
       grid.endMs % bucketMs == 0,
       s"grid (start=${grid.startMs}, end=${grid.endMs}, step=${grid.stepMs}) " +
         s"is not aligned to the rollup resolution $bucketMs — query raw samples instead")
-    val v = agg match {
-      case "sum"   => sum(col("rsum")).cast(DoubleType)
-      case "avg"   => sum(col("rsum")).cast(DoubleType) / sum(col("rcount"))
-      case "min"   => min(col("rmin"))
-      case "max"   => max(col("rmax"))
-      case "count" => sum(col("rcount")).cast(DoubleType)
-      case "last"  => expr("max_by(rlast, rlast_ts)")
-      case other   => throw new IllegalArgumentException(
-        s"summarize '$other' is not reconstructable from rollup moments")
-    }
     rolled
       .where(col("bucket_ts") >= grid.startMs && col("bucket_ts") < grid.endMs)
       .withColumn(S.Ts, grid.bucket(col("bucket_ts")))
       .groupBy(col(S.SeriesId), col(S.LabelsCol), col(S.Ts))
-      .agg(v.as(S.Value))
+      .agg(fromMoments(agg).as(S.Value))
   }
-
-  /** The aggregates [[summarizeFromRollup]] can reconstruct exactly. */
-  val Reconstructable: Set[String] = Set("sum", "avg", "min", "max", "count", "last")
 
   /** Maintain the rollup INCREMENTALLY from the ingest stream: every moment
     * is algebraic, so one watermarked tumbling-window aggregation keeps
@@ -111,13 +121,7 @@ object Rollup {
       .withWatermark("_event_time", s"$lateMs milliseconds")
       .groupBy(col(S.SeriesId), col(S.LabelsCol),
         window(col("_event_time"), s"$bucketMs milliseconds").as("_w"))
-      .agg(
-        sum(col(S.Value).cast(Dec)).as("rsum"),
-        count(col(S.Value)).as("rcount"),
-        min(col(S.Value)).as("rmin"),
-        max(col(S.Value)).as("rmax"),
-        expr(s"max_by(${S.Value}, ${S.Ts})").as("rlast"),
-        max(col(S.Ts)).as("rlast_ts"))
+      .agg(moments.head, moments.tail: _*)
       .select(col(S.SeriesId), col(S.LabelsCol),
         unix_millis(col("_w.start")).as("bucket_ts"),
         col("rsum"), col("rcount"), col("rmin"), col("rmax"),

@@ -1,7 +1,7 @@
 package graft
 
 import graft.lang.m3.M3QL
-import graft.stages.SeriesSet
+import graft.stages.{GridOps, SeriesSet}
 import org.apache.spark.SparkException
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
@@ -142,6 +142,19 @@ class BinaryProjectionSpec extends SparkTestBase {
     assert(e.getMessage.contains("expects argument 1 of type bool"))
   }
 
+  test("fallbackSeries keeps a non-empty input and falls back only when it is empty") {
+    val l = samplesDF(series("name:m", Seq(S(1), S(2), N, N, N, N, N, N, N, N)))
+    val r = samplesDF(series("name:e", Seq(N, S(5), N, N, N, N, N, N, N, N)))
+    assertSeries(GridOps.fallbackSeriesBinary(l, r),
+      Map("name:m" -> Seq(S(1), S(2), N, N, N, N, N, N, N, N)))
+    assertSeries(GridOps.fallbackSeriesBinary(l.where("value > 100"), r),
+      Map("name:e" -> Seq(N, S(5), N, N, N, N, N, N, N, N)))
+    assertSeries(M3QL.query(spark, l, g, "fetch name:nothing | fallbackSeries 7"),
+      Map("fallback:true" -> Seq.fill(10)(S(7))))
+    assertSeries(M3QL.query(spark, l, g, "fetch name:m | fallbackSeries 7"),
+      Map("name:m" -> Seq(S(1), S(2), N, N, N, N, N, N, N, N)))
+  }
+
   test("building a binary projection plan runs no Spark job (no driver probe)") {
     val counter = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new SparkListener {
@@ -155,6 +168,9 @@ class BinaryProjectionSpec extends SparkTestBase {
       SeriesSet.divide(l, r, Seq("dc"))
       SeriesSet.diff(l, r, Seq("dc"), keepNans = true)
       SeriesSet.asPercent(l, r, Seq("dc"))
+      GridOps.fallbackSeries(spark, l, g, 1.0)
+      GridOps.fallbackSeriesBinary(l.where("value > 100"), r)
+      M3QL.query(spark, l, g, "fetch name:nothing | fallbackSeries 1")
       // plan construction is synchronous; a probe job would have fired its
       // listener event by the time the stages returned — allow a short drain
       Thread.sleep(500)

@@ -42,4 +42,20 @@ class NormalizerSpec extends SparkTestBase {
     assert(divided.keySet.head.contains("type:ratios"))
     assert(divided.values.head.take(2) == Seq(S(3), S(3.5)))
   }
+
+  test("alignOperands falls back to the MAX step when the LCM exceeds the query range") {
+    // 60 s and 77 s steps: LCM 4620 s > the 200 s range, so the common grid
+    // is 77 s (ref: TimeSeriesNormalizer.java:16-45), not one 4620 s slot
+    val a = samplesDF(series("name:x,side:l", Seq(S(1), S(2), S(3), S(4))))
+    val b = samplesDF(series("name:x,side:r", Seq(S(5), S(6), S(7)),
+      QueryGrid(60000L, 60000L + 231000L, 77000L)))
+    val end = 60000L + 200000L
+    val (l, r, m) = Normalizer.alignOperands(a, StepMeta(60000L, 60000L),
+      b, StepMeta(77000L, 60000L), end)
+    assert(m == StepMeta(77000L, 60000L))
+    val target = QueryGrid(m.startMs, end, m.stepMs)
+    // left: 60 s samples at 0, 60, 120, 180 s → 77 s slots {0, 60}, {120}, {180}
+    assert(toGolden(l, target)("name:x,side:l") == Seq(S(1.5), S(3), S(4)))
+    assert(toGolden(r, target)("name:x,side:r") == Seq(S(5), S(6), S(7)))
+  }
 }
