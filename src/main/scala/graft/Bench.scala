@@ -78,10 +78,6 @@ object Bench {
     // per-round clusterPairs breakdown on stderr, so a slow dedup_cluster_*
     // line in this bench attributes its cost round by round
     spark.conf.set("graft.clusterPairs.log", "true")
-    // the ingest-lag gate diagnostics (expected-ledger aggregate, per-batch
-    // counts) belong at the correctness gate, not on the bench clock — the
-    // result path is identical either way (r13; ~2s at sf0.1)
-    spark.conf.set("graft.ingestlag.diag", "false")
   }
 
   type Query = (SparkSession, String) => DataFrame

@@ -4,12 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Query-time evaluation grid.
+/** Query-time evaluation grid — the one owner of the series path's time
+  * axis: the floor bucket, the end-exclusive clip, the grid points and the
+  * per-series consolidation onto buckets are each written once, here.
   *
   * The reference carries (minTimestamp, maxTimestamp, step) on every series and
   * defines "null" as absence from the sample list; all dense-fill / temporal
   * stages are evaluated against this grid, not against the data
-  * (ref: query/aggregator/TimeSeries.java:68,83-90).
+  * (ref: query/aggregator/TimeSeries.java:68,83-90), and every bucket goes
+  * through one mapper (SummarizeStage's bucketMapper.mapToBucket; the same
+  * rule in TimeSeriesNormalizer and the unfold rebucket).
   *
   * Timestamps are epoch millis; the grid is `[startMs, alignedEndMs]` inclusive,
   * points every `stepMs` (ref: TimeSeries.calculateAlignedMaxTimestamp,
@@ -26,16 +30,42 @@ final case class QueryGrid(startMs: Long, endMs: Long, stepMs: Long) {
     else startMs + ((endMs - startMs - 1) / stepMs) * stepMs
   def numPoints: Long = (alignedEndMs - startMs) / stepMs + 1
 
-  /** One row per grid point: (timestamp LONG). Distributed via sequence+explode
-    * so a 100TB-scale densify never materializes on the driver. */
-  def gridDF(spark: SparkSession): DataFrame =
-    spark.range(1).select(
-      explode(sequence(lit(startMs), lit(alignedEndMs), lit(stepMs))).as("timestamp"))
+  /** The end-exclusive clip: `ts` lies in `[startMs, endMs)`. */
+  def contains(ts: Column): Column = ts >= startMs && ts < endMs
 
-  /** Column expr: bucket an arbitrary timestamp onto this grid (floor — matches
-    * DuckDB's `//` integer division for oracle parity). */
-  def bucket(ts: Column): Column =
-    (lit(startMs) + floor((ts - lit(startMs)) / lit(stepMs)).cast(LongType) * lit(stepMs))
+  /** The grid points `[startMs, alignedEndMs]` as one array column; exploded
+    * per row, so a 100TB-scale densify never materializes on the driver. */
+  def points: Column = sequence(lit(startMs), lit(alignedEndMs), lit(stepMs))
+
+  /** One row per grid point: (timestamp LONG). */
+  def gridDF(spark: SparkSession): DataFrame =
+    spark.range(1).select(explode(points).as(TsSchema.Ts))
+
+  /** Bucket an arbitrary timestamp onto this grid: [[QueryGrid.bucket]] with
+    * origin `startMs`. */
+  def bucket(ts: Column): Column = QueryGrid.bucket(ts, stepMs, startMs)
+
+  /** Per-series consolidation onto this grid's buckets: bucket column `ts`,
+    * group by (series_id, labels, bucket) and reduce each group with `agg`
+    * (which may read the raw `timestamp`, as `last` does), giving canonical
+    * (series_id, labels, timestamp, value) rows stamped with their bucket. */
+  def consolidate(df: DataFrame, agg: Column, ts: String = TsSchema.Ts): DataFrame =
+    df.withColumn("_slot", bucket(col(ts)))
+      .groupBy(col(TsSchema.SeriesId), col(TsSchema.LabelsCol), col("_slot").as(TsSchema.Ts))
+      .agg(agg.as(TsSchema.Value))
+      .select(TsSchema.SeriesId, TsSchema.LabelsCol, TsSchema.Ts, TsSchema.Value)
+}
+
+object QueryGrid {
+  /** The one floor bucket: `originMs + floor((ts - originMs) / stepMs) * stepMs`.
+    * Floor, not truncation, so pre-1970 (negative) timestamps round down —
+    * matches DuckDB's `//` integer division for oracle parity. */
+  def bucket(ts: Column, stepMs: Long, originMs: Long): Column =
+    lit(originMs) + floor((ts - lit(originMs)) / lit(stepMs)).cast(LongType) * lit(stepMs)
+
+  /** [[bucket]] of one driver-side instant, for plan-time grid arithmetic. */
+  def bucketOf(ms: Long, stepMs: Long, originMs: Long): Long =
+    originMs + Math.floorDiv(ms - originMs, stepMs) * stepMs
 }
 
 /** Per-operand grid metadata threaded through the M3QL compiler: the nominal
@@ -549,10 +579,6 @@ object Tables {
     * temporal stages can run on (ref: lang/m3/stage/SummarizeStage.java:39-62). */
   def griddedEventSamples(spark: SparkSession, sfDir: String): DataFrame =
     cached(spark, sfDir, "griddedEventSamples") {
-      val g = EventsGrid6h
-      eventSamples(spark, sfDir)
-        .withColumn(TsSchema.Ts, g.bucket(col(TsSchema.Ts)))
-        .groupBy(TsSchema.SeriesId, TsSchema.LabelsCol, TsSchema.Ts)
-        .agg(OracleSafe.dAvg(col(TsSchema.Value)).as(TsSchema.Value))
+      EventsGrid6h.consolidate(eventSamples(spark, sfDir), OracleSafe.dAvg(col(TsSchema.Value)))
     }
 }

@@ -94,7 +94,8 @@ final class Compiler(spark: SparkSession, samples: DataFrame, grid: QueryGrid) {
 
   private def compilePipeline(p: Pipeline, macroDF: String => Branches,
                               extraBuf: Long = 0L, extraShift: Long = 0L,
-                              clip: Boolean = true): Branches = {
+                              clip: Boolean = true,
+                              gate: DataFrame => DataFrame = identity): Branches = {
     val (buf0, shift0) = buffers(p.stages)
     val buf = buf0 + extraBuf
     val shift = shift0 + extraShift
@@ -106,14 +107,14 @@ final class Compiler(spark: SparkSession, samples: DataFrame, grid: QueryGrid) {
         // last-wins, not an average (ref: TimeSeriesUnfoldAggregator
         // :305-320 "only keep the latest sample for each aligned timestamp";
         // validated by m3ql_step_size_from_index_settings_rest_it.yaml)
-        Seq((Normalizer.resample(Fetch.fetch(samples, filters, widened), widened, "last",
-          skipNaN = false),
+        Seq((Normalizer.resample(Fetch.fetch(gate(samples), filters, widened), widened,
+          graft.core.OracleSafe.seriesAgg("last"), skipNaN = false),
           StepMeta(grid.stepMs, widened.startMs)))
       case MockFetchSource(values, tags) =>
         Seq((Fetch.mockFetch(spark, widened, values, tags),
           StepMeta(grid.stepMs, widened.startMs)))
       case GroupSource(gp) =>
-        compilePipeline(gp, macroDF, buf, shift, clip = false)
+        compilePipeline(gp, macroDF, buf, shift, clip = false, gate)
       case MacroSource(n) => macroDF(n)
     }
     // ROLLUP TIER ROUTING: `fetch … | summarize …` whose grid aligns to a
@@ -123,7 +124,7 @@ final class Compiler(spark: SparkSession, samples: DataFrame, grid: QueryGrid) {
     // or non-reconstructable aggregate
     val (src2, stages2) = (p.source, p.stages) match {
       case (FetchSource(filters), st :: rest) if st.name == "summarize" =>
-        routedSummarize(filters, st, widened) match {
+        routedSummarize(filters, st, widened, gate) match {
           case Some(branch) => (Seq(branch), rest)
           case None         => (src, p.stages)
         }
@@ -135,7 +136,7 @@ final class Compiler(spark: SparkSession, samples: DataFrame, grid: QueryGrid) {
     val out = stages2.zipWithIndex.foldLeft(src2) {
       case (bs, (StageCall("__group", List(PipeArg(inner))), k)) =>
         val (sb, ss) = buffers(stages2.drop(k + 1))
-        bs ++ compilePipeline(inner, macroDF, sb + extraBuf, ss + extraShift, clip = false)
+        bs ++ compilePipeline(inner, macroDF, sb + extraBuf, ss + extraShift, clip = false, gate)
       case (bs, (st, _)) => applyStage(bs, st, widened, macroDF)
     }
     if (clip && (buf > 0 || shift > 0))
@@ -167,14 +168,17 @@ final class Compiler(spark: SparkSession, samples: DataFrame, grid: QueryGrid) {
   }
 
   private def routedSummarize(filters: Seq[Fetch.LabelFilter], st: StageCall,
-                              widened: QueryGrid): Option[(DataFrame, StepMeta)] = {
+                              widened: QueryGrid,
+                              gate: DataFrame => DataFrame): Option[(DataFrame, StepMeta)] = {
     import graft.streaming.Rollup
     Rollup.tierFor(spark, samples).flatMap { case (rolled, bucketMs) =>
       val (interval, agg, alignToFrom) = summarizeArgs(st)
-      val aligned = interval > 0 && interval % bucketMs == 0 &&
-        widened.startMs % interval == 0 && widened.endMs % interval == 0
+      // the scan bounds on the interval grid too: epoch-floored buckets then
+      // equal the routed grid's start-aligned ones
+      val aligned = Rollup.aligned(bucketMs, interval) &&
+        Rollup.aligned(interval, widened.startMs, widened.endMs)
       if (!alignToFrom && aligned && Rollup.Reconstructable.contains(agg)) {
-        val filtered = filters.foldLeft(rolled)((df, f) => df.where(f.predicate))
+        val filtered = filters.foldLeft(gate(rolled))((df, f) => df.where(f.predicate))
         Some((Rollup.summarizeFromRollup(filtered, bucketMs,
           QueryGrid(widened.startMs, widened.endMs, interval), agg),
           StepMeta(interval, widened.startMs)))
@@ -328,7 +332,7 @@ final class Compiler(spark: SparkSession, samples: DataFrame, grid: QueryGrid) {
         val (interval, agg, alignToFrom) = summarizeArgs(st)
         val newStart =
           if (alignToFrom) meta.startMs
-          else Math.floorDiv(meta.startMs, interval) * interval
+          else QueryGrid.bucketOf(meta.startMs, interval, 0L)
         Seq((Temporal.summarize(df, interval, agg,
           if (alignToFrom) meta.startMs else 0L),
           StepMeta(interval, newStart)))
@@ -339,8 +343,12 @@ final class Compiler(spark: SparkSession, samples: DataFrame, grid: QueryGrid) {
       case "removeEmpty"    => same(GridOps.removeEmpty(df))
       case "fallbackSeries" =>
         st.args.collectFirst {
+          // a shared macro is computed anyway: only its output is gated
           case RefArg(n)  => Normalizer.collapse(macroDF(n))._1
-          case PipeArg(p) => Normalizer.collapse(compilePipeline(p, macroDF))._1
+          // a pipeline's sources are gated too, so a non-empty left never
+          // scans for the fallback it discards
+          case PipeArg(p) => Normalizer.collapse(
+            compilePipeline(p, macroDF, gate = GridOps.whenEmpty(df)))._1
         } match {
           case Some(right) => same(GridOps.fallbackSeriesBinary(df, right))
           case None        => same(GridOps.fallbackSeries(spark, df, g, num(0)))

@@ -555,15 +555,15 @@ object PromQL {
     }
 
     /** The tier rows behind an aligned range selector `s[d]` over grid `g`:
-      * the one plan-time alignment gate every rollup route shares (window,
-      * step, origin and selector offset all multiples of the tier's bucket),
+      * [[graft.streaming.Rollup.aligned]] over the window, step, origin and
+      * selector offset (the gate every rollup route shares),
       * then the selector's matchers and its offset shift on `bucket_ts`.
       * None — fall back to raw — when no tier is registered for these
       * samples or anything misaligns. */
     private def rollupWindow(s: Selector, d: Long, g: QueryGrid): Option[DataFrame] =
       graft.streaming.Rollup.tierFor(spark, samples).collect {
-        case (rolled, bucketMs) if d % bucketMs == 0 && g.stepMs % bucketMs == 0 &&
-            Math.floorMod(g.startMs, bucketMs) == 0 && s.offsetMs % bucketMs == 0 =>
+        case (rolled, bucketMs)
+            if graft.streaming.Rollup.aligned(bucketMs, d, g.stepMs, g.startMs, s.offsetMs) =>
           val off = s.offsetMs
           val base = applyMatchers(s, rolled.where(
             col("bucket_ts") >= g.startMs - off - d &&
@@ -1348,8 +1348,7 @@ object PromQL {
         // (ceiling bucket, newest per bucket, no carry — the same rule a
         // pure range-function inner gets), so both sides combine on the
         // subquery instant set regardless of where the samples fall.
-        def gSub = QueryGrid(
-          Math.floorDiv(g.startMs, stepMs) * stepMs, g.endMs, stepMs)
+        def gSub = QueryGrid(QueryGrid.bucketOf(g.startMs, stepMs, 0L), g.endMs, stepMs)
         inner match {
           case _: Selector =>
             (resample(eval(inner, g), stepMs, g, carry = true), d)

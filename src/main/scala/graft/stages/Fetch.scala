@@ -43,10 +43,9 @@ object Fetch {
   }
 
   /** Apply fetch filters + grid time range (end-exclusive) to a samples DF. */
-  def fetch(samples: DataFrame, filters: Seq[LabelFilter], grid: QueryGrid): DataFrame = {
-    val timePred = col(TsSchema.Ts) >= grid.startMs && col(TsSchema.Ts) < grid.endMs
-    filters.foldLeft(samples.where(timePred))((df, f) => df.where(f.predicate))
-  }
+  def fetch(samples: DataFrame, filters: Seq[LabelFilter], grid: QueryGrid): DataFrame =
+    filters.foldLeft(samples.where(grid.contains(col(TsSchema.Ts))))(
+      (df, f) => df.where(f.predicate))
 
   /** `mockFetch v1,v2,… [tags]` — synthesize one series whose values are laid
     * SEQUENTIALLY on the query grid, one per step from the start, without

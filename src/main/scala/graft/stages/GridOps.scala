@@ -30,7 +30,7 @@ object GridOps {
     // and no union+distinct re-shuffle of the combined point set
     val gridPts = series.select(
       col(S.SeriesId), col(S.LabelsCol).as("_glab"),
-      explode(sequence(lit(grid.startMs), lit(grid.alignedEndMs), lit(grid.stepMs))).as(S.Ts))
+      explode(grid.points).as(S.Ts))
     gridPts
       .join(df.select(col(S.SeriesId), col(S.LabelsCol).as("_slab"), col(S.Ts), col(S.Value)),
         Seq(S.SeriesId, S.Ts), "full_outer")
@@ -60,24 +60,29 @@ object GridOps {
   }
 
   /** `fallbackSeries <const>` — if the input has no series, emit one constant
-    * series over the query range (ref: FallbackSeriesUnaryStage.java:27-38). */
+    * series over the query range (ref: FallbackSeriesUnaryStage.java:27-38).
+    * Its id derives from its labels, like every synthesized series. */
   def fallbackSeries(spark: SparkSession, df: DataFrame, grid: QueryGrid, const: Double): DataFrame = {
     import org.apache.spark.sql.types._
+    val labels = map(lit("fallback"), lit("true"))
+      .cast(MapType(StringType, StringType, valueContainsNull = false))
     fallbackSeriesBinary(df, grid.gridDF(spark).select(
-      xxhash64(lit("fallback")).as(S.SeriesId),
-      map(lit("fallback"), lit("true"))
-        .cast(MapType(StringType, StringType, valueContainsNull = false)).as(S.LabelsCol),
-      col(S.Ts),
-      lit(const).as(S.Value)))
+      S.seriesId(labels).as(S.SeriesId), labels.as(S.LabelsCol), col(S.Ts), lit(const).as(S.Value)))
   }
 
   /** `fallbackSeries <pipeline>` — binary form: left result if non-empty, else
     * the right pipeline's result (ref: FallbackSeriesBinaryStage.java:22-32).
     * Decided inside the plan, so building it runs no job: the right rows
-    * pass only under a broadcast 1-row flag, "the left's first row is
-    * missing" (a limit-1 probe, as `isEmpty` was, not a full count). */
-  def fallbackSeriesBinary(left: DataFrame, right: DataFrame): DataFrame = {
-    val leftEmpty = broadcast(left.limit(1).agg((count(lit(1)) === 0).as("_empty")))
-    left.unionByName(right.crossJoin(leftEmpty).where(col("_empty")).drop("_empty"))
-  }
+    * pass only through [[whenEmpty]]. */
+  def fallbackSeriesBinary(left: DataFrame, right: DataFrame): DataFrame =
+    left.unionByName(whenEmpty(left)(right))
+
+  /** `df` gated on "`left` has no row": crossed with a broadcast flag that
+    * holds one row when left's limit-1 probe finds nothing, and none
+    * otherwise. A non-empty left materializes the flag empty, and AQE's
+    * empty-relation propagation then drops `df`'s plan — a gate on a
+    * pipeline's SOURCE stops its scan before it runs. */
+  def whenEmpty(left: DataFrame)(df: DataFrame): DataFrame =
+    df.crossJoin(broadcast(left.limit(1).agg((count(lit(1)) === 0).as("_empty"))
+      .where(col("_empty")))).drop("_empty")
 }

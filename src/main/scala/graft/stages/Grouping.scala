@@ -78,8 +78,7 @@ object Grouping {
       .agg(functions.count_distinct(col(TsSchema.SeriesId)).cast(DoubleType).as(TsSchema.Value))
     val dense = counts.select(
       col("*"),
-      explode(sequence(lit(grid.startMs), lit(grid.alignedEndMs), lit(grid.stepMs)))
-        .as(TsSchema.Ts))
+      explode(grid.points).as(TsSchema.Ts))
     finish(dense, groupKeys)
   }
 

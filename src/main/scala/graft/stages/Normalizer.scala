@@ -1,9 +1,8 @@
 package graft.stages
 
 import graft.core.{OracleSafe, QueryGrid, StepMeta, TsSchema}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Step normalization for combining series with different resolutions —
   * the reference's TimeSeriesNormalizer (query/aggregator/
@@ -19,41 +18,26 @@ object Normalizer {
   def gcd(a: Long, b: Long): Long = if (b == 0) a else gcd(b, a % b)
   def lcm(a: Long, b: Long): Long = a / gcd(a, b) * b
 
-  /** Resample a canonical samples DF onto `targetGrid` with the given
-    * consolidation function, an [[OracleSafe.seriesAgg]] name. One shuffle
-    * on (series, slot). With `skipNaN=true` (the TimeSeriesNormalizer behavior — NaN samples skipped,
+  /** Resample a canonical samples DF onto the slots of `targetGrid` inside
+    * its range, merging the samples of each slot with `agg` — an
+    * [[OracleSafe.seriesAgg]] aggregate or [[typeAware]]. One shuffle on
+    * (series, slot). With `skipNaN=true` (the TimeSeriesNormalizer behavior — NaN samples skipped,
     * an all-NaN slot emits nothing; ref: TimeSeriesNormalizer.java:330-371);
     * the fetch-unfold path passes `skipNaN=false` because the unfold keeps
     * the latest sample per slot NaN included (TimeSeriesUnfoldAggregator
     * :305-320 has no NaN filter). */
-  def resample(df: DataFrame, targetGrid: QueryGrid, fn: String = "avg",
-               skipNaN: Boolean = true): DataFrame = {
-    val slot = targetGrid.bucket(col(S.Ts))
+  def resample(df: DataFrame, targetGrid: QueryGrid,
+               agg: Column = OracleSafe.seriesAgg("avg"), skipNaN: Boolean = true): DataFrame = {
     val in = if (skipNaN) df.where(col(S.Value).isNotNull && !isnan(col(S.Value))) else df
-    in.withColumn("_slot", slot)
-      .where(col("_slot") >= targetGrid.startMs && col("_slot") < targetGrid.endMs)
-      .groupBy(col(S.SeriesId), col(S.LabelsCol), col("_slot").as(S.Ts))
-      .agg(OracleSafe.seriesAgg(fn).as(S.Value))
-      .select(S.SeriesId, S.LabelsCol, S.Ts, S.Value)
+    targetGrid.consolidate(in, agg).where(targetGrid.contains(col(S.Ts)))
   }
 
-  /** TYPE_AWARE consolidation: SUM for series labeled type:counter, AVG
-    * otherwise (ref: ConsolidationFunction.TYPE_AWARE). */
-  def resampleTypeAware(df: DataFrame, targetGrid: QueryGrid): DataFrame = {
-    val slot = targetGrid.bucket(col(S.Ts))
-    // counter and counts, case-insensitive (ref: ConsolidationStrategy.TYPE_AWARE)
-    val isCounter = lower(col(S.LabelsCol).getItem("type")).isin("counter", "counts")
-    df.where(col(S.Value).isNotNull && !isnan(col(S.Value)))
-      .withColumn("_slot", slot)
-      .where(col("_slot") >= targetGrid.startMs && col("_slot") < targetGrid.endMs)
-      .groupBy(col(S.SeriesId), col(S.LabelsCol), col("_slot").as(S.Ts))
-      .agg(
-        OracleSafe.dSum(col(S.Value)).as("_sum"),
-        OracleSafe.dAvg(col(S.Value)).as("_avg"),
-        first(isCounter).as("_counter"))
-      .withColumn(S.Value, when(col("_counter"), col("_sum")).otherwise(col("_avg")))
-      .select(S.SeriesId, S.LabelsCol, S.Ts, S.Value)
-  }
+  /** TYPE_AWARE consolidation: SUM for series labeled type:counter or
+    * type:counts (case-insensitive), AVG otherwise
+    * (ref: ConsolidationFunction.TYPE_AWARE, ConsolidationStrategy). */
+  def typeAware: Column =
+    when(first(lower(col(S.LabelsCol).getItem("type")).isin("counter", "counts")),
+      OracleSafe.dSum(col(S.Value))).otherwise(OracleSafe.dAvg(col(S.Value)))
 
   /** Normalize N operands onto their common grid the way the reference runs
     * TimeSeriesNormalizer (LCM step, AVG consolidation — ref:
@@ -78,7 +62,7 @@ object Normalizer {
       val target = QueryGrid(start, end, step)
       (ops.map { case (df, m) =>
         if (m.stepMs == step && (m.startMs - start) % step == 0) df
-        else resample(df, target, "avg")
+        else resample(df, target)
       }, StepMeta(step, start))
     }
   }
@@ -124,7 +108,7 @@ object Normalizer {
       val target = QueryGrid(start, start + ((endMs - start + step - 1) / step) * step, step)
       val dfs = bs.map { case (df, m) =>
         if (m.stepMs == step && (m.startMs - start) % step == 0) df
-        else resampleTypeAware(df, target)
+        else resample(df, target, typeAware)
       }
       (SeriesSet.union(dfs), StepMeta(step, start))
     }

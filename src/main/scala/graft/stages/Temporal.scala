@@ -79,7 +79,7 @@ object Temporal {
   /** Internal truncate — clip to [startMs, endMs) after buffer-widened fetch
     * (ref: TruncateStage.java:25-31; injected SourceBuilderVisitor.java:329-339). */
   def truncate(df: DataFrame, grid: QueryGrid): DataFrame =
-    df.where(col(S.Ts) >= grid.startMs && col(S.Ts) < grid.endMs)
+    df.where(grid.contains(col(S.Ts)))
 
   /** `moving dur fn` — reference-exact trailing window: at each GRID timestamp
     * the window is evaluated BEFORE the current point is added, i.e. the frame
@@ -228,8 +228,6 @@ object Temporal {
     * bucket alignment SourceBuilderVisitor.java:674-697). Bucket timestamp =
     * bucket start, aligned to `alignMs` (query start, or epoch). */
   def summarize(df: DataFrame, intervalMs: Long, fn: String, alignMs: Long = 0L): DataFrame = {
-    val bucket = (lit(alignMs) +
-      floor((col(S.Ts) - lit(alignMs)) / lit(intervalMs)).cast(LongType) * lit(intervalMs))
     val v = col(S.Value)
     // nearest-rank percentile of the bucket's values, same math as
     // percentileOfSeries (ref: summarize/PercentileBucketSummarizer.java:55-70
@@ -258,10 +256,8 @@ object Temporal {
         s"Invalid window aggregation type: $other. " +
           "Supported: sum, avg, max, min, median, last, stddev, p0-p100 (e.g., p50, p95)")
     }
-    df.withColumn("_b", bucket)
-      .groupBy(col(S.SeriesId), col(S.LabelsCol), col("_b").as(S.Ts))
-      .agg(aggExpr.as(S.Value))
-      .select(S.SeriesId, S.LabelsCol, S.Ts, S.Value)
+    // an unbounded grid from `alignMs`: buckets are never clipped
+    QueryGrid(alignMs, Long.MaxValue, intervalMs).consolidate(df, aggExpr)
   }
 
   /** `perSecondRate [lookbackMs]` — Prometheus-counter rate: a decrease starts a

@@ -318,22 +318,6 @@ object Ingest {
     fs.delete(marker, false)
   }
 
-  /** Streaming windowed aggregation (query-over-stream): per label-key tumbling
-    * window aggregate with watermark-bounded state — the Structured Streaming
-    * face of `summarize` (SURVEY.md §2.5). */
-  def streamingSummarize(samples: DataFrame, windowMs: Long, lateMs: Long): DataFrame =
-    samples
-      .withColumn("_event_time", timestamp_millis(col(TsSchema.Ts)))
-      .withWatermark("_event_time", s"$lateMs milliseconds")
-      .groupBy(col(TsSchema.SeriesId),
-        window(col("_event_time"), s"$windowMs milliseconds"))
-      .agg(
-        first(col(TsSchema.LabelsCol)).as(TsSchema.LabelsCol),
-        avg(col(TsSchema.Value)).as("avg_value"),
-        count(col(TsSchema.Value)).as("n"),
-        min(col(TsSchema.Value)).as("min_value"),
-        max(col(TsSchema.Value)).as("max_value"))
-
   /** Per-series activity sessions with an inactivity gap — Spark's native
     * `session_window` over the watermarked stream (merging is Spark-managed
     * state, one shuffle on the series key; the identical expression runs in

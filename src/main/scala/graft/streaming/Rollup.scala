@@ -68,10 +68,7 @@ object Rollup {
     * matching the raw path. */
   def rollup(samples: DataFrame, bucketMs: Long): DataFrame =
     samples
-      // floor-div, not cast-truncation: pre-1970 (negative) timestamps must
-      // round DOWN to match QueryGrid.bucket's floor on the raw path
-      .withColumn("bucket_ts",
-        floor(col(S.Ts) / lit(bucketMs.toDouble)).cast("long") * bucketMs)
+      .withColumn("bucket_ts", QueryGrid.bucket(col(S.Ts), bucketMs, 0L))
       .groupBy(col(S.SeriesId), col(S.LabelsCol), col("bucket_ts"))
       .agg(moments.head, moments.tail: _*)
 
@@ -95,16 +92,18 @@ object Rollup {
                           agg: String): DataFrame = {
     // endMs must align too: a straddling trailing bucket would smuggle in
     // samples at ts >= endMs (serve-path grids ending at "now" hit this)
-    require(grid.stepMs % bucketMs == 0 && grid.startMs % bucketMs == 0 &&
-      grid.endMs % bucketMs == 0,
+    require(aligned(bucketMs, grid.stepMs, grid.startMs, grid.endMs),
       s"grid (start=${grid.startMs}, end=${grid.endMs}, step=${grid.stepMs}) " +
         s"is not aligned to the rollup resolution $bucketMs — query raw samples instead")
-    rolled
-      .where(col("bucket_ts") >= grid.startMs && col("bucket_ts") < grid.endMs)
-      .withColumn(S.Ts, grid.bucket(col("bucket_ts")))
-      .groupBy(col(S.SeriesId), col(S.LabelsCol), col(S.Ts))
-      .agg(fromMoments(agg).as(S.Value))
+    grid.consolidate(rolled.where(grid.contains(col("bucket_ts"))), fromMoments(agg),
+      ts = "bucket_ts")
   }
+
+  /** The one rollup-tier alignment gate: every given duration and origin is
+    * a multiple of the bucket `bucketMs`. A read whose step, window, grid
+    * start, grid end or offset fails it must fall back to raw samples. */
+  def aligned(bucketMs: Long, ms: Long*): Boolean =
+    bucketMs > 0 && ms.forall(Math.floorMod(_, bucketMs) == 0)
 
   /** Maintain the rollup INCREMENTALLY from the ingest stream: every moment
     * is algebraic, so one watermarked tumbling-window aggregation keeps

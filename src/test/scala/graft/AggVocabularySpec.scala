@@ -1,6 +1,7 @@
 package graft
 
-import graft.core.{OracleSafe, TsSchema}
+import graft.core.{OracleSafe, QueryGrid, TsSchema}
+import graft.stages.Temporal
 import graft.streaming.Rollup
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
@@ -16,9 +17,14 @@ import org.scalacheck.rng.Seed
   * window — except Spark's population moments, which merge partial buffers
   * in shuffle order and so agree only within one ulp — and every [[Rollup.Reconstructable]] name gives the same bits
   * re-merged from rollup moments at bucket b onto step k·b as applied to
-  * the raw samples at k·b. Fixed seeds, driven from plain scalatest through
-  * `Test.check`; doubles compare by `doubleToLongBits` (every NaN is one
-  * value, -0.0 differs from 0.0). */
+  * the raw samples at k·b. The same cases check the one time axis,
+  * [[QueryGrid]], at generated origins and steps with samples before 1970
+  * and exactly on a grid's start, `end - 1` and end: its bucket is floor
+  * division, its clip keeps exactly `[start, end)`, a rollup re-merged by
+  * `summarizeFromRollup` equals `summarize` at the same origin, and the
+  * tumbling-window rollup equals the batch one. Fixed seeds, driven from
+  * plain scalatest through `Test.check`; doubles compare by
+  * `doubleToLongBits` (every NaN is one value, -0.0 differs from 0.0). */
 class AggVocabularySpec extends SparkTestBase {
   private val S = TsSchema
   /** Every name [[OracleSafe.seriesAgg]] defines. */
@@ -27,8 +33,16 @@ class AggVocabularySpec extends SparkTestBase {
   /** Spark's `stddev_pop`/`var_pop`: grouped and windowed within one ulp. */
   private val PopMoments = Set("stddev_pop", "var_pop")
 
+  /** A time axis: rollup bucket `b`, step `k·b` and the grid `[start, end)`
+    * at that step — bucket-aligned (start and end multiples of `b`, the
+    * rollup routes' precondition) or at an arbitrary origin. */
+  private final case class Axis(b: Long, k: Int, start: Long, end: Long) {
+    def grid: QueryGrid = QueryGrid(start, end, b * k)
+  }
+
   /** (series, timestamp, value) rows; timestamps are distinct per series. */
-  private final case class Case(rows: Seq[(Int, Long, Option[Double])], parts: Int)
+  private final case class Case(rows: Seq[(Int, Long, Option[Double])], parts: Int,
+                                axis: Axis = Axis(10000L, 1, 0L, 480000L))
 
   private val valueGen: Gen[Option[Double]] = Gen.frequency(
     1 -> Gen.const(None),
@@ -37,18 +51,36 @@ class AggVocabularySpec extends SparkTestBase {
     // few distinct finite values: ties for min/max, repeats for the moments
     6 -> Gen.choose(-40, 40).map(i => Some(i / 8.0)))
 
+  private val axisGen: Gen[Axis] = for {
+    b <- Gen.oneOf(1000L, 10000L, 20000L, 60000L)
+    k <- Gen.choose(1, 4)
+    // origins from 1938 to 2033: a third of the grids start before 1970
+    origin <- Gen.choose(-1000000000000L, 2000000000000L)
+    aligned <- Gen.frequency(3 -> true, 1 -> false)
+    slots <- Gen.choose(0, 12)
+    tail <- Gen.choose(1L, b - 1)
+  } yield {
+    val start = if (aligned) Math.floorDiv(origin, b) * b else origin
+    Axis(b, k, start, start + slots * b + (if (aligned) 0L else tail))
+  }
+
   private val caseGen: Gen[Case] = for {
+    axis <- axisGen
     nSeries <- Gen.choose(1, 4)
+    step = axis.b * axis.k
+    edges = Seq(axis.start, axis.end - 1, axis.end)
     rows <- Gen.sequence[Seq[Seq[(Int, Long, Option[Double])]], Seq[(Int, Long, Option[Double])]](
       (0 until nSeries).map { sid =>
         for {
+          onEdge <- Gen.someOf(edges)
           n <- Gen.choose(0, 12)
-          slots <- Gen.pick(n, 0 until 48).map(_.toSeq.sorted)
-          vs <- Gen.listOfN(n, valueGen)
-        } yield slots.zip(vs).map { case (slot, v) => (sid, slot * 10000L, v) }
+          inside <- Gen.listOfN(n, Gen.choose(axis.start - 2 * step, axis.end + 2 * step))
+          ts = (onEdge.toSeq ++ inside).distinct.sorted
+          vs <- Gen.listOfN(ts.size, valueGen)
+        } yield ts.zip(vs).map { case (t, v) => (sid, t, v) }
       })
     parts <- Gen.choose(1, 8)
-  } yield Case(rows.flatten, parts)
+  } yield Case(rows.flatten, parts, axis)
 
   private def samples(c: Case): DataFrame = {
     val schema = StructType(Seq(
@@ -112,6 +144,73 @@ class AggVocabularySpec extends SparkTestBase {
     def m(d: DataFrame) = d.collect().map(r => (r.getLong(0), r.getLong(1)) -> bits(r, 2)).toMap
     val (want, got) = (m(direct), m(merged))
     Prop(got == want) :| s"$fn b=$b k=$k on $c\n direct $want\n rollup $got"
+  }
+
+  /** The axis bucket is floor division from the origin, and its driver-side
+    * twin agrees. */
+  private def bucketIsFloorDiv(c: Case): Prop = {
+    val g = c.axis.grid
+    val got = samples(c).select(col(S.Ts), g.bucket(col(S.Ts))).collect()
+      .map(r => r.getLong(0) -> r.getLong(1))
+    val bad = got.filterNot { case (ts, b) =>
+      b == g.startMs + Math.floorDiv(ts - g.startMs, g.stepMs) * g.stepMs &&
+        b == QueryGrid.bucketOf(ts, g.stepMs, g.startMs)
+    }
+    Prop(got.length == c.rows.length && bad.isEmpty) :| s"bucket on $c: ${bad.toSeq}"
+  }
+
+  /** The clip keeps exactly the samples in `[start, end)`. */
+  private def containsIsEndExclusive(c: Case): Prop = {
+    val g = c.axis.grid
+    val kept = samples(c).where(g.contains(col(S.Ts))).select(S.SeriesId, S.Ts).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val want = c.rows.collect {
+      case (sid, ts, _) if ts >= g.startMs && ts < g.endMs => (sid.toLong, ts)
+    }.toSet
+    Prop(kept == want) :| s"contains on $c\n kept $kept\n want $want"
+  }
+
+  /** Rollup at `b`, re-merged by `summarizeFromRollup` onto the case grid,
+    * vs `summarize` of the clipped raw samples at the grid's origin; a grid
+    * off the bucket must raise instead. */
+  private def summarizeFromRollupEqualsSummarize(c: Case, fn: String): Prop = {
+    val (a, g, df) = (c.axis, c.axis.grid, samples(c))
+    def m(d: DataFrame) = d.select(S.SeriesId, S.Ts, S.Value).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> bits(r, 2)).toMap
+    val rolled = Rollup.rollup(df, a.b)
+    if (Rollup.aligned(a.b, g.stepMs, g.startMs, g.endMs)) {
+      val want = m(Temporal.summarize(df.where(g.contains(col(S.Ts))), g.stepMs, fn, g.startMs))
+      val got = m(Rollup.summarizeFromRollup(rolled, a.b, g, fn))
+      Prop(got == want) :| s"$fn on $c\n summarize $want\n rollup    $got"
+    } else
+      Prop(scala.util.Try(Rollup.summarizeFromRollup(rolled, a.b, g, fn)).failed.toOption
+        .exists(_.isInstanceOf[IllegalArgumentException])) :| s"$fn on misaligned $c"
+  }
+
+  /** The tumbling-window rollup, run over a batch frame, equals the batch
+    * rollup: one bucketing in two execution modes. */
+  private def streamingRollupEqualsRollup(c: Case): Prop = {
+    val (b, df) = (c.axis.b, samples(c))
+    def m(d: DataFrame) = d.select(S.SeriesId, "bucket_ts", "rsum", "rcount", "rmin", "rmax",
+        "rlast", "rlast_ts").collect()
+      .map(r => (r.getLong(0), r.getLong(1)) ->
+        (Option(r.getDecimal(2)), r.getLong(3), bits(r, 4), bits(r, 5), bits(r, 6), r.getLong(7)))
+      .toMap
+    val (batch, windowed) = (m(Rollup.rollup(df, b)), m(Rollup.streamingRollup(df, b, lateMs = 0L)))
+    Prop(windowed == batch) :| s"b=$b on $c\n rollup    $batch\n streaming $windowed"
+  }
+
+  test("the time axis: bucket is floor division and the clip keeps exactly [start, end)") {
+    check(20261220L)(c => bucketIsFloorDiv(c) && containsIsEndExclusive(c))
+  }
+
+  test("rollup at b re-merged by summarizeFromRollup equals summarize at the same origin") {
+    for ((fn, i) <- Rollup.Reconstructable.toSeq.sorted.zipWithIndex)
+      withClue(s"$fn: ")(check(20261320L + i)(summarizeFromRollupEqualsSummarize(_, fn)))
+  }
+
+  test("streamingRollup run in batch mode equals rollup") {
+    check(20261420L)(streamingRollupEqualsRollup)
   }
 
   test("every seriesAgg name is the same grouped and over an unbounded per-series window") {

@@ -1,9 +1,11 @@
 package graft
 
+import graft.core.TsSchema
 import graft.lang.m3.M3QL
 import graft.stages.{GridOps, SeriesSet}
 import org.apache.spark.SparkException
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.functions.col
 
 /** Reference-exact binary projection semantics
   * (AbstractBinaryProjectionStage + SubtractStage/DivideStage overrides). */
@@ -153,6 +155,35 @@ class BinaryProjectionSpec extends SparkTestBase {
       Map("fallback:true" -> Seq.fill(10)(S(7))))
     assertSeries(M3QL.query(spark, l, g, "fetch name:m | fallbackSeries 7"),
       Map("name:m" -> Seq(S(1), S(2), N, N, N, N, N, N, N, N)))
+    // the synthesized series' id derives from its labels, like every other
+    val fb = M3QL.query(spark, l, g, "fetch name:nothing | fallbackSeries 7")
+      .select(col("series_id") === TsSchema.seriesId(col("labels"))).distinct().collect()
+    assert(fb.map(_.getBoolean(0)).toSeq == Seq(true))
+    // a non-empty left gates the right pipeline's source: once the flag's
+    // broadcast materializes empty, AQE drops the right scan before it runs,
+    // so the query reads no more rows than a fallback that scans nothing
+    // (AQE's final plan drops a pruned scan whether or not it ran, so rows
+    // are counted per task, not from the executed plan)
+    val path = tempDir("fallback").resolve("samples").toString
+    l.unionByName(r).write.parquet(path)
+    def rowsRead(q: String): Long = {
+      val n = new java.util.concurrent.atomic.AtomicLong
+      val listener = new SparkListener {
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          if (e.taskMetrics != null) n.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val out = M3QL.query(spark, spark.read.parquet(path), g, q).collect()
+        assert(out.map(_.getAs[Map[String, String]]("labels")("name")).toSet == Set("m"), q)
+        Thread.sleep(500)   // let the listener bus deliver the last task ends
+        n.get
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val scansNothing = rowsRead("fetch name:m | fallbackSeries(mockFetch 9)")
+    assert(scansNothing > 0)
+    assert(rowsRead("fetch name:m | fallbackSeries(fetch name:e | summarize 2m sum)") ==
+      scansNothing, "the right pipeline scanned")
   }
 
   test("building a binary projection plan runs no Spark job (no driver probe)") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{QueryGrid, StepMeta}
+import graft.core.{OracleSafe, QueryGrid, StepMeta}
 import graft.stages.{Normalizer, SeriesSet}
 
 class NormalizerSpec extends SparkTestBase {
@@ -10,11 +10,11 @@ class NormalizerSpec extends SparkTestBase {
   test("resample consolidates onto coarser grid") {
     val fine = samplesDF(series("name:a", Seq(S(1), S(2), S(3), S(4), S(5), S(6), N, N, N, N)))
     val coarse = QueryGrid(60000L, 60000L * 11, 120000L)  // 2m slots
-    val out = toGolden(Normalizer.resample(fine, coarse, "avg"), coarse)
+    val out = toGolden(Normalizer.resample(fine, coarse, OracleSafe.seriesAgg("avg")), coarse)
     assert(out("name:a").take(3) == Seq(S(1.5), S(3.5), S(5.5)))
-    val sums = toGolden(Normalizer.resample(fine, coarse, "sum"), coarse)
+    val sums = toGolden(Normalizer.resample(fine, coarse, OracleSafe.seriesAgg("sum")), coarse)
     assert(sums("name:a").take(3) == Seq(S(3), S(7), S(11)))
-    val lasts = toGolden(Normalizer.resample(fine, coarse, "last"), coarse)
+    val lasts = toGolden(Normalizer.resample(fine, coarse, OracleSafe.seriesAgg("last")), coarse)
     assert(lasts("name:a").take(3) == Seq(S(2), S(4), S(6)))
   }
 
@@ -23,7 +23,7 @@ class NormalizerSpec extends SparkTestBase {
       series("name:c,type:counter", Seq(S(1), S(2), S(3), S(4), N, N, N, N, N, N)) ++
       series("name:g,type:gauge", Seq(S(1), S(2), S(3), S(4), N, N, N, N, N, N)))
     val coarse = QueryGrid(60000L, 60000L * 11, 120000L)
-    val out = toGolden(Normalizer.resampleTypeAware(df, coarse), coarse)
+    val out = toGolden(Normalizer.resample(df, coarse, Normalizer.typeAware), coarse)
     assert(out("name:c,type:counter").take(2) == Seq(S(3), S(7)))
     assert(out("name:g,type:gauge").take(2) == Seq(S(1.5), S(3.5)))
   }

@@ -328,7 +328,7 @@ class StreamingIngestSpec extends SparkTestBase {
     assert(n == 3, s"restart must resume exactly after the committed batch, got $n")
   }
 
-  test("streaming summarize aggregates tumbling windows") {
+  test("streaming rollup aggregates tumbling windows") {
     val dir = tempDir("sumz").toString
     val src = s"$dir/src"
     new java.io.File(src).mkdirs()
@@ -336,15 +336,17 @@ class StreamingIngestSpec extends SparkTestBase {
       s"""{"labels":"host a","timestamp":${1704067200000L + i * 60000L},"value":$i.0}"""
     }
     Files.write(java.nio.file.Paths.get(s"$src/b.json"), lines.mkString("\n").getBytes)
-    val agg = Ingest.streamingSummarize(
-      Ingest.readJsonStream(spark, src), windowMs = 300000L, lateMs = 60000L)
+    val agg = graft.streaming.Rollup.streamingRollup(
+      Ingest.readJsonStream(spark, src), bucketMs = 300000L, lateMs = 60000L)
     val q = agg.writeStream.format("memory").queryName("sumz")
       .outputMode("complete").start()
     q.processAllAvailable(); q.stop()
     val rows = spark.table("sumz").collect()
     assert(rows.length == 2)   // 10 minutes / 5-minute windows
-    val ns = rows.map(_.getAs[Long]("n")).sorted.toSeq
+    val ns = rows.map(_.getAs[Long]("rcount")).sorted.toSeq
     assert(ns == Seq(5L, 5L))
+    assert(rows.map(_.getAs[Long]("bucket_ts")).sorted.toSeq ==
+      Seq(1704067200000L, 1704067500000L))
   }
 
   test("streaming sessionize merges events within the gap and splits across it") {

@@ -56,7 +56,7 @@ class ToolSpec extends SparkTestBase {
     assert(lines.count(_.startsWith("[tool] tpch_q6_scan_agg run ")) == 1, lines)
     assert(lines.exists(_.startsWith("secs_min=")), lines)
     assert(lines.exists(_.contains("== Physical Plan ==")), lines)
-    assert(s.conf.get("graft.ingestlag.diag") == "false", "time runs under the timing setup")
+    assert(s.conf.get("graft.clusterPairs.log") == "true", "time runs under the timing setup")
 
     val dir = tempDir("tool_explain")
     Tool.run(s, Seq("explain", dir.toString, "t", "tpch_q6_scan_agg"))
