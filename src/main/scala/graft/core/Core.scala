@@ -105,9 +105,44 @@ object TsSchema {
   /** 64-bit stable series id (ref: Labels.stableHash, core/model/Labels.java:96). */
   def seriesId(labels: Column): Column = xxhash64(seriesKey(labels))
 
-  /** Attach series_id derived from labels. */
-  def withSeriesId(df: DataFrame): DataFrame =
-    df.withColumn(SeriesId, seriesId(col(LabelsCol)))
+  /** Set `labels` to a new label set and re-derive `series_id` from it — the
+    * one way a stage changes a series' identity (ref: the copy-on-write
+    * `Labels.withLabel` + `stableHash`). With no label set given, the frame
+    * keeps its own and only gains `series_id`. */
+  def relabel(df: DataFrame, labels: Column = col(LabelsCol)): DataFrame =
+    df.withColumn(LabelsCol, labels).withColumn(SeriesId, seriesId(col(LabelsCol)))
+
+  /** The empty label set, typed like the `labels` column. */
+  def noLabels: Column = map().cast(samples(LabelsCol).dataType)
+
+  /** `labels` without `keys`. */
+  def dropLabels(keys: Seq[String], labels: Column = col(LabelsCol)): Column =
+    if (keys.isEmpty) labels
+    else map_filter(labels, (k, _) => keys.map(x => k =!= lit(x)).reduce(_ && _))
+
+  /** `labels` with `key` set to `value`: drop `key`, then add `key` → `value`. */
+  def putLabel(key: String, value: Column, labels: Column = col(LabelsCol)): Column =
+    map_concat(dropLabels(Seq(key), labels), map(lit(key), value))
+
+  /** Match-key parts: \u0001 joins them, \u0000 stands for a missing label —
+    * neither occurs in a real label value, so a missing label never matches
+    * `""`. */
+  private val Sep = "\u0001"
+  private val MissingV = "\u0000"
+
+  /** One label's match value: its value, or the missing marker. */
+  def labelValue(key: String): Column = coalesce(col(LabelsCol).getItem(key), lit(MissingV))
+
+  /** The match key of the label set projected onto `keys` — the one key for
+    * explicit tag matching (M3 `divide`/`asPercent`/`diff … keys`,
+    * `intersect … keys`, PromQL `on(…)`). */
+  def labelKey(keys: Seq[String]): Column = concat_ws(Sep, keys.map(labelValue): _*)
+
+  /** The match key of the label set projected onto a per-row array of label
+    * names (the common keys of two operands); each part names its key. */
+  def labelKey(keys: Column): Column =
+    concat_ws(Sep, transform(keys,
+      k => concat(k, lit(":"), coalesce(element_at(col(LabelsCol), k), lit(MissingV)))))
 }
 
 /** Helpers producing bit-identical aggregates across engines (Spark vs a
@@ -561,7 +596,7 @@ object Tables {
       val labels = map(
         lit("name"), col("event_type"),
         lit("user"), (col("user_id") % 10).cast(StringType))
-      TsSchema.withSeriesId(
+      TsSchema.relabel(
         ev.select(
           labels.as(TsSchema.LabelsCol),
           tsMillis(ev).as(TsSchema.Ts),   // == DuckDB epoch_ms(ts)

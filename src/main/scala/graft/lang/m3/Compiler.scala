@@ -237,6 +237,7 @@ final class Compiler(spark: SparkSession, samples: DataFrame, grid: QueryGrid) {
     def tagArgs(from: Int): Seq[String] =
       strings(st.args.drop(from)).filterNot(_.isEmpty)
     def groupTags: Seq[String] = st.args.collect { case StrArg(s) => s }
+    def groupKey: Grouping.GroupKey = Grouping.GroupKey.By(groupTags)
     /** Trailing tag args after the pipeline ref (ref: M3ASTConverter
       * .extractGroupByTags — binary-op tags start at child index `from`). */
     def refTags(from: Int): Seq[String] =
@@ -246,15 +247,15 @@ final class Compiler(spark: SparkSession, samples: DataFrame, grid: QueryGrid) {
 
     st.name match {
       // grouping aggregations
-      case "sum" | "sumSeries"              => sameG(Grouping.sum(gdf, groupTags))
-      case "avg" | "average" | "averageSeries" => sameG(Grouping.avg(gdf, groupTags))
-      case "min" | "minimum" | "minSeries"  => sameG(Grouping.min(gdf, groupTags))
-      case "max" | "maximum" | "maxSeries"  => sameG(Grouping.max(gdf, groupTags))
-      case "count" | "countSeries"          => sameG(Grouping.count(gdf, g, groupTags))
-      case "multiply" | "multiplySeries"    => sameG(Grouping.multiplyExact(gdf, groupTags))
-      case "range" | "rangeOfSeries"        => sameG(Grouping.range(gdf, groupTags))
+      case "sum" | "sumSeries"              => sameG(Grouping.sum(gdf, groupKey))
+      case "avg" | "average" | "averageSeries" => sameG(Grouping.avg(gdf, groupKey))
+      case "min" | "minimum" | "minSeries"  => sameG(Grouping.min(gdf, groupKey))
+      case "max" | "maximum" | "maxSeries"  => sameG(Grouping.max(gdf, groupKey))
+      case "count" | "countSeries"          => sameG(Grouping.count(gdf, g, groupKey))
+      case "multiply" | "multiplySeries"    => sameG(Grouping.multiplyExact(gdf, groupKey))
+      case "range" | "rangeOfSeries"        => sameG(Grouping.range(gdf, groupKey))
       case "median" | "medianOfSeries"      =>
-        sameG(Grouping.percentileM3(gdf, Seq(50.0), groupTags, interpolate = false))
+        sameG(Grouping.percentileM3(gdf, Seq(50.0), groupKey, interpolate = false))
       case "percentileOfSeries" | "percentile_of_series" =>
         // grammar: percentileOfSeries p… [true|false] [tags] — leading
         // consecutive in-range numerics are percentiles, then an optional
@@ -273,7 +274,7 @@ final class Compiler(spark: SparkSession, samples: DataFrame, grid: QueryGrid) {
         val interpolate =
           if (i < argStrs.length && isBool(argStrs(i))) { i += 1; argStrs(i - 1).toBoolean }
           else false
-        sameG(Grouping.percentileM3(gdf, ps, argStrs.drop(i), interpolate))
+        sameG(Grouping.percentileM3(gdf, ps, Grouping.GroupKey.By(argStrs.drop(i)), interpolate))
       case "histogramPercentile" =>
         // grammar: histogramPercentile bucketIdKey bucketRangeKey p…
         // (ref: HistogramPercentilePlanNode.of:85-120)

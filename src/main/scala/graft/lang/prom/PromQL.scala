@@ -2,6 +2,7 @@ package graft.lang.prom
 
 import graft.core.{OracleSafe, QueryGrid, TsSchema}
 import graft.stages._
+import graft.stages.Grouping.GroupKey
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
@@ -428,8 +429,12 @@ object PromQL {
       * (scalar arithmetic, math/calendar functions, `bool` comparisons)
       * drops `__name__` from its result. */
     private def dropMetricName(df: DataFrame): DataFrame =
-      df.withColumn(S.LabelsCol, map_filter(col(S.LabelsCol), (k, _) => k =!= "name"))
-        .withColumn(S.SeriesId, TsSchema.seriesId(col(S.LabelsCol)))
+      S.relabel(df, S.dropLabels(Seq("name")))
+
+    /** Prometheus's `labels.Builder.Set`: set `key` to `value`, or delete
+      * it when `value` is empty (`label_replace`, `label_join`). */
+    private def setLabel(key: String, value: Column): Column =
+      when(value === "", S.dropLabels(Seq(key))).otherwise(S.putLabel(key, value))
 
     private def mapValue(df: DataFrame)(f: Column => Column): DataFrame =
       dropMetricName(df.withColumn(S.Value, f(col(S.Value))))
@@ -647,62 +652,31 @@ object PromQL {
         }
       case _ => None
     }
-    /** Shared aggregation dispatch on a STATIC label-name grouping. */
-    private def aggOn(op: String, in: DataFrame, by: Seq[String],
+    /** Shared aggregation dispatch on a label grouping (`by` or `without`). */
+    private def aggOn(op: String, in: DataFrame, key: GroupKey,
                       param: Option[Expr]): DataFrame = op match {
-      case "sum"    => Grouping.sum(in, by)
-      case "avg"    => Grouping.avg(in, by)
-      case "min"    => Grouping.min(in, by)
-      case "max"    => Grouping.max(in, by)
-      case "count"  => Grouping.countAtTimestamp(in, by)
-      case "stddev" => Grouping.stddevPop(in, by)
-      case "stdvar" => Grouping.varPop(in, by)
-      case "group"  => Grouping.groupConst(in, by)
+      case "sum"    => Grouping.sum(in, key)
+      case "avg"    => Grouping.avg(in, key)
+      case "min"    => Grouping.min(in, key)
+      case "max"    => Grouping.max(in, key)
+      case "count"  => Grouping.countAtTimestamp(in, key)
+      case "stddev" => Grouping.stddevPop(in, key)
+      case "stdvar" => Grouping.varPop(in, key)
+      case "group"  => Grouping.groupConst(in, key)
       case "quantile" =>
-        Grouping.percentileExact(in, requireScalar(param, "quantile φ"), by)
+        Grouping.percentileExact(in, requireScalar(param, "quantile φ"), key)
       case "topk" =>
-        SeriesSet.topKAtTimestamp(in, requireScalar(param, "topk k").toInt, by)
+        SeriesSet.topKAtTimestamp(in, requireScalar(param, "topk k").toInt, key)
       case "bottomk" =>
-        SeriesSet.topKAtTimestamp(in, requireScalar(param, "bottomk k").toInt, by,
+        SeriesSet.topKAtTimestamp(in, requireScalar(param, "bottomk k").toInt, key,
           bottom = true)
       case "count_values" =>
-        Grouping.countValues(in, requireStr(param, "count_values label"), by)
+        Grouping.countValues(in, requireStr(param, "count_values label"), key)
       case "limitk" =>
-        SeriesSet.limitKAtTimestamp(in, requireScalar(param, "limitk k").toInt, by)
+        SeriesSet.limitKAtTimestamp(in, requireScalar(param, "limitk k").toInt, key)
       case "limit_ratio" =>
         SeriesSet.limitRatio(in, requireScalar(param, "limit_ratio r"))
     }
-
-    /** `without (…)` grouping: the group identity is each series' FULL label
-      * set minus the dropped labels and minus the metric name (Prometheus
-      * aggregation hygiene). The key set is dynamic — it can't feed the
-      * static `groupKeys` machinery — so the remaining map is canonicalized
-      * (sorted-entry JSON) into ONE synthetic label that the static path
-      * groups on, then unpacked back into real labels. Pure column
-      * expressions end to end: the same one-shuffle aggregation plan as
-      * `by`, just with a computed key. */
-    private val WoKey = "__wo_group__"
-    private def woCanonical(drop: Seq[String]): Column =
-      to_json(map_from_entries(array_sort(map_entries(map_filter(
-        col(S.LabelsCol), (k, _) => !k.isin(("name" +: drop).map(x => x: Any): _*))))))
-    private def woPack(df: DataFrame, drop: Seq[String]): DataFrame =
-      df.withColumn(S.LabelsCol, map(lit(WoKey), woCanonical(drop)))
-        .withColumn(S.SeriesId, TsSchema.seriesId(col(S.LabelsCol)))
-    private def woUnpack(df: DataFrame): DataFrame =
-      df.withColumn(S.LabelsCol,
-          map_concat(
-            from_json(col(S.LabelsCol).getItem(WoKey),
-              org.apache.spark.sql.types.MapType(
-                org.apache.spark.sql.types.StringType,
-                org.apache.spark.sql.types.StringType)),
-            map_filter(col(S.LabelsCol), (k, _) => k =!= WoKey)))
-        .withColumn(S.SeriesId, TsSchema.seriesId(col(S.LabelsCol)))
-    private def woTag(df: DataFrame, drop: Seq[String]): DataFrame =
-      df.withColumn(S.LabelsCol,
-        map_concat(col(S.LabelsCol), map(lit(WoKey), woCanonical(drop))))
-    private def woUntag(df: DataFrame): DataFrame =
-      df.withColumn(S.LabelsCol, map_filter(col(S.LabelsCol), (k, _) => k =!= WoKey))
-        .withColumn(S.SeriesId, TsSchema.seriesId(col(S.LabelsCol)))
 
     private def requireScalar(e: Option[Expr], what: String): Double =
       e.flatMap(scalarOf).getOrElse(throw PromParseError(s"expected scalar for $what"))
@@ -846,20 +820,7 @@ object PromQL {
       case Range(s, _) => selectorDF(s, g)
 
       case Agg(op, by, param, a, wo) =>
-        val in = eval(a, g)
-        if (!wo) aggOn(op, in, by, param)
-        else op match {
-          // rank-style aggs keep the original series labels: the without-group
-          // rides as ONE synthetic label the static grouping ranks on, then
-          // is stripped (labels otherwise untouched — Prometheus topk keeps
-          // the full label set of each surviving series)
-          case "topk" | "bottomk" | "limitk" =>
-            woUntag(aggOn(op, woTag(in, by), List(WoKey), param))
-          case "limit_ratio" => aggOn(op, in, Nil, param)
-          // reducing aggs: the group identity IS the remaining label set —
-          // canonicalize it into the synthetic label, aggregate, unpack
-          case _ => woUnpack(aggOn(op, woPack(in, by), List(WoKey), param))
-        }
+        aggOn(op, eval(a, g), if (wo) GroupKey.Without(by) else GroupKey.By(by), param)
 
       // ---- comparisons: filter without `bool`, 0/1 vector with it ----------
       case BinOp(op, l, r, boolMod, m) if cmpOps(op) =>
@@ -1188,26 +1149,15 @@ object PromQL {
           val re = requireStr(args.lift(4), "label_replace regex")
           val anchored = s"^(?:$re)$$"
           val sv = coalesce(col(S.LabelsCol).getItem(src), lit(""))
-          val newV = regexp_replace(sv, anchored, repl)
-          val newLabels = when(sv.rlike(anchored),
-              when(newV === "", map_filter(col(S.LabelsCol), (k, _) => k =!= dst))
-                .otherwise(map_concat(
-                  map_filter(col(S.LabelsCol), (k, _) => k =!= dst),
-                  map(lit(dst), newV))))
-            .otherwise(col(S.LabelsCol))
-          in.withColumn(S.LabelsCol, newLabels)
-            .withColumn(S.SeriesId, TsSchema.seriesId(col(S.LabelsCol)))
+          S.relabel(in, when(sv.rlike(anchored), setLabel(dst, regexp_replace(sv, anchored, repl)))
+            .otherwise(col(S.LabelsCol)))
         case "label_join" =>
           val in = one(args, g)
           val dst = requireStr(args.lift(1), "label_join dst")
           val sep = requireStr(args.lift(2), "label_join sep")
           val srcs = args.drop(3).map(a => requireStr(Some(a), "label_join src"))
-          val joinedV = concat_ws(sep,
-            srcs.map(sName => coalesce(col(S.LabelsCol).getItem(sName), lit(""))): _*)
-          in.withColumn(S.LabelsCol, map_concat(
-              map_filter(col(S.LabelsCol), (k, _) => k =!= dst),
-              map(lit(dst), joinedV)))
-            .withColumn(S.SeriesId, TsSchema.seriesId(col(S.LabelsCol)))
+          S.relabel(in, setLabel(dst, concat_ws(sep,
+            srcs.map(sName => coalesce(col(S.LabelsCol).getItem(sName), lit(""))): _*)))
         case other =>
           throw new UnsupportedOperationException(s"PromQL function not implemented: $other")
       }
@@ -1263,10 +1213,7 @@ object PromQL {
         case _ => Nil
       }
       val labelCol =
-        if (eqLabels.isEmpty)
-          map().cast(org.apache.spark.sql.types.MapType(
-            org.apache.spark.sql.types.StringType,
-            org.apache.spark.sql.types.StringType, valueContainsNull = false))
+        if (eqLabels.isEmpty) S.noLabels
         else map(eqLabels.flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*)
       val gridTs = g.gridDF(spark)
       val present = in.select(col(S.Ts)).distinct()
@@ -1292,21 +1239,13 @@ object PromQL {
               "left_anti")
             .select(col(S.Ts))
       }
-      marked
-        .withColumn(S.Value, lit(1.0))
-        .withColumn(S.LabelsCol, labelCol)
-        .withColumn(S.SeriesId, TsSchema.seriesId(col(S.LabelsCol)))
+      S.relabel(marked.withColumn(S.Value, lit(1.0)), labelCol)
         .select(S.SeriesId, S.LabelsCol, S.Ts, S.Value)
     }
 
     /** Label-less constant vector over the query grid (`vector(s)`, `time()`). */
     private def constVector(g: QueryGrid, v: Column): DataFrame =
-      g.gridDF(spark)
-        .withColumn(S.Value, v)
-        .withColumn(S.LabelsCol, map().cast(org.apache.spark.sql.types.MapType(
-          org.apache.spark.sql.types.StringType,
-          org.apache.spark.sql.types.StringType, valueContainsNull = false)))
-        .withColumn(S.SeriesId, TsSchema.seriesId(col(S.LabelsCol)))
+      S.relabel(g.gridDF(spark).withColumn(S.Value, v), S.noLabels)
         .select(S.SeriesId, S.LabelsCol, S.Ts, S.Value)
 
     /** The fixed instant of a range-vector argument carrying `@` (`m[d] @ t`,

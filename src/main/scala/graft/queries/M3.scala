@@ -3,6 +3,7 @@ package graft.queries
 import graft.core.{QueryGrid, Tables, TsSchema}
 import graft.core.OracleSafe.{sqlStddev, sqlSum}
 import graft.stages._
+import graft.stages.Grouping.GroupKey.By
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -47,35 +48,35 @@ object M3 extends QueryPack {
       s"SELECT $serName AS series, ts, $sqlAgg AS value FROM g GROUP BY etype, ts $having $ord")))
 
   private val aggQueries = Seq(
-    agg("m3_sum", Grouping.sum(_, Seq("name")), sqlSum("value")),
-    agg("m3_avg", Grouping.avg(_, Seq("name")), s"${sqlSum("value")} / count(value)"),
-    agg("m3_min", Grouping.min(_, Seq("name")), "min(value)"),
-    agg("m3_max", Grouping.max(_, Seq("name")), "max(value)"),
+    agg("m3_sum", Grouping.sum(_, By(Seq("name"))), sqlSum("value")),
+    agg("m3_avg", Grouping.avg(_, By(Seq("name"))), s"${sqlSum("value")} / count(value)"),
+    agg("m3_min", Grouping.min(_, By(Seq("name"))), "min(value)"),
+    agg("m3_max", Grouping.max(_, By(Seq("name"))), "max(value)"),
 
-    agg("m3_range", Grouping.range(_, Seq("name")), "max(value) - min(value)"),
-    agg("m3_stddev", Grouping.stddev(_, Seq("name")), sqlStddev("value"),
+    agg("m3_range", Grouping.range(_, By(Seq("name"))), "max(value) - min(value)"),
+    agg("m3_stddev", Grouping.stddev(_, By(Seq("name"))), sqlStddev("value"),
       having = "HAVING count(value) > 1"))
 
   private def qCount(s: SparkSession, sf: String): DataFrame =
-    flat(Grouping.count(g(s, sf), grid, Seq("name")))
+    flat(Grouping.count(g(s, sf), grid, By(Seq("name"))))
   private val qCountSql = withSG(
     s""", c AS (SELECT etype, CAST(count(DISTINCT usr) AS DOUBLE) AS value FROM g GROUP BY etype)
        |SELECT $serName AS series, gs.ts, value FROM c
        |CROSS JOIN (SELECT unnest(generate_series(${grid.startMs}, ${grid.alignedEndMs}, ${grid.stepMs})) AS ts) gs
        |$ord""".stripMargin)
 
-  private def qSumAll(s: SparkSession, sf: String): DataFrame = flat(Grouping.sum(g(s, sf), Nil))
+  private def qSumAll(s: SparkSession, sf: String): DataFrame = flat(Grouping.sum(g(s, sf)))
   private val qSumAllSql = withSG(
     s"SELECT '' AS series, ts, ${sqlSum("value")} AS value FROM g GROUP BY ts $ord")
 
   private def qMultiply(s: SparkSession, sf: String): DataFrame =
     flat(Grouping.multiplyExact(
-      g(s, sf).withColumn(S.Value, floor(col(S.Value))), Seq("name")))
+      g(s, sf).withColumn(S.Value, floor(col(S.Value))), By(Seq("name"))))
   private val qMultiplySql = withSG(
     s"SELECT $serName AS series, ts, product(floor(value)) AS value FROM g GROUP BY etype, ts $ord")
 
   private def qMedian(s: SparkSession, sf: String): DataFrame =
-    flat(Grouping.percentileExact(g(s, sf), 0.5, Seq("name")))
+    flat(Grouping.percentileExact(g(s, sf), 0.5, By(Seq("name"))))
   private val qMedianSql = withSG(
     s"SELECT $serName AS series, ts, quantile_cont(value, 0.5) AS value FROM g GROUP BY etype, ts $ord")
 

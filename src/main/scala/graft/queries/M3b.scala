@@ -5,6 +5,7 @@ import graft.core.OracleSafe.{sqlStddev, sqlSum}
 import graft.lang.m3.M3QL
 import graft.lang.prom.PromQL
 import graft.stages._
+import graft.stages.Grouping.GroupKey.By
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,12 +29,12 @@ object M3b extends QueryPack {
 
   // ---- percentiles ---------------------------------------------------------
   private def qP90(s: SparkSession, sf: String): DataFrame =
-    flat(Grouping.percentileExact(g(s, sf), 0.9, Seq("name")))
+    flat(Grouping.percentileExact(g(s, sf), 0.9, By(Seq("name"))))
   private val qP90Sql = withSG(
     s"SELECT $serName AS series, ts, quantile_cont(value, 0.9) AS value FROM g GROUP BY etype, ts $ord")
 
   private def qP25(s: SparkSession, sf: String): DataFrame =
-    flat(Grouping.percentileExact(g(s, sf), 0.25, Seq("name")))
+    flat(Grouping.percentileExact(g(s, sf), 0.25, By(Seq("name"))))
   private val qP25Sql = withSG(
     s"SELECT $serName AS series, ts, quantile_cont(value, 0.25) AS value FROM g GROUP BY etype, ts $ord")
 
@@ -42,17 +43,16 @@ object M3b extends QueryPack {
     * bucket_id/bucket_range labels, then histogramPercentile interpolates. */
   private def histInput(s: SparkSession, sf: String): DataFrame = {
     val b = floor(col(S.Value) / 5).cast("long")
-    raw(s, sf)
+    val counts = raw(s, sf)
       .withColumn("_b", when(b > 5, 5L).otherwise(b))
       .withColumn(S.Ts, grid.bucket(col(S.Ts)))
       .groupBy(col(S.LabelsCol).getItem("name").as("_name"), col("_b"), col(S.Ts))
       .agg(count(lit(1)).cast("double").as(S.Value))
-      .withColumn(S.LabelsCol, map(
+    S.relabel(counts, map(
         lit("name"), col("_name"),
         lit("bucket_id"), col("_b").cast("string"),
         lit("bucket_range"), concat((col("_b") * 5).cast("string"), lit("-"),
           ((col("_b") + 1) * 5).cast("string"))))
-      .withColumn(S.SeriesId, TsSchema.seriesId(col(S.LabelsCol)))
       .select(S.SeriesId, S.LabelsCol, S.Ts, S.Value)
   }
 
@@ -92,7 +92,7 @@ object M3b extends QueryPack {
     * nearest-rank rank=ceil(p/100×n) min 1 (ref: PercentileUtils:37-75),
     * each labeled __percentile:p. */
   private def qPercentileMulti(s: SparkSession, sf: String): DataFrame =
-    flat(Grouping.percentileM3(g(s, sf), Seq(25.0, 75.0), Seq("name"), interpolate = false))
+    flat(Grouping.percentileM3(g(s, sf), Seq(25.0, 75.0), By(Seq("name")), interpolate = false))
   private val qPercentileMultiSql = withSG(
     s""", v AS (
        |  SELECT etype, ts, value,

@@ -76,7 +76,7 @@ object Filters {
   def intersect(left: DataFrame, right: DataFrame, keys: Seq[String] = Nil): DataFrame = {
     val matchKey: Column =
       if (keys.isEmpty) TsSchema.seriesKey(col(S.LabelsCol))
-      else concat_ws("\u0001", keys.map(k => coalesce(col(S.LabelsCol).getItem(k), lit("\u0000"))): _*)
+      else TsSchema.labelKey(keys)
     val l = left.withColumn("_mk", matchKey)
     val r = right.select(matchKey.as("_mk")).distinct()
     l.join(broadcast(r), Seq("_mk"), "left_semi").drop("_mk")

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Cross-series grouping aggregations: per-timestamp aggregate over all series
-  * in a group, where the group is the projection of the label set onto
-  * `groupKeys` (empty = all series into one).
+  * in a group, where the group is given by a [[Grouping.GroupKey]]: the
+  * projection of the label set onto some keys (`By`), or the label set minus
+  * some keys (`Without`).
   *
   * Reference: AbstractGroupingStage (lang/m3/stage/AbstractGroupingStage.java:37-42)
   * with partial/final state merging (:133-167). In Spark the shard-partial +
@@ -16,138 +17,150 @@ import org.apache.spark.sql.types._
   * builtin `avg` buffer — so each stage is a plain groupBy().agg().
   */
 object Grouping {
+  private val S = TsSchema
 
-  /** groupBy columns for (groupKeys, timestamp); missing labels group as null,
-    * and the output label set keeps only the retained, present keys
-    * (ref: AbstractGroupingStage group-key = values of groupByLabels). */
-  private def grouped(df: DataFrame, groupKeys: Seq[String]): (DataFrame, Seq[Column]) = {
-    val keyCols = groupKeys.map(k => col(TsSchema.LabelsCol).getItem(k).as(s"_g_$k"))
-    // series missing any groupBy label are excluded (golden corpus: sum by a
-    // non-existent tag yields an empty result)
-    val withKeys = df.select(col("*") +: keyCols: _*)
-      .where(groupKeys.map(k => col(s"_g_$k").isNotNull).foldLeft(lit(true))(_ && _))
-    (withKeys, groupKeys.map(k => col(s"_g_$k")) :+ col(TsSchema.Ts))
+  /** How series fall into groups: the grouping columns a stage aggregates
+    * by, and the label set each group's output series carries. */
+  sealed trait GroupKey {
+    /** `df` with the grouping columns attached (rows that belong to no group
+      * removed), and those columns. */
+    def attach(df: DataFrame): (DataFrame, Seq[Column])
+    /** The output label set, read from the grouping columns after the
+      * aggregate. */
+    def labels: Column
+    /** Per-sample partition columns for the rank stages (topk/limitk); a
+      * window cannot partition on a map. */
+    def rankCols: Seq[Column]
   }
 
-  /** Rebuild canonical output columns (labels map of retained keys, series_id). */
-  private def finish(df: DataFrame, groupKeys: Seq[String]): DataFrame = {
-    val labelExpr =
-      if (groupKeys.isEmpty) map().cast(MapType(StringType, StringType, valueContainsNull = false))
-      else map_filter(
-        map(groupKeys.flatMap(k => Seq(lit(k), col(s"_g_$k"))): _*),
-        (_, v) => v.isNotNull)
-    val out = df.withColumn(TsSchema.LabelsCol, labelExpr)
-      .withColumn(TsSchema.SeriesId, TsSchema.seriesId(col(TsSchema.LabelsCol)))
-    out.select(TsSchema.SeriesId, TsSchema.LabelsCol, TsSchema.Ts, TsSchema.Value)
+  object GroupKey {
+    /** Group on the values of `keys` (empty = all series into one). Series
+      * missing any key are excluded (golden corpus: sum by a non-existent
+      * tag yields an empty result), and the output keeps the retained keys
+      * (ref: AbstractGroupingStage group-key = values of groupByLabels). The
+      * rank stages keep every series, a missing key ranking apart from `""`. */
+    final case class By(keys: Seq[String]) extends GroupKey {
+      def attach(df: DataFrame): (DataFrame, Seq[Column]) =
+        (df.select(col("*") +: keys.map(k => col(S.LabelsCol).getItem(k).as(s"_g_$k")): _*)
+          .where(keys.map(k => col(s"_g_$k").isNotNull).foldLeft(lit(true))(_ && _)),
+         keys.map(k => col(s"_g_$k")))
+      def labels: Column =
+        if (keys.isEmpty) S.noLabels
+        else map_filter(map(keys.flatMap(k => Seq(lit(k), col(s"_g_$k"))): _*),
+          (_, v) => v.isNotNull)
+      def rankCols: Seq[Column] = keys.map(S.labelValue)
+    }
+
+    /** Prometheus `without (keys)`: the group is each series' whole label
+      * set minus `keys` and minus the metric name. Grouped on that map itself
+      * (Spark sorts a map grouping key), ranked on its series key. */
+    final case class Without(keys: Seq[String]) extends GroupKey {
+      private def rest: Column = S.dropLabels("name" +: keys)
+      def attach(df: DataFrame): (DataFrame, Seq[Column]) =
+        (df.withColumn("_g", rest), Seq(col("_g")))
+      def labels: Column = col("_g")
+      def rankCols: Seq[Column] = Seq(S.seriesKey(rest))
+    }
+  }
+  import GroupKey.By
+
+  /** The canonical columns of a grouped output carrying `labels`. */
+  private def finish(df: DataFrame, labels: Column): DataFrame =
+    S.relabel(df, labels).select(S.SeriesId, S.LabelsCol, S.Ts, S.Value)
+
+  private def run(df: DataFrame, key: GroupKey)(agg: Column): DataFrame = {
+    val (withKeys, gCols) = key.attach(df)
+    finish(withKeys.groupBy(gCols :+ col(S.Ts): _*).agg(agg.as(S.Value)), key.labels)
   }
 
-  private def run(df: DataFrame, groupKeys: Seq[String])(agg: Column): DataFrame = {
-    val (withKeys, gCols) = grouped(df, groupKeys)
-    finish(withKeys.groupBy(gCols: _*).agg(agg.as(TsSchema.Value)), groupKeys)
-  }
-
-  private def v: Column = col(TsSchema.Value)
+  private def v: Column = col(S.Value)
 
   /** `sum [tags]` (ref: SumStage.java:20-61). Decimal-exact for oracle parity. */
-  def sum(df: DataFrame, groupKeys: Seq[String] = Nil): DataFrame =
-    run(df, groupKeys)(OracleSafe.seriesAgg("sum"))
+  def sum(df: DataFrame, key: GroupKey = By(Nil)): DataFrame =
+    run(df, key)(OracleSafe.seriesAgg("sum"))
 
   /** `avg` (ref: AvgStage.java:61,92-115 — SumCount partial state). */
-  def avg(df: DataFrame, groupKeys: Seq[String] = Nil): DataFrame =
-    run(df, groupKeys)(OracleSafe.seriesAgg("avg"))
+  def avg(df: DataFrame, key: GroupKey = By(Nil)): DataFrame =
+    run(df, key)(OracleSafe.seriesAgg("avg"))
 
   /** `min` (ref: MinStage.java:20-41). */
-  def min(df: DataFrame, groupKeys: Seq[String] = Nil): DataFrame =
-    run(df, groupKeys)(OracleSafe.seriesAgg("min"))
+  def min(df: DataFrame, key: GroupKey = By(Nil)): DataFrame =
+    run(df, key)(OracleSafe.seriesAgg("min"))
 
   /** `max` (ref: MaxStage.java:20-41). */
-  def max(df: DataFrame, groupKeys: Seq[String] = Nil): DataFrame =
-    run(df, groupKeys)(OracleSafe.seriesAgg("max"))
+  def max(df: DataFrame, key: GroupKey = By(Nil)): DataFrame =
+    run(df, key)(OracleSafe.seriesAgg("max"))
 
   /** `count` — the number of SERIES in each group, emitted as a dense constant
     * series over the whole query grid (ref: CountStage.processGroup /
     * buildDenseSamples — the count is series cardinality, not per-timestamp
     * sample presence; CountStage.java:96-111,165-175). */
-  def count(df: DataFrame, grid: graft.core.QueryGrid,
-            groupKeys: Seq[String] = Nil): DataFrame = {
-    val keyCols = groupKeys.map(k => col(TsSchema.LabelsCol).getItem(k).as(s"_g_$k"))
-    val withKeys = df.select(col(TsSchema.SeriesId) +: keyCols: _*)
-      .where(groupKeys.map(k => col(s"_g_$k").isNotNull).foldLeft(lit(true))(_ && _))
-    val counts = withKeys
-      .groupBy(groupKeys.map(k => col(s"_g_$k")): _*)
-      .agg(functions.count_distinct(col(TsSchema.SeriesId)).cast(DoubleType).as(TsSchema.Value))
-    val dense = counts.select(
-      col("*"),
-      explode(grid.points).as(TsSchema.Ts))
-    finish(dense, groupKeys)
+  def count(df: DataFrame, grid: graft.core.QueryGrid, key: GroupKey = By(Nil)): DataFrame = {
+    val (withKeys, gCols) = key.attach(df)
+    val counts = withKeys.groupBy(gCols: _*)
+      .agg(functions.count_distinct(col(S.SeriesId)).cast(DoubleType).as(S.Value))
+    finish(counts.select(col("*"), explode(grid.points).as(S.Ts)), key.labels)
   }
 
   /** Per-timestamp count of series with data — the Spark-natural variant kept
     * for pipelines that want presence counts rather than cardinality. */
-  def countAtTimestamp(df: DataFrame, groupKeys: Seq[String] = Nil): DataFrame =
-    run(df, groupKeys)(functions.count(v).cast(DoubleType))
+  def countAtTimestamp(df: DataFrame, key: GroupKey = By(Nil)): DataFrame =
+    run(df, key)(functions.count(v).cast(DoubleType))
 
   /** `range` — per-ts max-min, MinMax partial state (ref: RangeStage.java:22-45). */
-  def range(df: DataFrame, groupKeys: Seq[String] = Nil): DataFrame =
-    run(df, groupKeys)(functions.max(v) - functions.min(v))
+  def range(df: DataFrame, key: GroupKey = By(Nil)): DataFrame =
+    run(df, key)(functions.max(v) - functions.min(v))
 
   /** Prometheus `stddev` aggregation — POPULATION stddev across the group's
     * series at each timestamp (Prometheus aggregates are population-based,
     * unlike M3's sample stddev). */
-  def stddevPop(df: DataFrame, groupKeys: Seq[String] = Nil): DataFrame =
-    run(df, groupKeys)(OracleSafe.seriesAgg("stddev_pop"))
+  def stddevPop(df: DataFrame, key: GroupKey = By(Nil)): DataFrame =
+    run(df, key)(OracleSafe.seriesAgg("stddev_pop"))
 
   /** Prometheus `stdvar` aggregation — population variance per timestamp. */
-  def varPop(df: DataFrame, groupKeys: Seq[String] = Nil): DataFrame =
-    run(df, groupKeys)(OracleSafe.seriesAgg("var_pop"))
+  def varPop(df: DataFrame, key: GroupKey = By(Nil)): DataFrame =
+    run(df, key)(OracleSafe.seriesAgg("var_pop"))
 
   /** Prometheus `group` aggregation — constant 1 for every group that has at
     * least one sample at the timestamp. */
-  def groupConst(df: DataFrame, groupKeys: Seq[String] = Nil): DataFrame =
-    run(df, groupKeys)(functions.count(v) * lit(0.0) + lit(1.0))
+  def groupConst(df: DataFrame, key: GroupKey = By(Nil)): DataFrame =
+    run(df, key)(functions.count(v) * lit(0.0) + lit(1.0))
 
   /** Prometheus `count_values("label", v)` — per timestamp, count the series
     * having each distinct value; the stringified value becomes a new label.
     * The value renders like Go's strconv.FormatFloat(g): integral doubles
     * print without a decimal point. */
-  def countValues(df: DataFrame, labelName: String, groupKeys: Seq[String] = Nil): DataFrame = {
-    val (withKeys, gCols) = grouped(df, groupKeys)
+  def countValues(df: DataFrame, labelName: String, key: GroupKey = By(Nil)): DataFrame = {
+    val (withKeys, gCols) = key.attach(df)
     // integrality test BEFORE any long cast: ANSI mode throws on casting NaN
     // or out-of-range doubles, so the cast must be unreachable for them
-    val v = col(TsSchema.Value)
+    val v = col(S.Value)
     val integral = !isnan(v) && v >= -9.2e18 && v <= 9.2e18 && floor(v) === v
     val vStr = when(integral, v.cast("long").cast(StringType))
       .otherwise(v.cast(StringType))
     val agg = withKeys
       .withColumn("_vstr", vStr)
-      .groupBy(gCols :+ col("_vstr"): _*)
-      .agg(functions.count(lit(1)).cast(DoubleType).as(TsSchema.Value))
-    // labels = retained group keys plus the stringified value under labelName
-    agg.withColumn(TsSchema.LabelsCol, map_concat(
-        if (groupKeys.isEmpty) map().cast(MapType(StringType, StringType, valueContainsNull = false))
-        else map_filter(
-          map(groupKeys.flatMap(k => Seq(lit(k), col(s"_g_$k"))): _*),
-          (_, v) => v.isNotNull),
-        map(lit(labelName), col("_vstr"))))
-      .withColumn(TsSchema.SeriesId, TsSchema.seriesId(col(TsSchema.LabelsCol)))
-      .select(TsSchema.SeriesId, TsSchema.LabelsCol, TsSchema.Ts, TsSchema.Value)
+      .groupBy(gCols :+ col(S.Ts) :+ col("_vstr"): _*)
+      .agg(functions.count(lit(1)).cast(DoubleType).as(S.Value))
+    // labels = the group's labels plus the stringified value under labelName
+    finish(agg, S.putLabel(labelName, col("_vstr"), key.labels))
   }
 
   /** `multiply` — exact per-ts product (ref: MultiplyStage.java:20-41) via
     * the codegen'd [[graft.functions.ProductDecl]] aggregate. */
-  def multiplyExact(df: DataFrame, groupKeys: Seq[String] = Nil): DataFrame =
-    run(df, groupKeys)(graft.functions.Product.product(v))
+  def multiplyExact(df: DataFrame, key: GroupKey = By(Nil)): DataFrame =
+    run(df, key)(graft.functions.Product.product(v))
 
   /** `percentile_of_series p [tags]` / `median` — exact per-ts percentile across
     * the group's series (ref: PercentileOfSeriesStage.java:38-66, MultiValue
     * partial state merged then sorted — exactly Spark's exact `percentile`). */
-  def percentileOfSeries(df: DataFrame, p: Double, groupKeys: Seq[String] = Nil): DataFrame =
-    run(df, groupKeys)(percentile_approx(v, lit(p), lit(1000000)))
+  def percentileOfSeries(df: DataFrame, p: Double, key: GroupKey = By(Nil)): DataFrame =
+    run(df, key)(percentile_approx(v, lit(p), lit(1000000)))
 
   /** Exact percentile with linear interpolation (Spark `percentile` semantics,
     * pos = p*(n-1) — used by the SQL-oracle demo queries). */
-  def percentileExact(df: DataFrame, p: Double, groupKeys: Seq[String] = Nil): DataFrame =
-    run(df, groupKeys)(expr(s"percentile(${TsSchema.Value}, $p)"))
+  def percentileExact(df: DataFrame, p: Double, key: GroupKey = By(Nil)): DataFrame =
+    run(df, key)(expr(s"percentile(${S.Value}, $p)"))
 
   /** Whole-number percentiles print without the decimal point, fractional ones
     * with trailing zeros stripped (ref: PercentileUtils.formatPercentile,
@@ -164,13 +177,13 @@ object Grouping {
     * `__percentile` = formatted p (ref: PercentileOfSeriesStage.java:62,
     * validateAndNormalizePercentiles). A single shuffle collects each group's
     * values once; the per-percentile projections explode from that buffer. */
-  def percentileM3(df: DataFrame, ps: Seq[Double], groupKeys: Seq[String],
+  def percentileM3(df: DataFrame, ps: Seq[Double], key: GroupKey,
                    interpolate: Boolean): DataFrame = {
     require(ps.nonEmpty, "percentileOfSeries requires at least one percentile value")
     val sortedPs = ps.distinct.sorted
-    val (withKeys, gCols) = grouped(df, groupKeys)
-    val agged = withKeys.groupBy(gCols: _*)
-      .agg(array_sort(collect_list(col(TsSchema.Value))).as("_vals"))
+    val (withKeys, gCols) = key.attach(df)
+    val agged = withKeys.groupBy(gCols :+ col(S.Ts): _*)
+      .agg(array_sort(collect_list(col(S.Value))).as("_vals"))
     def pVal(p: Double): Column = {
       val vals = col("_vals")
       val n = size(vals)
@@ -188,27 +201,13 @@ object Grouping {
       struct(lit(fmtPercentile(p)).as("_plabel"), pVal(p).as("_pv"))): _*)
     val exploded = agged
       .withColumn("_p", explode(perP))
-      .withColumn(TsSchema.Value, col("_p").getField("_pv"))
-    val groupLabels =
-      if (groupKeys.isEmpty) map().cast(MapType(StringType, StringType, valueContainsNull = false))
-      else map_filter(
-        map(groupKeys.flatMap(k => Seq(lit(k), col(s"_g_$k"))): _*),
-        (_, v) => v.isNotNull)
-    exploded
-      .withColumn(TsSchema.LabelsCol,
-        map_concat(groupLabels, map(lit("__percentile"), col("_p").getField("_plabel"))))
-      .withColumn(TsSchema.SeriesId, TsSchema.seriesId(col(TsSchema.LabelsCol)))
-      .select(TsSchema.SeriesId, TsSchema.LabelsCol, TsSchema.Ts, TsSchema.Value)
+      .withColumn(S.Value, col("_p").getField("_pv"))
+    finish(exploded, S.putLabel("__percentile", col("_p").getField("_plabel"), key.labels))
   }
 
-  /** Single-percentile convenience overload. */
-  def percentileM3(df: DataFrame, p: Double, groupKeys: Seq[String] = Nil,
-                   interpolate: Boolean = false): DataFrame =
-    percentileM3(df, Seq(p), groupKeys, interpolate)
-
   /** Per-ts sample stddev via decimal-exact moments (ref: StdDevBucketSummarizer). */
-  def stddev(df: DataFrame, groupKeys: Seq[String] = Nil): DataFrame =
-    run(df, groupKeys)(OracleSafe.seriesAgg("stddev"))
+  def stddev(df: DataFrame, key: GroupKey = By(Nil)): DataFrame =
+    run(df, key)(OracleSafe.seriesAgg("stddev"))
 
   /** Upper bound of a `bucket_range` label value, as pure builtin expressions
     * (ref: HistogramPercentileStage.BucketInfo.parseBucket:560-640):
@@ -266,18 +265,13 @@ object Grouping {
     * instead). Kept for the PromQL frontend. */
   def histogramQuantile(df: DataFrame, p: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val S = TsSchema
-    val bucketKeys = Seq("bucket_id", "bucket_range")
-    val newLabels = map_filter(col(S.LabelsCol), (k, _) => !k.isInCollection(bucketKeys))
     val br = col(S.LabelsCol).getItem("bucket_range")
     // signed-aware bounds: the delimiter dash is found past a leading sign
     val delim = "^(-?.*?)(?<![eE])-(.*)$"
     val lo = regexp_extract(br, delim, 1).cast(DoubleType)
     val hi = regexp_extract(br, delim, 2).cast(DoubleType)
-    val base = df
-      .withColumn("_lo", lo).withColumn("_hi", hi)
-      .withColumn(S.LabelsCol, newLabels)
-      .withColumn(S.SeriesId, TsSchema.seriesId(col(S.LabelsCol)))
+    val base = S.relabel(df.withColumn("_lo", lo).withColumn("_hi", hi),
+      S.dropLabels(Seq("bucket_id", "bucket_range")))
     val w = Window.partitionBy(S.SeriesId, S.Ts).orderBy("_hi")
     val wAll = Window.partitionBy(S.SeriesId, S.Ts)
     val cum = base
@@ -302,18 +296,14 @@ object Grouping {
     import org.apache.spark.sql.expressions.Window
     require(ps.nonEmpty, "histogramPercentile requires at least one percentile value")
     val sortedPs = ps.distinct.sorted
-    val S = TsSchema
-    val newLabels = map_filter(col(S.LabelsCol),
-      (k, _) => k =!= bucketIdKey && k =!= bucketRangeKey)
-    val base = df
+    val base = S.relabel(df
       // series missing either bucket label are skipped (ref :289-292)
       .where(col(S.LabelsCol).getItem(bucketIdKey).isNotNull &&
              col(S.LabelsCol).getItem(bucketRangeKey).isNotNull)
       .withColumn("_bid", col(S.LabelsCol).getItem(bucketIdKey))
       .withColumn("_br", col(S.LabelsCol).getItem(bucketRangeKey))
-      .withColumn("_upper", bucketUpperBound(col(S.LabelsCol).getItem(bucketRangeKey)))
-      .withColumn(S.LabelsCol, newLabels)
-      .withColumn(S.SeriesId, TsSchema.seriesId(col(S.LabelsCol)))
+      .withColumn("_upper", bucketUpperBound(col(S.LabelsCol).getItem(bucketRangeKey))),
+      S.dropLabels(Seq(bucketIdKey, bucketRangeKey)))
     val wDup = Window.partitionBy(S.SeriesId, S.Ts, "_bid", "_br")
     val w = Window.partitionBy(S.SeriesId, S.Ts).orderBy(col("_upper"), col("_bid"))
     val wAll = Window.partitionBy(S.SeriesId, S.Ts)
@@ -328,15 +318,12 @@ object Grouping {
       .withColumn("_total", functions.sum(S.Value).over(wAll))
     val perP = sortedPs.map { p =>
       val target = lit(p / 100.0) * col("_total")
-      cum
+      finish(cum
         .where(col("_total") =!= 0 && col("_cum") >= target)
         .withColumn("_rn", row_number().over(w))
         .where(col("_rn") === 1)
-        .withColumn(S.Value, col("_upper"))
-        .withColumn(S.LabelsCol, map_concat(col(S.LabelsCol),
-          map(lit("histogramPercentile"), lit("p" + fmtPercentile(p)))))
-        .withColumn(S.SeriesId, TsSchema.seriesId(col(S.LabelsCol)))
-        .select(col(S.SeriesId), col(S.LabelsCol), col(S.Ts), col(S.Value))
+        .withColumn(S.Value, col("_upper")),
+        S.putLabel("histogramPercentile", lit("p" + fmtPercentile(p))))
     }
     perP.reduce(_ unionByName _)
   }

@@ -5,14 +5,11 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Label / metadata manipulation stages (ref: lang/m3/stage/ classes). All pure
-  * map-column rewrites — no shuffle, fully codegen'd. `series_id` is recomputed
-  * whenever the label set changes so downstream grouping stays correct.
+  * map-column rewrites — no shuffle, fully codegen'd. A label rewrite goes
+  * through [[TsSchema.relabel]], so `series_id` follows the new label set.
   */
 object LabelOps {
   private val S = TsSchema
-
-  private def rehash(df: DataFrame): DataFrame =
-    df.withColumn(S.SeriesId, TsSchema.seriesId(col(S.LabelsCol)))
 
   /** `alias "name"` — set display alias; `{{.tag}}` interpolation
     * (ref: AliasStage.java:25-30). */
@@ -59,21 +56,17 @@ object LabelOps {
   /** `mapKey old new` — rename a tag key (ref: MapKeyStage.java:27-33). */
   def mapKey(df: DataFrame, oldKey: String, newKey: String): DataFrame = {
     val m = col(S.LabelsCol)
-    val renamed = when(m.getItem(oldKey).isNotNull,
-        map_concat(map_filter(m, (k, _) => k =!= oldKey && k =!= newKey),
-                   map(lit(newKey), m.getItem(oldKey))))
-      .otherwise(m)
-    rehash(df.withColumn(S.LabelsCol, renamed))
+    S.relabel(df, when(m.getItem(oldKey).isNotNull,
+        S.putLabel(newKey, m.getItem(oldKey), S.dropLabels(Seq(oldKey))))
+      .otherwise(m))
   }
 
   /** `tagSub tag re repl` — regex substitution on a tag value, `$1` backrefs
     * (ref: TagSubStage.java:27-33). */
   def tagSub(df: DataFrame, tag: String, re: String, repl: String): DataFrame = {
     val m = col(S.LabelsCol)
-    val newVal = regexp_replace(m.getItem(tag), re, repl)
-    val rebuilt = when(m.getItem(tag).isNotNull,
-        map_concat(map_filter(m, (k, _) => k =!= tag), map(lit(tag), newVal)))
-      .otherwise(m)
-    rehash(df.withColumn(S.LabelsCol, rebuilt))
+    S.relabel(df, when(m.getItem(tag).isNotNull,
+        S.putLabel(tag, regexp_replace(m.getItem(tag), re, repl)))
+      .otherwise(m))
   }
 }

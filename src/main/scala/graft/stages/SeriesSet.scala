@@ -1,6 +1,7 @@
 package graft.stages
 
 import graft.core.{OracleSafe, TsSchema}
+import graft.stages.Grouping.GroupKey
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,11 +24,8 @@ import org.apache.spark.sql.types._
   */
 object SeriesSet {
   private val S = TsSchema
-  /** Unambiguous separators for label match keys: \u0001 joins key/value
-    * parts, \u0000 marks a missing value, \u0002 is the single-right-group
-    * sentinel join key — none can occur in real label values. */
-  private val Sep = "\u0001"
-  private val MissingV = "\u0000"
+  /** The single-right-group sentinel join key — it cannot occur in a label
+    * match key ([[TsSchema.labelKey]]). */
   private val SingleKey = "\u0002"
 
   /** Per-series ranking key (ref: stage/util/SortComparatorUtil.java;
@@ -144,9 +142,6 @@ object SeriesSet {
   private def hasAllKeys(keys: Seq[String]): Column =
     keys.map(k => col(S.LabelsCol).getItem(k).isNotNull).reduce(_ && _)
 
-  private def explicitKey(keys: Seq[String]): Column =
-    concat_ws(Sep, keys.map(k => coalesce(col(S.LabelsCol).getItem(k), lit(MissingV))): _*)
-
   /** 1-row DF with `_ck` = sorted label keys present in EVERY series of both
     * operands — the reference's common-tag-key extraction when no explicit
     * keys are given (ref: AbstractBinaryProjectionStage.extractCommonTagKeys
@@ -168,8 +163,7 @@ object SeriesSet {
     * label map onto the common keys; empty intersection → full label identity. */
   private def commonKeyExpr: Column =
     when(size(col("_ck")) === 0, TsSchema.seriesKey(col(S.LabelsCol)))
-      .otherwise(concat_ws(Sep, transform(col("_ck"),
-        k => concat(k, lit(":"), coalesce(element_at(col(S.LabelsCol), k), lit(MissingV))))))
+      .otherwise(TsSchema.labelKey(col("_ck")))
 
   /** Shared prologue of every binary projection: attach the match key to both
     * sides, merge right series per group, and resolve the single-right-group
@@ -205,7 +199,7 @@ object SeriesSet {
     // unfused per-branch path would.
     val valid: Column = if (keys.isEmpty) lit(true) else hasAllKeys(keys)
     def withMk(df: DataFrame): DataFrame =
-      if (keys.nonEmpty) df.withColumn("_mk", explicitKey(keys))
+      if (keys.nonEmpty) df.withColumn("_mk", TsSchema.labelKey(keys))
       else {
         val ck = broadcast(ckOverride.getOrElse(commonKeysDF(left, right)))
         df.crossJoin(ck).withColumn("_mk", commonKeyExpr).drop("_ck")
@@ -275,11 +269,7 @@ object SeriesSet {
   /** Replace/add the type label on the output (left) labels
     * (ref: DivideStage/AsPercentStage.transformLabels add type:ratios). */
   private def typed(df: DataFrame, typeLabel: Option[String]): DataFrame = typeLabel match {
-    case Some(t) =>
-      df.withColumn(S.LabelsCol,
-          map_concat(map_filter(col(S.LabelsCol), (k, _) => k =!= "type"),
-            map(lit("type"), lit(t))))
-        .withColumn(S.SeriesId, TsSchema.seriesId(col(S.LabelsCol)))
+    case Some(t) => S.relabel(df, S.putLabel("type", lit(t)))
     case None => df
   }
 
@@ -353,13 +343,8 @@ object SeriesSet {
     * names; an `on(…)` list matches exactly what it names (including `name`
     * when written). */
   private def promMatchKey(m: VectorMatching): Column =
-    if (m.on)
-      concat_ws(Sep, m.labels.map(k => coalesce(col(S.LabelsCol).getItem(k), lit(MissingV))): _*)
-    else {
-      val excluded = m.labels :+ "name"
-      TsSchema.seriesKey(map_filter(col(S.LabelsCol),
-        (k, _) => excluded.map(ex => k =!= lit(ex)).reduce(_ && _)))
-    }
+    if (m.on) S.labelKey(m.labels)
+    else S.seriesKey(S.dropLabels(m.labels :+ "name"))
 
   /** Output labels of a matched binary op — Prometheus's resultMetric
     * (promql engine): start from the many side's labels; drop the metric
@@ -369,15 +354,17 @@ object SeriesSet {
     * labels; `include` labels copy from the one side afterwards. */
   private def promResultLabels(m: VectorMatching, dropName: Boolean): Column = {
     val oneToOne = !m.groupLeft && !m.groupRight
-    val base =
-      if (dropName) map_filter(col(S.LabelsCol), (k, _) => k =!= "name")
-      else col(S.LabelsCol)
-    if (oneToOne && m.on)
-      map_filter(base, (k, _) =>
-        m.labels.map(k === lit(_)).reduceOption(_ || _).getOrElse(lit(false)))
-    else if (oneToOne && m.labels.nonEmpty)
-      map_filter(base, (k, _) => m.labels.map(k =!= lit(_)).reduce(_ && _))
-    else base
+    val base = if (dropName) S.dropLabels(Seq("name")) else col(S.LabelsCol)
+    val matched =
+      if (oneToOne && m.on)
+        map_filter(base, (k, _) =>
+          m.labels.map(k === lit(_)).reduceOption(_ || _).getOrElse(lit(false)))
+      else if (oneToOne) S.dropLabels(m.labels, base)
+      else base
+    if (m.include.isEmpty) matched
+    else map_concat(S.dropLabels(m.include, matched),
+      map_filter(map(m.include.flatMap(inc => Seq(lit(inc), element_at(col("_olab"), inc))): _*),
+        (_, v) => v.isNotNull))
   }
 
   /** Prometheus-exact binary-op matching: inner join on (match key, ts); the
@@ -427,19 +414,7 @@ object SeriesSet {
         .otherwise(col("_ov")))
     val (lv, rv) =
       if (manyIsLeft) (col(S.Value), col("_ov")) else (col("_ov"), col(S.Value))
-    val out = joined.withColumn(S.Value, f(lv, rv))
-      .withColumn(S.LabelsCol, promResultLabels(m, dropName))
-    val withInc =
-      if (m.include.isEmpty) out
-      else out.withColumn(S.LabelsCol, map_concat(
-          map_filter(col(S.LabelsCol),
-            (k, _) => m.include.map(inc => k =!= lit(inc)).reduce(_ && _)),
-          map_filter(
-            map(m.include.flatMap(inc =>
-              Seq(lit(inc), element_at(col("_olab"), inc))): _*),
-            (_, v) => v.isNotNull)))
-    withInc
-      .withColumn(S.SeriesId, TsSchema.seriesId(col(S.LabelsCol)))
+    S.relabel(joined.withColumn(S.Value, f(lv, rv)), promResultLabels(m, dropName))
       .select(S.SeriesId, S.LabelsCol, S.Ts, S.Value)
   }
 
@@ -489,14 +464,13 @@ object SeriesSet {
     * per-(group, ts) row_number shuffles once on the group hash — no global
     * ordering bottleneck. Ties break on the series key for determinism; NaN
     * samples rank below every number (Prometheus sorts NaN last). */
-  def topKAtTimestamp(df: DataFrame, k: Int, by: Seq[String] = Nil,
+  def topKAtTimestamp(df: DataFrame, k: Int, key: GroupKey = GroupKey.By(Nil),
                       bottom: Boolean = false): DataFrame = {
-    val grpCols = by.map(kk => coalesce(col(S.LabelsCol).getItem(kk), lit(MissingV))) :+ col(S.Ts)
-    val key = when(isnan(col(S.Value)), lit(null)).otherwise(col(S.Value))
+    val v = when(isnan(col(S.Value)), lit(null)).otherwise(col(S.Value))
     val ord =
-      if (bottom) Seq(key.asc_nulls_last, TsSchema.seriesKey(col(S.LabelsCol)).asc)
-      else Seq(key.desc_nulls_last, TsSchema.seriesKey(col(S.LabelsCol)).asc)
-    graft.core.Dist.topK(df, ord, k, grpCols).drop("_rn")
+      if (bottom) Seq(v.asc_nulls_last, TsSchema.seriesKey(col(S.LabelsCol)).asc)
+      else Seq(v.desc_nulls_last, TsSchema.seriesKey(col(S.LabelsCol)).asc)
+    graft.core.Dist.topK(df, ord, k, key.rankCols :+ col(S.Ts)).drop("_rn")
   }
 
   /** Prometheus experimental `limitk(k, v)` — at most k series per
@@ -505,11 +479,9 @@ object SeriesSet {
     * oracle-checkable (documented divergence: same cardinality contract,
     * different member choice). One row_number per (group, ts) — shuffles once
     * on the group hash, no global ordering. */
-  def limitKAtTimestamp(df: DataFrame, k: Int, by: Seq[String] = Nil): DataFrame = {
-    val grpCols = by.map(kk => coalesce(col(S.LabelsCol).getItem(kk), lit(MissingV))) :+ col(S.Ts)
-    graft.core.Dist.topK(df, Seq(TsSchema.seriesKey(col(S.LabelsCol)).asc), k, grpCols)
-      .drop("_rn")
-  }
+  def limitKAtTimestamp(df: DataFrame, k: Int, key: GroupKey = GroupKey.By(Nil)): DataFrame =
+    graft.core.Dist.topK(df, Seq(TsSchema.seriesKey(col(S.LabelsCol)).asc), k,
+      key.rankCols :+ col(S.Ts)).drop("_rn")
 
   /** Prometheus experimental `limit_ratio(r, v)` — a deterministic hash
     * sample of SERIES (whole series survive or not; no per-sample flicker).

@@ -49,7 +49,7 @@ object Ingest {
       labelMap.as(TsSchema.LabelsCol),
       col("timestamp").as(TsSchema.Ts),
       col("value").as(TsSchema.Value))
-      .transform(TsSchema.withSeriesId)
+      .transform(TsSchema.relabel(_))
       .select(TsSchema.SeriesId, TsSchema.LabelsCol, TsSchema.Ts, TsSchema.Value)
   }
 

@@ -168,7 +168,7 @@ object Soak {
           lit("host"), concat(lit("h"), col("sid"))).as(S.LabelsCol),
         (lit(base) + col("k") * 10000L + (col("sid") % 60) * 1000L).as(S.Ts),
         (col("sid") % 97).cast("double").as(S.Value))
-      .transform(TsSchema.withSeriesId)
+      .transform(TsSchema.relabel(_))
       .select(S.SeriesId, S.LabelsCol, S.Ts, S.Value)
     // HeadAppendBenchmark's high-dup config (duplicate-sample ratio 0.5):
     // every row re-sent once, so the within-watermark FIRST-dedup state
@@ -197,7 +197,7 @@ object Soak {
           lit("host"), concat(lit("h"), col("sid"))).as(S.LabelsCol),
         (lit(base) + col("k") * 10000L).as(S.Ts),
         sin(col("sid") * lit(0.7) + col("k") * lit(0.01)).as(S.Value))
-      .transform(TsSchema.withSeriesId)
+      .transform(TsSchema.relabel(_))
       .select(S.SeriesId, S.LabelsCol, S.Ts, S.Value)
       .write.mode("overwrite").parquet(winStage)
     val winSamples = spark.read.parquet(winStage)
@@ -230,7 +230,7 @@ object Soak {
           lit("host"), concat(lit("h"), col("sid"))).as(S.LabelsCol),
         (lit(base) + col("k") * 10000L).as(S.Ts),
         (col("sid") % 13).cast("double").as(S.Value))
-      .transform(TsSchema.withSeriesId)
+      .transform(TsSchema.relabel(_))
       .select(S.SeriesId, S.LabelsCol, S.Ts, S.Value)
       .write.mode("overwrite").parquet(unfStage)
     val unfSamples = spark.read.parquet(unfStage)

@@ -4,6 +4,8 @@ import graft.{Bench, SparkEntry}
 import graft.core.{Memo, Session}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
+import java.util.regex.Pattern
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.execution.{ExplainUtils, LeafExecNode, SparkPlan}
@@ -91,12 +93,13 @@ object Tool {
     }
   }
 
-  /** The formatted physical plan of `df`, stable across runs: the AQE
-    * initial plan, with each persisted input printed as one
+  /** The formatted physical plan of `df`, stable across runs and checkouts:
+    * the AQE initial plan, with each persisted input printed as one
     * `InMemoryTableScan` node (its output, pushed predicates and storage
-    * level) instead of its cached plan. A cached plan prints as an executed
-    * AQE plan once some earlier query has built that cache, so dumping it
-    * would make a plan depend on the queries run before it. */
+    * level) instead of its cached plan, and with the run-specific tokens
+    * replaced ([[normalize]]). A cached plan prints as an executed AQE plan
+    * once some earlier query has built that cache, so dumping it would make
+    * a plan depend on the queries run before it. */
   def planDump(df: DataFrame): String = {
     val plan = df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.initialPlan
@@ -107,7 +110,24 @@ object Tool {
       case s: InMemoryTableScanExec =>
         PersistedInput(s.output, s.predicates, s.relation.cacheBuilder.storageLevel.toString)
     }, t => { text.append(t); () })
-    text.toString
+    normalize(text.toString, df.sparkSession)
+  }
+
+  /** `plan` with its run-specific tokens replaced, so dumps from two runs or
+    * two checkouts diff directly: expression ids (`#123`), the counters in
+    * lambda variable names (`lambda x_42`), exchange `plan_id`s, the
+    * warehouse directory (`<warehouse>`) and whole paths under the temp
+    * directory (`<tmp>`). */
+  private def normalize(plan: String, spark: SparkSession): String = {
+    val warehouse = new Path(spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath
+    val tmp = System.getProperty("java.io.tmpdir").stripSuffix("/")
+    Seq(
+      "#\\d+" -> "#",
+      "(lambda [A-Za-z]+)_\\d+" -> "$1",
+      "plan_id=\\d+" -> "plan_id=",
+      s"(file:)?${Pattern.quote(warehouse)}" -> "<warehouse>",
+      s"(file:)?${Pattern.quote(tmp)}/[^\\s,\\]]*" -> "<tmp>")
+      .foldLeft(plan) { case (t, (re, to)) => re.r.replaceAllIn(t, to) }
   }
 
   /** A persisted input as [[planDump]] prints it; never executed. */

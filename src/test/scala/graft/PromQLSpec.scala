@@ -241,6 +241,13 @@ class PromQLSpec extends SparkTestBase {
     assert(out.keySet == Set("combo:req-a,dc:a,name:req"))
   }
 
+  test("label_join deletes the destination when the joined value is empty") {
+    // Prometheus's labels.Builder.Set deletes a label set to "": joining only
+    // an absent label removes dc instead of keeping dc:"" as a new identity
+    val out = toGolden(run("""label_join(req{dc="a"}, "dc", "-", "absent")"""))
+    assert(out.keySet == Set("name:req"))
+  }
+
   test("absent emits 1 on the grid only for empty vectors") {
     assertSeries(run("""absent(nothere{x="y"})"""),
       Map("name:nothere,x:y" -> Seq.fill(10)(S(1))))

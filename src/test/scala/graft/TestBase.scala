@@ -48,7 +48,7 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
       StructField("labels", MapType(StringType, StringType, valueContainsNull = false)),
       StructField("timestamp", LongType, nullable = false),
       StructField("value", DoubleType, nullable = false)))
-    TsSchema.withSeriesId(
+    TsSchema.relabel(
       session.createDataFrame(session.sparkContext.parallelize(rows, 2), schema))
       .select("series_id", "labels", "timestamp", "value")
   }

@@ -63,6 +63,17 @@ class ToolSpec extends SparkTestBase {
     assert(Files.readString(dir.resolve("tpch_q6_scan_agg_t.txt")).contains("== Physical Plan =="))
   }
 
+  test("planDump replaces expression ids, lambda counters, plan ids and temp paths") {
+    import org.apache.spark.sql.functions._
+    val dir = tempDir("tool_plan").resolve("t").toString
+    spark.range(20).select(col("id"), array(col("id")).as("a")).write.parquet(dir)
+    val p = Tool.planDump(spark.read.parquet(dir).groupBy((col("id") % 3).as("k"))
+      .agg(max(element_at(transform(col("a"), x => x + 1), 1))))
+    assert(p.contains("lambda x#") && p.contains("plan_id=") && p.contains("<tmp>"), p)
+    assert("#\\d|lambda x_\\d|plan_id=\\d".r.findFirstIn(p).isEmpty, p)
+    assert(!p.contains(dir), p)
+  }
+
   test("src/main resolves the scale factor once and tools/ holds four mains") {
     val files = Files.walk(Paths.get("src/main")).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toList
