@@ -393,7 +393,9 @@ object Dist {
   * frame-keyed calls (`apply(src, key)`), the source's analyzed plan —
   * hashed by `semanticHash`, compared by `sameResult`, so a hash
   * collision between two plans costs at most a second build and never
-  * serves the wrong value.
+  * serves the wrong value. A stamped call (`apply(spark, key, stamp)`)
+  * keeps one entry per key and replaces it when the stamp changes (the
+  * table schemas of [[Tables.parquet]]).
   *
   * Builds run OUTSIDE any lock (they can launch multi-job Spark work, e.g.
   * IVF k-means); two concurrent first callers of one key may both build,
@@ -411,38 +413,54 @@ object Dist {
   * accumulates every family's caches until the block manager thrashes:
   * wall time explodes while spill metrics stay flat, because block-manager
   * eviction is not task spill. [[Memo.clearSession]] frees every entry of a
-  * session through the same ledger. */
+  * session through the same ledger; [[Memo.stats]] counts a session's hits,
+  * misses and cap evictions. */
 final class Memo[K, V] private (keep: V => V, free: V => Unit) {
   def this(free: V => Unit) = this(v => v, free)
 
-  private final class Entry(val value: V)
+  private final class Entry(val value: V, val stamp: Any)
   private val m = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, K, Option[Memo.PlanKey]), Entry]
 
   def apply(spark: SparkSession, key: K)(build: => V): V =
-    get((spark, key, None), build)
+    get((spark, key, None), (), build)
+
+  /** Keyed by `key`, and valid while `stamp` stays equal: a call with
+    * another stamp frees the entry and builds anew, so a key holds at most
+    * one entry. */
+  def apply(spark: SparkSession, key: K, stamp: Any)(build: => V): V =
+    get((spark, key, None), stamp, build)
 
   /** Keyed by `src`'s analyzed plan as well as `key`. */
   def apply(src: DataFrame, key: K)(build: => V): V =
-    get((src.sparkSession, key, Some(new Memo.PlanKey(src.queryExecution.analyzed))), build)
+    get((src.sparkSession, key, Some(new Memo.PlanKey(src.queryExecution.analyzed))), (), build)
 
-  private def get(k: (SparkSession, K, Option[Memo.PlanKey]), build: => V): V = {
+  private def get(k: (SparkSession, K, Option[Memo.PlanKey]), stamp: Any, build: => V): V = {
     val spark = k._1
     m.get(k) match {
-      case Some(e) => Memo.Ledger.touch(e); e.value
-      case None =>
+      case Some(e) if e.stamp == stamp =>
+        Memo.counts(spark).hits.incrementAndGet()
+        Memo.Ledger.touch(e); e.value
+      case _ =>
         Memo.maxEntries(spark)
-        val e = new Entry(keep(build))
-        m.putIfAbsent(k, e) match {
-          case Some(winner) => free(e.value); Memo.Ledger.touch(winner); winner.value
-          case None =>
-            // remove(k, e) is conditional: a rebuilt entry under the same
-            // key is never dropped by the evicted one's closure
-            Memo.Ledger.add(e, spark, () => if (m.remove(k, e)) free(e.value))
-            e.value
-        }
+        Memo.counts(spark).misses.incrementAndGet()
+        install(k, new Entry(keep(build), stamp)).value
     }
   }
+
+  /** Puts the built `e` under `k`: an equal-stamped entry already there
+    * (a lost build race) wins, a stale-stamped one is freed and replaced. */
+  @scala.annotation.tailrec
+  private def install(k: (SparkSession, K, Option[Memo.PlanKey]), e: Entry): Entry =
+    m.putIfAbsent(k, e) match {
+      case Some(w) if w.stamp == e.stamp => free(e.value); Memo.Ledger.touch(w); w
+      case Some(w) => Memo.Ledger.drop(w); m.remove(k, w); install(k, e)
+      case None =>
+        // remove(k, e) is conditional: a rebuilt entry under the same
+        // key is never dropped by the evicted one's closure
+        Memo.Ledger.add(e, k._1, () => if (m.remove(k, e)) free(e.value))
+        e
+    }
 }
 
 object Memo {
@@ -498,9 +516,14 @@ object Memo {
       run(order.synchronized {
         order.put(token, Slot(session, evict))
         val mine = slotsOf(session)
-        detach(mine.take(mine.size - max))
+        val victims = mine.take(mine.size - max)
+        counts(session).evictions.addAndGet(victims.size.toLong)
+        detach(victims)
       })
     }
+    /** Free one entry now (a stale stamp) if it is still live. */
+    def drop(token: AnyRef): Unit =
+      run(order.synchronized(Option(order.remove(token)).map(_.evict).toList))
     /** Free every entry of `session`. */
     def clear(session: SparkSession): Unit =
       run(order.synchronized(detach(slotsOf(session))))
@@ -519,6 +542,24 @@ object Memo {
   }
   /** Live memoized-entry count for `spark` — bench/serving telemetry. */
   def liveEntries(spark: SparkSession): Int = Ledger.size(spark)
+
+  /** A session's memo lookups since it began: `hits` served a live entry,
+    * `misses` built one (a first call, a stale stamp or a key evicted
+    * before), `evictions` counts entries the ledger cap freed. Entries
+    * [[clearSession]] frees are not evictions. */
+  final case class Stats(hits: Long, misses: Long, evictions: Long)
+  private[core] final class Counts {
+    val hits, misses, evictions = new java.util.concurrent.atomic.AtomicLong
+  }
+  // weak keys: a stopped, unreferenced session takes its counts with it
+  private val sessionCounts =
+    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[SparkSession, Counts]())
+  private[core] def counts(spark: SparkSession): Counts =
+    sessionCounts.computeIfAbsent(spark, _ => new Counts)
+  def stats(spark: SparkSession): Stats = {
+    val c = counts(spark)
+    Stats(c.hits.get, c.misses.get, c.evictions.get)
+  }
   /** Per-session hook for a session-scoped registry that is registered,
     * not built on a miss (Rollup's serving tier) — it must not outlive its
     * session any more than a memo entry does. */
@@ -534,7 +575,39 @@ object Memo {
 /** Test-data table loaders (driver-provided parquet, TESTDATA.md). */
 object Tables {
   def read(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** The schema rule: `spark.read.parquet(path)` without its schema
+    * inference. Spark infers a parquet schema with one job per read
+    * (`mergeSchemasInParallel`), so a plain read makes every query build
+    * launch a job. Here a table's schema is inferred once per session, kept
+    * as a [[Memo]] entry, and handed to `spark.read.schema(s).parquet(path)`,
+    * whose plan is the plain read's. The entry is keyed by the path and
+    * stamped with the path's leaf files (name, length, modification time;
+    * a single-file table is its own leaf) and the session's
+    * `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*` settings: an
+    * overwritten table or a changed inference setting is inferred again and
+    * replaces the entry, so a path holds one entry. A missing path reads
+    * plainly, raising Spark's own error. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) spark.read.parquet(path)
+    else {
+      // listStatus, not listFiles: listFiles also fetches block locations
+      // (15 ms against 0.3 ms for a 4-file table on a local disk)
+      def files(f: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] =
+        if (f.isDirectory) fs.listStatus(f.getPath).toSeq.flatMap(files) else Seq(f)
+      val leaves = files(fs.getFileStatus(p))
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
+      val conf = spark.conf.getAll.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+      }.toSeq.sorted
+      spark.read.schema(schemas(spark, path, (leaves, conf))(spark.read.parquet(path).schema))
+        .parquet(path)
+    }
+  }
+  private val schemas = new Memo[String, StructType](_ => ())
 
   /** Memoize + persist derived inputs shared by many queries in one session
     * (the Verify/Bench mains run 60+ queries over the same derived series).

@@ -3,7 +3,8 @@ package graft.core
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Process-wide accumulator of executor task metrics (shuffle + spill bytes),
@@ -79,6 +80,31 @@ object MetricsTap {
     taps.computeIfAbsent(spark.sparkContext, sc => {
       val t = new Tap; sc.addSparkListener(t); t
     })
+
+  /** Runs `f` with its Spark jobs marked (a local property, which the jobs
+    * of its broadcasts and subqueries inherit) and returns its value with a
+    * count of those jobs. The count waits for the listener bus to deliver
+    * them, so call it after any timed region; jobs of other threads never
+    * count. */
+  def countJobs[A](spark: SparkSession)(f: => A): (A, () => Int) = {
+    val sc = spark.sparkContext
+    val (key, mark) = ("graft.countJobs", java.util.UUID.randomUUID.toString)
+    val n = new AtomicLong
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(key) == mark) n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    val outer = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, mark)
+    val a = try f catch { case e: Throwable => sc.removeSparkListener(l); throw e }
+    finally sc.setLocalProperty(key, outer)
+    (a, () => {
+      org.apache.spark.sql.graft.BusBridge.drain(sc)
+      sc.removeSparkListener(l)
+      n.get.toInt
+    })
+  }
 
   /** Current totals — may lag in-flight tasks; pair with [[settled]] at the
     * END of a measured region so the delta includes the region's tail. */

@@ -820,7 +820,7 @@ object PromQL {
       case Range(s, _) => selectorDF(s, g)
 
       case Agg(op, by, param, a, wo) =>
-        aggOn(op, eval(a, g), if (wo) GroupKey.Without(by) else GroupKey.By(by), param)
+        aggOn(op, eval(a, g), if (wo) GroupKey.Without(by) else GroupKey.PromBy(by), param)
 
       // ---- comparisons: filter without `bool`, 0/1 vector with it ----------
       case BinOp(op, l, r, boolMod, m) if cmpOps(op) =>

@@ -42,23 +42,14 @@ object StreamingQ extends QueryPack {
     * is the most recently used entry when the stream starts. */
   private[graft] def stagedSrc(s: SparkSession, sf: String, tag: String)
                               (write: String => Unit): String =
-    stage(s, sf, tag)(write).dir
-  private def stage(s: SparkSession, sf: String, tag: String)
-                   (write: String => Unit): Staged =
     staged(s, (sf, tag)) {
       val dir = java.nio.file.Files
         .createTempDirectory(s"graft_$tag").toString + "/src"
       write(dir)
-      new Staged(s, dir)
+      dir
     }
-  /** A staged source dir. `schema` reads a parquet-staged dir's footer
-    * once: the read is a Spark job, about 0.1 s of every run if repeated. */
-  private final class Staged(s: SparkSession, val dir: String) {
-    lazy val schema: org.apache.spark.sql.types.StructType =
-      s.read.parquet(dir).schema
-  }
-  private val staged = new graft.core.Memo[(String, String), Staged](st =>
-    deleteRec(java.nio.file.Paths.get(st.dir).getParent))
+  private val staged = new graft.core.Memo[(String, String), String](dir =>
+    deleteRec(java.nio.file.Paths.get(dir).getParent))
   /** Delete `p` and everything under it. A symlink is unlinked, never
     * entered: its target lies outside the deleted tree and is not ours. */
   private[graft] def deleteRec(p: java.nio.file.Path): Unit = {
@@ -85,10 +76,11 @@ object StreamingQ extends QueryPack {
   private def streamed(s: SparkSession, sf: String, tag: String, mode: String,
                        stateParts: Int = 8)(input: => DataFrame)
                       (op: DataFrame => DataFrame): DataFrame = {
-    val src = stage(s, sf, tag)(
+    val src = stagedSrc(s, sf, tag)(
       input.coalesce(2).write.mode("overwrite").parquet(_))
-    val stream = s.readStream.schema(src.schema)
-      .option("maxFilesPerTrigger", 1).parquet(src.dir)
+    // the staged files' schema, without a job after the first run
+    val stream = s.readStream.schema(Tables.parquet(s, src).schema)
+      .option("maxFilesPerTrigger", 1).parquet(src)
     Ingest.drain(s, op(stream).writeStream.format("memory")
       .queryName(s"${tag}_out").outputMode(mode), stateParts)
     s.table(s"${tag}_out")

@@ -34,11 +34,12 @@ object Grouping {
   }
 
   object GroupKey {
-    /** Group on the values of `keys` (empty = all series into one). Series
-      * missing any key are excluded (golden corpus: sum by a non-existent
-      * tag yields an empty result), and the output keeps the retained keys
-      * (ref: AbstractGroupingStage group-key = values of groupByLabels). The
-      * rank stages keep every series, a missing key ranking apart from `""`. */
+    /** M3's grouping, on the values of `keys` (empty = all series into
+      * one). Series missing any key are excluded (golden corpus: sum by a
+      * non-existent tag yields an empty result), and the output keeps the
+      * retained keys (ref: AbstractGroupingStage group-key = values of
+      * groupByLabels). The rank stages keep every series, a missing key
+      * ranking apart from `""`. */
     final case class By(keys: Seq[String]) extends GroupKey {
       def attach(df: DataFrame): (DataFrame, Seq[Column]) =
         (df.select(col("*") +: keys.map(k => col(S.LabelsCol).getItem(k).as(s"_g_$k")): _*)
@@ -49,6 +50,23 @@ object Grouping {
         else map_filter(map(keys.flatMap(k => Seq(lit(k), col(s"_g_$k"))): _*),
           (_, v) => v.isNotNull)
       def rankCols: Seq[Column] = keys.map(S.labelValue)
+    }
+
+    /** Prometheus `by (keys)`: a missing label reads as `""`, as in
+      * Prometheus, where an empty label value is an absent label. Every
+      * series falls in a group, a series without a key joins the `""`
+      * group, and the output omits the keys whose value is `""`. The rank
+      * stages group the same way. */
+    final case class PromBy(keys: Seq[String]) extends GroupKey {
+      private def value(k: String): Column = coalesce(col(S.LabelsCol).getItem(k), lit(""))
+      def attach(df: DataFrame): (DataFrame, Seq[Column]) =
+        (df.select(col("*") +: keys.map(k => value(k).as(s"_g_$k")): _*),
+         keys.map(k => col(s"_g_$k")))
+      def labels: Column =
+        if (keys.isEmpty) S.noLabels
+        else map_filter(map(keys.flatMap(k => Seq(lit(k), col(s"_g_$k"))): _*),
+          (_, v) => v =!= "")
+      def rankCols: Seq[Column] = keys.map(value)
     }
 
     /** Prometheus `without (keys)`: the group is each series' whole label

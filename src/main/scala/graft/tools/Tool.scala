@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.{Bench, SparkEntry}
-import graft.core.{Memo, Session}
+import graft.core.{Memo, MetricsTap, Session}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import java.util.regex.Pattern
@@ -17,7 +17,10 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
   *  - `show|count|explain|save:<dir> <name> [sf]`: rows, row count,
   *    formatted plan ([[planDump]]), or the result as one parquet file for
   *    DuckDB;
-  *  - `time[:N] <name> [sf]`: N timed passes (default 3), then `secs_min=`;
+  *  - `time[:N] <name> [sf]`: N timed passes (default 3), each with the
+  *    Spark jobs its query build launched (`build_jobs=`; plan building
+  *    should launch none once the session's inputs are built), then
+  *    `secs_min=`;
   *  - `explain <outDir> <suffix> <name…>`: one `<name>_<suffix>.txt` plan
   *    file per query from one JVM; a build that throws (builds can run
   *    jobs) is written as `EXPLAIN FAILED` and the sweep goes on;
@@ -74,8 +77,12 @@ object Tool {
       (spark, sf, name, fn) =>
         Bench.timingSession(spark)
         val secs = (1 to n).map { i =>
-          val t = Bench.pass(spark, sf, fn)._1
-          println(s"[tool] $name run $i: ${Bench.f2(t)} s"); t
+          var buildJobs: () => Int = () => 0
+          val t = Bench.pass(spark, sf, (s, d) => {
+            val (df, jobs) = MetricsTap.countJobs(s)(fn(s, d))
+            buildJobs = jobs; df
+          })._1
+          println(s"[tool] $name run $i: ${Bench.f2(t)} s build_jobs=${buildJobs()}"); t
         }
         println(s"secs_min=${Bench.f2(secs.min)}")
     case _ => throw new IllegalArgumentException(s"unknown subcommand '$sub'; $usage")
@@ -115,8 +122,9 @@ object Tool {
 
   /** `plan` with its run-specific tokens replaced, so dumps from two runs or
     * two checkouts diff directly: expression ids (`#123`), the counters in
-    * lambda variable names (`lambda x_42`), exchange `plan_id`s, the
-    * warehouse directory (`<warehouse>`) and whole paths under the temp
+    * lambda variable names (`lambda x_42`), exchange `plan_id`s, RDD ids
+    * (`RDD[1111]`), the identity hashes of array arguments (`[D@997a59f`),
+    * the warehouse directory (`<warehouse>`) and whole paths under the temp
     * directory (`<tmp>`). */
   private def normalize(plan: String, spark: SparkSession): String = {
     val warehouse = new Path(spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath
@@ -125,6 +133,8 @@ object Tool {
       "#\\d+" -> "#",
       "(lambda [A-Za-z]+)_\\d+" -> "$1",
       "plan_id=\\d+" -> "plan_id=",
+      "RDD\\[\\d+\\]" -> "RDD[]",
+      "(\\[+[A-Z])@[0-9a-f]+" -> "$1@",
       s"(file:)?${Pattern.quote(warehouse)}" -> "<warehouse>",
       s"(file:)?${Pattern.quote(tmp)}/[^\\s,\\]]*" -> "<tmp>")
       .foldLeft(plan) { case (t, (re, to)) => re.r.replaceAllIn(t, to) }

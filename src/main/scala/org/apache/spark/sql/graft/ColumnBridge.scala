@@ -23,6 +23,12 @@ object ColumnBridge {
   }
 }
 
+/** Waits until the listener bus has delivered every event posted so far;
+  * the bus itself is not public. */
+object BusBridge {
+  def drain(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty(30000L)
+}
+
 /** The CacheManager's entry count, which the public `SparkSession` API no
   * longer exposes in Spark 4. The manager is shared by every session of a
   * context; graft's memoized frames are its only intended entries, so the

@@ -212,6 +212,19 @@ class LabelVocabularySpec extends SparkTestBase {
     assert(p.passed, p.status.toString)
   }
 
+  test("PromQL by reads a missing label as \"\", and M3 by drops the series") {
+    // regression case: PromQL by (job) dropped the series without job, and
+    // ranked it apart from the one with job=""
+    val df = samplesDF(series("name:m,job:a", Seq(Some(1.0))) ++
+      series("name:m", Seq(Some(2.0))) ++ series("name:m,job:", Seq(Some(4.0))))
+    def first(out: DataFrame): Map[String, Option[Double]] = toGolden(out).map { case (k, vs) => k -> vs.head }
+    assert(first(PromQL.query(spark, df, g, "sum by (job) (m)")) == Map("" -> Some(6.0), "job:a" -> Some(1.0)))
+    val top = PromQL.query(spark, df, g, "topk(1, m) by (job)").where(col(S.Ts) === g.startMs)
+    assert(top.select(S.LabelsCol).collect().map(_.getMap[String, String](0)).toSet ==
+      Set(Map("name" -> "m", "job" -> "a"), Map("name" -> "m", "job" -> "")))
+    assert(first(Grouping.sum(df, By(Seq("job")))) == Map("job:" -> Some(4.0), "job:a" -> Some(1.0)))
+  }
+
   // ---- series identity -------------------------------------------------------
 
   private def fx = samplesDF(

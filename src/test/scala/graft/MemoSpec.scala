@@ -51,6 +51,29 @@ class MemoSpec extends SparkTestBase {
     assert(Memo.liveEntries(s) == 0)
   }
 
+  test("stats count hits, misses and ledger evictions per session") {
+    val s = freshSession(2)
+    val memo = new Memo[Int, String](_ => ())
+    def stats = Memo.stats(s)
+    assert(stats == Memo.Stats(0, 0, 0))
+    memo(s, 1)("a"); memo(s, 2)("b")
+    assert(stats == Memo.Stats(0, 2, 0))
+    memo(s, 1)(fail("key 1 must hit"))
+    assert(stats == Memo.Stats(1, 2, 0))
+    memo(s, 3)("c") // over the cap: evicts key 2 (LRU)
+    assert(stats == Memo.Stats(1, 3, 1))
+    // a changed stamp is a miss that replaces the entry, not an eviction
+    memo(s, 1, "v1")("a1"); memo(s, 1, "v1")(fail("same stamp must hit"))
+    assert(memo(s, 1, "v2")("a2") == "a2")
+    assert(stats == Memo.Stats(2, 5, 1) && Memo.liveEntries(s) == 2)
+    val other = freshSession(2)
+    memo(other, 1)("x")
+    assert(Memo.stats(other) == Memo.Stats(0, 1, 0), "counts are per session")
+    val before = stats
+    Memo.clearSession(s); Memo.clearSession(other)
+    assert(stats == before, "clearSession frees without evicting")
+  }
+
   test("a malformed or non-positive maxEntries fails by name and persists nothing") {
     for (bad <- Seq("abc", "0")) {
       val s = spark.newSession()

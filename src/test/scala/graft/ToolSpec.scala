@@ -63,6 +63,15 @@ class ToolSpec extends SparkTestBase {
     assert(Files.readString(dir.resolve("tpch_q6_scan_agg_t.txt")).contains("== Physical Plan =="))
   }
 
+  test("time:N prints each pass's build jobs, and a second build launches none") {
+    assume(new java.io.File(s"$sf/lineitem.parquet").exists)
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(Tool.run(spark.newSession(), Seq("time:2", "tpch_q6_scan_agg", sf)))
+    val runs = out.toString("UTF-8").linesIterator.filter(_.startsWith("[tool]")).toList
+    assert(runs.size == 2 && runs.forall(_.matches(".* s build_jobs=\\d+")), runs)
+    assert(runs(1).endsWith(" build_jobs=0"), runs)
+  }
+
   test("planDump replaces expression ids, lambda counters, plan ids and temp paths") {
     import org.apache.spark.sql.functions._
     val dir = tempDir("tool_plan").resolve("t").toString
@@ -72,6 +81,13 @@ class ToolSpec extends SparkTestBase {
     assert(p.contains("lambda x#") && p.contains("plan_id=") && p.contains("<tmp>"), p)
     assert("#\\d|lambda x_\\d|plan_id=\\d".r.findFirstIn(p).isEmpty, p)
     assert(!p.contains(dir), p)
+    // RDD ids and the identity hashes of a kernel's array arguments
+    val enc = org.apache.spark.sql.graft.ColumnBridge.column(graft.functions.PqEncode(
+      org.apache.spark.sql.graft.ColumnBridge.expression(array(col("id").cast("double"))),
+      Array(1.0), Array(0), Array(1), 1))
+    val q = Tool.planDump(spark.range(3).toDF("id").localCheckpoint(true).select(enc.as("c")))
+    assert(q.contains("RDD[]") && q.contains("[D@") && q.contains("[I@"), q)
+    assert("RDD\\[\\d|\\[[A-Z]@[0-9a-f]".r.findFirstIn(q).isEmpty, q)
   }
 
   test("src/main resolves the scale factor once and tools/ holds four mains") {
